@@ -1,23 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // write standard annotated INT64 micros (not deprecated INT96) so
-      // parquet footers carry usable timestamp stats for pruned merges
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // fork-free local FS (r19): no per-file chmod spawn, no .crc
-      // sidecars — see graft.sources.FastLocalFs; inert off-local
-      .config("spark.hadoop.fs.file.impl", "graft.sources.FastLocalFs")
-      // RAM-backed shuffle dir when headroom allows (r19) — see
-      // graft.sources.LocalDirs for the scale story and overrides
-      .config(graft.sources.LocalDirs.confMap)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.envCpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm the JVM/codegen/FS paths so measurements reflect steady
     // state: a dry pass of every query at the smallest SF compiles the

@@ -1,14 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      // write standard annotated INT64 micros (not deprecated INT96) so
-      // parquet footers carry usable timestamp stats for pruned merges
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder(8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val dir = "/root/testdata/sf0.01"
     // tee everything to target/plan_audit.txt — stdout tails truncate

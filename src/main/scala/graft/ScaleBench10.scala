@@ -3,7 +3,6 @@ package graft
 import graft.operators.Snapshot
 import graft.operators.Snapshot.{ColEnv, Entry, Manifest}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 
 /** Scale-stress phase 10 (round 13): the MANIFEST layer at 100k
   * entries — the r12 verdict's "measure, then shard" item. The flat
@@ -84,8 +83,7 @@ object ScaleBench10 {
       seq = seq)
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val out = "/tmp/graft_scale10"
     val fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** ScaleBench12 (r15): READ-TIME manifest-envelope file skipping at the
@@ -59,11 +58,7 @@ object ScaleBench12 {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     import graft.operators.Snapshot

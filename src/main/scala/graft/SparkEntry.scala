@@ -1307,8 +1307,9 @@ object SparkEntry {
       // gate measures (MaintProfileSpec proves the parity)
       // fixed 400-doc window: the gate proves the MAINTENANCE LAW and
       // the mutation classes, identically at every SF (index SCALE is
-      // ScaleBench territory; an unbounded window made this the
-      // board's slowest query for no extra coverage)
+      // priced in SCALEBENCH3_r08.json's 6M-doc signature-index phase;
+      // an unbounded window made this the board's slowest query for no
+      // extra coverage)
       val docs = read(s, dir, "documents").select("doc_id", "text")
         .filter(col("doc_id") < 400)
       val p = s"$scratch/docs.parquet"

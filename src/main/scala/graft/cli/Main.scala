@@ -76,7 +76,7 @@ object Main {
       autoMaintain: Boolean = false, // [EXT] debt-triggered post-write compaction
       changelog: Option[(Long, Long)] = None, // [EXT] CDC diff from:to
       changelogPk: Seq[String] = Nil, // [EXT] row identity for --changelog
-      cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+      cpus: Int = graft.GraftSession.envCpus)
 
   /** Env-var default for a flag (reference: MODULE__FLAG, base.py:158-185). */
   private def envDefault(flag: String): Option[String] =
@@ -516,22 +516,8 @@ object Main {
   }
 
   private def session(opts: Opts): SparkSession = {
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[${opts.cpus}]"))
-      .appName("graft-etl")
-      .config("spark.sql.shuffle.partitions", opts.cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // write standard annotated INT64 micros (not deprecated INT96) so
-      // parquet footers carry usable timestamp stats for pruned merges
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // fork-free local FS (r19): no per-file chmod spawn, no .crc
-      // sidecars — see graft.sources.FastLocalFs; inert off-local
-      .config("spark.hadoop.fs.file.impl", "graft.sources.FastLocalFs")
-      // RAM-backed shuffle dir when headroom allows (r19) — see
-      // graft.sources.LocalDirs for the scale story and overrides
-      .config(graft.sources.LocalDirs.confMap)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val b = graft.GraftSession.builder(opts.cpus).appName("graft-etl")
+    val s = sys.env.get("SPARK_GRAFT_MASTER").fold(b)(b.master).getOrCreate()
     s.sparkContext.setLogLevel(opts.logLevel.getOrElse("WARN"))
     s
   }

@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftshim.ExprShim
 
 /** O3 live job progress (reference: `poll_job`'s server-poll loop
   * printing stage/row progress, etl_cli/base.py:366-392). The engine
@@ -39,10 +40,18 @@ object Progress {
     spark.sparkContext.addSparkListener(l)
     try body
     finally {
-      // the listener bus is async (and not public API): give pending
-      // stage-completion events a moment to drain before detaching
-      Thread.sleep(200)
-      spark.sparkContext.removeSparkListener(l)
+      // the listener bus is async: deliver the job's pending stage
+      // events before detaching. A drain that times out only loses
+      // progress lines (the job itself has finished), so it warns
+      // instead of failing the job.
+      try ExprShim.drainListenerBus(spark, DrainTimeoutMs)
+      catch {
+        case _: java.util.concurrent.TimeoutException =>
+          System.err.println(s"progress: listener bus not drained within " +
+            s"$DrainTimeoutMs ms; later stage events are not reported")
+      } finally spark.sparkContext.removeSparkListener(l)
     }
   }
+
+  private val DrainTimeoutMs = 10000L
 }

@@ -95,9 +95,10 @@ object IvfIndex {
     // Cluster rows by cell before the partitioned write: without it,
     // every writer task emits a file into every cell directory it has
     // rows for (tasks × nlist small files — 1024 at 16 tasks × 64
-    // cells in the 6M-row ScaleBench run); with it, each cell lives in
-    // exactly one task → nlist files total, and the serve-side scan
-    // reads nprobe well-formed row groups instead of a footer storm.
+    // cells at 6M rows, BASELINE.md's round-6 scale report); with it,
+    // each cell lives in exactly one task → nlist files total, and the
+    // serve-side scan reads nprobe well-formed row groups instead of a
+    // footer storm.
     assign(corpus, centroids, vec)
       .repartition(col("centroid_id"))
       .write.mode("overwrite").partitionBy("centroid_id")

@@ -90,7 +90,7 @@ object LangId {
     * at MEMORY_AND_DISK, and does NOT unpersist them — the returned
     * plan still reads them, so the CALLER owns the lifecycle
     * (`spark.catalog.clearCache()` or unpersist after the final
-    * action; Bench/Verify/QBench clear the cache manager after every
+    * action; Bench and Verify clear the cache manager after every
     * query). Library users invoking this repeatedly should either pass
     * `cacheIntermediates = false` (each leg recomputes — correct, just
     * slower) or persist a [[train]] output to parquet and serve many

@@ -332,7 +332,7 @@ object Similarity {
     // row, so even a billion-vector corpus spills gracefully at
     // MEMORY_AND_DISK; output unchanged (deterministic sketch). CACHE
     // CONTRACT as [[graft.ext.LangId]]: caller owns the lifecycle
-    // (Bench/Verify/QBench clear the cache manager per query).
+    // (Bench and Verify clear the cache manager per query).
     val sk = df.select(col(id).as("id"),
       hyperplaneSketch(col(vec), planes).as("sk"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -192,7 +192,8 @@ object TextDedup {
     //    once under codegen, but pays a per-gram interpreted
     //    Md5Prefix64 call, a UTF8String substring+binary-cast
     //    allocation, and a gram-count per-partition sort for the
-    //    window — 327 s of the 6M-doc ScaleBench3 winnow phase (r8),
+    //    window — 327 s of the 6M-doc winnow phase (r8,
+    //    SCALEBENCH3_r08.json),
     //    vs one cache-local Java loop per doc here.
     // Docs shorter than k + w − 1 normalized chars yield an empty
     // array and drop out at the explode, as before.
@@ -247,8 +248,8 @@ object TextDedup {
     //
     // The fingerprint stream feeds two plan legs (df count + posting
     // build), so it is persisted: computed once, read back columnar.
-    // The caller (or harness) owns the cache lifecycle — Bench/
-    // Verify/QBench clear the cache manager after every query.
+    // The caller (or harness) owns the cache lifecycle — Bench and
+    // Verify clear the cache manager after every query.
     val fps = winnowFingerprints(df, idCol, textCol, k, w)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     winnowPairsFromFps(fps, minShared, maxDf)
@@ -1046,7 +1047,7 @@ object TextDedup {
     * components/collect consumer re-runs the pairs plan. The persisted
     * table is tiny (one id + one long per doc) and deterministic, so
     * output is unchanged. CACHE CONTRACT (as [[graft.ext.LangId]]):
-    * the caller owns the lifecycle — Bench/Verify/QBench clear the
+    * the caller owns the lifecycle — Bench and Verify clear the
     * cache manager after every query; library users persist the
     * fingerprint table to parquet for reuse instead.
     */

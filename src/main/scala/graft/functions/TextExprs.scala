@@ -427,10 +427,10 @@ object TextExprs {
     * the exploded formulation pays ~1.8B interpreted Md5Prefix64
     * calls, a per-gram UTF8String substring+binary-cast allocation,
     * and a 1.8B-row per-partition sort for the window — measured 327 s
-    * end-to-end in ScaleBench3 (r8). Here the per-row interpreted-call
-    * overhead is paid once per DOCUMENT, grams hash straight out of
-    * one reused byte buffer into one reused MessageDigest, and no
-    * shuffle or sort exists at all.
+    * end-to-end (r8, SCALEBENCH3_r08.json). Here the per-row
+    * interpreted-call overhead is paid once per DOCUMENT, grams hash
+    * straight out of one reused byte buffer into one reused
+    * MessageDigest, and no shuffle or sort exists at all.
     *
     * Documents with fewer than k + w − 1 normalized chars have no
     * complete window and return an EMPTY array (callers explode, so
@@ -525,7 +525,8 @@ object TextExprs {
     * builds a merge-count-deep `replace` expression tree evaluated
     * interpreted per WORD with a fresh padded UTF8String per merge
     * step (~64 string allocations × word length per word at a
-    * realistic vocab — ⅔ of the 77 s ScaleBench3 r8 encode phase).
+    * realistic vocab — ⅔ of the 77 s r8 encode phase,
+    * SCALEBENCH3_r08.json).
     *
     * Key invariant making the fused pass cheap: merging ADJACENT
     * symbols always yields a contiguous substring of the word, so a

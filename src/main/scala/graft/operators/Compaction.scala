@@ -31,9 +31,9 @@ import org.apache.spark.sql.functions.{coalesce, col, expr, lit}
   * driver pool (r13): each group is still its own Spark job — the
   * job-submission latency that serialized a 256-partition maintenance
   * pass now overlaps, and the Spark scheduler shares executors across
-  * the in-flight jobs (ScaleBench11 prices the win). Group results
-  * fold into the plan under a lock; the single atomic manifest commit
-  * at the end is unchanged.
+  * the in-flight jobs (`SCALEBENCH11_r13.json` prices the win). Group
+  * results fold into the plan under a lock; the single atomic manifest
+  * commit at the end is unchanged.
   */
 object Compaction {
 
@@ -83,10 +83,9 @@ object Compaction {
   /** Concurrent per-directory rewrite jobs in flight at once. Each
     * job is small (one group's small-file bytes); 8 overlaps the
     * ~0.1-0.5 s per-job scheduling latency without swamping the
-    * cluster scheduler. Mutable for ScaleBench11's sequential-vs-
-    * parallel contrast only.
+    * cluster scheduler.
     */
-  @volatile private[graft] var GroupParallelism = 8
+  private val GroupParallelism = 8
 
   final case class Stats(dirsCompacted: Int, filesTotal: Int,
                          filesCompacted: Int, bytesCompacted: Long,

@@ -86,7 +86,7 @@ import org.apache.spark.sql.types._
   */
 object PrunedMerge {
 
-  /** What the merge did — the ScaleBench/ test witness that pruning
+  /** What the merge did — the test witness that pruning
     * actually pruned: `bytesRewritten / bytesTotal` is the fraction of
     * the target the write touched.
     */

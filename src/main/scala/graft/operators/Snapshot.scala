@@ -942,7 +942,7 @@ object Snapshot {
   @volatile private[graft] var TargetPartEntries = 512
   /** Membership size from which checkpoints use the list format.
     * Below it the classic single `_MANIFEST` text is simpler and just
-    * as fast; mutable for tests/ScaleBench to exercise the list path
+    * as fast; mutable for tests/ScaleBench10 to exercise the list path
     * at toy scale.
     */
   @volatile private[graft] var ListCheckpointMin: Int = 50000

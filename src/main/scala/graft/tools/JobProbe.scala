@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev probe: run one SparkEntry query and print every Spark job's
   * wall time + call site — the fixed-overhead audit behind the
@@ -12,19 +11,9 @@ object JobProbe {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("q_dedup_cdc_index")
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    // r19: honor the bench's core-count env so the 8-vs-32 scaling
-    // inversions can be drilled per job
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // fork-free local FS (r19): no per-file chmod spawn, no .crc
-      // sidecars — see graft.sources.FastLocalFs; inert off-local
-      .config("spark.hadoop.fs.file.impl", "graft.sources.FastLocalFs")
-      // RAM-backed shuffle dir when headroom allows (r19) — see
-      // graft.sources.LocalDirs for the scale story and overrides
-      .config(graft.sources.LocalDirs.confMap)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // the bench's core-count env, so the 8-vs-32 scaling inversions
+    // can be drilled per job
+    val spark = graft.GraftSession.builder(graft.GraftSession.envCpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val done = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long, String)]

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** r18 optimization probe (guide §1/§7): per-query JOB/STAGE/TASK
   * counts and wall time under the bench's exact session shape. The
@@ -18,19 +17,7 @@ import org.apache.spark.sql.SparkSession
 object OptProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // fork-free local FS (r19): no per-file chmod spawn, no .crc
-      // sidecars — see graft.sources.FastLocalFs; inert off-local
-      .config("spark.hadoop.fs.file.impl", "graft.sources.FastLocalFs")
-      // RAM-backed shuffle dir when headroom allows (r19) — see
-      // graft.sources.LocalDirs for the scale story and overrides
-      .config(graft.sources.LocalDirs.confMap)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(graft.GraftSession.envCpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // one lock shared by the listener callbacks and main's reset/read

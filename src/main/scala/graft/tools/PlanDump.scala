@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** r18: dump `.explain("formatted")` + the executed (post-AQE) plan of
   * named declared queries to `plans/<tag>/<query>_<suffix>.txt` — the
   * judge-checkable evidence files for the optimization round.
@@ -18,19 +16,8 @@ object PlanDump {
     require(args.length >= 3, "usage: PlanDump <tag> <suffix> <query>...")
     val (tag, suffix, names) = (args(0), args(1), args.drop(2))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // fork-free local FS (r19): no per-file chmod spawn, no .crc
-      // sidecars — see graft.sources.FastLocalFs; inert off-local
-      .config("spark.hadoop.fs.file.impl", "graft.sources.FastLocalFs")
-      // RAM-backed shuffle dir when headroom allows (r19) — see
-      // graft.sources.LocalDirs for the scale story and overrides
-      .config(graft.sources.LocalDirs.confMap)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = graft.GraftSession.envCpus
+    val spark = graft.GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val dir = java.nio.file.Paths.get(s"plans/$tag")
     java.nio.file.Files.createDirectories(dir)

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev probe: run one SparkEntry query and print every STAGE's summed
   * task time, task count and name — the CPU-attribution view JobProbe's
@@ -14,15 +13,7 @@ object StageProbe {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("q_langid_nb")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.hadoop.fs.file.impl", "graft.sources.FastLocalFs")
-      // RAM-backed shuffle dir when headroom allows (r19) — see
-      // graft.sources.LocalDirs for the scale story and overrides
-      .config(graft.sources.LocalDirs.confMap)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.builder(graft.GraftSession.envCpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val lock = new Object
     case class St(id: Int, name: String, tasks: Int, taskMs: Long,

@@ -26,9 +26,11 @@ object ExprShim {
         "graft.functions", name),
       builder)
 
-  /** Deterministic listener-bus drain for the dev probes (r19, ADVICE:
-    * replaces Thread.sleep guesses). `listenerBus` is private[spark],
-    * hence the shim. Throws TimeoutException if events keep queueing.
+  /** Bounded wait until every queued listener event is delivered —
+    * the deterministic replacement for `Thread.sleep` guesses, used by
+    * the job progress reporter and the dev probes. `listenerBus` is
+    * private[spark], hence the shim. Throws TimeoutException if events
+    * keep queueing past `timeoutMs`.
     */
   def drainListenerBus(spark: org.apache.spark.sql.SparkSession,
                        timeoutMs: Long): Unit =

@@ -4,7 +4,9 @@ import graft.cli.Main
 import graft.spec._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** CLI flag-surface parse tests — no Spark session needed. */
+/** CLI flag-surface parse tests — no Spark session needed, except for
+  * the session-contract test at the end.
+  */
 class CliSpec extends AnyFunSuite {
 
   private def parse(args: String*): (JobSpec, Main.Opts) =
@@ -252,5 +254,21 @@ class CliSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](
       parse("-s", "parquet/a/b", "-t", "parquet/c/d", "-o", "smash"))
     intercept[Main.CliError](parse("-s", "parquet/a/b", "-m", "parquet/a/m"))
+  }
+
+  test("session contract: Main.session(Opts) exists; factory write defaults reach the suite session") {
+    // perfbench/src/CliBench.scala builds its session by reflecting on
+    // this private method — renaming or re-typing it must fail here
+    val m = Main.getClass.getDeclaredMethods.filter(m =>
+      m.getName.endsWith("session") &&
+        m.getParameterTypes.sameElements(Seq(classOf[Main.Opts])))
+    assert(m.length == 1, "graft.cli.Main.session(Opts) not found")
+    assert(m.head.getReturnType == classOf[org.apache.spark.sql.SparkSession])
+    // the shared suite session comes from GraftSession.builder; calling
+    // Main.session here would getOrCreate over its confs
+    val s = SparkSpec.session
+    assert(s.conf.get("spark.sql.parquet.outputTimestampType") == "TIMESTAMP_MICROS")
+    assert(s.sparkContext.hadoopConfiguration.get("fs.file.impl") ==
+      classOf[graft.sources.FastLocalFs].getName)
   }
 }

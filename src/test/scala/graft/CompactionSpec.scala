@@ -186,6 +186,30 @@ class CompactionSpec extends SparkSpec {
       graft.sources.Resolver.readParquet(spark, p),
       Seq((5L, "back")).toDF("id", "txt"), spec.copy(op = WriteOp.Upsert), p)
     assert(again.exists(s => s.filesRewritten < s.filesTotal))
+
+    // per-tombstone retirement (seq rule): three scattered append-shaped
+    // upserts each add one batch file and one tombstone. The seed files
+    // compact as one class, folding every tombstone; each single-file
+    // batch class is kept. The oldest tombstone applies to no kept file
+    // and drops; the newer two stay for the older batch files.
+    val p2 = s"$dir/scatter.parquet"
+    WriteOps.atomicOverwrite(spark, base, p2, indexBy = Seq("id"),
+      maxRecordsPerFile = 100, commitMode = "snapshot", keepVersions = 8)
+    for (k <- 0L to 2L)
+      Snapshot.upsertAppend(spark, p2,
+        (0L until 4L).map(i => (i * 100 + k, s"U$k")).toDF("id", "txt"),
+        Seq("id"), indexBy = Seq("id"), keepVersions = 8)
+    def tombSeqs = Snapshot.manifestAt(fs,
+      Snapshot.resolveVersion(fs, new Path(p2), None)._2).get
+      .deleteEntries.map(_.seq).sorted
+    val before = tombSeqs
+    assert(before.size == 3)
+    val want2 = sortedRows(graft.sources.Resolver.readParquet(spark, p2))
+    assert(Compaction.compact(spark, p2, Seq("id"), 1L << 20,
+      keepVersions = 8).filesCompacted > 0)
+    assert(tombSeqs == before.drop(1),
+      s"only the oldest tombstone retires: before=$before after=$tombSeqs")
+    assert(sortedRows(graft.sources.Resolver.readParquet(spark, p2)) == want2)
   }
 
   test("class-count ceiling: many tiny appends force the full fold even under the byte ceiling (r12)") {

@@ -285,6 +285,18 @@ class ExtSpec extends SparkSpec {
       .select("id_a", "id_b", "jaccard").collect().toSet
     assert(exact.nonEmpty, "testdata should contain planted near-dups")
     assert(lsh == exact)
+    // banding trades recall for cost: 8 bands of 16 rows finds a subset
+    // of what 16 bands of 8 find, yet still every planted verbatim copy
+    // (J = 1, so its signature agrees in every band)
+    val copies = d.unionByName(d.filter(col("doc_id") < 20)
+      .withColumn("doc_id", col("doc_id") + 1000000L))
+    def lshAt(bands: Int) =
+      TextDedup.minhashPairs(copies, "doc_id", "text", 3, 0.8, bands = bands)
+        .select("id_a", "id_b", "jaccard").collect().toSet
+    val (lsh16, lsh8) = (lshAt(16), lshAt(8))
+    val planted = lsh16.filter(r => r.getLong(1) - r.getLong(0) == 1000000L)
+    assert(planted.nonEmpty && planted.forall(_.getDouble(2) == 1.0))
+    assert(lsh8.subsetOf(lsh16) && planted.subsetOf(lsh8))
     // signature reuse: mining from the persisted index finds the same
     // pairs without re-deriving signatures from text
     val idxDir = java.nio.file.Files.createTempDirectory("graft_sigidx").toString

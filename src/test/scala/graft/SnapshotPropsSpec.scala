@@ -43,6 +43,11 @@ class SnapshotPropsSpec extends SparkSpec {
   private def sorted(df: DataFrame): Seq[Seq[Any]] =
     rows(df.orderBy("id"))
 
+  // trace names of the ops drawn by `rnd.nextInt(10)` below
+  private val OpNames = Vector("overwrite", "upsert", "upsert-widen",
+    "delete", "dv-delete", "compact", "materialize", "append-upsert",
+    "pred-delete", "drop-column")
+
   test("random op sequences: reads ≡ model, retained versions ≡ archived models, fsck clean") {
     for (seed <- Seq(7, 21, 63, 88, 134)) runSequence(seed)
   }
@@ -94,8 +99,13 @@ class SnapshotPropsSpec extends SparkSpec {
       rows.foreach { case (id, txt, f) => model += id -> (txt, f) }
     }
 
+    // the ops run so far, so a failure replays from its message alone
+    var ops = Vector.empty[String]
     for (step <- 1 to 12) {
-      rnd.nextInt(10) match {
+      val op = rnd.nextInt(10)
+      ops :+= OpNames(op)
+      val at = s"seed=$seed step=$step ops=${ops.mkString(",")}"
+      op match {
         case 0 => // full overwrite with a fresh table
           model = (0L until (200L + rnd.nextInt(200)))
             .map(i => i -> (s"o$seed-$step-$i",
@@ -183,20 +193,20 @@ class SnapshotPropsSpec extends SparkSpec {
       // 1) latest read ≡ model
       assert(sorted(graft.sources.Resolver.readParquet(spark, p)) ==
         sorted(render(model, widened)),
-        s"seed=$seed step=$step: latest read diverged from model")
+        s"$at: latest read diverged from model")
       // 2) every retained version ≡ its archived model
       Snapshot.committed(fs, new Path(p)).map(_._1).foreach { v =>
         archive.get(v).foreach { case (w, m) =>
           assert(sorted(graft.sources.Resolver.readParquet(spark, p, Some(v))) ==
             sorted(render(m, w)),
-            s"seed=$seed step=$step: retained v$v diverged from its archive")
+            s"$at: retained v$v diverged from its archive")
         }
       }
       // 3) structural integrity: zero ERROR rows
       val errs = Snapshot.fsck(spark, p)
         .filter(col("severity") === "error").collect()
       assert(errs.isEmpty,
-        s"seed=$seed step=$step: fsck errors ${errs.mkString("; ")}")
+        s"$at: fsck errors ${errs.mkString("; ")}")
       // 4) every third step: the DV-aware pruned changelog between the
       // two newest retained versions ≡ the unpruned full-read diff —
       // the r11 CDC-under-deletes restriction is exact under every
@@ -215,7 +225,7 @@ class SnapshotPropsSpec extends SparkSpec {
           // non-widening schema steps refuse loudly on BOTH paths —
           // Try covers those; a successful pair must agree
           ok.foreach(eq => assert(eq,
-            s"seed=$seed step=$step: pruned changelog v$f→v$v diverged"))
+            s"$at: pruned changelog v$f→v$v diverged"))
         }
       }
     }

@@ -1530,6 +1530,13 @@ class SnapshotSpec extends SparkSpec {
     // the tombstone applies as a FILTER, not a join — and pushes down
     val plan = now.queryExecution.executedPlan.toString
     assert(!plan.contains("Join"), s"predicate DV must not join:\n$plan")
+    // the same logical delete committed as its matching keys serves
+    // the identical table (the NULL-id row survives both routes)
+    val pk = s"$dir/keys.parquet"
+    predBase(pk)
+    Snapshot.deleteByKeys(spark, pk,
+      (0L until 40L).filter(i => i >= 30 || i % 4 == 3).toDF("id"), keepVersions = 4)
+    assert(sortedRows(graft.sources.Resolver.readParquet(spark, pk)) == sortedRows(now))
   }
 
   test("predicate DV composes with key tombstones; materialize folds both") {
