@@ -93,10 +93,7 @@ object Runner {
     val (p, atV, preds) = metadataCountInputs(spark, s).getOrElse(return None)
     val maint = graft.operators.MaintProfile.sessionFor(spark)
     graft.operators.Snapshot.metadataCountPlan(maint, p, atV, preds)
-      .map { case (coveredRows, _) =>
-        val (c, b, t) = graft.operators.Snapshot.lastCountPlan
-        (c, b, t, coveredRows)
-      }
+      .map { case (coveredRows, _, (c, b, t)) => (c, b, t, coveredRows) }
   }
 
   private def metadataCountFast(spark: SparkSession,
@@ -111,7 +108,7 @@ object Runner {
     // exchange carries a single row per task regardless)
     val maint = graft.operators.MaintProfile.sessionFor(spark)
     graft.operators.Snapshot.metadataCountPlan(maint, p, atV, preds)
-      .map { case (coveredRows, boundary) =>
+      .map { case (coveredRows, boundary, _) =>
         val boundaryRows = boundary.fold(0L) { df =>
           // the exact compiled predicates — not the ReadPred
           // translation — gate the boundary rows, so the two plan

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import ManifestCodec._
 
 /** Manifest-based snapshot commit protocol ([EXT], SURVEY §2.10) —
   * the third commit mode (`--commit snapshot`), closing the gap the
@@ -40,6 +41,12 @@ import org.apache.spark.sql.types.StructType
   * history costs bytes proportional to what each commit CHANGED, not
   * to the table.
   *
+  * The text of manifests, deltas and list checkpoints is
+  * [[ManifestCodec]]'s alone. Every commit runs one sequence,
+  * [[commitLocked]]: an incremental change goes in as planned, and a
+  * blind full-membership commit (overwrite, column evolution, a commit
+  * group's fresh table) goes in as its diff against the resolved head.
+  *
   * Single writer at a time, like every graft writer (the reference's
   * job model). Crash safety: an unfinished commit leaves an
   * uncommitted `_v_` dir and possibly orphan pool files — both are
@@ -49,7 +56,6 @@ import org.apache.spark.sql.types.StructType
 object Snapshot {
 
   val DataDirName = "_data"
-  val ManifestName = "_MANIFEST"
   /** Pool subdir holding DELETION-VECTOR files (pk tombstones) —
     * underscore-prefixed so Spark scans and the generic pool walk
     * never read them as data; manifests reference them like any
@@ -65,7 +71,6 @@ object Snapshot {
     * recorded colset without a new manifest format.
     */
   val PredColName = "__pred__"
-  private val FormatTag = "graft-snapshot-v1"
 
   /** Sentinel `seq` of a freshly created [[Entry]]: replaced with the
     * committed version number inside [[commitLocked]]. Never appears
@@ -261,369 +266,29 @@ object Snapshot {
 
   def dataDir(root: Path): Path = new Path(root, DataDirName)
 
-  // ── manifest io (driver-side, O(files) text) ─────────────────────
-
-  /** Serialize a manifest to its on-disk text. Exposed separately from
-    * [[writeManifest]] so the post-marker commit re-verify can compare
-    * NORMALIZED forms: the line format deliberately drops cols/env
-    * pairs whose names contain the format's separators, so a raw
-    * case-class equality between the stamped manifest and its readback
-    * would fail forever on such names and turn a working
-    * graceful-degradation path into a permanent commit abort (r12
-    * ADVICE). Rendering both sides applies the same lossy filters to
-    * each, so the compare tests exactly "did MY bytes survive".
-    */
-  private[graft] def renderManifest(m: Manifest,
-                                    uuid: Option[String] = None): String = {
-    val sb = new StringBuilder
-    sb.append(FormatTag).append('\n')
-    sb.append(m.schemaDdl).append('\n')
-    sb.append(m.partitionBy.mkString(",")).append('\n')
-    // per-commit identity witness (r13 ADVICE): NOT part of [[Manifest]]
-    // (two commits of identical membership are the same logical state —
-    // the re-verify compare must not distinguish them); the resolved
-    // cache compares it so a dropped-and-recreated table that reuses a
-    // version number with a same-length manifest in the same mtime
-    // tick can never serve the old incarnation's membership
-    uuid.foreach(u => sb.append("#uuid=").append(u).append('\n'))
-    // optional header lines ('#key=value') between the fixed header and
-    // the entry list — unknown keys are skipped on read, so the format
-    // stays forward-compatible (a v1 reader of this layout never sees
-    // them: entry lines start with a digit)
-    m.commitTsMillis.foreach(ts => sb.append("#commit_ts=").append(ts).append('\n'))
-    // ordered, repeatable: one '#alias=physical:logical' line per pair
-    m.aliases.foreach { case (po, ln) =>
-      if (!po.exists(":\t\n".contains(_)) && !ln.exists(":\t\n".contains(_)))
-        sb.append("#alias=").append(po).append(':').append(ln).append('\n')
-    }
-    // one '#dropped=name' line per retired physical column name
-    m.dropped.foreach { n =>
-      if (!n.exists("\t\n".contains(_)))
-        sb.append("#dropped=").append(n).append('\n')
-    }
-    m.note.foreach { n =>
-      if (!n.exists("\n".contains(_)))
-        sb.append("#note=").append(n).append('\n')
-    }
-    m.entries.foreach(e => sb.append(renderEntry(e)).append('\n'))
-    sb.toString
-  }
-
-  /** One manifest entry line (no trailing newline) — shared by the
-    * full-manifest writer and the delta writer's `+` lines.
-    */
-  private def renderEntry(e: Entry): String = {
-    val sb = new StringBuilder
-    sb.append(e.bytes).append('\t').append(e.rel)
-    // third tab field: the DV key-column set — recorded only when
-    // the names round-trip through the line format unambiguously
-    val colsStr = e.cols.filter(cs => cs.nonEmpty &&
-      cs.forall(c => !c.contains(',') && !c.contains('\t') && !c.contains('\n')))
-      .map(_.mkString(","))
-    // fourth tab field (r12): per-column key envelopes,
-    // `name=min,max,nullflag` joined by ';' — readers that predate
-    // the field ignore trailing fields, so the format stays
-    // compatible in both directions. Bytes-domain envelopes (r16)
-    // render as the 4-comma shape `name=B,hexlo,hexhi,nullflag`: a
-    // pre-r16 reader's 3-field value match fails for exactly that
-    // column and drops ONLY its envelope (graceful degradation to
-    // the footer sweep — the versioning the value shape was designed
-    // for). All-null files keep the domain-neutral `,,1` form.
-    val envStr = e.envs.filter(_.nonEmpty)
-      .map(_.toSeq.sortBy(_._1).collect {
-        case (n, v) if !n.exists(";=,\t\n".contains(_)) =>
-          if (v.bmin.isDefined || v.bmax.isDefined)
-            s"$n=B,${v.bmin.getOrElse("")},${v.bmax.getOrElse("")}," +
-              (if (v.hasNulls) "1" else "0")
-          else
-            s"$n=${v.min.fold("")(_.toString)},${v.max.fold("")(_.toString)}," +
-              (if (v.hasNulls) "1" else "0")
-      }.mkString(";"))
-      .filter(_.nonEmpty)
-    // fifth tab field (r12): the entry's commit sequence — written
-    // for every stamped entry (empty cols/envs placeholders keep
-    // the positions fixed); readers that predate it ignore trailing
-    // fields, readers of manifests that predate it normalize
-    // ([[manifestAt]]) to the global pre-seq semantics
-    // sixth tab field (r16): the file's row count (metadata-only
-    // counts); same trailing-field compatibility rule
-    val rowsDef = e.rows.isDefined
-    if (colsStr.isDefined || envStr.isDefined || e.seq >= 0 || rowsDef)
-      sb.append('\t').append(colsStr.getOrElse(""))
-    if (envStr.isDefined || e.seq >= 0 || rowsDef)
-      sb.append('\t').append(envStr.getOrElse(""))
-    if (e.seq >= 0 || rowsDef)
-      sb.append('\t').append(if (e.seq >= 0) e.seq.toString else "")
-    if (rowsDef) sb.append('\t').append(e.rows.get)
-    sb.toString
-  }
-
-  /** Parse one entry line — the inverse of [[renderEntry]], with the
-    * pre-seq normalization documented there.
-    */
-  private def parseEntry(l: String): Entry = {
-    val parts = l.split("\t", -1)
-    val envs =
-      if (parts.length >= 4 && parts(3).nonEmpty)
-        Some(parts(3).split(";").toSeq.flatMap { kv =>
-          kv.split("=", 2) match {
-            case Array(n, v) => v.split(",", -1) match {
-              case Array(lo, hi, nf) =>
-                Some(n -> ColEnv(
-                  if (lo.isEmpty) None else Some(lo.toLong),
-                  if (hi.isEmpty) None else Some(hi.toLong),
-                  nf == "1"))
-              // bytes-domain shape (r16): `B,hexlo,hexhi,nullflag`
-              case Array("B", lo, hi, nf) =>
-                Some(n -> ColEnv(None, None, nf == "1",
-                  if (lo.isEmpty) None else Some(lo),
-                  if (hi.isEmpty) None else Some(hi)))
-              case _ => None
-            }
-            case _ => None
-          }
-        }.toMap).filter(_.nonEmpty)
-      else None
-    val isDel = parts(1).startsWith(DeletesDirName + "/")
-    val seq =
-      if (parts.length >= 5 && parts(4).nonEmpty) parts(4).toLong
-      else if (isDel) Long.MaxValue
-      else 0L
-    val rows =
-      if (parts.length >= 6 && parts(5).nonEmpty) Some(parts(5).toLong)
-      else None
-    Entry(parts(1), parts(0).toLong,
-      if (parts.length >= 3 && parts(2).nonEmpty)
-        Some(parts(2).split(",").toSeq)
-      else None,
-      envs, seq, rows)
-  }
-
-  private[graft] def writeManifest(fs: FileSystem, vdir: Path, m: Manifest): Unit = {
-    val rendered = renderManifest(m,
-      Some(java.util.UUID.randomUUID().toString))
-    // EXCLUSIVE create ([[atomicCreate]], not fs.create(overwrite =
-    // false) — the latter is check-then-act on the local filesystem,
-    // HADOOP-9361): two writers racing to the same version number (a
-    // defeated commit lock) must fail LOUDLY here, not interleave
-    // writes so the marker winner commits the loser's membership
-    // bytes. After winning the exclusive create, this writer owns the
-    // (empty) file and fills it in place. Crash leftovers never
-    // collide — an uncommitted stray `_v_n` makes the next commit
-    // compute n+1.
-    val mp = new Path(vdir, ManifestName)
-    if (!atomicCreate(fs, mp))
-      throw new java.io.IOException(
-        s"manifest already exists at $mp — a concurrent writer defeated " +
-          "the commit lock; this commit did NOT land, re-plan and retry")
-    val out = fs.create(mp, true)
-    try out.write(rendered.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  /** Test/bench hook: `false` forces every commit to write a full
-    * checkpoint manifest (the pre-r13 monolithic behavior) — the A/B
-    * lever ScaleBench10 prices the delta protocol against.
-    */
-  @volatile var deltaCommitsEnabled: Boolean = true
-
-  /** Commit-time manifest writer (r13): writes a `_MANIFEST_DELTA`
-    * when (a) the previous committed head resolves, (b) the delta
-    * chain stays under [[CheckpointEvery]], and (c) the changed-entry
-    * count is smaller than the membership — else a full checkpoint.
-    * The delta records the base VERSION it was computed against
-    * (`#base=`), so resolution is exact even if an uncommitted stray
-    * version dir sits between: the chain follows recorded pointers,
-    * never "the previous committed version at read time". Headers
-    * (schema, partition-by, aliases, dropped, commit_ts) are carried
-    * IN FULL in every delta — they are O(columns), and it makes each
-    * version's logical schema self-contained.
-    */
-  /** Returns true when a FULL checkpoint was written (the commit
-    * classes whose vacuum also runs the full orphan sweep).
-    */
-  private def writeManifestOrDelta(fs: FileSystem, root: Path, vdir: Path,
-                                   next: Long, stamped: Manifest): Boolean = {
-    val baseOpt =
-      if (!deltaCommitsEnabled) None
-      else committed(fs, root).lastOption.flatMap { case (bv, bdir) =>
-        (try resolveManifest(fs, bdir)
-         catch { case scala.util.control.NonFatal(_) => None })
-          .map { case (bm, depth) => (bv, bm, depth) }
-      }
-    baseOpt match {
-      case Some((bv, bm, depth)) =>
-        // a CHANGED entry (same rel, different metadata — envelope
-        // stamping, seq restamp) is remove+add. Case-class equality is
-        // the diff identity — O(n) comparisons with zero string
-        // building (rendering all 100k base lines per commit was the
-        // difference between an O(delta) and an O(table) commit; see
-        // ScaleBench10). An entry whose exotic cols/env names the
-        // line format drops compares unequal against its normalized
-        // readback and emits a spurious remove+add of the same
-        // rendered line — harmless (the resolution is identical).
-        val baseByRel = bm.entries.map(e => e.rel -> e).toMap
-        val newByRel = stamped.entries.map(e => e.rel -> e).toMap
-        val removed = bm.entries.map(_.rel).filter(r =>
-          !newByRel.get(r).contains(baseByRel(r)))
-        val added = stamped.entries.filter(e =>
-          !baseByRel.get(e.rel).contains(e))
-        if (depth + 1 < CheckpointEvery &&
-            removed.size + added.size < math.max(stamped.entries.size, 1)) {
-          writeDelta(fs, vdir, stamped, bv, removed, added); false
-        } else {
-          writeCheckpointAt(fs, root, vdir, stamped,
-            Some((bv, removed.toSet ++ added.iterator.map(_.rel))))
-          true
-        }
-      case _ => writeCheckpointAt(fs, root, vdir, stamped, None); true
-    }
-  }
-
-  /** Write a CHECKPOINT backing for `vdir`: a `_MANIFEST_LIST` with
-    * part reuse for large memberships ([[ListCheckpointMin]]), else
-    * the classic text `_MANIFEST`. `base` = (the version this commit
-    * was diffed against, the rels that differ) — the dirty seed for
-    * part reuse; None (first commit / blind replace) chunks fresh.
-    */
-  private def writeCheckpointAt(fs: FileSystem, root: Path, vdir: Path,
-                                m: Manifest,
-                                base: Option[(Long, Set[String])]): Unit = {
-    // the A/B lever ([[deltaCommitsEnabled]] = false) must reproduce
-    // the pre-r13 MONOLITHIC text behavior exactly — lists are part of
-    // the incremental protocol it disables
-    if (!deltaCommitsEnabled || m.entries.size < ListCheckpointMin) {
-      writeManifest(fs, vdir, m); return }
-    val prev = base.flatMap { case (bv, changed) =>
-      (try resolvedFor(fs, new Path(root, f"_v_$bv%020d"))
-       catch { case scala.util.control.NonFatal(_) => None })
-        .flatMap(_.parts)
-        .map { case (refs, dirty) => (refs, dirty ++ changed) }
-    }
-    writeListCheckpoint(fs, root, vdir, m.copy(entries = Nil),
-      treeOf(m.entries), prev)
-    ()
-  }
-
-  private def writeDelta(fs: FileSystem, vdir: Path, m: Manifest,
-                         baseV: Long, removed: Seq[String],
-                         added: Seq[Entry]): Unit = {
-    val sb = new StringBuilder
-    sb.append(DeltaTag).append('\n')
-    sb.append(m.schemaDdl).append('\n')
-    sb.append(m.partitionBy.mkString(",")).append('\n')
-    sb.append("#uuid=").append(java.util.UUID.randomUUID()).append('\n')
-    sb.append("#base=").append(baseV).append('\n')
-    m.commitTsMillis.foreach(ts => sb.append("#commit_ts=").append(ts).append('\n'))
-    m.aliases.foreach { case (po, ln) =>
-      if (!po.exists(":\t\n".contains(_)) && !ln.exists(":\t\n".contains(_)))
-        sb.append("#alias=").append(po).append(':').append(ln).append('\n')
-    }
-    m.dropped.foreach { n =>
-      if (!n.exists("\t\n".contains(_)))
-        sb.append("#dropped=").append(n).append('\n')
-    }
-    m.note.foreach { n =>
-      if (!n.exists("\n".contains(_)))
-        sb.append("#note=").append(n).append('\n')
-    }
-    removed.foreach(r => sb.append('-').append(r).append('\n'))
-    added.foreach(e => sb.append('+').append(renderEntry(e)).append('\n'))
-    // same EXCLUSIVE-create collision arbiter as the full manifest:
-    // two writers racing the same version number must fail loudly
-    // here or at the marker, never silently interleave
-    val dp = new Path(vdir, DeltaName)
-    if (!atomicCreate(fs, dp))
-      throw new java.io.IOException(
-        s"manifest delta already exists at $dp — a concurrent writer " +
-          "defeated the commit lock; this commit did NOT land, re-plan and retry")
-    val out = fs.create(dp, true)
-    try out.write(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  // ── manifest io (driver-side; the text is [[ManifestCodec]]'s) ───
 
   /** The base version a DELTA version dir points at plus its removed
     * rels; None for a checkpoint (full `_MANIFEST` present — it
-    * shadows any delta) or a dir with neither file. Light read, no
-    * chain resolution.
+    * shadows any delta) or a dir with neither file. No chain
+    * resolution.
     */
-  private def deltaInfo(fs: FileSystem, vdir: Path): Option[(Long, Seq[String])] = {
+  private def deltaInfo(fs: FileSystem, vdir: Path): Option[(Long, Set[String])] = {
     if (fs.exists(new Path(vdir, ManifestName)) ||
         fs.exists(new Path(vdir, ListName))) return None
     val dp = new Path(vdir, DeltaName)
     if (!fs.exists(dp)) return None
-    val lines = readText(fs, dp).split("\n", -1)
-    lines.collectFirst {
-      case h if h.startsWith("#base=") => h.stripPrefix("#base=").toLong
-    }.map(b => (b, lines.collect {
-      case l if l.startsWith("-") => l.stripPrefix("-")
-    }.toSeq))
+    val d = parseDelta(readText(fs, dp), dp)
+    Some((d.baseV, d.removed))
   }
 
   private def deltaBase(fs: FileSystem, vdir: Path): Option[Long] =
     deltaInfo(fs, vdir).map(_._1)
 
-  /** Materialize a resolved manifest as a full checkpoint inside a
-    * LIVE committed version dir (vacuum chain promotion). Written
-    * temp-then-rename: a torn direct write would shadow the dir's
-    * still-valid delta for concurrent readers. Loses gracefully when
-    * a concurrent promoter already renamed — the content is identical
-    * by construction.
-    */
-  private def promoteCheckpoint(fs: FileSystem, vdir: Path, m: Manifest): Unit = {
-    val mp = new Path(vdir, ManifestName)
-    if (fs.exists(mp)) return
-    val tmp = new Path(vdir, s"._promote_${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(renderManifest(m, Some(java.util.UUID.randomUUID().toString))
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val renamed = try fs.rename(tmp, mp)
-    catch { case scala.util.control.NonFatal(_) => false }
-    if (!renamed)
-      try fs.delete(tmp, false) catch { case scala.util.control.NonFatal(_) => () }
-  }
-
-  /** The manifest of a version dir, None when the dir predates the
-    * snapshot protocol (a `versioned`-mode data dir).
-    */
-  private def readText(fs: FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-    finally in.close()
-  }
-
   /** Parse a FULL (checkpoint) manifest file; None if absent. */
-  private def parseFullManifest(fs: FileSystem, vdir: Path): Option[Manifest] = {
+  private def fullManifest(fs: FileSystem, vdir: Path): Option[Manifest] = {
     val mp = new Path(vdir, ManifestName)
-    if (!fs.exists(mp)) return None
-    val text = readText(fs, mp)
-    val lines = text.split("\n", -1)
-    require(lines.length >= 3 && lines(0) == FormatTag,
-      s"unrecognized manifest format in $mp")
-    val pcols = lines(2).split(",").filter(_.nonEmpty).toSeq
-    val (headers, body) = lines.drop(3).filter(_.nonEmpty).partition(_.startsWith("#"))
-    val commitTs = headers.collectFirst {
-      case h if h.startsWith("#commit_ts=") => h.stripPrefix("#commit_ts=").toLong
-    }
-    val aliases = headers.collect {
-      case h if h.startsWith("#alias=") =>
-        h.stripPrefix("#alias=").split(":", 2) match {
-          case Array(po, ln) => (po, ln)
-        }
-    }.toSeq
-    val dropped = headers.collect {
-      case h if h.startsWith("#dropped=") => h.stripPrefix("#dropped=")
-    }.toSeq
-    val note = headers.collectFirst {
-      case h if h.startsWith("#note=") => h.stripPrefix("#note=")
-    }
-    // normalize ON READ: an entry line without the seq field (a
-    // pre-r12 manifest, or one carried from it) gets the effective
-    // seq that reproduces the old GLOBAL tombstone semantics — see
-    // [[parseEntry]].
-    val entries = body.map(parseEntry).toSeq
-    Some(Manifest(lines(1), pcols, entries, commitTs, aliases, dropped, note))
+    if (!fs.exists(mp)) None else Some(parseManifest(readText(fs, mp), mp))
   }
 
   /** Resolve a version's FULL membership: a checkpoint `_MANIFEST` as
@@ -637,7 +302,7 @@ object Snapshot {
     * reads only the new delta, never the checkpoint.
     */
   def manifestAt(fs: FileSystem, vdir: Path): Option[Manifest] =
-    resolveManifest(fs, vdir).map(_._1)
+    resolvedFor(fs, vdir).map(_.m)
 
   /** One cached resolution. `backing`/`len`/`mtime`/`markerMtime`
     * witness validity: committed versions are immutable, but a DROPPED
@@ -681,6 +346,17 @@ object Snapshot {
 
   private def treeOf(entries: Seq[Entry]): scala.collection.immutable.TreeMap[String, Entry] =
     scala.collection.immutable.TreeMap.from(entries.iterator.map(e => e.rel -> e))
+
+  /** Apply a delta to a membership: persistent-map delete + insert —
+    * O(changed · log n), sharing structure with the base's tree; the
+    * canonical rel-sorted entry order IS the map's iteration order.
+    * Chain resolution and the commit both apply through here, so a
+    * blind commit's in-memory check certifies the resolution path.
+    */
+  private def applyDelta(base: scala.collection.immutable.TreeMap[String, Entry],
+                         removed: Set[String], added: Seq[Entry])
+      : scala.collection.immutable.TreeMap[String, Entry] =
+    added.foldLeft(base -- removed)((t, e) => t.updated(e.rel, e))
 
   /** Memoized `StructType.fromDDL` — Catalyst's DDL parse costs
     * ~10-20 ms and the commit path re-parses the SAME table schema on
@@ -737,36 +413,12 @@ object Snapshot {
   private def observedFineMtime(mts: Long*): Boolean =
     mts.exists(mt => mt > 0 && mt % 1000 != 0)
 
-  /** The `#uuid=` commit-identity header of a manifest/delta file, None
-    * for pre-r14 files (or a header beyond the probe window — the
-    * EXTRACTION is the identity on both the cache-fill and the
-    * cache-hit side, so any losiness cancels). One bounded read
-    * (≤64 KiB: the header sits right after the DDL line); the resolved
-    * cache compares it on hits against COARSE-mtime filesystems
-    * ([[coarseMtimeFs]]) so stat equality alone can never serve a
-    * dropped-and-recreated table's previous incarnation.
-    */
-  private def readCommitUuid(fs: FileSystem, p: Path): Option[String] =
-    try {
-      val in = fs.open(p)
-      val buf = new Array[Byte](65536)
-      val n = try in.readNBytes(buf, 0, buf.length) finally in.close()
-      new String(buf, 0, math.max(n, 0), java.nio.charset.StandardCharsets.UTF_8)
-        .linesIterator.collectFirst {
-          case l if l.startsWith("#uuid=") => l.stripPrefix("#uuid=")
-        }
-    } catch { case scala.util.control.NonFatal(_) => None }
-
   /** Test hook: fires when a dir's checkpoint probes (text + list)
     * both missed, BEFORE the delta-chain walk — the exact instant a
     * concurrent vacuum's chain promotion can land. Lets specs drive
     * the promotion race deterministically. No-op in production.
     */
   @volatile private[graft] var promotionRaceHook: () => Unit = () => ()
-
-  /** Resolved manifest + delta-chain depth (0 = checkpoint). */
-  private def resolveManifest(fs: FileSystem, vdir: Path): Option[(Manifest, Int)] =
-    resolvedFor(fs, vdir).map(r => (r.m, r.depth))
 
   private def resolvedFor(fs: FileSystem, vdir: Path): Option[Resolved] = {
     val key = vdir.toString
@@ -782,7 +434,7 @@ object Snapshot {
     }
     type R = (scala.collection.immutable.TreeMap[String, Entry], Manifest,
       Int, Option[Long], Long, Option[(Vector[PartRef], Set[String])])
-    val full: Option[R] = parseFullManifest(fs, vdir)
+    def resolveFull(): Option[R] = fullManifest(fs, vdir)
       .map(fm => (treeOf(fm.entries), fm.copy(entries = Nil), 0,
         None: Option[Long], fm.entries.size.toLong,
         None: Option[(Vector[PartRef], Set[String])]))
@@ -797,7 +449,7 @@ object Snapshot {
       val dp = new Path(vdir, DeltaName)
       if (!fs.exists(dp)) None
       else {
-        val d = parseDelta(fs, dp)
+        val d = parseDelta(readText(fs, dp), dp)
         val bdir = new Path(vdir.getParent, f"_v_${d.baseV}%020d")
         val base = resolvedFor(fs, bdir).getOrElse(
           throw new IllegalStateException(
@@ -805,12 +457,7 @@ object Snapshot {
               "manifest is gone — the delta chain is broken (vacuum " +
               "promotion failed?); the table metadata needs repair"))
         require(base.depth < 1000, s"manifest delta chain too deep under $vdir")
-        // apply: persistent-map delete + insert — O(changed · log n),
-        // sharing structure with the base's tree; the canonical
-        // rel-sorted entry order IS the map's iteration order
-        val tree = d.added.foldLeft(base.tree -- d.removed)((t, e) =>
-          t.updated(e.rel, e))
-        Some((tree, d.hdr, base.depth + 1, Some(d.baseV),
+        Some((applyDelta(base.tree, d.removed, d.added), d.hdr, base.depth + 1, Some(d.baseV),
           (d.removed.size + d.added.size + 1).toLong,
           // the next LIST checkpoint reuses the chain's base parts,
           // rewriting only parts whose range a chain commit dirtied
@@ -818,7 +465,7 @@ object Snapshot {
             (refs, dirty ++ d.removed ++ d.added.iterator.map(_.rel)) }))
       }
     }
-    val out = full.orElse(resolveList()).orElse {
+    val out = resolveFull().orElse(resolveList()).orElse {
       promotionRaceHook()
       // a reader resolving a RETAINED delta version can race vacuum's
       // chain promotion (r13 ADVICE): this thread saw `_MANIFEST`
@@ -839,12 +486,7 @@ object Snapshot {
       catch {
         case e: IllegalStateException
             if e.getMessage != null && e.getMessage.contains("delta chain") =>
-          Some(parseFullManifest(fs, vdir)
-            .map(fm => (treeOf(fm.entries), fm.copy(entries = Nil), 0,
-              None: Option[Long], fm.entries.size.toLong,
-              None: Option[(Vector[PartRef], Set[String])]))
-            .orElse(resolveList())
-            .getOrElse(throw e))
+          Some(resolveFull().orElse(resolveList()).getOrElse(throw e))
       }
     }
     // cache ONLY committed versions: an aborted commit deletes its
@@ -864,50 +506,6 @@ object Snapshot {
     }
   }
 
-  /** A parsed `_MANIFEST_DELTA`: full header (a Manifest with entries
-    * Nil) + base pointer + removed rels + added entries.
-    */
-  private final case class ParsedDelta(hdr: Manifest, baseV: Long,
-                                       removed: Set[String], added: Seq[Entry])
-
-  private def parseDelta(fs: FileSystem, dp: Path): ParsedDelta = {
-    val lines = readText(fs, dp).split("\n", -1)
-    require(lines.length >= 4 && lines(0) == DeltaTag,
-      s"unrecognized manifest delta format in $dp")
-    val pcols = lines(2).split(",").filter(_.nonEmpty).toSeq
-    val rest = lines.drop(3).filter(_.nonEmpty)
-    val headers = rest.filter(_.startsWith("#"))
-    val baseV = headers.collectFirst {
-      case h if h.startsWith("#base=") => h.stripPrefix("#base=").toLong
-    }.getOrElse(throw new IllegalStateException(
-      s"manifest delta $dp carries no #base pointer"))
-    val commitTs = headers.collectFirst {
-      case h if h.startsWith("#commit_ts=") => h.stripPrefix("#commit_ts=").toLong
-    }
-    val aliases = headers.collect {
-      case h if h.startsWith("#alias=") =>
-        h.stripPrefix("#alias=").split(":", 2) match {
-          case Array(po, ln) => (po, ln)
-        }
-    }.toSeq
-    val dropped = headers.collect {
-      case h if h.startsWith("#dropped=") => h.stripPrefix("#dropped=")
-    }.toSeq
-    val note = headers.collectFirst {
-      case h if h.startsWith("#note=") => h.stripPrefix("#note=")
-    }
-    val removed = rest.collect {
-      case l if l.startsWith("-") => l.stripPrefix("-")
-    }.toSet
-    val added = rest.filter(l => l.nonEmpty && !l.startsWith("#") &&
-      !l.startsWith("-")).map(l => parseEntry(l.stripPrefix("+"))).toSeq
-    ParsedDelta(Manifest(lines(1), pcols, Nil, commitTs, aliases, dropped, note),
-      baseV, removed, added)
-  }
-
-  private val DeltaName = "_MANIFEST_DELTA"
-  private val DeltaTag = "graft-snapshot-delta-v1"
-
   // ── manifest-LIST checkpoints (r14 — the Iceberg manifest-list /
   // Delta multi-part-checkpoint shape): the every-CheckpointEvery-th
   // checkpoint was the last O(entries) driver cost (a 1M-entry table
@@ -925,9 +523,6 @@ object Snapshot {
   // any size. Cold resolution stays O(entries) (read list + parts);
   // the marker re-verify is O(parts) stats, not an O(entries) re-read.
 
-  private val ListName = "_MANIFEST_LIST"
-  private val ListTag = "graft-snapshot-list-v1"
-  private val PartsDirName = "_manifest_parts"
   /** Entries per freshly written part (a dirty part splits when it
     * outgrows 2× this). The grain bounds a dirty rel's REWRITE
     * AMPLIFICATION to ≤ 512 entry lines, making the cadence-checkpoint
@@ -947,51 +542,16 @@ object Snapshot {
     */
   @volatile private[graft] var ListCheckpointMin: Int = 50000
 
-  /** One membership part of a list checkpoint: immutable pool file
-    * `_manifest_parts/<name>` holding `count` entry lines covering the
-    * rel range [firstRel, next part's firstRel). `len` (bytes) is the
-    * re-verify witness — O(1) stat instead of an O(count) re-read.
-    */
-  private[graft] final case class PartRef(name: String, count: Int,
-                                          len: Long, firstRel: String)
-
   private def partsDir(root: Path): Path = new Path(root, PartsDirName)
 
   /** Parse a `_MANIFEST_LIST`'s header + part refs WITHOUT reading the
     * parts — the O(parts) form the marker re-verify, the vacuum parts
     * refcount and fsck use.
     */
-  private def parseListHeader(fs: FileSystem, vdir: Path)
+  private def listHeader(fs: FileSystem, vdir: Path)
       : Option[(Manifest, Vector[PartRef])] = {
     val lp = new Path(vdir, ListName)
-    if (!fs.exists(lp)) return None
-    val lines = readText(fs, lp).split("\n", -1)
-    require(lines.length >= 3 && lines(0) == ListTag,
-      s"unrecognized manifest list format in $lp")
-    val pcols = lines(2).split(",").filter(_.nonEmpty).toSeq
-    val rest = lines.drop(3).filter(_.nonEmpty)
-    val headers = rest.filter(_.startsWith("#"))
-    val commitTs = headers.collectFirst {
-      case h if h.startsWith("#commit_ts=") => h.stripPrefix("#commit_ts=").toLong
-    }
-    val aliases = headers.collect {
-      case h if h.startsWith("#alias=") =>
-        h.stripPrefix("#alias=").split(":", 2) match {
-          case Array(po, ln) => (po, ln)
-        }
-    }.toSeq
-    val dropped = headers.collect {
-      case h if h.startsWith("#dropped=") => h.stripPrefix("#dropped=")
-    }.toSeq
-    val note = headers.collectFirst {
-      case h if h.startsWith("#note=") => h.stripPrefix("#note=")
-    }
-    val refs = rest.filter(_.startsWith("P\t")).map { l =>
-      val Array(_, name, cnt, len, firstRel) = l.split("\t", 5)
-      PartRef(name, cnt.toInt, len.toLong, firstRel)
-    }.toVector
-    Some((Manifest(lines(1), pcols, Nil, commitTs, aliases,
-      dropped, note), refs))
+    if (!fs.exists(lp)) None else Some(parseList(readText(fs, lp), lp))
   }
 
   /** Parse a `_MANIFEST_LIST` + its parts into a full manifest. A
@@ -1000,12 +560,12 @@ object Snapshot {
     */
   private def parseListManifest(fs: FileSystem, vdir: Path)
       : Option[(Manifest, Vector[PartRef])] =
-    parseListHeader(fs, vdir).map { case (hdr, refs) =>
+    listHeader(fs, vdir).map { case (hdr, refs) =>
       val pd = partsDir(vdir.getParent)
       val entries = refs.flatMap { r =>
         val pf = new Path(pd, r.name)
         val got =
-          try readText(fs, pf).split("\n", -1).filter(_.nonEmpty).map(parseEntry)
+          try parsePart(readText(fs, pf))
           catch {
             case scala.util.control.NonFatal(e) => throw new IllegalStateException(
               s"manifest list at $vdir references part ${r.name} which is " +
@@ -1018,18 +578,16 @@ object Snapshot {
       (hdr.copy(entries = entries.toSeq), refs)
     }
 
-  /** Write a LIST checkpoint for membership `tree`, reusing every part
-    * of `prev` whose rel range contains no dirty rel. Returns the new
-    * part refs. Part files land create-exclusive in the shared parts
-    * pool BEFORE the list file (crash → unreferenced parts, age-swept
-    * by the full-sweep vacuum like pool orphans); the list file itself
-    * is the same create-exclusive collision arbiter as `_MANIFEST`.
+  /** Write the PARTS of a list checkpoint for membership `tree`,
+    * reusing every part of `prev` whose rel range contains no dirty
+    * rel. Returns the part refs and the names written fresh. Part
+    * files land create-exclusive in the shared parts pool BEFORE the
+    * caller writes the list file (crash → unreferenced parts, collected
+    * through the stage journal like pool orphans).
     */
-  private def writeListCheckpoint(fs: FileSystem, root: Path, vdir: Path,
-                                  hdr: Manifest,
-                                  tree: scala.collection.immutable.TreeMap[String, Entry],
-                                  prev: Option[(Vector[PartRef], Set[String])],
-                                  viaRename: Boolean = false)
+  private def writeListParts(fs: FileSystem, root: Path, vdir: Path,
+                             tree: scala.collection.immutable.TreeMap[String, Entry],
+                             prev: Option[(Vector[PartRef], Set[String])])
       : (Vector[PartRef], Set[String]) = {
     val pd = partsDir(root)
     fs.mkdirs(pd)
@@ -1038,35 +596,22 @@ object Snapshot {
     // flushed in one batch below — so their names can be stage-
     // journaled BEFORE any part file exists (r15: crash orphans are
     // collected from the journal, not an O(pool) listing)
-    val plannedParts = scala.collection.mutable.ArrayBuffer.empty[(String, Array[Byte])]
+    val plannedParts = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     def writePart(entries: Seq[Entry]): PartRef = {
       val name = s"part-${java.util.UUID.randomUUID().toString.replace("-", "")}.txt"
-      val sb = new StringBuilder
-      entries.foreach(e => sb.append(renderEntry(e)).append('\n'))
-      val bytes = sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      plannedParts += ((name, bytes))
+      val text = renderPart(entries)
+      plannedParts += ((name, text))
       freshNames += name
-      PartRef(name, entries.size, bytes.length.toLong, entries.head.rel)
+      PartRef(name, entries.size,
+        text.getBytes(java.nio.charset.StandardCharsets.UTF_8).length.toLong,
+        entries.head.rel)
     }
     def flushPlannedParts(): Unit = {
       if (plannedParts.isEmpty) return
       writeStageJournal(fs, root,
         plannedParts.map(p => s"$PartsDirName/${p._1}").toSeq)
-      plannedParts.foreach { case (name, bytes) =>
-        val pf = new Path(pd, name)
-        if (!atomicCreate(fs, pf))
-          throw new java.io.IOException(s"manifest part collision at $pf")
-        // local scheme writes via nio: Hadoop RawLocalFS create() FORKS a
-        // chmod per file (~8 ms of process spawn) — at ~60 dirty parts
-        // per cadence checkpoint that spawn cost, not the render, was the
-        // dominant term
-        if (fs.getScheme == "file")
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(pf.toUri.getPath), bytes)
-        else {
-          val out = fs.create(pf, true)
-          try out.write(bytes) finally out.close()
-        }
+      plannedParts.foreach { case (name, text) =>
+        writeExclusive(fs, new Path(pd, name), text, "manifest part")
       }
     }
     def chunked(entries: Seq[Entry]): Seq[PartRef] =
@@ -1112,51 +657,6 @@ object Snapshot {
       s"list checkpoint entry count mismatch at $vdir: " +
         s"${refs.map(_.count).sum} vs ${tree.size}")
     flushPlannedParts()
-    val sb = new StringBuilder
-    sb.append(ListTag).append('\n')
-    sb.append(hdr.schemaDdl).append('\n')
-    sb.append(hdr.partitionBy.mkString(",")).append('\n')
-    sb.append("#uuid=").append(java.util.UUID.randomUUID()).append('\n')
-    hdr.commitTsMillis.foreach(ts =>
-      sb.append("#commit_ts=").append(ts).append('\n'))
-    hdr.aliases.foreach { case (po, ln) =>
-      if (!po.exists(":\t\n".contains(_)) && !ln.exists(":\t\n".contains(_)))
-        sb.append("#alias=").append(po).append(':').append(ln).append('\n')
-    }
-    hdr.dropped.foreach { n =>
-      if (!n.exists("\t\n".contains(_)))
-        sb.append("#dropped=").append(n).append('\n')
-    }
-    hdr.note.foreach { n =>
-      if (!n.exists("\n".contains(_)))
-        sb.append("#note=").append(n).append('\n')
-    }
-    refs.foreach(r => sb.append("P\t").append(r.name).append('\t')
-      .append(r.count).append('\t').append(r.len).append('\t')
-      .append(r.firstRel).append('\n'))
-    val lp = new Path(vdir, ListName)
-    if (viaRename) {
-      // PROMOTION into a LIVE committed dir (vacuum chain promotion):
-      // a torn direct write would shadow the dir's still-valid delta —
-      // stage + rename, losing gracefully to a concurrent promoter
-      // (content identical by construction)
-      val tmp = new Path(vdir, s"._promote_list_${java.util.UUID.randomUUID()}")
-      val out = fs.create(tmp, true)
-      try out.write(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      val renamed = try fs.rename(tmp, lp)
-      catch { case scala.util.control.NonFatal(_) => false }
-      if (!renamed)
-        try fs.delete(tmp, false) catch { case scala.util.control.NonFatal(_) => () }
-    } else {
-      if (!atomicCreate(fs, lp))
-        throw new java.io.IOException(
-          s"manifest list already exists at $lp — a concurrent writer " +
-            "defeated the commit lock; this commit did NOT land, re-plan and retry")
-      val out = fs.create(lp, true)
-      try out.write(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
     (refs, freshNames.toSet)
   }
   /** Max delta-chain depth before a commit writes a full checkpoint
@@ -1948,11 +1448,12 @@ object Snapshot {
     * (the compiled predicate is degenerate there — null-typed — and
     * stays with the scan path). Every conjunct in `preds` MUST be the
     * complete, exact predicate set ([[graft.dsl.QueryCompiler.exactPreds]]);
-    * advisory subsets would overcount.
+    * advisory subsets would overcount. Returns (covered rows, boundary
+    * frame, (covered, boundary, total) member counts).
     */
   def metadataCountPlan(spark: SparkSession, rootStr: String,
                         at: Option[Long], preds: Seq[ReadPred])
-      : Option[(Long, Option[DataFrame])] = {
+      : Option[(Long, Option[DataFrame], (Int, Int, Int))] = {
     val root = new Path(rootStr)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!isSnapshotLayout(fs, root)) return None
@@ -1964,12 +1465,13 @@ object Snapshot {
     val data = m.dataEntries
     val kept = pruneEntries(spark, m, data, preds)
     val (covered, boundary) = kept.partition(predsCovered(spark, m, _, preds))
-    lastCountPlan = (covered.size, boundary.size, data.size)
+    val split = (covered.size, boundary.size, data.size)
+    lastCountPlan = split
     val coveredRows = covered.iterator.map(_.rows.get).sum
     val bf =
       if (boundary.isEmpty) None
       else Some(tombstonedRead(spark, root, m, boundary))
-    Some((coveredRows, bf))
+    Some((coveredRows, bf, split))
   }
 
   /** Is EVERY row of `e` proven to satisfy every conjunct? Zero-row
@@ -2447,27 +1949,6 @@ object Snapshot {
   private val StaleLockMs: Long = 60_000L
   private val AcquireTimeoutMs: Long = 120_000L
 
-  /** Create-exclusive that is ATOMIC on every backing store we run
-    * on. `FileSystem.create(path, overwrite = false)` is check-then-
-    * act on the LOCAL filesystem (RawLocalFileSystem does an exists()
-    * probe before opening — two racing creators can both succeed,
-    * HADOOP-9361), which silently defeats a lock built on it; local
-    * paths therefore go through `File.createNewFile()` (POSIX
-    * O_CREAT|O_EXCL — the kernel arbitrates). HDFS's create IS atomic
-    * at the namenode; strongly-consistent object stores honor
-    * if-none-match semantics through their connectors.
-    */
-  private def atomicCreate(fs: FileSystem, p: Path): Boolean =
-    if (fs.getScheme == "file") {
-      val f = new java.io.File(p.toUri.getPath)
-      val parent = f.getParentFile
-      if (parent != null) { parent.mkdirs(); () }
-      try f.createNewFile() catch { case scala.util.control.NonFatal(_) => false }
-    } else {
-      try { fs.create(p, false).close(); true }
-      catch { case scala.util.control.NonFatal(_) => false }
-    }
-
   /** Serialize the COMMIT step (never data writes — those stage
     * outside the committed membership) across concurrent writers: an
     * atomic lock-file create at the table root ([[atomicCreate]] —
@@ -2582,7 +2063,7 @@ object Snapshot {
                    fullSweep: Boolean = true): Unit =
     withCommitLock(fs, root)(vacuum(fs, root, keepVersions, fullSweep))
 
-  /** Commit a new version whose membership is `entries`, then vacuum
+  /** Commit a new version whose membership is `m.entries`, then vacuum
     * to `keepVersions` committed generations (data files refcounted
     * across every retained manifest). Returns the version number.
     * REPLACE semantics under concurrency: allocates the next version
@@ -2592,84 +2073,36 @@ object Snapshot {
     */
   private[graft] def commitVersion(fs: FileSystem, root: Path,
                                        m: Manifest, keepVersions: Int): Long =
-    withCommitLock(fs, root)(commitLocked(fs, root, m, keepVersions))
+    withCommitLock(fs, root)(commitBlindLocked(fs, root, m, keepVersions))
 
-  private def commitLocked(fs: FileSystem, root: Path,
-                           m: Manifest, keepVersions: Int): Long = {
-    val next = Versioned.list(fs, root).map(_._1).maxOption.getOrElse(0L) + 1
-    val vdir = new Path(root, f"_v_$next%020d")
-    fs.mkdirs(vdir)
-    // stamp FRESH entries (seq == UnsetSeq) with this commit's
-    // version — the sequence number tombstone applicability compares
-    // on. Carried entries (from a base manifest, or content-preserving
-    // rewrites that inherited their sources' seq) keep theirs.
-    val stamped = m.copy(
-      // CANONICAL rel order (r13): delta resolution reconstructs the
-      // entry list as (base minus removed) ++ added — sorting both the
-      // stamped list and every resolution makes the order a non-fact,
-      // so the post-marker re-verify's byte compare certifies the
-      // delta-apply path at every single commit. rels are unique
-      // within a version (one file, one membership line).
-      entries = m.entries.map(e => if (e.seq < 0) e.copy(seq = next) else e)
-        .sortBy(_.rel),
-      // stamp the commit instant INTO the manifest: filesystem mtimes
-      // do not survive a copy/restore of the table, a recorded field
-      // does
-      commitTsMillis = Some(System.currentTimeMillis()))
-    require(stamped.entries.map(_.rel).distinct.size == stamped.entries.size,
-      s"duplicate pool rels in commit membership at $vdir")
-    val wroteCheckpoint = writeManifestOrDelta(fs, root, vdir, next, stamped)
-    // COMMIT POINT: one atomic create — no reader can observe a
-    // version whose manifest is not fully written. atomicCreate, not
-    // fs.create(overwrite=false): on the local filesystem the latter
-    // is check-then-act, and this marker is the LAST arbiter if the
-    // lock was ever defeated — it must lose loudly, never both win.
-    require(atomicCreate(fs, new Path(vdir, Versioned.Marker)),
-      s"commit marker collision at $vdir — a concurrent writer defeated " +
-        "the commit lock; this commit did NOT land, re-plan and retry")
-    // RE-VERIFY the manifest under the freshly created marker (r12):
-    // if every lock layer was defeated, a racing holder's vacuum can
-    // delete this writer's manifest-written-but-unmarked version dir,
-    // after which the marker create above (atomicCreate mkdirs the
-    // parent) would otherwise publish a MARKER-ONLY version — an
-    // unreadable head instead of the promised loud failure. A missing
-    // or torn manifest here un-publishes the version and aborts.
-    // NORMALIZED compare (r12 ADVICE): the line format drops cols/env
-    // pairs with separator-bearing names, so raw case-class equality
-    // between `stamped` and its readback would fail permanently for
-    // such names. Re-rendering both sides applies the same write-side
-    // filters to each — the compare is "did my bytes survive", not
-    // "is the format lossless".
-    // FAST PATH first: case-class equality is O(n) field compares; the
-    // rendered-bytes compare (which needs O(n) string building twice)
-    // only arbitrates the lossy-name corner where the line format
-    // intentionally dropped a separator-bearing cols/env name.
-    val ok =
-      try manifestAt(fs, vdir).exists(read =>
-        (read.entries == stamped.entries && read.schemaDdl == stamped.schemaDdl &&
-          read.partitionBy == stamped.partitionBy &&
-          read.aliases == stamped.aliases && read.dropped == stamped.dropped) ||
-        renderManifest(read) == renderManifest(stamped))
-      catch { case scala.util.control.NonFatal(_) => false }
-    if (!ok) {
-      try fs.delete(vdir, true) catch { case scala.util.control.NonFatal(_) => () }
-      // the failed resolution may have been cached under the (briefly
-      // marker-carrying) vdir — version numbers of deleted dirs get
-      // reallocated, so a stale cache row would serve wrong membership
-      resolvedCache.synchronized(resolvedCache.remove(vdir.toString))
-      throw CommitConflictException(
-        s"commit verification failed at $vdir — the manifest vanished or " +
-          "was altered between write and marker (a concurrent writer " +
-          "defeated the commit lock); this commit did NOT land, re-plan " +
-          "and retry")
+  /** A BLIND commit (full membership `m`, header from `m`: overwrite,
+    * rename/drop/widen column, a commit group's fresh table) is its
+    * diff against the resolved head, committed through [[commitLocked]]
+    * like any incremental change. A CHANGED entry (same rel, different
+    * metadata — envelope stamping, seq restamp) is remove+add.
+    * Case-class equality is the diff identity — O(n) comparisons with
+    * zero string building. An entry whose exotic cols/env names the
+    * line format drops compares unequal against its normalized
+    * readback and emits a spurious remove+add of the same rendered
+    * line — harmless (the resolution is identical). No resolvable head
+    * (first commit, dir-protocol history) commits a checkpoint.
+    */
+  private def commitBlindLocked(fs: FileSystem, root: Path,
+                                m: Manifest, keepVersions: Int): Long = {
+    require(m.entries.map(_.rel).distinct.size == m.entries.size,
+      s"duplicate pool rels in commit membership under $root")
+    val head = committed(fs, root).lastOption.flatMap { case (hv, hdir) =>
+      (try resolvedFor(fs, hdir)
+       catch { case scala.util.control.NonFatal(_) => None }).map(hv -> _)
     }
-    // EVERY commit vacuums incrementally (r15): dereferenced files via
-    // the successor-diff candidates, crash orphans via the stage
-    // journal — no pool listing on any commit class (the pre-r15
-    // checkpoint-commit full sweep paid O(pool) every 16th commit).
-    // The standalone `--vacuum --full` audit keeps the full listing.
-    vacuum(fs, root, keepVersions, fullSweep = false)
-    next
+    val tree = head.fold(scala.collection.immutable.TreeMap.empty[String, Entry])(_._2.tree)
+    val newByRel = m.entries.iterator.map(e => e.rel -> e).toMap
+    val removed = tree.iterator.collect {
+      case (r, e) if !newByRel.get(r).contains(e) => r
+    }.toSet
+    val added = m.entries.filterNot(e => tree.get(e.rel).contains(e))
+    commitLocked(fs, root, head, removed, added, m, keepVersions,
+      blind = Some(m.entries))
   }
 
   /** OPTIMISTIC incremental commit (the Delta/Iceberg retry shape):
@@ -2711,15 +2144,24 @@ object Snapshot {
     withCommitLock(fs, root) {
       val (hv, head, outDdl) = rebaseChecksLocked(fs, root, baseVersion,
         removedRels, schemaDdl, partitionBy, baseDeleteRels)
-      commitDeltaLocked(fs, root, hv, head, removedRels, added, outDdl,
-        partitionBy, keepVersions, note)
+      commitLocked(fs, root, Some((hv, head)), removedRels, added,
+        rebaseHeader(head, outDdl, partitionBy, note), keepVersions)
     }
+
+  /** The header of an incremental commit: its (merged) schema and the
+    * head's aliases and dropped names. A note marks ITS commit only —
+    * never inherited.
+    */
+  private def rebaseHeader(head: Resolved, ddl: String, partitionBy: Seq[String],
+                           note: Option[String] = None): Manifest =
+    Manifest(ddl, partitionBy, Nil, aliases = head.hdr.aliases,
+      dropped = head.hdr.dropped, note = note)
 
   /** The head inspection + conflict arbitration of [[commitRebase]],
     * factored out (r14) so a COMMIT GROUP ([[commitGroup]]) can check
     * every participant before its roll-forward point. Must run under
     * the table's commit lock. Returns (head version, head resolution,
-    * merged schema DDL) for [[commitDeltaLocked]].
+    * merged schema DDL) for [[commitLocked]].
     */
   private def rebaseChecksLocked(fs: FileSystem, root: Path,
                                  baseVersion: Long,
@@ -2798,115 +2240,138 @@ object Snapshot {
       (hv, head, outDdl)
     }
 
-  /** O(changed) commit of an EXPLICIT delta against the resolved head
-    * (r13 — the Delta-log "commit carries actions, not a snapshot"
-    * shape). The caller (under the commit lock) already arbitrated
-    * conflicts; this path stamps + sorts only the ADDED entries,
-    * writes an O(changed) `_MANIFEST_DELTA`, re-verifies by parsing
-    * the delta file back (plus an O(1) stat probe that the base's
-    * backing is untouched — its content was byte-verified at ITS
-    * commit), chains the new resolution off the head's persistent
-    * tree, and vacuums incrementally. Falls back to a full checkpoint
-    * on cadence (CheckpointEvery), when the delta would not be
-    * smaller than the membership, or when delta commits are disabled.
+  /** THE commit sequence — blind ([[commitBlindLocked]]) and
+    * incremental ([[commitRebase]], commit groups) commits alike. The
+    * caller holds the commit lock and has arbitrated conflicts; `head`
+    * is the resolved head the change (`removedRels` → `added`) was
+    * planned against, None when there is none (first commit). Stamps
+    * and sorts only the ADDED entries, applies the change to the
+    * head's persistent tree, and writes the next version's backing
+    * file: an O(changed) `_MANIFEST_DELTA` (r13 — the Delta-log
+    * "commit carries actions, not a snapshot" shape) while the chain
+    * stays under [[CheckpointEvery]] and the change is smaller than
+    * the membership, else a checkpoint — a `_MANIFEST_LIST` reusing
+    * the chain's clean parts from [[ListCheckpointMin]] entries, the
+    * text `_MANIFEST` below. Then the marker, the re-verify, the
+    * chained cache entry, and an incremental vacuum.
+    *
+    * `hdr` supplies the new version's header (its entries are
+    * ignored). `blind` is a blind commit's full intended membership:
+    * the applied tree must equal it, stamped — the in-memory half of
+    * the proof that the resolution equals what the caller meant (the
+    * backing file's round-trip is the other half).
     */
-  private def commitDeltaLocked(fs: FileSystem, root: Path, headV: Long,
-                                head: Resolved, removedRels: Set[String],
-                                added: Seq[Entry], outDdl: String,
-                                partitionBy: Seq[String],
-                                keepVersions: Int,
-                                note: Option[String] = None): Long = {
+  private def commitLocked(fs: FileSystem, root: Path,
+                           head: Option[(Long, Resolved)],
+                           removedRels: Set[String], added: Seq[Entry],
+                           hdr: Manifest, keepVersions: Int,
+                           blind: Option[Seq[Entry]] = None): Long = {
     val next = Versioned.list(fs, root).map(_._1).maxOption.getOrElse(0L) + 1
     val vdir = new Path(root, f"_v_$next%020d")
-    val stampedAdded = added.map(e => if (e.seq < 0) e.copy(seq = next) else e)
-      .sortBy(_.rel)
+    // stamp FRESH entries (seq == UnsetSeq) with this commit's
+    // version — the sequence number tombstone applicability compares
+    // on. Carried entries (from a base manifest, or content-preserving
+    // rewrites that inherited their sources' seq) keep theirs.
+    // CANONICAL rel order (r13): rels are unique within a version.
+    def stamp(es: Seq[Entry]): Seq[Entry] =
+      es.map(e => if (e.seq < 0) e.copy(seq = next) else e).sortBy(_.rel)
+    val stampedAdded = stamp(added)
+    val base = head.fold(scala.collection.immutable.TreeMap.empty[String, Entry])(_._2.tree)
     // membership invariants at O(changed · log n): every removed rel
     // is a head member (commitRebase verified this for rebases; verify
     // unconditionally — deleting a non-member would silently diverge
     // the tree from the written delta), every added rel is FRESH
     // (or a same-commit replace of a removed one)
-    val notMembers = removedRels.filterNot(head.hasRel)
+    val notMembers = removedRels.filterNot(base.contains)
     require(notMembers.isEmpty,
       s"removed rel(s) not in head membership: ${notMembers.take(5).mkString(", ")}")
     val dup = stampedAdded.iterator.map(_.rel)
-      .filter(r => head.hasRel(r) && !removedRels.contains(r)).toSeq
+      .filter(r => base.contains(r) && !removedRels.contains(r)).toSeq
     require(dup.isEmpty,
       s"duplicate pool rels in commit at $vdir: ${dup.take(5).mkString(", ")}")
     require(stampedAdded.map(_.rel).distinct.size == stampedAdded.size,
       s"duplicate rels within the added set at $vdir")
-    val hdr = Manifest(outDdl, partitionBy, Nil,
-      commitTsMillis = Some(System.currentTimeMillis()),
-      aliases = head.hdr.aliases, dropped = head.hdr.dropped,
-      note = note) // notes mark THEIR commit only — never inherited
+    // stamp the commit instant INTO the header: filesystem mtimes do
+    // not survive a copy/restore of the table, a recorded field does
+    val h = hdr.copy(entries = Nil, commitTsMillis = Some(System.currentTimeMillis()))
     val changed = removedRels.size + stampedAdded.size
-    val useDelta = deltaCommitsEnabled && head.depth + 1 < CheckpointEvery &&
-      changed < math.max(head.tree.size - removedRels.size + stampedAdded.size, 1)
-    val tree = stampedAdded.foldLeft(head.tree -- removedRels)((t, e) =>
-      t.updated(e.rel, e))
-    fs.mkdirs(vdir)
+    val tree = applyDelta(base, removedRels, stampedAdded)
+    val deltaOn = head.filter { case (_, hd) =>
+      hd.depth + 1 < CheckpointEvery && changed < math.max(tree.size, 1) }
     // part-reuse seed for a LIST checkpoint: the head chain's dirty
     // rels plus this commit's own
-    val nextParts = head.parts.map { case (refs, dirty) =>
+    val nextParts = head.flatMap(_._2.parts).map { case (refs, dirty) =>
       (refs, dirty ++ removedRels ++ stampedAdded.iterator.map(_.rel)) }
-    val useList = deltaCommitsEnabled && !useDelta &&
-      tree.size >= ListCheckpointMin
-    var listRefs: Vector[PartRef] = Vector.empty
-    var listFresh: Set[String] = Set.empty
-    if (useDelta)
-      writeDelta(fs, vdir, hdr, headV, removedRels.toSeq.sorted, stampedAdded)
-    else if (useList) {
-      val (rs, fresh) = writeListCheckpoint(fs, root, vdir, hdr, tree, nextParts)
-      listRefs = rs; listFresh = fresh
-    } else
-      writeManifest(fs, vdir, hdr.copy(entries = tree.valuesIterator.toVector))
-    // COMMIT POINT — same arbiter as [[commitLocked]]
+    fs.mkdirs(vdir)
+    val listed = deltaOn match {
+      case Some((hv, _)) =>
+        writeExclusive(fs, new Path(vdir, DeltaName),
+          renderDelta(h, hv, removedRels.toSeq.sorted, stampedAdded), "manifest delta")
+        None
+      case None if tree.size >= ListCheckpointMin =>
+        val parts = writeListParts(fs, root, vdir, tree, nextParts)
+        writeExclusive(fs, new Path(vdir, ListName), renderList(h, parts._1),
+          "manifest list")
+        Some(parts)
+      case None =>
+        writeManifest(fs, vdir, h.copy(entries = tree.valuesIterator.toVector))
+        None
+    }
+    val backing = if (deltaOn.isDefined) DeltaName
+      else if (listed.isDefined) ListName else ManifestName
+    // COMMIT POINT: one atomic create — no reader can observe a
+    // version whose manifest is not fully written. atomicCreate, not
+    // fs.create(overwrite=false): on the local filesystem the latter
+    // is check-then-act, and this marker is the LAST arbiter if the
+    // lock was ever defeated — it must lose loudly, never both win.
     require(atomicCreate(fs, new Path(vdir, Versioned.Marker)),
       s"commit marker collision at $vdir — a concurrent writer defeated " +
         "the commit lock; this commit did NOT land, re-plan and retry")
-    // RE-VERIFY under the fresh marker. Delta path: the delta file
-    // itself round-trips (O(changed)) AND the base backing file is
-    // stat-identical to the resolution this commit chained from — a
-    // racing holder's vacuum deleting either one un-publishes this
-    // version. Checkpoint path: full readback compare as before.
+    // RE-VERIFY under the fresh marker (r12): if every lock layer was
+    // defeated, a racing holder's vacuum can delete this writer's
+    // manifest-written-but-unmarked version dir, after which the
+    // marker create above (atomicCreate mkdirs the parent) would
+    // otherwise publish a MARKER-ONLY version — an unreadable head
+    // instead of the promised loud failure. Delta: the delta file
+    // round-trips (O(changed)) AND the base backing file is
+    // stat-identical to the resolution this commit chained from (its
+    // content was verified at ITS commit). List: the list round-trips
+    // and each FRESH part stats to its recorded length — REUSED parts
+    // were verified at THEIR commit, parts are immutable, and the parts
+    // GC keeps anything referenced by ANY version dir's list
+    // (marker-pending included). Text: full readback compare. Every
+    // compare is NORMALIZED (r12 ADVICE): the line format drops
+    // separator-bearing names, so the compare is "did my bytes
+    // survive", not "is the format lossless".
     val ok =
-      try {
-        if (useDelta) {
-          val d = parseDelta(fs, new Path(vdir, DeltaName))
-          val (bl, bmt) = statOrNeg(fs,
-            new Path(new Path(root, f"_v_$headV%020d"), head.backing))
-          d.baseV == headV && d.removed == removedRels &&
-            (d.added == stampedAdded ||
-              d.added.map(renderEntry) == stampedAdded.map(renderEntry)) &&
-            d.hdr.schemaDdl == hdr.schemaDdl &&
-            d.hdr.partitionBy == hdr.partitionBy &&
-            d.hdr.aliases == hdr.aliases && d.hdr.dropped == hdr.dropped &&
-            d.hdr.note == hdr.note &&
-            bl == head.len && bmt == head.mtime
-        } else if (useList) {
-          // O(fresh) re-verify: the list round-trips and each FRESH
-          // part stats to its recorded length. REUSED parts need no
-          // probe — they were verified at THEIR commit, parts are
-          // immutable, and the parts GC keeps anything referenced by
-          // ANY version dir's list (marker-pending included), so a
-          // racing vacuum cannot have taken them while our list exists.
-          parseListHeader(fs, vdir).exists { case (h2, refs2) =>
-            refs2 == listRefs && h2.schemaDdl == hdr.schemaDdl &&
-              h2.partitionBy == hdr.partitionBy &&
-              h2.aliases == hdr.aliases && h2.dropped == hdr.dropped &&
-              h2.note == hdr.note &&
-              refs2.forall(r => !listFresh.contains(r.name) ||
-                statOrNeg(fs, new Path(partsDir(root), r.name))._1 == r.len)
+      try blind.forall(es => tree.valuesIterator.sameElements(stamp(es))) &&
+        (deltaOn match {
+          case Some((hv, hd)) =>
+            val dp = new Path(vdir, DeltaName)
+            val d = parseDelta(readText(fs, dp), dp)
+            val (bl, bmt) = statOrNeg(fs,
+              new Path(new Path(root, f"_v_$hv%020d"), hd.backing))
+            d.baseV == hv && d.removed == removedRels &&
+              sameEntries(d.added, stampedAdded) && sameHeader(d.hdr, h) &&
+              bl == hd.len && bmt == hd.mtime
+          case None => listed match {
+            case Some((refs, fresh)) =>
+              listHeader(fs, vdir).exists { case (h2, refs2) =>
+                refs2 == refs && sameHeader(h2, h) &&
+                  refs2.forall(r => !fresh.contains(r.name) ||
+                    statOrNeg(fs, new Path(partsDir(root), r.name))._1 == r.len)
+              }
+            case None => fullManifest(fs, vdir).exists(read =>
+              sameHeader(read, h) &&
+                sameEntries(read.entries, tree.valuesIterator.toVector))
           }
-        } else parseFullManifest(fs, vdir).exists { read =>
-          val stamped = hdr.copy(entries = tree.valuesIterator.toVector)
-          (read.entries == stamped.entries && read.schemaDdl == stamped.schemaDdl &&
-            read.partitionBy == stamped.partitionBy &&
-            read.aliases == stamped.aliases && read.dropped == stamped.dropped) ||
-          renderManifest(read) == renderManifest(stamped)
-        }
-      } catch { case scala.util.control.NonFatal(_) => false }
+        })
+      catch { case scala.util.control.NonFatal(_) => false }
     if (!ok) {
       try fs.delete(vdir, true) catch { case scala.util.control.NonFatal(_) => () }
+      // a failed resolution may have been cached under the (briefly
+      // marker-carrying) vdir — version numbers of deleted dirs get
+      // reallocated, so a stale cache row would serve wrong membership
       resolvedCache.synchronized(resolvedCache.remove(vdir.toString))
       throw CommitConflictException(
         s"commit verification failed at $vdir — the manifest vanished or " +
@@ -2917,18 +2382,19 @@ object Snapshot {
     // chain the new resolution off the head's tree — the next commit's
     // head lookup is a cache hit with zero manifest reads
     val (_, mk) = statOrNeg(fs, new Path(vdir, Versioned.Marker))
-    val backing = if (useDelta) DeltaName
-      else if (useList) ListName else ManifestName
     val (l, mt) = statOrNeg(fs, new Path(vdir, backing))
     cachePut(vdir.toString,
-      new Resolved(tree, hdr, if (useDelta) head.depth + 1 else 0,
-        backing, l, mt, mk, if (useDelta) Some(headV) else None,
-        if (useDelta) changed + 1L else tree.size.toLong,
+      new Resolved(tree, h, deltaOn.fold(0)(_._2.depth + 1),
+        backing, l, mt, mk, deltaOn.map(_._1),
+        if (deltaOn.isDefined) changed + 1L else tree.size.toLong,
         readCommitUuid(fs, new Path(vdir, backing)),
-        if (useDelta) nextParts
-        else if (useList) Some((listRefs, Set.empty[String])) else None))
-    vacuum(fs, root, keepVersions, fullSweep = false) // r15: journal-
-    // driven orphan GC on every commit class; --vacuum --full audits
+        if (deltaOn.isDefined) nextParts
+        else listed.map { case (refs, _) => (refs, Set.empty[String]) }))
+    // EVERY commit vacuums incrementally (r15): dereferenced files via
+    // the successor-diff candidates, crash orphans via the stage
+    // journal — no pool listing on any commit class. The standalone
+    // `--vacuum --full` audit keeps the full listing.
+    vacuum(fs, root, keepVersions, fullSweep = false)
     next
   }
 
@@ -3159,7 +2625,7 @@ object Snapshot {
     *      is completed by [[recoverGroups]] (run by the next group
     *      commit over the same coordinator, or explicitly at consumer
     *      startup);
-    *   5. commit each participant via [[commitDeltaLocked]] (the locks
+    *   5. commit each participant via [[commitLocked]] (the locks
     *      from step 2 are still held, so the checked heads cannot
     *      move);
     *   6. delete the intent.
@@ -3210,7 +2676,7 @@ object Snapshot {
         } else {
           val (hv, head, outDdl) = rebaseChecksLocked(fs, new Path(p.root),
             p.baseV, p.removedRels, p.schemaDdl, p.partitionBy, None)
-          // pre-verify the membership invariants commitDeltaLocked would
+          // pre-verify the membership invariants commitLocked would
           // enforce — HERE they must fail BEFORE the intent is durable,
           // so a conflicting group aborts with zero commits
           val notMembers = p.removedRels.filterNot(head.hasRel)
@@ -3239,9 +2705,10 @@ object Snapshot {
           throw new IllegalStateException(
             s"simulated crash after $i committed group participant(s)")
         val v = headOpt match {
-          case Some(head) => commitDeltaLocked(fs, new Path(p.root), hv, head,
-            p.removedRels, p.added, outDdl, p.partitionBy, p.keepVersions)
-          case None => commitLocked(fs, new Path(p.root),
+          case Some(head) => commitLocked(fs, new Path(p.root), Some((hv, head)),
+            p.removedRels, p.added, rebaseHeader(head, outDdl, p.partitionBy),
+            p.keepVersions)
+          case None => commitBlindLocked(fs, new Path(p.root),
             Manifest(p.schemaDdl, p.partitionBy, p.added), p.keepVersions)
         }
         // DURABLE APPLIED WITNESS (r15): recovery must distinguish
@@ -3384,7 +2851,7 @@ object Snapshot {
                 if (p.baseV < 0L) {
                   // FRESH participant: first commit of a new table
                   if (headOpt.isEmpty)
-                    proven(p.root) = commitLocked(fs, root,
+                    proven(p.root) = commitBlindLocked(fs, root,
                       Manifest(p.schemaDdl, p.partitionBy, p.added),
                       p.keepVersions)
                   else throw new IllegalStateException(
@@ -3397,16 +2864,17 @@ object Snapshot {
                   throw new IllegalStateException(
                     s"commit-group recovery: no committed head under ${p.root}"))
                 if (hv == p.baseV)
-                  proven(p.root) = commitDeltaLocked(fs, root, hv, head,
-                    p.removedRels, p.added, p.schemaDdl, p.partitionBy,
-                    p.keepVersions)
+                  proven(p.root) = commitLocked(fs, root, Some((hv, head)),
+                    p.removedRels, p.added,
+                    rebaseHeader(head, p.schemaDdl, p.partitionBy), p.keepVersions)
                 else if (p.removedRels.isEmpty) {
                   require(head.hdr.partitionBy == p.partitionBy,
                     s"commit-group recovery: partition layout of ${p.root} " +
                       "changed under the pending group")
                   val outDdl = mergeSchemaDdl(p.schemaDdl, head.hdr.schemaDdl)
-                  proven(p.root) = commitDeltaLocked(fs, root, hv, head,
-                    Set.empty, p.added, outDdl, p.partitionBy, p.keepVersions)
+                  proven(p.root) = commitLocked(fs, root, Some((hv, head)),
+                    Set.empty, p.added, rebaseHeader(head, outDdl, p.partitionBy),
+                    p.keepVersions)
                 } else throw new IllegalStateException(
                   s"commit-group recovery: the head of ${p.root} moved past " +
                     s"the recorded base v${p.baseV} and the participant " +
@@ -3601,11 +3069,7 @@ object Snapshot {
     cfs.mkdirs(cpath)
     val ip = new Path(cpath,
       f"$GroupPrefix${System.currentTimeMillis()}%013d_${java.util.UUID.randomUUID().toString.replace("-", "")}")
-    if (!atomicCreate(cfs, ip))
-      throw new java.io.IOException(s"commit-group intent collision at $ip")
-    val out = cfs.create(ip, true)
-    try out.write(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    writeExclusive(cfs, ip, sb.toString, "commit-group intent")
     ip
   }
 
@@ -4280,7 +3744,7 @@ object Snapshot {
         case (po, ln) if ln == oldName => (po, newName)
         case a => a
       } :+ (oldName -> newName)
-      commitLocked(fs, root,
+      commitBlindLocked(fs, root,
         Manifest(newSchema.toDDL, m.partitionBy, newEntries,
           aliases = newAliases, dropped = m.dropped), keepVersions)
     }
@@ -4347,7 +3811,7 @@ object Snapshot {
       // retire the CURRENT name plus every physical name that ever
       // aliased to it — files carry one of those physically
       val retired = name +: m.aliases.collect { case (po, ln) if ln == name => po }
-      commitLocked(fs, root,
+      commitBlindLocked(fs, root,
         Manifest(newSchema.toDDL, m.partitionBy, newEntries,
           aliases = m.aliases.filterNot(_._2 == name),
           dropped = (m.dropped ++ retired).distinct), keepVersions)
@@ -4448,7 +3912,7 @@ object Snapshot {
         if (keepEnvs) m.entries
         else m.entries.map(e =>
           e.copy(envs = e.envs.map(_ - name).filter(_.nonEmpty)))
-      commitLocked(fs, root,
+      commitBlindLocked(fs, root,
         Manifest(newSchema.toDDL, m.partitionBy, newEntries,
           aliases = m.aliases, dropped = m.dropped), keepVersions)
     }
@@ -4648,16 +4112,16 @@ object Snapshot {
               // EVERY commit. Its reused parts stay
               // refcount-protected: the promoted list itself
               // references them.
-              case Some(r) if deltaCommitsEnabled && r.parts.isDefined &&
+              case Some(r) if r.parts.isDefined &&
                   r.tree.size >= ListCheckpointMin =>
-                writeListCheckpoint(fs, root, p, r.hdr, r.tree, r.parts,
-                  viaRename = true)
+                promote(fs, p, ListName,
+                  renderList(r.hdr, writeListParts(fs, root, p, r.tree, r.parts)._1))
                 // the checkpoint must be READABLE before its chain dies
-                parseListHeader(fs, p).isDefined
+                listHeader(fs, p).isDefined
               case Some(r) =>
-                promoteCheckpoint(fs, p, r.hdr.copy(
-                  entries = r.tree.valuesIterator.toVector))
-                parseFullManifest(fs, p).isDefined
+                promote(fs, p, ManifestName,
+                  renderManifest(r.hdr.copy(entries = r.tree.valuesIterator.toVector)))
+                fullManifest(fs, p).isDefined
               case None => false
             }
           }
@@ -4740,7 +4204,7 @@ object Snapshot {
           var refsOk = true
           val livePartNames = Versioned.list(fs, root).flatMap { case (_, vp, _) =>
             if (!fs.exists(new Path(vp, ListName))) Vector.empty
-            else try parseListHeader(fs, vp).map(_._2.map(_.name))
+            else try listHeader(fs, vp).map(_._2.map(_.name))
               .getOrElse(Vector.empty)
             catch { case scala.util.control.NonFatal(_) =>
               refsOk = false; Vector.empty }
@@ -4817,7 +4281,7 @@ object Snapshot {
         try {
           if (!fs.exists(new Path(vdir, ManifestName)) &&
               fs.exists(new Path(vdir, ListName)))
-            parseListHeader(fs, vdir)
+            listHeader(fs, vdir)
           else None
         } catch { case scala.util.control.NonFatal(_) => None }
       private lazy val resolved: Option[Resolved] =
@@ -4827,9 +4291,8 @@ object Snapshot {
         scala.collection.mutable.Map.empty[String, Option[Set[String]]]
       private def relsOfPart(name: String): Option[Set[String]] =
         partRels.getOrElseUpdate(name,
-          try Some(readText(fs, new Path(partsDir(root), name))
-            .linesIterator.filter(_.nonEmpty)
-            .map(_.split("\t", 3)(1)).toSet)
+          try Some(parsePart(readText(fs, new Path(partsDir(root), name)))
+            .iterator.map(_.rel).toSet)
           catch { case scala.util.control.NonFatal(_) => None })
       /** None = undecidable (keep the file). */
       def has(rel: String): Option[Boolean] = header match {
@@ -4849,7 +4312,7 @@ object Snapshot {
       var ok = true
       val names = Versioned.list(fs, root).flatMap { case (_, vp, _) =>
         if (!fs.exists(new Path(vp, ListName))) Vector.empty
-        else try parseListHeader(fs, vp).map(_._2.map(_.name))
+        else try listHeader(fs, vp).map(_._2.map(_.name))
           .getOrElse(Vector.empty)
         catch { case scala.util.control.NonFatal(_) => ok = false; Vector.empty }
       }.toSet
@@ -5467,7 +4930,7 @@ object Snapshot {
       val refParts = scala.collection.mutable.Set.empty[String]
       vs.foreach { case (v, vdir) =>
         if (fs.exists(new Path(vdir, ListName)))
-          (try parseListHeader(fs, vdir)
+          (try listHeader(fs, vdir)
            catch { case scala.util.control.NonFatal(_) => None })
             .foreach { case (_, refs) =>
               refs.foreach { r =>

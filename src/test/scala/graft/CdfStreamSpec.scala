@@ -20,9 +20,6 @@ class CdfStreamSpec extends SparkSpec {
   private def fs =
     new Path("/").getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def freshDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   private def canon(df: DataFrame): Seq[String] = {
     val cols = df.columns.sorted.toIndexedSeq
     df.select(cols.map(col): _*).collect()
@@ -45,7 +42,7 @@ class CdfStreamSpec extends SparkSpec {
   }
 
   test("stream == batch changelog across merge/DV/predicate/widening; restart resumes from cursor") {
-    val dir = freshDir("cdf_law")
+    val dir = tempDir("cdf_law")
     val p = s"$dir/t.parquet"
     val ckpt = s"$dir/ckpt"
     seedTable(p)                                             // v1
@@ -92,7 +89,7 @@ class CdfStreamSpec extends SparkSpec {
   }
 
   test("maxVersionsPerBatch bounds each micro-batch; cursor is durable after each") {
-    val dir = freshDir("cdf_rate")
+    val dir = tempDir("cdf_rate")
     val p = s"$dir/t.parquet"
     val ckpt = s"$dir/ckpt"
     seedTable(p)
@@ -111,7 +108,7 @@ class CdfStreamSpec extends SparkSpec {
   }
 
   test("a cursor that fell behind vacuum retention errors LOUDLY") {
-    val dir = freshDir("cdf_vac")
+    val dir = tempDir("cdf_vac")
     val p = s"$dir/t.parquet"
     val ckpt = s"$dir/ckpt"
     seedTable(p)
@@ -130,7 +127,7 @@ class CdfStreamSpec extends SparkSpec {
   }
 
   test("cdfToRollup: downstream sum/count state from change rows alone equals recompute") {
-    val dir = freshDir("cdf_roll")
+    val dir = tempDir("cdf_roll")
     val p = s"$dir/t.parquet"
     seedTable(p)                                              // v1
     // maintain per-grp count + sum(id) from CDC increments only
@@ -172,7 +169,7 @@ class CdfStreamSpec extends SparkSpec {
     // re-applies the already-applied prefix. The fix (cursor
     // fast-forward to the state's __cdf_version + per-commit filter)
     // must keep the state exactly equal to the recompute.
-    val dir = freshDir("cdf_crash")
+    val dir = tempDir("cdf_crash")
     val p = s"$dir/t.parquet"
     val ckpt = s"$dir/ckpt"
     seedTable(p)                                              // v1
@@ -212,7 +209,7 @@ class CdfStreamSpec extends SparkSpec {
   }
 
   test("spanning drain: one net (from, head] batch equals the per-commit union") {
-    val dir = freshDir("cdf_span")
+    val dir = tempDir("cdf_span")
     val p = s"$dir/t.parquet"
     seedTable(p)                                              // v1
     Snapshot.deleteByKeys(spark, p, Seq(3L).toDF("id"), keepVersions = 10) // v2
@@ -245,7 +242,7 @@ class CdfStreamSpec extends SparkSpec {
     // the net change of the span and folding is associative over
     // adjacent spans. This is what licenses draining a 1,000-commit
     // backlog as ceil(1000/bound) jobs instead of 1,000.
-    val dir = freshDir("cdf_complaw")
+    val dir = tempDir("cdf_complaw")
     val p = s"$dir/t.parquet"
     seedTable(p)                                              // v1
     Snapshot.deleteByKeys(spark, p, Seq(3L, 7L).toDF("id"), keepVersions = 20) // v2
@@ -294,7 +291,7 @@ class CdfStreamSpec extends SparkSpec {
 
   test("cdfToSignatureIndex: dedup index maintained from change rows equals the bulk rebuild") {
     import graft.ext.TextDedup
-    val dir = freshDir("cdf_sigidx")
+    val dir = tempDir("cdf_sigidx")
     val p = s"$dir/docs.parquet"
     val ckpt = s"$dir/ckpt"
     def text(i: Long, tag: String): String =
@@ -368,7 +365,7 @@ class CdfStreamSpec extends SparkSpec {
 
   test("cdfToSignatureIndex: ONE commit per table per increment; a crash between tables rolls forward at the next drain") {
     import graft.ext.TextDedup
-    val dir = freshDir("cdf_siggrp")
+    val dir = tempDir("cdf_siggrp")
     val p = s"$dir/docs.parquet"
     val ckpt = s"$dir/ckpt"
     def text(i: Long, tag: String): String =

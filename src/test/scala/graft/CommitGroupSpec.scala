@@ -18,9 +18,6 @@ class CommitGroupSpec extends SparkSpec {
   private def hconf = spark.sparkContext.hadoopConfiguration
   private def fs = new Path("/").getFileSystem(hconf)
 
-  private def freshDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   private def canon(df: DataFrame): Seq[String] = {
     val cols = df.columns.sorted.toIndexedSeq
     df.select(cols.map(col): _*).collect()
@@ -47,7 +44,7 @@ class CommitGroupSpec extends SparkSpec {
     }
 
   test("happy path: one commit per table, intent cleaned, contents land") {
-    val dir = freshDir("cgrp_ok")
+    val dir = tempDir("cgrp_ok")
     val (a, b) = (s"$dir/a.parquet", s"$dir/b.parquet")
     seed(a, "A"); seed(b, "B")
     val (va0, vb0) = (headV(a), headV(b))
@@ -65,7 +62,7 @@ class CommitGroupSpec extends SparkSpec {
   }
 
   test("combined delete+assert is ONE commit; removal tombstone and batch compose by seq") {
-    val dir = freshDir("cgrp_one")
+    val dir = tempDir("cgrp_one")
     val p = s"$dir/t.parquet"
     seed(p, "X")
     val v0 = headV(p)
@@ -88,7 +85,7 @@ class CommitGroupSpec extends SparkSpec {
   }
 
   test("crash BEFORE the intent is durable: neither table commits; torn intent is age-swept") {
-    val dir = freshDir("cgrp_torn")
+    val dir = tempDir("cgrp_torn")
     val (a, b) = (s"$dir/a.parquet", s"$dir/b.parquet")
     seed(a, "A"); seed(b, "B")
     val (va0, vb0) = (headV(a), headV(b))
@@ -121,7 +118,7 @@ class CommitGroupSpec extends SparkSpec {
   }
 
   test("crash AFTER the intent, before any commit: recovery lands BOTH") {
-    val dir = freshDir("cgrp_fwd0")
+    val dir = tempDir("cgrp_fwd0")
     val (a, b) = (s"$dir/a.parquet", s"$dir/b.parquet")
     seed(a, "A"); seed(b, "B")
     val (va0, vb0) = (headV(a), headV(b))
@@ -140,7 +137,7 @@ class CommitGroupSpec extends SparkSpec {
   }
 
   test("crash BETWEEN the two commits: recovery completes exactly the missing one") {
-    val dir = freshDir("cgrp_fwd1")
+    val dir = tempDir("cgrp_fwd1")
     val (a, b) = (s"$dir/a.parquet", s"$dir/b.parquet")
     seed(a, "A"); seed(b, "B")
     val (va0, vb0) = (headV(a), headV(b))
@@ -164,7 +161,7 @@ class CommitGroupSpec extends SparkSpec {
   }
 
   test("pure-add recovery rebases over a commit that landed between crash and recovery") {
-    val dir = freshDir("cgrp_rebase")
+    val dir = tempDir("cgrp_rebase")
     val (a, b) = (s"$dir/a.parquet", s"$dir/b.parquet")
     seed(a, "A"); seed(b, "B")
     Snapshot.groupCrashAfterParts = 1
@@ -182,7 +179,7 @@ class CommitGroupSpec extends SparkSpec {
   }
 
   test("stale intent after ALL commits + compaction/vacuum before recovery: witnesses prove applied") {
-    val dir = freshDir("cgrp_wit")
+    val dir = tempDir("cgrp_wit")
     val (a, b) = (s"$dir/a.parquet", s"$dir/b.parquet")
     seed(a, "A"); seed(b, "B")
     // crash AFTER both commits land but BEFORE intent cleanup (hook
@@ -225,7 +222,7 @@ class CommitGroupSpec extends SparkSpec {
   }
 
   test("crash between commits + compaction of the committed participant: witness keeps it applied, the other lands") {
-    val dir = freshDir("cgrp_wit2")
+    val dir = tempDir("cgrp_wit2")
     val (a, b) = (s"$dir/a.parquet", s"$dir/b.parquet")
     seed(a, "A"); seed(b, "B")
     Snapshot.groupCrashAfterParts = 1
@@ -264,7 +261,7 @@ class CommitGroupSpec extends SparkSpec {
     // before recovery ran. Without the intent's recorded EXPECTED
     // version (r16), the membership heuristic reads a as unapplied and
     // re-commits the pure-add delta — duplicating its rows.
-    val dir = freshDir("cgrp_expv")
+    val dir = tempDir("cgrp_expv")
     val (a, b) = (s"$dir/a.parquet", s"$dir/b.parquet")
     seed(a, "A"); seed(b, "B")
     val va0 = headV(a)
@@ -300,7 +297,7 @@ class CommitGroupSpec extends SparkSpec {
   }
 
   test("readGroupConsistent: a reader between a live group's two commits sees no skew") {
-    val dir = freshDir("cgrp_consist")
+    val dir = tempDir("cgrp_consist")
     val (a, b) = (s"$dir/a.parquet", s"$dir/b.parquet")
     val txn = s"$dir/_txn"
     seed(a, "A"); seed(b, "B")

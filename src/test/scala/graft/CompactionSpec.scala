@@ -12,9 +12,6 @@ import org.apache.spark.sql.functions._
   */
 class CompactionSpec extends SparkSpec {
 
-  private def freshDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   private def walkFiles(d: java.io.File, rel: String = ""): Map[String, (Long, Long)] =
     Option(d.listFiles()).getOrElse(Array.empty).flatMap { f =>
       val r = if (rel.isEmpty) f.getName else s"$rel/${f.getName}"
@@ -45,7 +42,7 @@ class CompactionSpec extends SparkSpec {
 
   test("compaction repairs a merge-fragmented flat layout; rows and big files untouched") {
     import spark.implicits._
-    val dir = freshDir("cp_flat")
+    val dir = tempDir("cp_flat")
     val base = (0 until 4000).map(i => (i.toLong, s"v$i" * 8, i * 0.5))
       .toDF("id", "txt", "v")
     val p = s"$dir/t.parquet"
@@ -82,7 +79,7 @@ class CompactionSpec extends SparkSpec {
 
   test("partitioned layout compacts per partition dir") {
     import spark.implicits._
-    val dir = freshDir("cp_part")
+    val dir = tempDir("cp_part")
     val base = (0 until 3000).map(i => (i.toLong, s"g${i % 3}", i * 1.5))
       .toDF("id", "grp", "v")
     val p = s"$dir/t.parquet"
@@ -101,7 +98,7 @@ class CompactionSpec extends SparkSpec {
 
   test("CLI --compact parses sizes and dispatches on the target") {
     import spark.implicits._
-    val dir = freshDir("cp_cli")
+    val dir = tempDir("cp_cli")
     val base = (0 until 1000).map(i => (i.toLong, i * 2.0)).toDF("id", "v")
     val p = s"$dir/t.parquet"
     WriteOps.atomicOverwrite(spark, base, p, indexBy = Seq("id"),
@@ -139,7 +136,7 @@ class CompactionSpec extends SparkSpec {
     import graft.operators.Snapshot
     import org.apache.hadoop.fs.Path
     val fs = new Path("/").getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dir = freshDir("compact_dvfold")
+    val dir = tempDir("compact_dvfold")
     val p = s"$dir/t.parquet"
     import spark.implicits._
     // incompressible payload so "big" files stay above the size cut
@@ -216,7 +213,7 @@ class CompactionSpec extends SparkSpec {
     import graft.operators.Snapshot
     import org.apache.hadoop.fs.Path
     val fs = new Path("/").getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dir = freshDir("compact_classes")
+    val dir = tempDir("compact_classes")
     val p = s"$dir/t.parquet"
     import spark.implicits._
     // incompressible payload keeps tombstone bytes far below the 0.2
@@ -257,7 +254,7 @@ class CompactionSpec extends SparkSpec {
     import spark.implicits._
 
     // flat layout: a data-schema predicate folds and (at the ceiling) drops
-    val dir = freshDir("compact_dvpred")
+    val dir = tempDir("compact_dvpred")
     val p = s"$dir/t.parquet"
     val base = spark.range(400).select($"id",
       sha2(concat(lit("pay"), $"id".cast("string")), 512).as("txt"))
@@ -300,7 +297,7 @@ class CompactionSpec extends SparkSpec {
     // partitioned layout: a predicate on the PARTITION column cannot
     // evaluate on the per-group read — it must carry through even at
     // the ceiling, and reads stay correct
-    val dir2 = freshDir("compact_dvpredpart")
+    val dir2 = tempDir("compact_dvpredpart")
     val p2 = s"$dir2/t.parquet"
     val base2 = spark.range(200).select($"id",
       ($"id" % 4).cast("int").as("grp"),

@@ -23,9 +23,6 @@ class EnvelopeSkipSpec extends SparkSpec {
   private def fs =
     new Path("/").getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def freshDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   private def sortedRows(df: DataFrame): Seq[Seq[Any]] =
     rows(df.orderBy(df.columns.map(col).toIndexedSeq: _*))
 
@@ -74,7 +71,7 @@ class EnvelopeSkipSpec extends SparkSpec {
   }
 
   test("falsified envelopes steer the planned file set (metadata-driven, no data I/O)") {
-    val dir = freshDir("eskip_falsified")
+    val dir = tempDir("eskip_falsified")
     val p = s"$dir/t.parquet"
     WriteOps.atomicOverwrite(spark,
       (0L until 100L).map(i => (i, s"v$i")).toDF("id", "txt"), p,
@@ -117,7 +114,7 @@ class EnvelopeSkipSpec extends SparkSpec {
   // ── end-to-end exactness + the pruning observable ─────────────────
 
   test("skipped reads are exact and plan O(matching files); DV tombstones compose") {
-    val dir = freshDir("eskip_e2e")
+    val dir = tempDir("eskip_e2e")
     val p = s"$dir/t.parquet"
     WriteOps.atomicOverwrite(spark,
       (0L until 200L).map(i => (i, s"v$i")).toDF("id", "txt"), p,
@@ -160,7 +157,7 @@ class EnvelopeSkipSpec extends SparkSpec {
   }
 
   test("hive partition values prune as point envelopes") {
-    val dir = freshDir("eskip_part")
+    val dir = tempDir("eskip_part")
     val p = s"$dir/t.parquet"
     val df = (0L until 90L).map(i => (i, i % 3, s"v$i"))
       .toDF("id", "grp", "txt")
@@ -183,7 +180,7 @@ class EnvelopeSkipSpec extends SparkSpec {
   }
 
   test("timestamp envelopes prune with Spark's own cast semantics") {
-    val dir = freshDir("eskip_ts")
+    val dir = tempDir("eskip_ts")
     val p = s"$dir/t.parquet"
     val df = spark.range(0, 96).select(col("id"),
       expr("timestamp'2024-01-01 00:00:00' + make_interval(0,0,0,0,id,0,0)")
@@ -206,7 +203,7 @@ class EnvelopeSkipSpec extends SparkSpec {
   // ── surfaces: query DSL and format("graft") ───────────────────────
 
   test("the query DSL's prunable conjuncts reach the snapshot planner") {
-    val dir = freshDir("eskip_dsl")
+    val dir = tempDir("eskip_dsl")
     val p = s"$dir/t.parquet"
     WriteOps.atomicOverwrite(spark,
       (0L until 100L).map(i => (i, s"v$i")).toDF("id", "txt"), p,
@@ -230,7 +227,7 @@ class EnvelopeSkipSpec extends SparkSpec {
 
   test("--tq update on a sorted snapshot target rewrites only tq-intersecting files") {
     import graft.spec.{DatasetRef, TargetSpec, WriteOp}
-    val dir = freshDir("eskip_tq")
+    val dir = tempDir("eskip_tq")
     val p = s"$dir/t.parquet"
     WriteOps.atomicOverwrite(spark,
       (0L until 200L).map(i => (i, s"v$i")).toDF("id", "txt"), p,
@@ -281,7 +278,7 @@ class EnvelopeSkipSpec extends SparkSpec {
   test("--tq upsert (r17): excluded files carry by reference, their " +
     "LIVE keys veto inserts, DV-dead keys do not") {
     import graft.spec.{DatasetRef, TargetSpec, WriteOp}
-    val dir = freshDir("eskip_tqup")
+    val dir = tempDir("eskip_tqup")
     val p = s"$dir/t.parquet"
     WriteOps.atomicOverwrite(spark,
       (0L until 200L).map(i => (i, s"v$i")).toDF("id", "txt"), p,
@@ -379,7 +376,7 @@ class EnvelopeSkipSpec extends SparkSpec {
   }
 
   test("string falsified envelopes steer the planned file set") {
-    val dir = freshDir("eskip_str_falsified")
+    val dir = tempDir("eskip_str_falsified")
     val p = s"$dir/t.parquet"
     // hex-digest-shaped keys — the LLM-corpus common case
     val df = (0 until 100).map(i => (f"doc$i%04d", i.toLong))
@@ -418,7 +415,7 @@ class EnvelopeSkipSpec extends SparkSpec {
   }
 
   test("keys sharing a ≥16-byte prefix truncate without over-pruning") {
-    val dir = freshDir("eskip_str_prefix")
+    val dir = tempDir("eskip_str_prefix")
     val p = s"$dir/t.parquet"
     // every key extends one 24-byte prefix: all truncated bounds
     // collapse to the same [prefix16, prefix16+1) window
@@ -467,7 +464,7 @@ class EnvelopeSkipSpec extends SparkSpec {
   }
 
   test("string hive partition values prune as byte point envelopes") {
-    val dir = freshDir("eskip_str_part")
+    val dir = tempDir("eskip_str_part")
     val p = s"$dir/t.parquet"
     val df = (0L until 90L).map(i => (i, Seq("en", "de", "fr")(i.toInt % 3),
       s"v$i")).toDF("id", "lang", "txt")
@@ -484,7 +481,7 @@ class EnvelopeSkipSpec extends SparkSpec {
   }
 
   test("string DSL conjuncts and format(\"graft\") pushdown prune string keys") {
-    val dir = freshDir("eskip_str_surfaces")
+    val dir = tempDir("eskip_str_surfaces")
     val p = s"$dir/t.parquet"
     WriteOps.atomicOverwrite(spark,
       (0 until 100).map(i => (f"key$i%04d", i.toLong)).toDF("k", "id"), p,
@@ -507,7 +504,7 @@ class EnvelopeSkipSpec extends SparkSpec {
   }
 
   test("format(\"graft\") pushes its filters into envelope planning") {
-    val dir = freshDir("eskip_dsv1")
+    val dir = tempDir("eskip_dsv1")
     val p = s"$dir/t.parquet"
     WriteOps.atomicOverwrite(spark,
       (0L until 100L).map(i => (i, i % 5, s"v$i")).toDF("id", "k", "txt"),

@@ -17,9 +17,6 @@ class GraftReadSpec extends SparkSpec {
   private def fs =
     new Path("/").getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def freshDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   private def canon(df: DataFrame): Seq[String] = {
     val cols = df.columns.sorted.toIndexedSeq
     df.select(cols.map(col): _*).collect()
@@ -45,7 +42,7 @@ class GraftReadSpec extends SparkSpec {
   }
 
   test("bare spark.read.format(\"graft\") ≡ the engine's resolved read, through DVs + rename + widen") {
-    val dir = freshDir("gds_eq")
+    val dir = tempDir("gds_eq")
     val p = s"$dir/t.parquet"
     build(p)
     val viaFormat = spark.read.format("graft").load(p)
@@ -60,7 +57,7 @@ class GraftReadSpec extends SparkSpec {
   }
 
   test("time travel via options; version/timestamp exclusivity is loud") {
-    val dir = freshDir("gds_tt")
+    val dir = tempDir("gds_tt")
     val p = s"$dir/t.parquet"
     build(p)
     val v1 = spark.read.format("graft").option("versionAsOf", "1").load(p)
@@ -86,7 +83,7 @@ class GraftReadSpec extends SparkSpec {
   }
 
   test("plain SQL over a temporary view; filters and projections push soundly") {
-    val dir = freshDir("gds_sql")
+    val dir = tempDir("gds_sql")
     val p = s"$dir/t.parquet"
     build(p)
     spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW gtv USING graft " +
@@ -115,7 +112,7 @@ class GraftReadSpec extends SparkSpec {
     // head per scan — a commit landing between two actions on ONE
     // relation silently mixed versions. The head is now pinned at
     // relation construction.
-    val dir = freshDir("gds_pin")
+    val dir = tempDir("gds_pin")
     val p = s"$dir/t.parquet"
     build(p)
     val t = spark.read.format("graft").load(p)
@@ -132,7 +129,7 @@ class GraftReadSpec extends SparkSpec {
   }
 
   test("write-side append: external save() ≡ engine append, atomic under a racing commit") {
-    val dir = freshDir("gds_append")
+    val dir = tempDir("gds_append")
     val (pExt, pEng) = (s"$dir/ext.parquet", s"$dir/eng.parquet")
     build(pExt); build(pEng)
     val batch = Seq((200L, "app200", 7L), (201L, "app201", 8L))

@@ -10,16 +10,15 @@ import org.apache.spark.sql.functions._
   * rewriting the O(files) checkpoint; resolution applies the chain;
   * every [[Snapshot.CheckpointEvery]]-deep chain re-checkpoints; and
   * vacuum PROMOTES a retained delta version to a full checkpoint
-  * before its chain's base dirs leave retention. The post-marker
-  * commit re-verify compares rendered resolutions byte-for-byte, so
-  * every green commit in every other suite already certifies the
-  * apply path — this spec pins the on-disk shape and the edges.
+  * before its chain's base dirs leave retention. A commit applies its
+  * change with the same function chain resolution uses and parses its
+  * written file back; a blind commit also checks that the applied tree
+  * equals the full membership it meant. So every green blind commit in
+  * every other suite already certifies the apply path — this spec pins
+  * the on-disk shape and the edges.
   */
 class ManifestDeltaSpec extends SparkSpec {
   import spark.implicits._
-
-  private def freshDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
 
   private def fs =
     new Path("/").getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -43,7 +42,7 @@ class ManifestDeltaSpec extends SparkSpec {
       commitMode = "snapshot", keepVersions = keep)
 
   test("incremental commits write deltas; the first commit and replaces write checkpoints") {
-    val dir = freshDir("mdelta_shape")
+    val dir = tempDir("mdelta_shape")
     val p = s"$dir/t.parquet"
     seed(p)                                                      // v1: full
     Snapshot.deleteByKeys(spark, p, Seq(1L).toDF("id"), keepVersions = 50) // v2
@@ -71,7 +70,7 @@ class ManifestDeltaSpec extends SparkSpec {
   }
 
   test("reads, time travel and changelog are exact across a delta chain") {
-    val dir = freshDir("mdelta_tt")
+    val dir = tempDir("mdelta_tt")
     val p = s"$dir/t.parquet"
     seed(p)                                                      // v1
     Snapshot.deleteByKeys(spark, p, Seq(0L, 1L).toDF("id"), keepVersions = 50)
@@ -91,7 +90,7 @@ class ManifestDeltaSpec extends SparkSpec {
   }
 
   test(s"a chain deeper than CheckpointEvery re-checkpoints") {
-    val dir = freshDir("mdelta_ckpt")
+    val dir = tempDir("mdelta_ckpt")
     val p = s"$dir/t.parquet"
     seed(p)                                                      // v1 full
     for (i <- 0 until (Snapshot.CheckpointEvery + 2))
@@ -111,7 +110,7 @@ class ManifestDeltaSpec extends SparkSpec {
   }
 
   test("vacuum promotes a retained delta version before its chain leaves retention") {
-    val dir = freshDir("mdelta_promote")
+    val dir = tempDir("mdelta_promote")
     val p = s"$dir/t.parquet"
     // retention 3: the v1 checkpoint will be vacuumed while retained
     // deltas still chain to it
@@ -139,7 +138,7 @@ class ManifestDeltaSpec extends SparkSpec {
   }
 
   test("a table dropped and recreated at the same path never serves a stale cached manifest") {
-    val dir = freshDir("mdelta_cache")
+    val dir = tempDir("mdelta_cache")
     val p = s"$dir/t.parquet"
     seed(p)
     Snapshot.deleteByKeys(spark, p, Seq(1L).toDF("id"), keepVersions = 50)
@@ -158,7 +157,7 @@ class ManifestDeltaSpec extends SparkSpec {
   }
 
   test("rename and drop-column commits are pure-header deltas") {
-    val dir = freshDir("mdelta_meta")
+    val dir = tempDir("mdelta_meta")
     val p = s"$dir/t.parquet"
     seed(p)
     Snapshot.renameColumn(spark, p, "txt", "label", keepVersions = 50)
@@ -176,7 +175,7 @@ class ManifestDeltaSpec extends SparkSpec {
   }
 
   test("incremental vacuum GCs dereferenced files on delta commits; orphans wait for the full sweep") {
-    val dir = freshDir("mdelta_ivac")
+    val dir = tempDir("mdelta_ivac")
     val root = new Path(s"$dir/t.parquet")
     val dd = Snapshot.dataDir(root)
     val ddl = "id BIGINT, txt STRING"
@@ -232,7 +231,7 @@ class ManifestDeltaSpec extends SparkSpec {
   }
 
   test("journaled crash orphans are collected by the INCREMENTAL per-commit vacuum") {
-    val dir = freshDir("mdelta_journal")
+    val dir = tempDir("mdelta_journal")
     val p = s"$dir/t.parquet"
     val root = new Path(p)
     seed(p, keep = 3)
@@ -266,7 +265,7 @@ class ManifestDeltaSpec extends SparkSpec {
   }
 
   test("journals of COMMITTED writes age out without touching their (referenced) files") {
-    val dir = freshDir("mdelta_jref")
+    val dir = tempDir("mdelta_jref")
     val p = s"$dir/t.parquet"
     val root = new Path(p)
     seed(p, keep = 3) // the seed's own move is journaled
@@ -288,7 +287,7 @@ class ManifestDeltaSpec extends SparkSpec {
   }
 
   test("journaled orphan manifest-PARTS are collected incrementally; live parts survive") {
-    val dir = freshDir("mdelta_jparts")
+    val dir = tempDir("mdelta_jparts")
     val p = s"$dir/t.parquet"
     val root = new Path(p)
     val (m0, t0) = (Snapshot.ListCheckpointMin, Snapshot.TargetPartEntries)

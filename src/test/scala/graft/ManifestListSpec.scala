@@ -20,9 +20,6 @@ class ManifestListSpec extends SparkSpec {
   private def fs =
     new Path("/").getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def freshDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   private def sortedRows(df: DataFrame): Seq[Seq[Any]] =
     rows(df.orderBy(df.columns.map(col).toIndexedSeq: _*))
 
@@ -62,7 +59,7 @@ class ManifestListSpec extends SparkSpec {
 
   test("list checkpoints: cadence checkpoint reuses clean parts; reads exact across the whole chain") {
     withToyThresholds {
-      val dir = freshDir("mlist_rt")
+      val dir = tempDir("mlist_rt")
       val p = s"$dir/t.parquet"
       val expect = scala.collection.mutable.Map.empty[Long, String]
       (0L until 300L).foreach(i => expect(i) = s"v$i")
@@ -112,7 +109,7 @@ class ManifestListSpec extends SparkSpec {
 
   test("vacuum refcounts the parts pool; retained lists keep their parts") {
     withToyThresholds {
-      val dir = freshDir("mlist_vac")
+      val dir = tempDir("mlist_vac")
       val p = s"$dir/t.parquet"
       def overwrite(n: Long): Unit = WriteOps.atomicOverwrite(spark,
         (0L until 300L).map(i => (i, s"g${n}_$i")).toDF("id", "txt"), p,
@@ -138,7 +135,7 @@ class ManifestListSpec extends SparkSpec {
 
   test("vacuum chain promotion takes the LIST form at scale — low retention stays O(dirty)") {
     withToyThresholds {
-      val dir = freshDir("mlist_prom")
+      val dir = tempDir("mlist_prom")
       val p = s"$dir/t.parquet"
       val expect = scala.collection.mutable.Map.empty[Long, String]
       (0L until 300L).foreach(i => expect(i) = s"v$i")
@@ -184,7 +181,7 @@ class ManifestListSpec extends SparkSpec {
 
   test("fsck audits the parts pool: missing part is an error, stray part an info") {
     withToyThresholds {
-      val dir = freshDir("mlist_fsck")
+      val dir = tempDir("mlist_fsck")
       val p = s"$dir/t.parquet"
       WriteOps.atomicOverwrite(spark,
         (0L until 200L).map(i => (i, s"v$i")).toDF("id", "txt"), p,
@@ -217,7 +214,7 @@ class ManifestListSpec extends SparkSpec {
 
   test("a reader racing vacuum's LIST chain promotion re-probes and succeeds") {
     withToyThresholds {
-      val dir = freshDir("mlist_race")
+      val dir = tempDir("mlist_race")
       val p = s"$dir/t.parquet"
       val root = new Path(p)
       val expect = scala.collection.mutable.Map.empty[Long, String]

@@ -54,34 +54,37 @@ object PrunedMergeProps extends Properties("graft.prunedmerge") {
 
   property("pruned ≡ pure transform; untouched byte-identity; None = no-op") =
     forAll(genCase) { case (opIdx, lo, width, partitioned, summary) =>
-      val op = ops(opIdx)
-      val dir = java.nio.file.Files.createTempDirectory("pm_props").toString
-      val p = s"$dir/t.parquet"
-      val pcols = if (partitioned) Seq("grp") else Nil
-      WriteOps.atomicOverwrite(spark, base, p, partitionBy = pcols,
-        indexBy = Seq("id"), maxRecordsPerFile = 300)
-      val batch0 = base.filter(col("id") >= lo && col("id") < lo + width)
-      val batch =
-        if (op == WriteOp.Insert) batch0.withColumn("id", col("id") + 10000L)
-        else batch0.withColumn("v", col("v") + 1000.0)
-      val spec = TargetSpec(DatasetRef("parquet", dir, "t"), op = op,
-        pk = Seq("id"), indexBy = Seq("id"), partitionBy = pcols)
-      val before = walkFiles(new java.io.File(p))
-      val cur = spark.read.parquet(p)
-      val expected = canon(WriteOps.applyOp(cur, batch, spec))
-      val stats = PrunedMerge.merge(spark, cur, batch, spec, p,
-        maxBatchKeys = if (summary) 5L else 1L << 20)
-      val after = walkFiles(new java.io.File(p))
-      val got = canon(spark.read.parquet(p))
-      stats match {
-        case Some(st) =>
-          val kept = before.count { case (n, m) => after.get(n).contains(m) }
-          got == expected &&
-            kept == st.filesTotal - st.filesRewritten &&
-            st.filesRewritten <= st.filesTotal
-        case None =>
-          // declined → the caller falls back; target must be untouched
-          after == before && got == canon(base)
-      }
+      val tmp = java.nio.file.Files.createTempDirectory("pm_props")
+      val dir = tmp.toString
+      try {
+        val op = ops(opIdx)
+        val p = s"$dir/t.parquet"
+        val pcols = if (partitioned) Seq("grp") else Nil
+        WriteOps.atomicOverwrite(spark, base, p, partitionBy = pcols,
+          indexBy = Seq("id"), maxRecordsPerFile = 300)
+        val batch0 = base.filter(col("id") >= lo && col("id") < lo + width)
+        val batch =
+          if (op == WriteOp.Insert) batch0.withColumn("id", col("id") + 10000L)
+          else batch0.withColumn("v", col("v") + 1000.0)
+        val spec = TargetSpec(DatasetRef("parquet", dir, "t"), op = op,
+          pk = Seq("id"), indexBy = Seq("id"), partitionBy = pcols)
+        val before = walkFiles(new java.io.File(p))
+        val cur = spark.read.parquet(p)
+        val expected = canon(WriteOps.applyOp(cur, batch, spec))
+        val stats = PrunedMerge.merge(spark, cur, batch, spec, p,
+          maxBatchKeys = if (summary) 5L else 1L << 20)
+        val after = walkFiles(new java.io.File(p))
+        val got = canon(spark.read.parquet(p))
+        stats match {
+          case Some(st) =>
+            val kept = before.count { case (n, m) => after.get(n).contains(m) }
+            got == expected &&
+              kept == st.filesTotal - st.filesRewritten &&
+              st.filesRewritten <= st.filesTotal
+          case None =>
+            // declined → the caller falls back; target must be untouched
+            after == before && got == canon(base)
+        }
+      } finally SparkSpec.deleteTree(tmp)
     }
 }

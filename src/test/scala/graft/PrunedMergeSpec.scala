@@ -11,9 +11,6 @@ import org.apache.spark.sql.functions._
   */
 class PrunedMergeSpec extends SparkSpec {
 
-  private def freshDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   /** Write `df` as a sorted-layout parquet target and return its path. */
   private def layTarget(df: DataFrame, dir: String, name: String,
                         indexBy: Seq[String]): String = {
@@ -44,7 +41,7 @@ class PrunedMergeSpec extends SparkSpec {
     rows(df.orderBy(df.columns.map(col).toIndexedSeq: _*))
 
   test("pruned upsert rewrites only pk-intersecting files; result equals the pure transform") {
-    val dir = freshDir("pm_upsert")
+    val dir = tempDir("pm_upsert")
     val orders = sf("orders")
     val p = layTarget(orders, dir, "orders_t", Seq("o_orderkey"))
     val before = dataFiles(p)
@@ -86,7 +83,7 @@ class PrunedMergeSpec extends SparkSpec {
         (o: DataFrame) => o.filter(col("o_orderkey") < 200)
           .withColumn("o_orderstatus", lit("Z")),
         (t: DataFrame, b: DataFrame) => WriteOps.index(t, b, Seq("o_orderkey"))))) {
-      val dir = freshDir(s"pm_${op.name}")
+      val dir = tempDir(s"pm_${op.name}")
       val p = layTarget(orders, dir, "orders_t", Seq("o_orderkey"))
       val batch = mkBatch(orders)
       val expected = sortedRows(pure(spark.read.parquet(p), batch))
@@ -98,7 +95,7 @@ class PrunedMergeSpec extends SparkSpec {
   }
 
   test("insert of out-of-range keys appends without touching any existing file") {
-    val dir = freshDir("pm_insert")
+    val dir = tempDir("pm_insert")
     val orders = sf("orders")
     val p = layTarget(orders, dir, "orders_t", Seq("o_orderkey"))
     val before = dataFiles(p)
@@ -118,7 +115,7 @@ class PrunedMergeSpec extends SparkSpec {
   }
 
   test("string pk prunes with unsigned byte-order envelopes") {
-    val dir = freshDir("pm_str")
+    val dir = tempDir("pm_str")
     import spark.implicits._
     val docs = (0 until 4000).map(i => (f"doc_$i%05d", i.toLong)).toDF("id", "v")
     val p = s"$dir/docs.parquet"
@@ -139,7 +136,7 @@ class PrunedMergeSpec extends SparkSpec {
     import graft.operators.Snapshot
     import org.apache.hadoop.fs.Path
     val fs = new Path("/").getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dir = freshDir("pm_str_manifest")
+    val dir = tempDir("pm_str_manifest")
     import spark.implicits._
     val docs = (0 until 2000).map(i => (f"doc_$i%05d", i.toLong)).toDF("id", "v")
     val p = s"$dir/docs.parquet"
@@ -166,7 +163,7 @@ class PrunedMergeSpec extends SparkSpec {
           Some(Snapshot.BytesBounds.hex("zzz_9".getBytes))))))
       else e)
     val v2dir = new Path(root, f"_v_${v + 1}%020d")
-    Snapshot.writeManifest(fs, v2dir, m.copy(entries = lied))
+    graft.operators.ManifestCodec.writeManifest(fs, v2dir, m.copy(entries = lied))
     fs.create(new Path(v2dir, graft.operators.Versioned.Marker), false).close()
     Snapshot.clearResolvedCache()
     val t = TargetSpec(DatasetRef("parquet", dir, "docs"),
@@ -186,7 +183,7 @@ class PrunedMergeSpec extends SparkSpec {
   test("timestamp pk prunes via annotated INT64 micros stats (both tz flavors)") {
     import spark.implicits._
     for (flavor <- Seq("timestamp", "timestamp_ntz")) {
-      val dir = freshDir(s"pm_ts_$flavor")
+      val dir = tempDir(s"pm_ts_$flavor")
       val base = spark.range(0, 2000)
         .select(timestamp_seconds(col("id") * 60).cast(flavor).as("ts"),
           col("id").as("v"))
@@ -209,7 +206,7 @@ class PrunedMergeSpec extends SparkSpec {
   }
 
   test("multi-column pk prunes on later components (first component constant)") {
-    val dir = freshDir("pm_multi")
+    val dir = tempDir("pm_multi")
     import spark.implicits._
     // first pk component is the SAME everywhere: first-component-only
     // pruning would touch every file; per-component intersection must
@@ -230,7 +227,7 @@ class PrunedMergeSpec extends SparkSpec {
   }
 
   test("partitioned target: file pruning inside partitions, untouched files byte-identical") {
-    val dir = freshDir("pm_part")
+    val dir = tempDir("pm_part")
     val orders = sf("orders")
     val p = s"$dir/orders_t.parquet"
     WriteOps.atomicOverwrite(spark, orders, p, partitionBy = Seq("o_orderstatus"),
@@ -264,7 +261,7 @@ class PrunedMergeSpec extends SparkSpec {
   }
 
   test("partition column in the pk becomes a point envelope (whole partitions pruned)") {
-    val dir = freshDir("pm_partpk")
+    val dir = tempDir("pm_partpk")
     val orders = sf("orders")
     val p = s"$dir/orders_t.parquet"
     WriteOps.atomicOverwrite(spark, orders, p, partitionBy = Seq("o_orderstatus"),
@@ -294,7 +291,7 @@ class PrunedMergeSpec extends SparkSpec {
   }
 
   test("schema-extending update falls back (None) and leaves the target untouched") {
-    val dir = freshDir("pm_schema")
+    val dir = tempDir("pm_schema")
     val orders = sf("orders")
     val p = layTarget(orders, dir, "orders_t", Seq("o_orderkey"))
     val before = dataFiles(p)
@@ -307,7 +304,7 @@ class PrunedMergeSpec extends SparkSpec {
   }
 
   test("conservative fallbacks: partitioned spec on flat layout, tmap, versioned layout") {
-    val dir = freshDir("pm_fallback")
+    val dir = tempDir("pm_fallback")
     val orders = sf("orders")
     val p = layTarget(orders, dir, "orders_t", Seq("o_orderkey"))
     val cur = spark.read.parquet(p)
@@ -319,7 +316,7 @@ class PrunedMergeSpec extends SparkSpec {
     assert(PrunedMerge.merge(spark, cur, batch,
       tgt(p, WriteOp.Upsert).copy(commitMode = "versioned"), p).isEmpty)
     // a versioned-layout dataset never takes the in-place file swap
-    val vdir = freshDir("pm_versioned")
+    val vdir = tempDir("pm_versioned")
     val vp = s"$vdir/orders_v.parquet"
     WriteOps.atomicOverwrite(spark, orders, vp, commitMode = "versioned")
     assert(PrunedMerge.merge(spark,
@@ -328,7 +325,7 @@ class PrunedMergeSpec extends SparkSpec {
   }
 
   test("oversized batch prunes via distributed range summaries, result unchanged") {
-    val dir = freshDir("pm_summary")
+    val dir = tempDir("pm_summary")
     val orders = sf("orders")
     val p = layTarget(orders, dir, "orders_t", Seq("o_orderkey"))
     val before = dataFiles(p)
@@ -349,7 +346,7 @@ class PrunedMergeSpec extends SparkSpec {
     val kept = before.filter { case (n, m) => after.get(n).contains(m) }
     assert(kept.size == stats.get.filesTotal - stats.get.filesRewritten)
     // and a summary-path disjoint insert still touches nothing
-    val dir2 = freshDir("pm_summary2")
+    val dir2 = tempDir("pm_summary2")
     val p2 = layTarget(orders, dir2, "orders_t", Seq("o_orderkey"))
     val ins = orders.withColumn("o_orderkey", col("o_orderkey") + 10000000L)
     val st2 = PrunedMerge.merge(spark, spark.read.parquet(p2), ins,
@@ -359,7 +356,7 @@ class PrunedMergeSpec extends SparkSpec {
   }
 
   test("null pk keys in the batch stay correct (conservative envelope nulls)") {
-    val dir = freshDir("pm_null")
+    val dir = tempDir("pm_null")
     import spark.implicits._
     val base = (1 to 1000).map(i => (Option(i.toLong), s"v$i")).toDF("k", "v")
     val p = s"$dir/t.parquet"
@@ -377,7 +374,7 @@ class PrunedMergeSpec extends SparkSpec {
 
   test("ADD-COLUMN widening upsert: strict subset rewrite, NULLs served, compaction unifies") {
     import spark.implicits._
-    val dir = freshDir("pm_evolve")
+    val dir = tempDir("pm_evolve")
     val p = s"$dir/t.parquet"
     val df = (0L until 1000L).map(i => (i, s"v$i")).toDF("id", "txt")
     WriteOps.atomicOverwrite(spark, df, p, indexBy = Seq("id"),
@@ -417,7 +414,7 @@ class PrunedMergeSpec extends SparkSpec {
   }
 
   test("engine-integrated: Runner upsert takes the pruned path and keeps untouched files") {
-    val dir = freshDir("pm_runner")
+    val dir = tempDir("pm_runner")
     val orders = sf("orders")
     val p = layTarget(orders, dir, "orders_t", Seq("o_orderkey"))
     val before = dataFiles(p)

@@ -77,6 +77,10 @@ class RunnerSpec extends SparkSpec {
     assert(Snapshot.lastCountPlan == (4, 2, 6),
       s"expected (covered 4, boundary 2, total 6), " +
         s"got ${Snapshot.lastCountPlan}")
+    assert(Runner.countPlan(spark,
+      s.copy(query = Seq("id__gte" -> "150", "id__lte" -> "1049")))
+      .map(t => (t._1, t._2, t._3)).contains(Snapshot.lastCountPlan),
+      "--dry --count reports the split the count itself used")
     // every exactly-translated op agrees with the closed form
     val cases = Seq(
       Seq("id__lt" -> "777") -> 777L,

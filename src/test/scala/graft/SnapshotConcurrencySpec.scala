@@ -23,9 +23,6 @@ class SnapshotConcurrencySpec extends SparkSpec {
   private def fs =
     new Path("/").getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def freshDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   private def sorted(df: DataFrame): Seq[Seq[Any]] = rows(df.orderBy("id"))
 
   private type Model = Map[Long, String]
@@ -70,7 +67,7 @@ class SnapshotConcurrencySpec extends SparkSpec {
                     op1: String => Unit, m1: Model => Model,
                     op2: String => Unit, m2: Model => Model,
                     requireBoth: Boolean): Unit = {
-    val dir = freshDir(s"snap_conc")
+    val dir = tempDir(s"snap_conc")
     val p = s"$dir/t.parquet"
     val base = seed(nRows)
     WriteOps.atomicOverwrite(spark, render(base), p, indexBy = Seq("id"),
@@ -140,7 +137,7 @@ class SnapshotConcurrencySpec extends SparkSpec {
 
   test("compaction racing a disjoint pruned insert: both land") {
     // fragment the high band first so compaction has work
-    val dir = freshDir("snap_conc_cmp")
+    val dir = tempDir("snap_conc_cmp")
     val p = s"$dir/t.parquet"
     val base = seed(400)
     WriteOps.atomicOverwrite(spark, render(base), p, indexBy = Seq("id"),
@@ -205,7 +202,7 @@ class SnapshotConcurrencySpec extends SparkSpec {
   }
 
   test("stale commitRebase against a moved head conflicts loudly; fresh rebase lands") {
-    val dir = freshDir("snap_conc_stale")
+    val dir = tempDir("snap_conc_stale")
     val p = s"$dir/t.parquet"
     WriteOps.atomicOverwrite(spark, render(seed(400)), p, indexBy = Seq("id"),
       maxRecordsPerFile = 50, commitMode = "snapshot", keepVersions = 5)
@@ -264,7 +261,7 @@ class SnapshotConcurrencySpec extends SparkSpec {
   }
 
   test("a crashed holder's stale commit lock is broken and commits proceed") {
-    val dir = freshDir("snap_conc_lock")
+    val dir = tempDir("snap_conc_lock")
     val p = s"$dir/t.parquet"
     WriteOps.atomicOverwrite(spark, render(seed(10)), p,
       commitMode = "snapshot", keepVersions = 3)
@@ -281,7 +278,7 @@ class SnapshotConcurrencySpec extends SparkSpec {
 
   test("engine Runner re-plans on commit conflict: same-file racing upserts BOTH land") {
     import graft.spec.{JobSpec, SourceSpec}
-    val dir = freshDir("snap_conc_runner")
+    val dir = tempDir("snap_conc_runner")
     val p = s"$dir/t.parquet"
     val base = seed(400)
     WriteOps.atomicOverwrite(spark, render(base), p, indexBy = Seq("id"),
@@ -322,7 +319,7 @@ class SnapshotConcurrencySpec extends SparkSpec {
   }
 
   test("materializeDeletes racing a disjoint insert: both land; racing a same-file rewrite is loud") {
-    val dir = freshDir("snap_conc_mat")
+    val dir = tempDir("snap_conc_mat")
     val p = s"$dir/t.parquet"
     val base = seed(400)
     WriteOps.atomicOverwrite(spark, render(base), p, indexBy = Seq("id"),
@@ -370,7 +367,7 @@ class SnapshotConcurrencySpec extends SparkSpec {
     // a merge's base read and its commit; a rebase that kept the new
     // tombstone would anti-join the merge's rewritten files at read
     // and silently delete keys the merge upserted
-    val dir = freshDir("snap_conc_tomb")
+    val dir = tempDir("snap_conc_tomb")
     val p = s"$dir/t.parquet"
     WriteOps.atomicOverwrite(spark, render(seed(400)), p, indexBy = Seq("id"),
       maxRecordsPerFile = 50, commitMode = "snapshot", keepVersions = 8)
@@ -414,7 +411,7 @@ class SnapshotConcurrencySpec extends SparkSpec {
   }
 
   test("two waiters racing to break the SAME stale lock: rename arbitration, both commit") {
-    val dir = freshDir("snap_conc_break")
+    val dir = tempDir("snap_conc_break")
     val p = s"$dir/t.parquet"
     WriteOps.atomicOverwrite(spark, render(seed(400)), p, indexBy = Seq("id"),
       maxRecordsPerFile = 50, commitMode = "snapshot", keepVersions = 8)
@@ -444,12 +441,12 @@ class SnapshotConcurrencySpec extends SparkSpec {
     // version dir: the manifest's exclusive create is the backstop —
     // the second write must throw, never interleave bytes so the
     // marker winner publishes the loser's membership
-    val dir = freshDir("snap_conc_mexcl")
+    val dir = tempDir("snap_conc_mexcl")
     val vdir = new Path(dir, f"_v_${2L}%020d")
     val m = Snapshot.Manifest("id BIGINT", Nil, Seq(Snapshot.Entry("a.parquet", 1L)))
-    Snapshot.writeManifest(fs, vdir, m)
+    graft.operators.ManifestCodec.writeManifest(fs, vdir, m)
     val e = intercept[java.io.IOException] {
-      Snapshot.writeManifest(fs, vdir,
+      graft.operators.ManifestCodec.writeManifest(fs, vdir,
         m.copy(entries = Seq(Snapshot.Entry("b.parquet", 2L))))
     }
     assert(e.getMessage.contains("did NOT land"))
@@ -469,7 +466,7 @@ class SnapshotConcurrencySpec extends SparkSpec {
     // band, fsck clean, no leftover lock.
     val nThreads = 8
     val bandSize = 100
-    val dir = freshDir("snap_soak")
+    val dir = tempDir("snap_soak")
     val p = s"$dir/t.parquet"
     val nRows = nThreads * bandSize
     val base = seed(nRows)
@@ -564,7 +561,7 @@ class SnapshotConcurrencySpec extends SparkSpec {
   }
 
   test("lock contention: 2 threads x 3 sequential disjoint merges all land") {
-    val dir = freshDir("snap_conc_many")
+    val dir = tempDir("snap_conc_many")
     val p = s"$dir/t.parquet"
     val base = seed(600)
     WriteOps.atomicOverwrite(spark, render(base), p, indexBy = Seq("id"),

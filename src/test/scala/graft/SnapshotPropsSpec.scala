@@ -54,7 +54,7 @@ class SnapshotPropsSpec extends SparkSpec {
 
   private def runSequence(seed: Int): Unit = {
     val rnd = new scala.util.Random(seed)
-    val dir = java.nio.file.Files.createTempDirectory(s"snap_props_$seed").toString
+    val dir = tempDir(s"snap_props_$seed")
     val p = s"$dir/t.parquet"
     val t = TargetSpec(DatasetRef("parquet", dir, "t"), op = WriteOp.Upsert,
       pk = Seq("id"), indexBy = Seq("id"), commitMode = "snapshot",

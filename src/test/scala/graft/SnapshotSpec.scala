@@ -14,9 +14,6 @@ import org.apache.spark.sql.functions._
   */
 class SnapshotSpec extends SparkSpec {
 
-  private def freshDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   private def fs =
     new Path("/").getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -42,7 +39,7 @@ class SnapshotSpec extends SparkSpec {
     org.apache.spark.sql.types.StructType(s.fields.map(_.copy(nullable = true)))
 
   test("snapshot overwrite round-trips rows, schema order and types") {
-    val dir = freshDir("snap_rt")
+    val dir = tempDir("snap_rt")
     val p = s"$dir/t.parquet"
     val df = base(500)
     WriteOps.atomicOverwrite(spark, df, p, indexBy = Seq("id"),
@@ -56,7 +53,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("partitioned snapshot keeps partition column order AND declared type") {
-    val dir = freshDir("snap_part")
+    val dir = tempDir("snap_part")
     val p = s"$dir/t.parquet"
     import spark.implicits._
     // string partition values that LOOK numeric — naive hive path
@@ -72,7 +69,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("snapshot layout is sticky: later writes ignore a weaker --commit flag") {
-    val dir = freshDir("snap_sticky")
+    val dir = tempDir("snap_sticky")
     val p = s"$dir/t.parquet"
     WriteOps.atomicOverwrite(spark, base(100), p, commitMode = "snapshot")
     WriteOps.atomicOverwrite(spark, base(60), p, commitMode = "rename")
@@ -83,7 +80,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("time travel: retained versions read their own membership; missing is loud") {
-    val dir = freshDir("snap_tt")
+    val dir = tempDir("snap_tt")
     val p = s"$dir/t.parquet"
     WriteOps.atomicOverwrite(spark, base(100), p, commitMode = "snapshot")
     WriteOps.atomicOverwrite(spark, base(40), p, commitMode = "snapshot")
@@ -99,7 +96,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("_version reaches the scan through the DSL/Resolver and the engine read path") {
-    val dir = freshDir("snap_dsl")
+    val dir = tempDir("snap_dsl")
     val p = s"$dir/t.parquet"
     WriteOps.atomicOverwrite(spark, base(100), p, commitMode = "snapshot")
     WriteOps.atomicOverwrite(spark, base(40), p, commitMode = "snapshot")
@@ -113,7 +110,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("pruned merge on a snapshot layout: incremental commit, shared files, time travel") {
-    val dir = freshDir("snap_pm")
+    val dir = tempDir("snap_pm")
     val p = s"$dir/t.parquet"
     val b = base(4000)
     WriteOps.atomicOverwrite(spark, b, p, indexBy = Seq("id"),
@@ -149,7 +146,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("partitioned snapshot pruned merge: only intersecting files inside partitions") {
-    val dir = freshDir("snap_pmp")
+    val dir = tempDir("snap_pmp")
     val p = s"$dir/t.parquet"
     val b = base(4000)
     WriteOps.atomicOverwrite(spark, b, p, partitionBy = Seq("grp"),
@@ -169,7 +166,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("runner end-to-end on a snapshot target: upsert commits v2 incrementally") {
-    val dir = freshDir("snap_runner")
+    val dir = tempDir("snap_runner")
     val p = s"$dir/t.parquet"
     WriteOps.atomicOverwrite(spark, base(2000), p, indexBy = Seq("id"),
       maxRecordsPerFile = 250, commitMode = "snapshot")
@@ -191,7 +188,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("snapshot compaction: one atomic commit repairs fragmentation, old version readable") {
-    val dir = freshDir("snap_cp")
+    val dir = tempDir("snap_cp")
     val p = s"$dir/t.parquet"
     val b = base(4000)
     WriteOps.atomicOverwrite(spark, b, p, indexBy = Seq("id"),
@@ -219,7 +216,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("changelog classifies insert/delete/update with pre+post images") {
-    val dir = freshDir("snap_cdc")
+    val dir = tempDir("snap_cdc")
     val p = s"$dir/t.parquet"
     import spark.implicits._
     val v1 = Seq((1L, "a", 10), (2L, "b", 20), (3L, "c", 30), (4L, null: String, 40))
@@ -244,7 +241,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("history lists versions with protocol, file and byte metadata") {
-    val dir = freshDir("snap_hist")
+    val dir = tempDir("snap_hist")
     val p = s"$dir/t.parquet"
     WriteOps.atomicOverwrite(spark, base(100), p, commitMode = "snapshot",
       maxRecordsPerFile = 30)
@@ -257,7 +254,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("keep-versions > 2 deepens retention; vacuum respects the refcount") {
-    val dir = freshDir("snap_keep")
+    val dir = tempDir("snap_keep")
     val p = s"$dir/t.parquet"
     for (i <- 1 to 4)
       WriteOps.atomicOverwrite(spark, base(10 * i), p, commitMode = "snapshot",
@@ -269,7 +266,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("crash recovery: stray uncommitted version dirs and stages never block or corrupt") {
-    val dir = freshDir("snap_crash")
+    val dir = tempDir("snap_crash")
     val p = s"$dir/t.parquet"
     WriteOps.atomicOverwrite(spark, base(100), p, commitMode = "snapshot")
     // simulate a writer that died mid-commit: an uncommitted _v_2 with
@@ -298,7 +295,7 @@ class SnapshotSpec extends SparkSpec {
 
   test("--changelog with a target writes the CDC feed as a dataset") {
     import graft.cli.Main
-    val dir = freshDir("snap_clcli")
+    val dir = tempDir("snap_clcli")
     val p = s"$dir/t.parquet"
     import spark.implicits._
     WriteOps.atomicOverwrite(spark,
@@ -326,7 +323,7 @@ class SnapshotSpec extends SparkSpec {
 
   test("--zorder maintenance on a snapshot target: second-dim pruning improves, history kept") {
     import graft.cli.Main
-    val dir = freshDir("snap_zo")
+    val dir = tempDir("snap_zo")
     val p = s"$dir/t.parquet"
     import spark.implicits._
     // two independent dims; initial layout sorted on `a` only, so `b`
@@ -369,7 +366,7 @@ class SnapshotSpec extends SparkSpec {
     "recorded envelopes, manifest skipping through the DSL; bad " +
     "columns are CliError, not NPE") {
     import graft.cli.Main
-    val dir = freshDir("snap_zostr")
+    val dir = tempDir("snap_zostr")
     val p = s"$dir/t.parquet"
     import spark.implicits._
     val rnd = new scala.util.Random(7)
@@ -430,7 +427,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("fsck: clean layout is empty; planted corruption classes are reported") {
-    val dir = freshDir("snap_fsck")
+    val dir = tempDir("snap_fsck")
     val p = s"$dir/t.parquet"
     WriteOps.atomicOverwrite(spark, base(100), p, commitMode = "snapshot",
       maxRecordsPerFile = 30)
@@ -451,7 +448,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("fsck --full cross-checks recorded row counts against footers") {
-    val dir = freshDir("snap_fsck_rows")
+    val dir = tempDir("snap_fsck_rows")
     val p = s"$dir/t.parquet"
     WriteOps.atomicOverwrite(spark, base(100), p, commitMode = "snapshot",
       maxRecordsPerFile = 30, keepVersions = 4)
@@ -465,7 +462,7 @@ class SnapshotSpec extends SparkSpec {
       "the writer must record per-file rows")
     val lied = m.copy(entries = m.entries.zipWithIndex.map { case (e, i) =>
       if (i == 0) e.copy(rows = e.rows.map(_ + 7)) else e })
-    Snapshot.writeManifest(fs, new Path(root, f"_v_${v + 1}%020d"), lied)
+    graft.operators.ManifestCodec.writeManifest(fs, new Path(root, f"_v_${v + 1}%020d"), lied)
     fs.create(new Path(new Path(root, f"_v_${v + 1}%020d"),
       graft.operators.Versioned.Marker), false).close()
     Snapshot.clearResolvedCache()
@@ -493,7 +490,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("--at-timestamp: latest commit at or before the instant; too-early is loud") {
-    val dir = freshDir("snap_ts")
+    val dir = tempDir("snap_ts")
     val p = s"$dir/t.parquet"
     import spark.implicits._
     WriteOps.atomicOverwrite(spark, Seq((1L, "v1")).toDF("id", "txt"), p,
@@ -520,7 +517,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("deletion vectors: O(batch) delete touches no data file; time travel; null-safe pk") {
-    val dir = freshDir("snap_dv")
+    val dir = tempDir("snap_dv")
     val p = s"$dir/t.parquet"
     import spark.implicits._
     val df = Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d"))
@@ -547,7 +544,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("deletion vectors: mixed key-column sets across DV commits apply per their own schema") {
-    val dir = freshDir("snap_dvmix")
+    val dir = tempDir("snap_dvmix")
     val p = s"$dir/t.parquet"
     import spark.implicits._
     WriteOps.atomicOverwrite(spark,
@@ -570,7 +567,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("deletion vectors: pruned merge composes — tombstoned touched reads, batch wins, strict subset") {
-    val dir = freshDir("snap_dvm")
+    val dir = tempDir("snap_dvm")
     val p = s"$dir/t.parquet"
     import spark.implicits._
     val df = (0L until 100L).map(i => (i, s"v$i")).toDF("id", "txt")
@@ -640,7 +637,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("DV-composed merge is null-safe: a NULL-pk tombstone drops when the batch re-asserts NULL") {
-    val dir = freshDir("snap_dvnull")
+    val dir = tempDir("snap_dvnull")
     val p = s"$dir/t.parquet"
     import spark.implicits._
     WriteOps.atomicOverwrite(spark,
@@ -676,7 +673,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("append-shaped upsert: O(batch) commit, batch wins by seq, zero data files touched") {
-    val dir = freshDir("snap_mor")
+    val dir = tempDir("snap_mor")
     val p = s"$dir/t.parquet"
     import spark.implicits._
     val df = (0L until 100L).map(i => (i, s"v$i")).toDF("id", "txt")
@@ -741,7 +738,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("append-shaped upsert: dup-key batch dedups like the rewriting upsert; refusals loud") {
-    val dir = freshDir("snap_mor2")
+    val dir = tempDir("snap_mor2")
     val p = s"$dir/t.parquet"
     import spark.implicits._
     WriteOps.atomicOverwrite(spark,
@@ -769,7 +766,7 @@ class SnapshotSpec extends SparkSpec {
     val (hv, hdir) = Snapshot.resolveVersion(fs, root, None)
     val mh = Snapshot.manifestAt(fs, hdir).get
     val vdirL = new Path(p, f"_v_${hv + 1}%020d")
-    Snapshot.writeManifest(fs, vdirL, mh.copy(entries =
+    graft.operators.ManifestCodec.writeManifest(fs, vdirL, mh.copy(entries =
       mh.entries :+ Snapshot.Entry("_deletes/legacy.parquet", 1L,
         cols = Some(Seq("id")))))
     fs.create(new Path(vdirL, Versioned.Marker), true).close()
@@ -781,7 +778,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("deletion vectors: a PARTIAL-key tombstone still declines the pruned merge") {
-    val dir = freshDir("snap_dvpart")
+    val dir = tempDir("snap_dvpart")
     val p = s"$dir/t.parquet"
     import spark.implicits._
     WriteOps.atomicOverwrite(spark,
@@ -801,7 +798,7 @@ class SnapshotSpec extends SparkSpec {
 
   test("deletion vectors: changelog across a DV delete classifies deletes; CLI --dv end-to-end") {
     import graft.cli.Main
-    val dir = freshDir("snap_dvcli")
+    val dir = tempDir("snap_dvcli")
     val p = s"$dir/t.parquet"
     import spark.implicits._
     WriteOps.atomicOverwrite(spark,
@@ -831,7 +828,7 @@ class SnapshotSpec extends SparkSpec {
 
   test("append-shaped upsert: CLI -o upsert --dv end-to-end; refusal matrix loud") {
     import graft.cli.Main
-    val dir = freshDir("snap_morcli")
+    val dir = tempDir("snap_morcli")
     val p = s"$dir/t.parquet"
     import spark.implicits._
     WriteOps.atomicOverwrite(spark,
@@ -874,7 +871,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("drop column is metadata-only: reads exclude it, time travel keeps it, changelog crosses it") {
-    val dir = freshDir("snap_drop")
+    val dir = tempDir("snap_drop")
     val p = s"$dir/t.parquet"
     import spark.implicits._
     val df = (0L until 40L).map(i => (i, s"v$i", i * 10)).toDF("id", "txt", "score")
@@ -936,7 +933,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("drop column: refusal matrix and rename interaction") {
-    val dir = freshDir("snap_drop2")
+    val dir = tempDir("snap_drop2")
     val p = s"$dir/t.parquet"
     import spark.implicits._
     WriteOps.atomicOverwrite(spark,
@@ -973,7 +970,7 @@ class SnapshotSpec extends SparkSpec {
       Snapshot.dropColumn(spark, p, "id")
     }.getMessage.contains("last data column"))
     // CLI route
-    val dir2 = freshDir("snap_drop_cli")
+    val dir2 = tempDir("snap_drop_cli")
     val p2 = s"$dir2/t.parquet"
     WriteOps.atomicOverwrite(spark,
       (0L until 5L).map(i => (i, s"v$i", i)).toDF("id", "txt", "n"), p2,
@@ -986,7 +983,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("changelogSince: open-ended cursor reads consecutive diffs, keeps intermediate states") {
-    val dir = freshDir("snap_clsince")
+    val dir = tempDir("snap_clsince")
     val p = s"$dir/t.parquet"
     import spark.implicits._
     def write(rows: Seq[(Long, String)]) =
@@ -1024,7 +1021,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("changelogSince spans an ADD-COLUMN widening with null-padded early steps") {
-    val dir = freshDir("snap_clsw")
+    val dir = tempDir("snap_clsw")
     val p = s"$dir/t.parquet"
     import spark.implicits._
     WriteOps.atomicOverwrite(spark, Seq((1L, "a")).toDF("id", "txt"), p,
@@ -1047,7 +1044,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("changelog tolerates ADD-COLUMN widening with NULL preimages") {
-    val dir = freshDir("snap_clwide")
+    val dir = tempDir("snap_clwide")
     val p = s"$dir/t.parquet"
     import spark.implicits._
     // v1: (id, txt); v2 widens with `extra` AND changes row 2's txt so we
@@ -1072,7 +1069,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("changelog on non-widening schema change refuses loudly") {
-    val dir = freshDir("snap_clerr")
+    val dir = tempDir("snap_clerr")
     val p = s"$dir/t.parquet"
     import spark.implicits._
     // retype: txt STRING -> txt INT is not a pure widening
@@ -1086,7 +1083,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("DV-aware changelog pruning: pruned ≡ full reads across delete/merge/widening steps") {
-    val dir = freshDir("snap_cldv")
+    val dir = tempDir("snap_cldv")
     val p = s"$dir/t.parquet"
     import spark.implicits._
     val t = TargetSpec(DatasetRef("parquet", dir, "t"), op = WriteOp.Upsert,
@@ -1141,7 +1138,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("commit instants are recorded in the manifest and survive mtime rewrites") {
-    val dir = freshDir("snap_cts")
+    val dir = tempDir("snap_cts")
     val p = s"$dir/t.parquet"
     import spark.implicits._
     WriteOps.atomicOverwrite(spark, Seq((1L, "v1")).toDF("id", "txt"), p,
@@ -1168,7 +1165,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("DV manifest entries record the tombstone key-column set") {
-    val dir = freshDir("snap_dvcols")
+    val dir = tempDir("snap_dvcols")
     val p = s"$dir/t.parquet"
     import spark.implicits._
     WriteOps.atomicOverwrite(spark,
@@ -1192,7 +1189,7 @@ class SnapshotSpec extends SparkSpec {
   // ── manifest key envelopes (r12) ───────────────────────────────────
 
   test("manifest entries round-trip key envelopes; legacy 3-field lines still parse") {
-    val dir = freshDir("snap_envrt")
+    val dir = tempDir("snap_envrt")
     val vdir = new Path(dir, f"_v_${1L}%020d")
     val m = Snapshot.Manifest("id BIGINT,txt STRING", Nil, Seq(
       Snapshot.Entry("a.parquet", 10L,
@@ -1202,7 +1199,7 @@ class SnapshotSpec extends SparkSpec {
       Snapshot.Entry("_deletes/d.parquet", 5L, cols = Some(Seq("id")),
         envs = None),
       Snapshot.Entry("c.parquet", 30L)))
-    Snapshot.writeManifest(fs, vdir, m)
+    graft.operators.ManifestCodec.writeManifest(fs, vdir, m)
     val back = Snapshot.manifestAt(fs, vdir).get
     // entries written with the UnsetSeq sentinel have no seq field on
     // disk — reading normalizes them to the pre-seq GLOBAL semantics
@@ -1220,14 +1217,14 @@ class SnapshotSpec extends SparkSpec {
     // a stamped seq round-trips verbatim
     val m2 = m.copy(entries = m.entries.map(_.copy(seq = 7L)))
     val vdir2 = new Path(dir, f"_v_${2L}%020d")
-    Snapshot.writeManifest(fs, vdir2, m2)
+    graft.operators.ManifestCodec.writeManifest(fs, vdir2, m2)
     assert(Snapshot.manifestAt(fs, vdir2).get.entries ==
       m2.entries.sortBy(_.rel))
   }
 
   test("sorted snapshot writers RECORD key envelopes; merges PLAN from them (no footer reads)") {
     import spark.implicits._
-    val dir = freshDir("snap_envplan")
+    val dir = tempDir("snap_envplan")
     val p = s"$dir/t.parquet"
     WriteOps.atomicOverwrite(spark,
       (0L until 200L).map(i => (i, s"v$i")).toDF("id", "txt"), p,
@@ -1262,7 +1259,7 @@ class SnapshotSpec extends SparkSpec {
           Snapshot.ColEnv(Some(100000L), Some(200000L), hasNulls = false))))
       else e)
     val v2dir = new Path(cRoot, f"_v_${cv + 1}%020d")
-    Snapshot.writeManifest(fs, v2dir, cm.copy(entries = lied))
+    graft.operators.ManifestCodec.writeManifest(fs, v2dir, cm.copy(entries = lied))
     fs.create(new Path(v2dir, graft.operators.Versioned.Marker), false).close()
     val t = TargetSpec(DatasetRef("parquet", dir, "c"), op = WriteOp.Upsert,
       pk = Seq("id"), indexBy = Seq("id"), commitMode = "snapshot",
@@ -1293,7 +1290,7 @@ class SnapshotSpec extends SparkSpec {
 
   test("compaction and materializeDeletes preserve manifest envelope coverage") {
     import spark.implicits._
-    val dir = freshDir("snap_envmaint")
+    val dir = tempDir("snap_envmaint")
     val p = s"$dir/t.parquet"
     WriteOps.atomicOverwrite(spark,
       (0L until 300L).map(i => (i, s"v$i")).toDF("id", "txt"), p,
@@ -1312,7 +1309,7 @@ class SnapshotSpec extends SparkSpec {
 
   test("fsck audits the r12 metadata: broken alias, stray envelope key, stale predicate") {
     import spark.implicits._
-    val dir = freshDir("snap_fsck12")
+    val dir = tempDir("snap_fsck12")
     val p = s"$dir/t.parquet"
     WriteOps.atomicOverwrite(spark,
       (0L until 20L).map(i => (i, s"v$i")).toDF("id", "txt"), p,
@@ -1333,7 +1330,7 @@ class SnapshotSpec extends SparkSpec {
           e.copy(envs = Some(Map("nope" -> Snapshot.ColEnv(Some(0L), Some(1L), false))))
         else e))
     val vdir2 = new Path(root, f"_v_${v + 1}%020d")
-    Snapshot.writeManifest(fs, vdir2, bad)
+    graft.operators.ManifestCodec.writeManifest(fs, vdir2, bad)
     fs.create(new Path(vdir2, graft.operators.Versioned.Marker), false).close()
     val findings = Snapshot.fsck(spark, p)
       .select("issue").as[String].collect().toSet
@@ -1345,7 +1342,7 @@ class SnapshotSpec extends SparkSpec {
 
   test("rename is metadata-only: values travel, time travel keeps each version's names") {
     import spark.implicits._
-    val dir = freshDir("snap_ren")
+    val dir = tempDir("snap_ren")
     val p = s"$dir/t.parquet"
     WriteOps.atomicOverwrite(spark,
       (0L until 100L).map(i => (i, s"v$i", (i % 3).toInt)).toDF("id", "txt", "grp"),
@@ -1375,7 +1372,7 @@ class SnapshotSpec extends SparkSpec {
 
   test("mixed old/new files: merge, DV delete by new name, compaction through aliases") {
     import spark.implicits._
-    val dir = freshDir("snap_renmix")
+    val dir = tempDir("snap_renmix")
     val p = s"$dir/t.parquet"
     WriteOps.atomicOverwrite(spark,
       (0L until 200L).map(i => (i, s"v$i")).toDF("id", "txt"),
@@ -1407,7 +1404,7 @@ class SnapshotSpec extends SparkSpec {
 
   test("changelog travels a rename: pure-rename step emits zero rows; spans align names") {
     import spark.implicits._
-    val dir = freshDir("snap_rencl")
+    val dir = tempDir("snap_rencl")
     val p = s"$dir/t.parquet"
     WriteOps.atomicOverwrite(spark,
       (0L until 50L).map(i => (i, s"v$i")).toDF("id", "txt"),
@@ -1426,7 +1423,7 @@ class SnapshotSpec extends SparkSpec {
 
   test("rename refusals are loud; drop/retype stay refused") {
     import spark.implicits._
-    val dir = freshDir("snap_renref")
+    val dir = tempDir("snap_renref")
     val p = s"$dir/t.parquet"
     WriteOps.atomicOverwrite(spark,
       (0L until 20L).map(i => (i, s"v$i", (i % 2).toInt)).toDF("id", "txt", "grp"),
@@ -1464,7 +1461,7 @@ class SnapshotSpec extends SparkSpec {
 
   test("a merge planned before a concurrent rename conflicts loudly (no zombie column)") {
     import spark.implicits._
-    val dir = freshDir("snap_renconc")
+    val dir = tempDir("snap_renconc")
     val p = s"$dir/t.parquet"
     WriteOps.atomicOverwrite(spark,
       (0L until 50L).map(i => (i, s"v$i")).toDF("id", "txt"),
@@ -1482,7 +1479,7 @@ class SnapshotSpec extends SparkSpec {
   test("CLI --rename-column routes and reports") {
     import graft.cli.Main
     import spark.implicits._
-    val dir = freshDir("snap_rencli")
+    val dir = tempDir("snap_rencli")
     val p = s"$dir/t.parquet"
     WriteOps.atomicOverwrite(spark,
       (0L until 10L).map(i => (i, s"v$i")).toDF("id", "txt"),
@@ -1506,7 +1503,7 @@ class SnapshotSpec extends SparkSpec {
 
   test("predicate DV: zero data files, time travel, NULL keeps the row, pushed filter") {
     import spark.implicits._
-    val dir = freshDir("snap_dvp")
+    val dir = tempDir("snap_dvp")
     val p = s"$dir/t.parquet"
     predBase(p)
     val dataBefore = poolFiles(p).filterNot(_.startsWith("_deletes/"))
@@ -1541,7 +1538,7 @@ class SnapshotSpec extends SparkSpec {
 
   test("predicate DV composes with key tombstones; materialize folds both") {
     import spark.implicits._
-    val dir = freshDir("snap_dvpk")
+    val dir = tempDir("snap_dvpk")
     val p = s"$dir/t.parquet"
     predBase(p)
     Snapshot.deleteByKeys(spark, p, Seq(1L, 2L).toDF("id"), keepVersions = 4)
@@ -1558,7 +1555,7 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("predicate DV validation is loud: bad column, nondeterminism, time-dependence, non-snapshot") {
-    val dir = freshDir("snap_dvpv")
+    val dir = tempDir("snap_dvpv")
     val p = s"$dir/t.parquet"
     predBase(p)
     intercept[Exception] { // unknown column → AnalysisException at COMMIT time
@@ -1589,7 +1586,7 @@ class SnapshotSpec extends SparkSpec {
 
   test("live predicate DV COMPOSES with the pruned merge (r12); partition-col predicates still decline") {
     import spark.implicits._
-    val dir = freshDir("snap_dvpm")
+    val dir = tempDir("snap_dvpm")
     val p = s"$dir/t.parquet"
     predBase(p)
     Snapshot.deleteByPredicate(spark, p, "grp = 3", keepVersions = 4)
@@ -1646,7 +1643,7 @@ class SnapshotSpec extends SparkSpec {
 
   test("changelog across a predicate-DV commit classifies exactly the matching rows as deletes") {
     import spark.implicits._
-    val dir = freshDir("snap_dvpcl")
+    val dir = tempDir("snap_dvpcl")
     val p = s"$dir/t.parquet"
     predBase(p)
     Snapshot.deleteByPredicate(spark, p, "grp = 1", keepVersions = 4)
@@ -1663,7 +1660,7 @@ class SnapshotSpec extends SparkSpec {
   test("CLI -o delete --dv --tq commits the predicate; --pk AND --tq composes") {
     import graft.cli.Main
     import spark.implicits._
-    val dir = freshDir("snap_dvptq")
+    val dir = tempDir("snap_dvptq")
     val p = s"$dir/t.parquet"
     (0L until 50L).map(i => (i, s"v$i", (i % 5).toInt)).toDF("id", "txt", "grp")
       .write.parquet(s"$dir/seed.parquet")
@@ -1699,7 +1696,7 @@ class SnapshotSpec extends SparkSpec {
   test("type widening is metadata-only: mixed-width files, per-version types, changelog crosses it") {
     import spark.implicits._
     import org.apache.spark.sql.types._
-    val dir = freshDir("snap_widen")
+    val dir = tempDir("snap_widen")
     val p = s"$dir/t.parquet"
     WriteOps.atomicOverwrite(spark, base(40), p, indexBy = Seq("id"),
       maxRecordsPerFile = 10, commitMode = "snapshot", keepVersions = 10) // v1
@@ -1745,7 +1742,7 @@ class SnapshotSpec extends SparkSpec {
   test("type widening: key tombstones keep applying; refusal matrix is loud") {
     import spark.implicits._
     import org.apache.spark.sql.types._
-    val dir = freshDir("snap_widenref")
+    val dir = tempDir("snap_widenref")
     val p = s"$dir/t.parquet"
     WriteOps.atomicOverwrite(spark, base(30), p, indexBy = Seq("id"),
       maxRecordsPerFile = 10, commitMode = "snapshot", keepVersions = 10)
@@ -1790,7 +1787,7 @@ class SnapshotSpec extends SparkSpec {
   test("type widening: partition column refused; CLI --widen-column end-to-end") {
     import spark.implicits._
     import org.apache.spark.sql.types._
-    val dir = freshDir("snap_widencli")
+    val dir = tempDir("snap_widencli")
     val p = s"$dir/t.parquet"
     WriteOps.atomicOverwrite(spark, base(20), p, partitionBy = Seq("grp"),
       indexBy = Seq("id"), commitMode = "snapshot", keepVersions = 10)

@@ -1,11 +1,29 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session per suite (guide: one lazy session, local mode). */
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
+
+  private val tempDirs =
+    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+
+  /** A fresh scratch directory under the JVM temp dir, deleted with
+    * everything in it when the suite finishes.
+    */
+  def tempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    tempDirs.add(d)
+    d.toString
+  }
+
+  override protected def afterAll(): Unit =
+    try tempDirs.forEach(SparkSpec.deleteTree(_))
+    finally super.afterAll()
+
   def sf(name: String): DataFrame =
     graft.sources.Resolver.readParquet(spark, s"/root/testdata/sf0.001/$name.parquet")
   def rows(df: DataFrame): Seq[Seq[Any]] =
@@ -32,11 +50,29 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
+  /** Best-effort recursive delete: a file that vanished or cannot be
+    * removed is skipped, never fails the suite.
+    */
+  def deleteTree(root: java.nio.file.Path): Unit =
+    try {
+      val walk = java.nio.file.Files.walk(root)
+      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach { p =>
+          try java.nio.file.Files.deleteIfExists(p)
+          catch { case _: java.io.IOException => () }
+          ()
+        }
+      finally walk.close()
+    } catch {
+      case _: java.io.IOException | _: java.io.UncheckedIOException => ()
+    }
+
   lazy val session: SparkSession = {
+    val warehouse = java.nio.file.Files.createTempDirectory("graft_wh")
+    sys.addShutdownHook(deleteTree(warehouse))
     val s = GraftSession.builder(4)
       .appName("graft-test")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
+      .config("spark.sql.warehouse.dir", warehouse.toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
