@@ -214,8 +214,9 @@ object ScaleBench12 {
       // the upsert's batch keys all existed (md5 of multiples of 6000,
       // every one < 6M), so the table still holds exactly nRows — and
       // the merge-rewritten files re-recorded their rows
-      val n = Snapshot.metadataCount(spark, ps).getOrElse(
-        sys.error("metadata count must be available on this table"))
+      val n = Snapshot.metadataPlan(spark, ps, None, Nil, Seq("count" -> "*"))
+        .collect { case (partials, None, _) => partials.head.covered.get }
+        .getOrElse(sys.error("metadata count must be available on this table"))
       require(n == nRows, s"metadata count $n != $nRows")
     }
     notes("metadata_count") = f"${results("metadata_count")}%.3fs driver-side"

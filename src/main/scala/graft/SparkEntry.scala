@@ -238,10 +238,12 @@ object SparkEntry {
       // files exist at every SF (the oracle replays the same bound);
       // footer max stats are exact for int64, same value the agg read
       val hi = colMaxLong(s, s"$dir/lineitem.parquet", "l_orderkey") * 6 / 10
-      graft.operators.Snapshot.lastCountPlan = (-1, -1, -1)
-      val n = Runner.count(s, SourceSpec(DatasetRef("parquet", scratch, "li"),
-        query = Seq("l_orderkey__gte" -> "100", "l_orderkey__lte" -> hi.toString)))
-      val (cov, bnd, tot) = graft.operators.Snapshot.lastCountPlan
+      val range = SourceSpec(DatasetRef("parquet", scratch, "li"),
+        query = Seq("l_orderkey__gte" -> "100", "l_orderkey__lte" -> hi.toString))
+      val n = Runner.count(s, range)
+      // the split `--dry --count` reports: the one the count planned
+      val (cov, bnd, tot, _) =
+        Runner.countPlan(s, range).getOrElse((-1, -1, -1, 0L))
       require(tot > 0, "the range count must take the metadata count plan")
       require(cov > 0 && bnd <= 2,
         s"a sorted-layout range count must decide interior files from " +
@@ -306,7 +308,7 @@ object SparkEntry {
     // ── [EXT] §2.10 r18: PREDICATE-COVERED metadata aggregates —
     // `_agg min/max/count` under a key range folds covered members'
     // recorded envelopes driver-side and scans ONLY the straddling
-    // files, merging in the envelope domain (covers ∘ metadataAgg,
+    // files, merging in the envelope domain (covers ∘ metadataPlan,
     // verdict #3); in-query law: ≤2 boundary members, the rest
     // decided from the manifest ──────────────────────────────────────
     "q_agg_range" -> ((s, dir) => {
@@ -321,13 +323,13 @@ object SparkEntry {
       // the same SF-independent range as q_count_range (the oracle
       // replays the bound); footer max stats are exact for int64
       val hi = colMaxLong(s, s"$dir/lineitem.parquet", "l_orderkey") * 6 / 10
-      graft.operators.Snapshot.lastAggPlan = (-1, -1, -1)
+      graft.operators.Snapshot.lastMetadataPlan = (-1, -1, -1)
       val frame = graft.engine.Planner.sourceFrame(s, SourceSpec(
         DatasetRef("parquet", scratch, "li"),
         query = Seq("l_orderkey__gte" -> "100",
           "l_orderkey__lte" -> hi.toString,
           "_agg" -> "min:l_shipdate,max:l_shipdate,count")))
-      val (cov, bnd, tot) = graft.operators.Snapshot.lastAggPlan
+      val (cov, bnd, tot) = graft.operators.Snapshot.lastMetadataPlan
       require(tot > 0, "the range aggregate must take the covered plan")
       require(cov > 0 && bnd <= 2,
         s"a sorted-layout range aggregate must fold interior files " +

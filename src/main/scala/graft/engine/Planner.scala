@@ -39,36 +39,38 @@ object Planner {
   }
 
   /** METADATA-ONLY aggregate fast path (r17 — the Iceberg aggregate-
-    * pushdown shape, [[graft.operators.Snapshot.metadataAgg]]): an
-    * unfiltered `_agg min:k,max:k,count` on a tombstone-free snapshot
-    * table answers as a LOCAL relation — ZERO Spark jobs, the
-    * [[graft.engine.Runner.count]] twin for the aggregate DSL. r18
-    * widens the shape two ways:
+    * pushdown shape, [[graft.operators.Snapshot.metadataPlan]]): an
+    * `_agg min:k,max:k,count` on a tombstone-free snapshot table
+    * answers as a LOCAL relation, the [[graft.engine.Runner.count]]
+    * twin for the aggregate DSL:
     *
-    *   - `_group` by PARTITION columns answers per group from
+    *   - unfiltered: from the manifest alone — ZERO Spark jobs; a plan
+    *     with any boundary member declines, so no scan ever starts;
+    *   - filtered (r18, verdict #3): covered members fold
+    *     driver-side, only boundary members scan
+    *     ([[mergeBoundary]]);
+    *   - `_group` by PARTITION columns, unfiltered: per group from
     *     partition point values + recorded rows/envelopes
     *     ([[graft.operators.Snapshot.metadataGroupAgg]] — the Iceberg
     *     `partitions` metadata-table shape, verdict #2);
     *   - `_sort`/`_limit` compose ON the local relation (the scan
-    *     path's application order is filter → agg → sort → limit, and
-    *     there is nothing to filter here).
+    *     path's application order is filter → agg → sort → limit).
     *
-    * Everything else — a predicate, a non-partition group key, a
-    * post-read transformer, an aggregate outside min/max/count —
-    * composes with the scan instead; version-pin failures keep the
-    * scan path's error shape.
+    * Everything else — a predicate that does not translate exactly, a
+    * filtered group, a non-partition group key, a post-read
+    * transformer, an aggregate outside min/max/count — composes with
+    * the scan instead; version-pin failures keep the scan path's
+    * error shape.
     */
   private def metadataAggFast(spark: SparkSession,
                               s: SourceSpec): Option[DataFrame] = {
-    if (s.ref.backend != "parquet" || s.postRead.nonEmpty) return None
+    if (s.postRead.nonEmpty) return None
     val allowed = Set("_agg", "_group", "_sort", "_limit",
       "_version", "_version_ts")
     // control keys outside the allowed set (`_fields`, `_flat`, …)
-    // decline; FIELD pairs are fine IF they translate exactly — the
-    // r18 predicate-covered path below owns them
+    // decline; FIELD pairs are fine IF they translate exactly
     if (!s.query.forall(kv => allowed.contains(kv._1) ||
         !QueryCompiler.ControlKeys.contains(kv._1))) return None
-    val preds = QueryCompiler.exactPreds(s.query).getOrElse(return None)
     // the same `_agg`/`_group` gathering/splitting as QueryCompiler
     def gather(k: String): Seq[String] =
       s.query.collect { case (`k`, v) => v }
@@ -81,30 +83,7 @@ object Planner {
     }
     if (aggs.isEmpty) return None
     val groups = gather("_group")
-    val p = Resolver.path(s.ref)
-    val hp = new org.apache.hadoop.fs.Path(p)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hp)) return None
-    val atV = scala.util.Try {
-      s.query.collectFirst { case ("_version", v) => v.toLong }
-        .orElse(s.query.collectFirst { case ("_version_ts", v) =>
-          graft.operators.Snapshot.versionAtTimestamp(fs, hp,
-            graft.operators.Snapshot.parseCommitTs(v))
-        })
-    } match {
-      case scala.util.Success(v) => v
-      case scala.util.Failure(_) => return None
-    }
-    def oneRow(vals: Seq[(String, Any,
-        org.apache.spark.sql.types.DataType)]): DataFrame = {
-      val schema = org.apache.spark.sql.types.StructType(vals.map {
-        case (n, _, dt) =>
-          org.apache.spark.sql.types.StructField(n, dt, nullable = true)
-      })
-      spark.createDataFrame(
-        java.util.Collections.singletonList(
-          org.apache.spark.sql.Row(vals.map(_._2): _*)), schema)
-    }
+    val (p, atV, preds) = metadataInputs(spark, s).getOrElse(return None)
     val base: Option[DataFrame] =
       if (groups.nonEmpty) {
         if (preds.nonEmpty) None // grouped + filtered stays with the scan
@@ -116,14 +95,23 @@ object Planner {
                 org.apache.spark.sql.Row(r: _*)): _*),
               org.apache.spark.sql.types.StructType(fields))
           }
-      } else if (preds.isEmpty)
-        graft.operators.Snapshot.metadataAgg(spark, p, atV, aggs).map(oneRow)
-      else
-        // r18 predicate-covered aggregates (verdict #3): covered
-        // members fold driver-side, only boundary members scan — on
-        // the maintenance twin, so the read path touches no session
-        // confs; the one-row result builds on the CALLER's session
-        coveredAgg(spark, s, p, atV, preds, aggs).map(oneRow)
+      } else
+        // the plan and any boundary scan run on the maintenance twin
+        // (r18 ADVICE: never mutate the caller's confs from a query
+        // path; a global aggregate is profile-insensitive — one row
+        // per task through its single exchange); the one-row result
+        // builds on the CALLER's session. An unfiltered aggregate with
+        // any boundary member declines, so building its frame starts
+        // no scan: the lazy scan-path plan answers it instead
+        graft.operators.Snapshot.metadataPlan(
+          graft.operators.MaintProfile.sessionFor(spark), p, atV, preds, aggs)
+          .collect { case (partials, bf, _) if preds.nonEmpty || bf.isEmpty =>
+            val schema = org.apache.spark.sql.types.StructType(partials.map(pt =>
+              org.apache.spark.sql.types.StructField(pt.name, pt.dt, nullable = true)))
+            spark.createDataFrame(java.util.Collections.singletonList(
+              org.apache.spark.sql.Row(mergeBoundary(s.query, aggs, partials, bf): _*)),
+              schema)
+          }
     base.map { df =>
       val sort = gather("_sort")
       val sorted =
@@ -134,51 +122,49 @@ object Planner {
     }
   }
 
-  /** Merge [[graft.operators.Snapshot.metadataAggPlan]]'s covered
-    * partials with the boundary scan's aggregates, if any. The
-    * boundary frame filters under the COMPILED predicates — the same
-    * exact semantics the scan path applies, so the two plan halves
-    * can never disagree — and aggregates through
+  /** The metadata fast paths' shared prelude ([[metadataAggFast]],
+    * [[Runner.count]], [[Runner.countPlan]]): (path, resolved version
+    * pin, exactly-translated predicates), or None when the fast path
+    * cannot apply — non-parquet backend, an untranslatable predicate
+    * (EVERY field pair must translate exactly; an advisory subset
+    * would overcount — [[QueryCompiler.exactPreds]] contract), a
+    * missing path, or a version pin that fails to resolve (a
+    * malformed `_version` / out-of-range `_version_ts` must fail with
+    * the SCAN path's error, not a new fast-path shape — r17 ADVICE).
+    */
+  private[engine] def metadataInputs(spark: SparkSession, s: SourceSpec)
+      : Option[(String, Option[Long], Seq[graft.operators.Snapshot.ReadPred])] = {
+    if (s.ref.backend != "parquet") return None
+    val preds = QueryCompiler.exactPreds(s.query).getOrElse(return None)
+    val p = Resolver.path(s.ref)
+    val hp = new org.apache.hadoop.fs.Path(p)
+    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(hp)) return None // the scan path owns the error shape
+    scala.util.Try(graft.operators.Snapshot.versionPin(fs, hp, s.query))
+      .toOption.map(atV => (p, atV, preds))
+  }
+
+  /** Merge a metadata plan's covered partials with the boundary scan's
+    * aggregates, if any: the values of `aggs`, in request order. The
+    * boundary frame filters under the COMPILED `query` predicates —
+    * the same exact semantics the scan path applies, so the two plan
+    * halves can never disagree — and aggregates through
     * [[QueryCompiler.aggregate]], so output names and types match the
     * scan path by construction; the merge happens in the envelope's
-    * long domain ([[graft.operators.Snapshot.toDomain]]).
+    * long domain ([[graft.operators.Snapshot.AggPartial.merged]]).
     */
-  private def coveredAgg(spark: SparkSession, s: SourceSpec, p: String,
-                         atV: Option[Long],
-                         preds: Seq[graft.operators.Snapshot.ReadPred],
-                         aggs: Seq[(String, String)])
-      : Option[Seq[(String, Any, org.apache.spark.sql.types.DataType)]] = {
-    import graft.operators.Snapshot
-    // boundary scans build and run on the maintenance twin (r18
-    // ADVICE: never mutate the caller's confs from a query path); a
-    // global aggregate is profile-insensitive — one row per task
-    // through its single exchange
-    val maint = graft.operators.MaintProfile.sessionFor(spark)
-    Snapshot.metadataAggPlan(maint, p, atV, preds, aggs).map {
-      case (partials, boundaryOpt) =>
-        val brow = boundaryOpt.map { bdf =>
-          val filtered = QueryCompiler.compile(bdf, s.query).predicates
-            .foldLeft(bdf)(_ filter _)
-          QueryCompiler.aggregate(filtered, Nil, aggs).head()
-        }
-        partials.zipWithIndex.map { case (pt, i) =>
-          val bv = brow.flatMap(r =>
-            if (r.isNullAt(i)) None else Some(r.get(i)))
-          val v: Any = pt.fn match {
-            case "count" | "countf" =>
-              pt.covered.getOrElse(0L) +
-                bv.map(_.asInstanceOf[Long]).getOrElse(0L)
-            case fn =>
-              val bd = bv.map(Snapshot.toDomain(pt.dt, _))
-              val merged = (pt.covered, bd) match {
-                case (Some(a), Some(b)) =>
-                  Some(if (fn == "min") math.min(a, b) else math.max(a, b))
-                case (a, b) => a.orElse(b)
-              }
-              merged.map(Snapshot.fromDomain(pt.dt, _)).orNull
-          }
-          (pt.name, v, pt.dt)
-        }
+  private[engine] def mergeBoundary(query: Seq[(String, String)],
+      aggs: Seq[(String, String)],
+      partials: Seq[graft.operators.Snapshot.AggPartial],
+      boundary: Option[() => DataFrame]): Seq[Any] = {
+    val brow = boundary.map { build =>
+      val bdf = build()
+      val filtered = QueryCompiler.compile(bdf, query).predicates
+        .foldLeft(bdf)(_ filter _)
+      QueryCompiler.aggregate(filtered, Nil, aggs).head()
+    }
+    partials.zipWithIndex.map { case (pt, i) =>
+      pt.merged(brow.flatMap(r => if (r.isNullAt(i)) None else Some(r.get(i))))
     }
   }
 

@@ -19,66 +19,51 @@ object Runner {
 
   /** S12/F6 count of the filtered source, capped by `_limit`
     * (reference: `get_source_total`, min rule, etl_cli/base.py:481-499).
+    *
+    * METADATA count (r16; r17 — predicate-covered): a `_count` of a
+    * parquet snapshot table plans from the manifest
+    * ([[graft.operators.Snapshot.metadataPlan]] with `count(*)`).
+    * Unfiltered → the recorded per-file row counts sum driver-side,
+    * ZERO Spark jobs (the Iceberg/Delta `count(*)` fast path).
+    * Filtered → files wholly inside the predicate contribute their
+    * recorded counts, provably-outside files contribute nothing, and
+    * ONLY the boundary files scan, with the full compiled predicate
+    * applied exactly ([[Planner.mergeBoundary]]). Whenever metadata
+    * can't decide ([[Planner.metadataInputs]] or the plan declines),
+    * the exact scan counts instead.
     */
   def count(spark: SparkSession, s: SourceSpec,
-            failOnError: Boolean = true): Long =
-    metadataCountFast(spark, s).getOrElse {
+            failOnError: Boolean = true): Long = {
+    val total = countMetadataPlan(spark, s).map { case (partials, bf, _) =>
+      Planner.mergeBoundary(s.query, CountAll, partials, bf).head
+        .asInstanceOf[Long]
+    }.getOrElse {
       // the query rides along (r17, ADVICE): `_version`/`_version_ts`
       // pins resolve inside Resolver.read, so the exact fallback
       // counts the SAME snapshot the fast path would have — and the
       // prunable conjuncts steer envelope file skipping for free
       val raw = Resolver.read(spark, s.ref, failOnError = failOnError,
         query = s.query)
-      val q = QueryCompiler.compile(raw, s.query)
-      val filtered = q.predicates.foldLeft(raw)(_ filter _)
-      val total = filtered.count()
-      q.limit.fold(total)(l => math.min(l.toLong, total))
+      QueryCompiler.compile(raw, s.query).predicates
+        .foldLeft(raw)(_ filter _).count()
     }
-
-  /** METADATA count (r16; r17 — predicate-covered): a `_count` of a
-    * parquet snapshot table plans from the manifest. Unfiltered →
-    * the recorded per-file row counts sum driver-side, ZERO Spark
-    * jobs (the Iceberg/Delta `count(*)` fast path). Filtered (r17) →
-    * files wholly inside the predicate contribute their recorded
-    * counts, provably-outside files contribute nothing, and ONLY the
-    * boundary files scan — with the full compiled predicate applied
-    * exactly ([[graft.operators.Snapshot.metadataCountPlan]]). The
-    * `min(limit, count)` cap (S12/F3) applies on top. None (→ the
-    * exact scan) whenever metadata can't decide: a predicate that
-    * doesn't translate exactly, a non-parquet backend, a non-snapshot
-    * layout, live tombstones, or an unresolvable version pin (the
-    * scan path owns every error shape, r17 ADVICE).
-    */
-  /** The covered count plan's shared prelude: (path, resolved version
-    * pin, exactly-translated predicates), or None when the fast path
-    * cannot apply — non-parquet backend, an untranslatable predicate
-    * (EVERY field pair must translate exactly; an advisory subset
-    * would overcount — [[QueryCompiler.exactPreds]] contract), a
-    * missing path, or a version pin that fails to resolve (a
-    * malformed `_version` / out-of-range `_version_ts` must fail with
-    * the SCAN path's error, not a new fast-path shape — r17 ADVICE).
-    */
-  private def metadataCountInputs(spark: SparkSession, s: SourceSpec)
-      : Option[(String, Option[Long],
-                Seq[graft.operators.Snapshot.ReadPred])] = {
-    if (s.ref.backend != "parquet") return None
-    val preds = QueryCompiler.exactPreds(s.query).getOrElse(return None)
-    val p = Resolver.path(s.ref)
-    val hp = new org.apache.hadoop.fs.Path(p)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hp)) return None // the scan path owns the error shape
-    val atV = scala.util.Try {
-      s.query.collectFirst { case ("_version", v) => v.toLong }
-        .orElse(s.query.collectFirst { case ("_version_ts", v) =>
-          graft.operators.Snapshot.versionAtTimestamp(fs, hp,
-            graft.operators.Snapshot.parseCommitTs(v))
-        })
-    } match {
-      case scala.util.Success(v) => v
-      case scala.util.Failure(_) => return None
-    }
-    Some((p, atV, preds))
+    s.query.collectFirst { case ("_limit", v) => v.trim.toInt }
+      .fold(total)(l => math.min(l.toLong, total))
   }
+
+  private val CountAll = Seq("count" -> "*")
+
+  /** The metadata plan of `s`'s count, built on the maintenance TWIN
+    * session (r18 ADVICE: a count is a query-path API, so it must
+    * never mutate the caller's session confs the way `scoped` does; a
+    * count's one exchange carries a single row per task, so the
+    * twin's metadata-scale profile costs it nothing).
+    */
+  private def countMetadataPlan(spark: SparkSession, s: SourceSpec) =
+    Planner.metadataInputs(spark, s).flatMap { case (p, atV, preds) =>
+      graft.operators.Snapshot.metadataPlan(
+        graft.operators.MaintProfile.sessionFor(spark), p, atV, preds, CountAll)
+    }
 
   /** DRY-RUN provenance for a `_count` (r18, verdict #7): the covered
     * count plan's (covered, boundary, total, coveredRows) member
@@ -89,38 +74,10 @@ object Runner {
     * job runs.
     */
   def countPlan(spark: SparkSession, s: SourceSpec)
-      : Option[(Int, Int, Int, Long)] = {
-    val (p, atV, preds) = metadataCountInputs(spark, s).getOrElse(return None)
-    val maint = graft.operators.MaintProfile.sessionFor(spark)
-    graft.operators.Snapshot.metadataCountPlan(maint, p, atV, preds)
-      .map { case (coveredRows, _, (c, b, t)) => (c, b, t, coveredRows) }
-  }
-
-  private def metadataCountFast(spark: SparkSession,
-                                s: SourceSpec): Option[Long] = {
-    val (p, atV, preds) = metadataCountInputs(spark, s).getOrElse(return None)
-    // the whole plan — including the boundary frame — builds on the
-    // maintenance TWIN session (r18 ADVICE: a count is a query-path
-    // API, not a single-writer maintenance call, so it must never
-    // mutate the caller's session confs the way `scoped` does; the
-    // twin has the metadata-scale profile pinned, which a count is
-    // insensitive to even when the boundary is large — a count's one
-    // exchange carries a single row per task regardless)
-    val maint = graft.operators.MaintProfile.sessionFor(spark)
-    graft.operators.Snapshot.metadataCountPlan(maint, p, atV, preds)
-      .map { case (coveredRows, boundary, _) =>
-        val boundaryRows = boundary.fold(0L) { df =>
-          // the exact compiled predicates — not the ReadPred
-          // translation — gate the boundary rows, so the two plan
-          // halves can never disagree on semantics
-          QueryCompiler.compile(df, s.query).predicates
-            .foldLeft(df)(_ filter _).count()
-        }
-        val total = coveredRows + boundaryRows
-        s.query.collectFirst { case ("_limit", v) => v.trim.toInt }
-          .fold(total)(l => math.min(l.toLong, total))
-      }
-  }
+      : Option[(Int, Int, Int, Long)] =
+    countMetadataPlan(spark, s).map { case (partials, _, (c, b, t)) =>
+      (c, b, t, partials.head.covered.get)
+    }
 
   /** S11 preview: no target → first rows of the planned frame
     * (reference defaults `_limit:1`, etl_cli/base.py:640-644).

@@ -199,10 +199,9 @@ object Snapshot {
     * existing footer pass ([[withKeyEnvs]] — the footer is already
     * open for envelopes, the count is free). An unfiltered `_count`
     * on a tombstone-free snapshot sums these driver-side with ZERO
-    * Spark jobs ([[metadataCount]]); any entry without it (legacy
-    * manifests) degrades the whole table to the scan, never a wrong
-    * count. `fsck --full` cross-checks recorded counts against the
-    * files.
+    * Spark jobs ([[metadataPlan]]); an entry without it (legacy
+    * manifests) goes to the boundary scan, never a wrong count.
+    * `fsck --full` cross-checks recorded counts against the files.
     */
   final case class Entry(rel: String, bytes: Long,
                          cols: Option[Seq[String]] = None,
@@ -720,8 +719,12 @@ object Snapshot {
     * available — silent fallback to latest would un-pin a reader.
     */
   def resolveVersion(fs: FileSystem, root: Path,
-                     at: Option[Long]): (Long, Path) = {
-    val vs = committed(fs, root)
+                     at: Option[Long]): (Long, Path) =
+    resolveIn(committed(fs, root), root, at)
+
+  /** [[resolveVersion]] over an already-listed `committed` sequence. */
+  private def resolveIn(vs: Seq[(Long, Path)], root: Path,
+                        at: Option[Long]): (Long, Path) = {
     require(vs.nonEmpty, s"no committed versions under $root")
     at match {
       case None => vs.last
@@ -770,6 +773,18 @@ object Snapshot {
     else java.sql.Timestamp.valueOf(t.replace('T', ' ')).getTime
   }
 
+  /** The version a query's `_version=N` / `_version_ts=TS` pin names
+    * (TS resolves to the latest commit at-or-before the instant); None
+    * = the head. A malformed value or an instant older than every
+    * retained commit throws.
+    */
+  def versionPin(fs: FileSystem, root: Path,
+                 query: Seq[(String, String)]): Option[Long] =
+    query.collectFirst { case ("_version", v) => v.toLong }
+      .orElse(query.collectFirst { case ("_version_ts", v) =>
+        versionAtTimestamp(fs, root, parseCommitTs(v))
+      })
+
   /** Scan one snapshot: exactly the manifest's files, normalized back
     * to the manifest's logical schema (column order AND types — hive
     * path inference must not retype partition columns). Empty
@@ -807,29 +822,6 @@ object Snapshot {
     def body = tombstonedRead(spark, root, m,
       pruneEntries(spark, m, m.dataEntries, skipping))
     if (at.isEmpty) staleReadAsConflict(fs, root, v)(body) else body
-  }
-
-  /** METADATA-ONLY COUNT (r16 — the Iceberg/Delta `count(*)` fast
-    * path): the table's row count summed from the manifest's recorded
-    * per-file counts, driver-side, ZERO Spark jobs. Defined only when
-    * the semantics are exact from metadata alone: a snapshot layout
-    * whose resolved version has NO live tombstones (DV/predicate
-    * deletes subtract unknown amounts) and whose every data entry
-    * carries a recorded `rows` (legacy manifests degrade the whole
-    * table). Callers with predicates must NOT use this — it counts
-    * the unfiltered table.
-    */
-  def metadataCount(spark: SparkSession, rootStr: String,
-                    at: Option[Long] = None): Option[Long] = {
-    val root = new Path(rootStr)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!isSnapshotLayout(fs, root)) return None
-    val (_, vdir) = resolveVersion(fs, root, at)
-    val m = manifestAt(fs, vdir).getOrElse(return None)
-    if (m.deleteEntries.nonEmpty) return None
-    val data = m.dataEntries
-    if (data.exists(_.rows.isEmpty)) return None
-    Some(data.iterator.map(_.rows.get).sum)
   }
 
   // ── read-time file skipping (r15) ─────────────────────────────────
@@ -982,6 +974,16 @@ object Snapshot {
         .map(d => ColEnv(Some(d), Some(d), hasNulls = false))
     }
 
+  /** A member's envelope for column `f`: its hive partition-dir point
+    * value for a partition column, else the manifest-recorded one.
+    */
+  private def memberEnv(spark: SparkSession, m: Manifest,
+                        f: org.apache.spark.sql.types.StructField,
+                        e: Entry): Option[ColEnv] =
+    if (m.partitionBy.contains(f.name))
+      partPointEnv(spark, f.dataType, e.rel, f.name)
+    else e.envs.flatMap(_.get(f.name))
+
   /** Undo hive's %XX partition-value escaping (digits/'-'/'.' pass
     * through; timestamps carry escaped ':' and ' ').
     */
@@ -1025,7 +1027,7 @@ object Snapshot {
                                   entries: Seq[Entry],
                                   preds: Seq[ReadPred]): Seq[Entry] = {
     if (preds.isEmpty || entries.isEmpty) return entries
-    val tests: Seq[(String, org.apache.spark.sql.types.DataType, ColEnv => Boolean)] = preds.flatMap { p =>
+    val tests: Seq[(org.apache.spark.sql.types.StructField, ColEnv => Boolean)] = preds.flatMap { p =>
       // case-insensitive like the query DSL's field resolution; the
       // envelope map and partition layout carry the schema's casing
       m.schema.fields.find(_.name.equalsIgnoreCase(p.col)).filter(f =>
@@ -1094,35 +1096,30 @@ object Snapshot {
             Some((e: ColEnv) => e.min.isDefined || e.max.isDefined)
           case _ => None
         }
-        test.map(t => (f.name, dt, t))
+        test.map(t => (f, t))
       }
     }
     if (tests.isEmpty) entries
     else {
       val kept = entries.filter { e =>
-        tests.forall { case (c, dt, t) =>
-          val env: Option[ColEnv] =
-            if (m.partitionBy.contains(c)) partPointEnv(spark, dt, e.rel, c)
-            else e.envs.flatMap(_.get(c))
-          env.forall(t)
-        }
+        tests.forall { case (f, t) => memberEnv(spark, m, f, e).forall(t) }
       }
       lastSkipPlan = (kept.size, entries.size)
       kept
     }
   }
 
-  // ── predicate-covered metadata counts (r17) ───────────────────────
+  // ── metadata plan: counts and aggregates from the manifest (r16–r18) ─
 
-  /** Last count plan's (covered, boundary, total) member counts — the
-    * [[lastSkipPlan]] twin for [[metadataCountPlan]]. Diagnostic only.
+  /** Last metadata plan's (covered, boundary, total) member counts —
+    * the [[lastSkipPlan]] twin for [[metadataPlan]]. Diagnostic only.
     */
-  @volatile private[graft] var lastCountPlan: (Int, Int, Int) = (0, 0, 0)
+  @volatile private[graft] var lastMetadataPlan: (Int, Int, Int) = (0, 0, 0)
 
   /** COVERAGE test: does the member's envelope prove EVERY row
     * satisfies the conjunct? The dual of [[pruneEntries]]' may-match
     * test, held to a stricter standard: a covered file's rows are
-    * COUNTED WITHOUT A SCAN ([[metadataCountPlan]]), so each rule is
+    * COUNTED WITHOUT A SCAN ([[metadataPlan]]), so each rule is
     * an exact implication, never advisory. Unknown envelope, type,
     * op or literal → NOT covered (the boundary scan owns the file).
     * Value comparisons additionally require a NULL-FREE file — a null
@@ -1188,9 +1185,13 @@ object Snapshot {
           val xs = ds.flatten.toSet
           (env.min, env.max) match {
             // every integral point of the envelope is a list member;
-            // bounded enumeration — wide envelopes go to the boundary
+            // bounded enumeration — wide envelopes go to the boundary.
+            // With mx ≥ mn the span mx − mn lies in [0, 2^64), so its
+            // UNSIGNED value is exact even where the signed one wraps
+            // (a 64-bit hash key's envelope spans more than 2^63)
             case (Some(mn), Some(mx)) =>
-              mx >= mn && mx - mn < 4096 && (mn to mx).forall(xs.contains)
+              mx >= mn && java.lang.Long.compareUnsigned(mx - mn, 4096L) < 0 &&
+                (mn to mx).forall(xs.contains)
             case _ => false
           }
         }
@@ -1203,55 +1204,11 @@ object Snapshot {
     }
   }
 
-  /** METADATA-ONLY MIN/MAX/COUNT aggregates (r17 — the Iceberg
-    * planner's aggregate pushdown shape, completing [[metadataCount]]):
-    * an unfiltered `_agg min:k,max:k,count` over a tombstone-free
-    * snapshot answers from the manifest envelopes alone — min = min of
-    * recorded per-file minima, max dually, count = the recorded row
-    * sum — ZERO Spark jobs, exact. Defined ONLY where exactness holds:
-    *
-    *   - min/max: LONG-domain columns (integrals, dates, timestamps —
-    *     parquet footer stats are exact there; STRING bounds are
-    *     truncated, so strings decline), every data entry carrying the
-    *     column's envelope (or a partition point value); all-null
-    *     files skip, an all-null column yields SQL's null;
-    *   - count(*): every entry's rows recorded;
-    *   - count(f): additionally no file may hold a null in f (the
-    *     envelopes record a has-nulls flag, not a null count).
-    *
-    * Any other aggregate, a missing envelope, or live tombstones →
-    * None, the scan owns the query. TimestampNTZ columns fast-path
-    * like TimestampType — same epoch-micros envelope domain — but
-    * their EXTERNAL row value is a `java.time.LocalDateTime`
-    * (wall-clock, no zone), which [[fromDomain]] reconstructs at UTC
-    * exactly as the write-side domain conversion recorded it
-    * (validated by the RunnerSpec NTZ round-trip case, r18 ADVICE).
-    * Returns (output column name, driver value,
-    * result type) per requested aggregate, in request order — the
-    * exact names/types [[graft.dsl.QueryCompiler.aggregate]] would
-    * produce.
-    */
-  def metadataAgg(spark: SparkSession, rootStr: String, at: Option[Long],
-                  aggs: Seq[(String, String)])
-      : Option[Seq[(String, Any, org.apache.spark.sql.types.DataType)]] = {
-    import org.apache.spark.sql.types._
-    if (aggs.isEmpty) return None
-    val root = new Path(rootStr)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!isSnapshotLayout(fs, root)) return None
-    val (_, vdir) = resolveVersion(fs, root, at)
-    val m = manifestAt(fs, vdir).getOrElse(return None)
-    if (m.deleteEntries.nonEmpty) return None
-    foldMetaAggs(spark, m, m.dataEntries, aggs)
-  }
-
   /** The LONG-domain column types — parquet footer stats are exact
     * there; STRING bounds truncate, so strings never fold into a
-    * metadata aggregate. Shared by the scalar, grouped and
-    * predicate-covered folds.
+    * metadata min/max.
     */
-  private[operators] def longDomain(
-      dt: org.apache.spark.sql.types.DataType): Boolean = {
+  private def longDomain(dt: org.apache.spark.sql.types.DataType): Boolean = {
     import org.apache.spark.sql.types._
     dt match {
       case ByteType | ShortType | IntegerType | LongType |
@@ -1264,8 +1221,7 @@ object Snapshot {
     * inverse of the write-side domain conversion; NTZ reconstructs
     * the wall-clock at UTC, validated by the RunnerSpec round-trip).
     */
-  private[graft] def fromDomain(
-      dt: org.apache.spark.sql.types.DataType, v: Long): Any = {
+  private def fromDomain(dt: org.apache.spark.sql.types.DataType, v: Long): Any = {
     import org.apache.spark.sql.types._
     dt match {
       case ByteType => v.toByte
@@ -1286,53 +1242,191 @@ object Snapshot {
     }
   }
 
-  /** Fold `aggs` over `entries`' recorded envelopes/rows alone —
-    * [[metadataAgg]]'s exactness rules, factored so the scalar
-    * (entries = the whole version), grouped (entries = one partition
-    * group) and predicate-covered (entries = the covered set) paths
-    * share one implementation. None when ANY aggregate is not
-    * metadata-decidable over THESE entries.
+  /** External row value → the envelope's long domain — the inverse of
+    * [[fromDomain]], tolerant of BOTH external-type families (java.sql
+    * and java.time, whichever `spark.sql.datetime.java8API.enabled`
+    * hands back), so a boundary scan's aggregate merges exactly with
+    * a covered envelope fold.
     */
-  private def foldMetaAggs(spark: SparkSession, m: Manifest,
-                           entries: Seq[Entry], aggs: Seq[(String, String)])
-      : Option[Seq[(String, Any, org.apache.spark.sql.types.DataType)]] = {
+  private def toDomain(dt: org.apache.spark.sql.types.DataType, v: Any): Long = {
+    import org.apache.spark.sql.catalyst.util.DateTimeUtils
     import org.apache.spark.sql.types._
-    def field(f: String): Option[StructField] =
-      m.schema.fields.find(_.name.equalsIgnoreCase(f))
-    def envOf(f: StructField, e: Entry): Option[ColEnv] =
-      if (m.partitionBy.contains(f.name))
-        partPointEnv(spark, f.dataType, e.rel, f.name)
-      else e.envs.flatMap(_.get(f.name))
-    val allRows: Option[Long] =
-      if (entries.exists(_.rows.isEmpty)) None
-      else Some(entries.iterator.map(_.rows.get).sum)
-    val out = aggs.map {
-      case ("count", "*") =>
-        allRows.map(n => ("count_all", n: Any, LongType: DataType))
+    (dt, v) match {
+      case (ByteType | ShortType | IntegerType | LongType,
+            n: java.lang.Number) => n.longValue
+      case (DateType, d: java.sql.Date) => DateTimeUtils.fromJavaDate(d).toLong
+      case (DateType, d: java.time.LocalDate) => d.toEpochDay
+      case (TimestampType, t: java.sql.Timestamp) =>
+        DateTimeUtils.fromJavaTimestamp(t)
+      case (TimestampType, t: java.time.Instant) =>
+        DateTimeUtils.instantToMicros(t)
+      case (TimestampNTZType, t: java.time.LocalDateTime) =>
+        DateTimeUtils.localDateTimeToMicros(t)
+      case _ => throw new IllegalArgumentException(
+        s"no envelope domain for ${dt.simpleString} value " +
+          s"${Option(v).map(_.getClass.getName).getOrElse("null")}")
+    }
+  }
+
+  /** One aggregate's covered-side partial ([[metadataPlan]]): `fn` ∈
+    * count|countf|min|max, `dt` the OUTPUT type, `covered` the fold
+    * over covered members alone — counts as Some(sum) (0 when nothing
+    * is covered), min/max as the envelope extreme in the long domain
+    * (None when no covered member carries a value).
+    */
+  final case class AggPartial(name: String, fn: String,
+                              dt: org.apache.spark.sql.types.DataType,
+                              covered: Option[Long]) {
+    /** The aggregate's value once the boundary scan's own value for it
+      * (an external row value; None when the boundary is empty or
+      * holds no value) is merged in — in the envelope's long domain,
+      * so min/max compare exactly across the two halves. An empty
+      * min/max is SQL's null, an empty count 0.
+      */
+    def merged(boundary: Option[Any]): Any = fn match {
+      case "count" | "countf" =>
+        covered.getOrElse(0L) + boundary.fold(0L)(_.asInstanceOf[Long])
+      case _ =>
+        val vs = covered ++ boundary.map(toDomain(dt, _))
+        if (vs.isEmpty) null
+        else fromDomain(dt, if (fn == "min") vs.min else vs.max)
+    }
+  }
+
+  /** A requested aggregate resolved against the schema; `sf` is None
+    * for count(*).
+    */
+  private final case class AggShape(name: String, fn: String,
+                                    sf: Option[org.apache.spark.sql.types.StructField],
+                                    dt: org.apache.spark.sql.types.DataType)
+
+  /** Resolve `aggs` to their shapes — output names and types exactly
+    * as [[graft.dsl.QueryCompiler.aggregate]] produces them. None when
+    * any aggregate is outside min/max/count, names a column missing
+    * from the schema, or asks min/max outside [[longDomain]].
+    */
+  private def aggShapes(m: Manifest, aggs: Seq[(String, String)])
+      : Option[Seq[AggShape]] = {
+    import org.apache.spark.sql.types._
+    def field(f: String) = m.schema.fields.find(_.name.equalsIgnoreCase(f))
+    val shapes = aggs.map {
+      case ("count", "*") => Some(AggShape("count_all", "count", None, LongType))
       case ("count", f) =>
-        field(f).flatMap { sf =>
-          val envs = entries.map(envOf(sf, _))
-          if (allRows.isEmpty || envs.exists(_.isEmpty) ||
-              envs.exists(_.exists(_.hasNulls))) None
-          else Some((s"count_$f", allRows.get: Any, LongType: DataType))
-        }
+        field(f).map(sf => AggShape(s"count_$f", "countf", Some(sf), LongType))
       case (fn @ ("min" | "max"), f) =>
-        field(f).filter(sf => longDomain(sf.dataType)).flatMap { sf =>
-          val envs = entries.map(envOf(sf, _))
-          if (envs.exists(_.isEmpty)) None
-          else {
-            val vals = envs.flatten
-              .flatMap(e => if (fn == "min") e.min else e.max)
-            val v: Any =
-              if (vals.isEmpty) null // zero rows / all-null column
-              else fromDomain(sf.dataType,
-                if (fn == "min") vals.min else vals.max)
-            Some((s"${fn}_$f", v, sf.dataType))
-          }
-        }
+        field(f).filter(sf => longDomain(sf.dataType))
+          .map(sf => AggShape(s"${fn}_$f", fn, Some(sf), sf.dataType))
       case _ => None
     }
-    if (out.exists(_.isEmpty)) None else Some(out.flatten)
+    if (shapes.exists(_.isEmpty)) None else Some(shapes.flatten)
+  }
+
+  /** Is `e` COVERED — every row proven to satisfy every conjunct
+    * ([[covers]]), with what each aggregate needs recorded: the row
+    * count for count(*), the row count and a null-free envelope for
+    * count(f), an envelope for min/max? Zero-row members are
+    * trivially covered.
+    */
+  private def isCovered(spark: SparkSession, m: Manifest, e: Entry,
+                        preds: Seq[ReadPred], shapes: Seq[AggShape]): Boolean =
+    e.rows.contains(0L) || (preds.forall { p =>
+      val f = m.schema.fields.find(_.name.equalsIgnoreCase(p.col)).get
+      memberEnv(spark, m, f, e).exists(covers(spark, f.dataType, p, _))
+    } && shapes.forall { sh =>
+      sh.fn match {
+        case "count"  => e.rows.isDefined
+        case "countf" =>
+          e.rows.isDefined && memberEnv(spark, m, sh.sf.get, e).exists(!_.hasNulls)
+        case _        => memberEnv(spark, m, sh.sf.get, e).isDefined
+      }
+    })
+
+  /** Fold `shapes` over covered members' recorded rows/envelopes. */
+  private def foldCovered(spark: SparkSession, m: Manifest,
+                          shapes: Seq[AggShape],
+                          covered: Seq[Entry]): Seq[AggPartial] = {
+    val live = covered.filterNot(_.rows.contains(0L))
+    shapes.map { sh =>
+      sh.fn match {
+        case "count" | "countf" =>
+          AggPartial(sh.name, sh.fn, sh.dt, Some(live.iterator.map(_.rows.get).sum))
+        case fn =>
+          val vals = live.flatMap(memberEnv(spark, m, sh.sf.get, _))
+            .flatMap(e => if (fn == "min") e.min else e.max)
+          AggPartial(sh.name, fn, sh.dt,
+            if (vals.isEmpty) None
+            else Some(if (fn == "min") vals.min else vals.max))
+      }
+    }
+  }
+
+  /** The resolved manifest a metadata answer reads, from ONE
+    * `committed` listing (the layout test — the head carries a
+    * manifest — and the version resolution share it). None when the
+    * dataset is not a snapshot layout, the resolved version has no
+    * manifest, or it has live tombstones (they subtract unknown
+    * amounts). A pinned version that is not retained errors like
+    * [[resolveVersion]].
+    */
+  private def metadataManifest(spark: SparkSession, root: Path,
+                               at: Option[Long]): Option[Manifest] = {
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val vs = committed(fs, root)
+    val head = vs.lastOption.flatMap(v => manifestAt(fs, v._2))
+      .getOrElse(return None)
+    val m =
+      if (at.isEmpty) head
+      else manifestAt(fs, resolveIn(vs, root, at)._2).getOrElse(return None)
+    if (m.deleteEntries.nonEmpty) None else Some(m)
+  }
+
+  /** METADATA PLAN (r16–r18 — the Iceberg/Delta `count(*)` and
+    * aggregate-pushdown shapes): `aggs` (min/max/count) under the
+    * exactly-translated conjuncts `preds`, answered from the manifest
+    * wherever it decides them. The resolved version's data members
+    * split three ways:
+    *
+    *   - EXTERIOR (envelope provably holds no matching row —
+    *     [[pruneEntries]]' drop set): contribute nothing;
+    *   - COVERED ([[isCovered]]): fold their recorded rows/envelopes
+    *     driver-side into [[AggPartial]]s, zero file I/O;
+    *   - BOUNDARY (everything else): returned as a frame builder the
+    *     caller must filter EXACTLY, aggregate and merge
+    *     ([[AggPartial.merged]]) — the only Spark jobs of the plan.
+    *
+    * So "count rows where date = yesterday" sums manifests for the
+    * interior and scans only the two straddling files, and an
+    * unfiltered `_count` or `_agg` of a fully recorded table runs no
+    * job at all. A member lacking what an aggregate needs DEMOTES to
+    * the boundary — coverage degrades file by file, never correctness.
+    * Global declines (None → the scan owns the query): not a snapshot
+    * layout, no manifest, live tombstones, a predicate or aggregate
+    * column missing from the schema (the compiled predicate is
+    * degenerate there — null-typed), min/max outside [[longDomain]]
+    * (string bounds truncate), or an aggregate outside min/max/count.
+    * `preds` MUST be the complete, exact predicate set
+    * ([[graft.dsl.QueryCompiler.exactPreds]]); advisory subsets would
+    * overcount. Returns (covered partials in request order, boundary
+    * frame builder, (covered, boundary, total) member counts).
+    */
+  def metadataPlan(spark: SparkSession, rootStr: String, at: Option[Long],
+                   preds: Seq[ReadPred], aggs: Seq[(String, String)])
+      : Option[(Seq[AggPartial], Option[() => DataFrame], (Int, Int, Int))] = {
+    if (aggs.isEmpty) return None
+    val root = new Path(rootStr)
+    val m = metadataManifest(spark, root, at).getOrElse(return None)
+    if (!preds.forall(p =>
+      m.schema.fields.exists(_.name.equalsIgnoreCase(p.col)))) return None
+    val shapes = aggShapes(m, aggs).getOrElse(return None)
+    val data = m.dataEntries
+    val (covered, boundary) = pruneEntries(spark, m, data, preds)
+      .partition(isCovered(spark, m, _, preds, shapes))
+    val split = (covered.size, boundary.size, data.size)
+    lastMetadataPlan = split
+    val bf =
+      if (boundary.isEmpty) None
+      else Some(() => readMembers(spark, root, m, boundary))
+    Some((foldCovered(spark, m, shapes, covered), bf, split))
   }
 
   /** Hive partition-dir value of `c` from a member's rel path as the
@@ -1353,25 +1447,24 @@ object Snapshot {
     }
 
   /** PER-GROUP METADATA AGGREGATES (r18 — the Iceberg `partitions`
-    * metadata-table shape, completing [[metadataAgg]]): a `_group` by
-    * PARTITION columns with `_agg min/max/count` answers from the
-    * manifest alone. Each member's hive rel-path segment IS its
-    * group's exact point value, so members group driver-side and the
-    * recorded rows/envelopes fold per group ([[foldMetaAggs]]) —
-    * ZERO Spark jobs for the "rows per day" triage query on a
-    * date-partitioned table.
+    * metadata-table shape): a `_group` by PARTITION columns with
+    * `_agg min/max/count` answers from the manifest alone. Each
+    * member's hive rel-path segment IS its group's exact point value,
+    * so members group driver-side and each group folds like
+    * [[metadataPlan]]'s covered set — ZERO Spark jobs for the "rows
+    * per day" triage query on a date-partitioned table.
     *
-    * Declines (None — the scan owns the query) on: a group column
-    * that is not a partition column (data-column groups need the
-    * rows), a group column typed outside the exact domains
-    * ([[longDomain]] + string — a string partition value is exact,
-    * no truncation applies to a single driver-side value), a member
-    * without a parseable segment for a group column, a member without
-    * a recorded row count (zero-row groups must DROP, which needs the
-    * counts), live tombstones, or any aggregate not decidable per
-    * group under [[metadataAgg]]'s rules. Groups whose members sum to
-    * zero rows are dropped — a row-level GROUP BY emits no group for
-    * them.
+    * Declines (None — the scan owns the query) on: [[metadataPlan]]'s
+    * global declines, a group column that is not a partition column
+    * (data-column groups need the rows), a group column typed outside
+    * the exact domains ([[longDomain]] + string — a string partition
+    * value is exact, no truncation applies to a single driver-side
+    * value), a member without a parseable segment for a group column,
+    * a member without a recorded row count (zero-row groups must
+    * DROP, which needs the counts), or any member that is not covered
+    * (a group with a boundary member would need a scan). Groups whose
+    * members sum to zero rows are dropped — a row-level GROUP BY emits
+    * no group for them.
     *
     * Returns (fields, rows) in exactly the shape
     * [[graft.dsl.QueryCompiler.aggregate]] would produce: group
@@ -1385,13 +1478,11 @@ object Snapshot {
                 Seq[Seq[Any]])] = {
     import org.apache.spark.sql.types._
     if (group.isEmpty || aggs.isEmpty) return None
-    val root = new Path(rootStr)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!isSnapshotLayout(fs, root)) return None
-    val (_, vdir) = resolveVersion(fs, root, at)
-    val m = manifestAt(fs, vdir).getOrElse(return None)
-    if (m.deleteEntries.nonEmpty) return None
-    if (m.dataEntries.exists(_.rows.isEmpty)) return None
+    val m = metadataManifest(spark, new Path(rootStr), at).getOrElse(return None)
+    val shapes = aggShapes(m, aggs).getOrElse(return None)
+    val data = m.dataEntries
+    if (data.exists(_.rows.isEmpty) ||
+        !data.forall(isCovered(spark, m, _, Nil, shapes))) return None
     val gf: Seq[StructField] = group.map { g =>
       m.schema.fields.find(_.name.equalsIgnoreCase(g)).getOrElse(return None)
     }
@@ -1399,7 +1490,7 @@ object Snapshot {
       return None
     if (!gf.forall(f => longDomain(f.dataType) || f.dataType == StringType))
       return None
-    val keyed: Seq[(Seq[Any], Entry)] = m.dataEntries.map { e =>
+    val keyed: Seq[(Seq[Any], Entry)] = data.map { e =>
       val key = gf.map { f =>
         partValue(spark, f.dataType, e.rel, f.name) match {
           case Some(v) => v
@@ -1408,220 +1499,14 @@ object Snapshot {
       }
       (key, e)
     }
-    val folded = keyed.groupBy(_._1).toSeq.map { case (key, es) =>
-      foldMetaAggs(spark, m, es.map(_._2), aggs) match {
-        case Some(vals) => (key, es.map(_._2), vals)
-        case None => return None
-      }
+    val rows = keyed.groupBy(_._1).toSeq.collect {
+      case (key, kes) if kes.exists(_._2.rows.exists(_ > 0L)) =>
+        key ++ foldCovered(spark, m, shapes, kes.map(_._2)).map(_.merged(None))
     }
-    val aggFields = foldMetaAggs(spark, m, Nil, aggs)
-      .getOrElse(return None) // also covers the empty-table schema
-      .map { case (n, _, dt) => StructField(n, dt, nullable = true) }
     val fields =
       gf.map(f => StructField(f.name, f.dataType, nullable = true)) ++
-        aggFields
-    val rows = folded
-      .filter { case (_, es, _) => es.exists(e => e.rows.exists(_ > 0L)) }
-      .map { case (key, _, vals) => key ++ vals.map(_._2) }
+        shapes.map(sh => StructField(sh.name, sh.dt, nullable = true))
     Some((fields, rows))
-  }
-
-  /** PREDICATE-COVERED METADATA COUNT PLAN (r17 — the Iceberg planner's
-    * count shape, extending [[metadataCount]] past the first
-    * predicate): classify the resolved version's data members against
-    * `preds` into
-    *
-    *   - EXTERIOR (envelope provably holds no matching row —
-    *     [[pruneEntries]]' drop set): contribute 0,
-    *   - COVERED (envelope provably satisfies every conjunct on every
-    *     row — [[covers]], with the manifest-recorded row count):
-    *     contribute `Entry.rows` driver-side, zero file I/O,
-    *   - BOUNDARY (everything else, including covered-but-countless
-    *     legacy entries): returned as a frame the caller must filter
-    *     EXACTLY and count — the only Spark jobs of the plan.
-    *
-    * So "count rows where date = yesterday" on a date-laid table sums
-    * manifests for the interior and scans only the two straddling
-    * files. None when metadata counting doesn't apply at all: not a
-    * snapshot layout, no manifest, live tombstones (they subtract
-    * unknown amounts), or a predicate column absent from the schema
-    * (the compiled predicate is degenerate there — null-typed — and
-    * stays with the scan path). Every conjunct in `preds` MUST be the
-    * complete, exact predicate set ([[graft.dsl.QueryCompiler.exactPreds]]);
-    * advisory subsets would overcount. Returns (covered rows, boundary
-    * frame, (covered, boundary, total) member counts).
-    */
-  def metadataCountPlan(spark: SparkSession, rootStr: String,
-                        at: Option[Long], preds: Seq[ReadPred])
-      : Option[(Long, Option[DataFrame], (Int, Int, Int))] = {
-    val root = new Path(rootStr)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!isSnapshotLayout(fs, root)) return None
-    val (_, vdir) = resolveVersion(fs, root, at)
-    val m = manifestAt(fs, vdir).getOrElse(return None)
-    if (m.deleteEntries.nonEmpty) return None
-    if (!preds.forall(p =>
-      m.schema.fields.exists(_.name.equalsIgnoreCase(p.col)))) return None
-    val data = m.dataEntries
-    val kept = pruneEntries(spark, m, data, preds)
-    val (covered, boundary) = kept.partition(predsCovered(spark, m, _, preds))
-    val split = (covered.size, boundary.size, data.size)
-    lastCountPlan = split
-    val coveredRows = covered.iterator.map(_.rows.get).sum
-    val bf =
-      if (boundary.isEmpty) None
-      else Some(tombstonedRead(spark, root, m, boundary))
-    Some((coveredRows, bf, split))
-  }
-
-  /** Is EVERY row of `e` proven to satisfy every conjunct? Zero-row
-    * members are trivially covered; otherwise each conjunct must be
-    * proven on the member's envelope (partition point values included,
-    * [[covers]]) AND the row count must be recorded. Shared by the
-    * covered count and covered aggregate plans.
-    */
-  private def predsCovered(spark: SparkSession, m: Manifest, e: Entry,
-                           preds: Seq[ReadPred]): Boolean =
-    e.rows.contains(0L) || (e.rows.isDefined && preds.forall { p =>
-      val f = m.schema.fields.find(_.name.equalsIgnoreCase(p.col)).get
-      val env: Option[ColEnv] =
-        if (m.partitionBy.contains(f.name))
-          partPointEnv(spark, f.dataType, e.rel, f.name)
-        else e.envs.flatMap(_.get(f.name))
-      env.exists(covers(spark, f.dataType, p, _))
-    })
-
-  /** External row value → the envelope's long domain — the inverse of
-    * [[fromDomain]], tolerant of BOTH external-type families (java.sql
-    * and java.time, whichever `spark.sql.datetime.java8API.enabled`
-    * hands back), so a boundary scan's aggregate merges exactly with
-    * a covered envelope fold.
-    */
-  private[graft] def toDomain(dt: org.apache.spark.sql.types.DataType,
-                              v: Any): Long = {
-    import org.apache.spark.sql.catalyst.util.DateTimeUtils
-    import org.apache.spark.sql.types._
-    (dt, v) match {
-      case (ByteType | ShortType | IntegerType | LongType,
-            n: java.lang.Number) => n.longValue
-      case (DateType, d: java.sql.Date) => DateTimeUtils.fromJavaDate(d).toLong
-      case (DateType, d: java.time.LocalDate) => d.toEpochDay
-      case (TimestampType, t: java.sql.Timestamp) =>
-        DateTimeUtils.fromJavaTimestamp(t)
-      case (TimestampType, t: java.time.Instant) =>
-        DateTimeUtils.instantToMicros(t)
-      case (TimestampNTZType, t: java.time.LocalDateTime) =>
-        DateTimeUtils.localDateTimeToMicros(t)
-      case _ => throw new IllegalArgumentException(
-        s"no envelope domain for ${dt.simpleString} value " +
-          s"${Option(v).map(_.getClass.getName).getOrElse("null")}")
-    }
-  }
-
-  /** One aggregate's covered-side partial ([[metadataAggPlan]]):
-    * `fn` ∈ count|countf|min|max, `dt` the OUTPUT type, `covered` the
-    * fold over covered members alone — counts as Some(sum) (0 when
-    * nothing is covered), min/max as the envelope extreme in the long
-    * domain (None when no covered member carries a value).
-    */
-  final case class AggPartial(name: String, fn: String,
-                              dt: org.apache.spark.sql.types.DataType,
-                              covered: Option[Long])
-
-  /** Last covered-aggregate plan's (covered, boundary, total) member
-    * counts — the [[lastCountPlan]] twin for [[metadataAggPlan]].
-    * Diagnostic only.
-    */
-  @volatile private[graft] var lastAggPlan: (Int, Int, Int) = (0, 0, 0)
-
-  /** PREDICATE-COVERED METADATA AGGREGATES (r18, verdict #3 — the
-    * natural composition of [[covers]] with [[metadataAgg]]):
-    * `_agg min/max/count` under an exactly-translated predicate
-    * classifies members exactly like [[metadataCountPlan]] —
-    * exterior members drop, COVERED members fold their recorded
-    * envelopes/rows driver-side, and only BOUNDARY members return as
-    * a frame the caller must filter exactly, aggregate, and merge
-    * with the covered partials ([[AggPartial]]). So
-    * "min/max(ship_date) where orderkey in [a,b]" on a sorted table
-    * scans two straddling files instead of the range.
-    *
-    * A member that satisfies the predicates but lacks what an
-    * aggregate needs (an envelope for the agg column; null-freedom
-    * for `count(f)`) is DEMOTED to the boundary scan rather than
-    * declining the whole plan — coverage degrades file by file, never
-    * correctness. Global declines (None → the scan owns the query):
-    * non-snapshot layout, live tombstones, a predicate or aggregate
-    * column missing from the schema, min/max outside the long domains
-    * (string bounds truncate), or an aggregate outside min/max/count.
-    */
-  def metadataAggPlan(spark: SparkSession, rootStr: String,
-                      at: Option[Long], preds: Seq[ReadPred],
-                      aggs: Seq[(String, String)])
-      : Option[(Seq[AggPartial], Option[DataFrame])] = {
-    import org.apache.spark.sql.types._
-    if (aggs.isEmpty || preds.isEmpty) return None
-    val root = new Path(rootStr)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!isSnapshotLayout(fs, root)) return None
-    val (_, vdir) = resolveVersion(fs, root, at)
-    val m = manifestAt(fs, vdir).getOrElse(return None)
-    if (m.deleteEntries.nonEmpty) return None
-    if (!preds.forall(p =>
-      m.schema.fields.exists(_.name.equalsIgnoreCase(p.col)))) return None
-    def field(f: String): Option[StructField] =
-      m.schema.fields.find(_.name.equalsIgnoreCase(f))
-    def envOf(f: StructField, e: Entry): Option[ColEnv] =
-      if (m.partitionBy.contains(f.name))
-        partPointEnv(spark, f.dataType, e.rel, f.name)
-      else e.envs.flatMap(_.get(f.name))
-    // global decidability of each aggregate's SHAPE (per-member
-    // conditions demote to the boundary instead)
-    final case class Shape(name: String, fn: String,
-                           sf: Option[StructField], dt: DataType)
-    val shapes: Seq[Shape] = aggs.map {
-      case ("count", "*") => Shape("count_all", "count", None, LongType)
-      case ("count", f) => field(f) match {
-        case Some(sf) => Shape(s"count_$f", "countf", Some(sf), LongType)
-        case None => return None
-      }
-      case (fn @ ("min" | "max"), f) => field(f) match {
-        case Some(sf) if longDomain(sf.dataType) =>
-          Shape(s"${fn}_$f", fn, Some(sf), sf.dataType)
-        case _ => return None
-      }
-      case _ => return None
-    }
-    val data = m.dataEntries
-    val kept = pruneEntries(spark, m, data, preds)
-    val (covered, boundary) = kept.partition { e =>
-      predsCovered(spark, m, e, preds) &&
-        (e.rows.contains(0L) || shapes.forall { sh =>
-          sh.fn match {
-            case "count"  => true // rows recorded by predsCovered
-            case "countf" => envOf(sh.sf.get, e).exists(!_.hasNulls)
-            case _        => envOf(sh.sf.get, e).isDefined
-          }
-        })
-    }
-    lastAggPlan = (covered.size, boundary.size, data.size)
-    val liveCovered = covered.filter(_.rows.exists(_ > 0L))
-    val partials = shapes.map { sh =>
-      sh.fn match {
-        case "count" | "countf" =>
-          AggPartial(sh.name, sh.fn, sh.dt,
-            Some(liveCovered.iterator.map(_.rows.get).sum))
-        case fn =>
-          val vals = liveCovered.flatMap(envOf(sh.sf.get, _))
-            .flatMap(e => if (fn == "min") e.min else e.max)
-          AggPartial(sh.name, fn, sh.dt,
-            if (vals.isEmpty) None
-            else Some(if (fn == "min") vals.min else vals.max))
-      }
-    }
-    val bf =
-      if (boundary.isEmpty) None
-      else Some(tombstonedRead(spark, root, m, boundary))
-    Some((partials, bf))
   }
 
   /** Partition `entries` into SEQUENCE CLASSES: groups sharing the
@@ -4764,7 +4649,7 @@ object Snapshot {
     * `full` (r16) additionally opens every referenced data file's
     * footer ONCE and cross-checks the manifest-recorded row count
     * ([[Entry.rows]] — the metadata-count fast path's input) against
-    * the file: a mismatch means [[metadataCount]] would serve a wrong
+    * the file: a mismatch means [[metadataPlan]] would serve a wrong
     * number (`rows` error). Explicitly O(pool footers) — the same
     * contract as `--vacuum --full`.
     */

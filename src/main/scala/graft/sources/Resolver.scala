@@ -69,13 +69,9 @@ object Resolver {
         // scan to a RETAINED committed generation instead of latest
         // (TS resolves to the latest commit at-or-before the instant)
         val p = path(ref)
-        val atV = query.collectFirst { case ("_version", v) => v.toLong }
-          .orElse(query.collectFirst { case ("_version_ts", v) =>
-            val hp = new org.apache.hadoop.fs.Path(p)
-            graft.operators.Snapshot.versionAtTimestamp(
-              hp.getFileSystem(spark.sparkContext.hadoopConfiguration), hp,
-              graft.operators.Snapshot.parseCommitTs(v))
-          })
+        val hp = new org.apache.hadoop.fs.Path(p)
+        val atV = graft.operators.Snapshot.versionPin(
+          hp.getFileSystem(spark.sparkContext.hadoopConfiguration), hp, query)
         // r15: the query's prunable conjuncts steer manifest-envelope
         // file skipping on snapshot layouts; every consumer (Planner
         // source stage, MergePlanner literal filters) still applies

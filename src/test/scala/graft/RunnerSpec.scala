@@ -5,7 +5,6 @@ import graft.functions.StructUtils
 import graft.sources.Resolver
 import graft.spec._
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 class RunnerSpec extends SparkSpec {
   import spark.implicits._
@@ -19,7 +18,7 @@ class RunnerSpec extends SparkSpec {
   }
 
   test("S12 metadata-only count: unfiltered snapshot _count runs ZERO Spark jobs") {
-    val dir = Files.createTempDirectory("runner_metacount").toString
+    val dir = tempDir("runner_metacount")
     val p = s"$dir/t.parquet"
     val df = (0L until 1234L).map(i => (i, s"v$i")).toDF("id", "txt")
     graft.operators.WriteOps.atomicOverwrite(spark, df, p,
@@ -61,7 +60,7 @@ class RunnerSpec extends SparkSpec {
   test("r17 predicate-covered metadata count: interior files decided " +
     "driver-side, boundary files scanned, exact everywhere") {
     import graft.operators.Snapshot
-    val dir = Files.createTempDirectory("runner_covcount").toString
+    val dir = tempDir("runner_covcount")
     val p = s"$dir/t.parquet"
     // sorted layout: ids 0..1199 at 200/file → 6 files, tight envelopes
     val df = (0L until 1200L).map(i => (i, i % 7, s"v$i"))
@@ -71,15 +70,15 @@ class RunnerSpec extends SparkSpec {
       commitMode = "snapshot", keepVersions = 6)
     val s = SourceSpec(DatasetRef("parquet", dir, "t"))
     // range straddling 2 files: 4 interior members from the manifest
-    Snapshot.lastCountPlan = (-1, -1, -1)
+    Snapshot.lastMetadataPlan = (-1, -1, -1)
     assert(Runner.count(spark,
       s.copy(query = Seq("id__gte" -> "150", "id__lte" -> "1049"))) == 900L)
-    assert(Snapshot.lastCountPlan == (4, 2, 6),
+    assert(Snapshot.lastMetadataPlan == (4, 2, 6),
       s"expected (covered 4, boundary 2, total 6), " +
-        s"got ${Snapshot.lastCountPlan}")
+        s"got ${Snapshot.lastMetadataPlan}")
     assert(Runner.countPlan(spark,
       s.copy(query = Seq("id__gte" -> "150", "id__lte" -> "1049")))
-      .map(t => (t._1, t._2, t._3)).contains(Snapshot.lastCountPlan),
+      .map(t => (t._1, t._2, t._3)).contains(Snapshot.lastMetadataPlan),
       "--dry --count reports the split the count itself used")
     // every exactly-translated op agrees with the closed form
     val cases = Seq(
@@ -101,7 +100,7 @@ class RunnerSpec extends SparkSpec {
   test("r17 covered count runs ZERO jobs when no file straddles the " +
     "predicate (partition point; whole-domain range)") {
     import graft.operators.Snapshot
-    val dir = Files.createTempDirectory("runner_covzero").toString
+    val dir = tempDir("runner_covzero")
     val p = s"$dir/t.parquet"
     val df = (0L until 900L).map(i => (i, i % 3, s"v$i"))
       .toDF("id", "grp", "txt")
@@ -121,7 +120,7 @@ class RunnerSpec extends SparkSpec {
       // its partition-dir point envelope — zero boundary, zero jobs
       assert(Runner.count(spark,
         s.copy(query = Seq("grp" -> "1"))) == 300L)
-      assert(Snapshot.lastCountPlan._2 == 0)
+      assert(Snapshot.lastMetadataPlan._2 == 0)
       // whole-domain range: all files interior — zero jobs
       assert(Runner.count(spark,
         s.copy(query = Seq("id__gte" -> "0", "id__lte" -> "899"))) == 900L)
@@ -133,7 +132,7 @@ class RunnerSpec extends SparkSpec {
 
   test("r17 count version pins: the scan fallback counts the PINNED " +
     "version (ADVICE), and version errors keep the scan path's shape") {
-    val dir = Files.createTempDirectory("runner_cntpin").toString
+    val dir = tempDir("runner_cntpin")
     val p = s"$dir/t.parquet"
     val df = (0L until 1200L).map(i => (i, s"v$i")).toDF("id", "txt")
     graft.operators.WriteOps.atomicOverwrite(spark, df, p,
@@ -170,7 +169,7 @@ class RunnerSpec extends SparkSpec {
     "manifest as a LOCAL relation; undecidable shapes scan, exact") {
     import graft.engine.Planner
     import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-    val dir = Files.createTempDirectory("runner_metaagg").toString
+    val dir = tempDir("runner_metaagg")
     val p = s"$dir/t.parquet"
     val df = (0L until 1200L)
       .map(i => (i, if (i % 5 == 0) null else s"v$i")).toDF("id", "txt")
@@ -220,7 +219,7 @@ class RunnerSpec extends SparkSpec {
     import graft.engine.Planner
     import graft.operators.Snapshot
     import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-    val dir = Files.createTempDirectory("runner_covagg").toString
+    val dir = tempDir("runner_covagg")
     val p = s"$dir/t.parquet"
     val d0 = java.time.LocalDate.of(2020, 1, 1)
     val df = (0L until 1200L)
@@ -236,7 +235,7 @@ class RunnerSpec extends SparkSpec {
     def isLocal(x: org.apache.spark.sql.DataFrame) =
       x.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
     // range straddling two files: 4 covered members fold, 2 scan
-    Snapshot.lastAggPlan = (-1, -1, -1)
+    Snapshot.lastMetadataPlan = (-1, -1, -1)
     val f = q("_agg" -> "min:d,max:d,count",
       "id__gte" -> "150", "id__lte" -> "1049")
     assert(isLocal(f), "covered aggregate must end as a local relation")
@@ -245,18 +244,18 @@ class RunnerSpec extends SparkSpec {
     assert(f.head().toSeq == want.toSeq,
       s"merged (covered fold + boundary scan) must equal the scan: " +
         s"${f.head().toSeq} vs ${want.toSeq}")
-    assert(Snapshot.lastAggPlan == (4, 2, 6),
+    assert(Snapshot.lastMetadataPlan == (4, 2, 6),
       s"expected (covered 4, boundary 2, total 6), " +
-        s"got ${Snapshot.lastAggPlan}")
+        s"got ${Snapshot.lastMetadataPlan}")
     // count(f) on a column with nulls and NO recorded envelope:
     // every kept member DEMOTES to the boundary — exact, not declined
-    Snapshot.lastAggPlan = (-1, -1, -1)
+    Snapshot.lastMetadataPlan = (-1, -1, -1)
     val ct = q("_agg" -> "count:txt", "id__lt" -> "500")
     assert(ct.head().getLong(0) ==
       df.filter(col("id") < 500).agg(count(col("txt"))).head().getLong(0))
-    assert(Snapshot.lastAggPlan._1 == 0 && Snapshot.lastAggPlan._2 > 0,
+    assert(Snapshot.lastMetadataPlan._1 == 0 && Snapshot.lastMetadataPlan._2 > 0,
       s"txt has no envelope — all kept members must scan, " +
-        s"got ${Snapshot.lastAggPlan}")
+        s"got ${Snapshot.lastMetadataPlan}")
     // a fully-covered range runs ZERO jobs
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val l = new org.apache.spark.scheduler.SparkListener {
@@ -285,7 +284,7 @@ class RunnerSpec extends SparkSpec {
 
   test("r18 countPlan (--dry provenance): the covered/boundary/total " +
     "split without execution — zero jobs; scan shapes report None") {
-    val dir = Files.createTempDirectory("runner_dryplan").toString
+    val dir = tempDir("runner_dryplan")
     val p = s"$dir/t.parquet"
     val df = (0L until 1200L).map(i => (i, s"v$i")).toDF("id", "txt")
     graft.operators.WriteOps.atomicOverwrite(spark, df, p,
@@ -308,7 +307,7 @@ class RunnerSpec extends SparkSpec {
       assert(Runner.countPlan(spark, s.copy(query =
         Seq("txt__startswith" -> "v1"))).isEmpty)
       // a plain (non-snapshot) parquet dir → None
-      val plainDir = Files.createTempDirectory("runner_dryplain").toString
+      val plainDir = tempDir("runner_dryplain")
       df.write.parquet(s"$plainDir/t.parquet")
       assert(Runner.countPlan(spark,
         SourceSpec(DatasetRef("parquet", plainDir, "t"))).isEmpty)
@@ -329,7 +328,7 @@ class RunnerSpec extends SparkSpec {
     import graft.engine.Planner
     import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
     import java.time.LocalDateTime
-    val dir = Files.createTempDirectory("runner_metantz").toString
+    val dir = tempDir("runner_metantz")
     val p = s"$dir/t.parquet"
     val base = LocalDateTime.of(2021, 3, 14, 9, 26, 53, 589793000)
     val df = (0 until 500)
@@ -364,7 +363,7 @@ class RunnerSpec extends SparkSpec {
     "included; non-partition groups and tombstones decline, exact") {
     import graft.engine.Planner
     import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-    val dir = Files.createTempDirectory("runner_gmeta").toString
+    val dir = tempDir("runner_gmeta")
     val p = s"$dir/t.parquet"
     val df = (0L until 900L)
       .map(i => (i, if (i % 10 == 0) null else s"g${i % 3}", i % 7))
@@ -428,7 +427,7 @@ class RunnerSpec extends SparkSpec {
   test("r17 covered count on STRING keys: truncated byte-bound " +
     "envelopes prove interior files") {
     import graft.operators.Snapshot
-    val dir = Files.createTempDirectory("runner_cntstr").toString
+    val dir = tempDir("runner_cntstr")
     val p = s"$dir/t.parquet"
     val df = (0L until 600L).map(i => (i,
       java.security.MessageDigest.getInstance("MD5")
@@ -438,16 +437,91 @@ class RunnerSpec extends SparkSpec {
       indexBy = Seq("k"), maxRecordsPerFile = 50,
       commitMode = "snapshot", keepVersions = 4)
     val s = SourceSpec(DatasetRef("parquet", dir, "t"))
-    Snapshot.lastCountPlan = (-1, -1, -1)
+    Snapshot.lastMetadataPlan = (-1, -1, -1)
     val got = Runner.count(spark,
       s.copy(query = Seq("k__gte" -> "2", "k__lt" -> "8")))
     val want = Resolver.readParquet(spark, p)
       .filter(col("k") >= "2" && col("k") < "8").count()
     assert(got == want)
-    val (cov, bnd, tot) = Snapshot.lastCountPlan
+    val (cov, bnd, tot) = Snapshot.lastMetadataPlan
     assert(cov > 0 && bnd <= 2 && cov + bnd < tot,
       s"string range must cover interior files from byte bounds " +
         s"(covered $cov, boundary $bnd of $tot)")
+  }
+
+  test("covered count: IN over a long envelope wider than 2^63 " +
+    "(a 64-bit hash key) goes to the boundary scan, exact") {
+    val dir = tempDir("runner_widein")
+    val p = s"$dir/t.parquet"
+    // id * the 64-bit golden ratio spreads every 100-row member's h
+    // envelope over nearly the whole long domain
+    val df = (0L until 400L).map(i => (i,
+      if (i == 7) 1L else if (i == 8) 2L else i * 0x9E3779B97F4A7C15L))
+      .toDF("id", "h")
+    graft.operators.WriteOps.atomicOverwrite(spark, df, p,
+      indexBy = Seq("id"), maxRecordsPerFile = 100,
+      commitMode = "snapshot", keepVersions = 4, statsCols = Seq("h"))
+    val s = SourceSpec(DatasetRef("parquet", dir, "t"),
+      query = Seq("h__in" -> "1,2"))
+    assert(Runner.count(spark, s) == 2L)
+    assert(Runner.countPlan(spark, s).exists(t => t._1 == 0 && t._2 > 0))
+  }
+
+  test("metadata plan on a manifest WITHOUT recorded rows (pre-r16): " +
+    "min/max fold from envelopes, counts scan, every answer exact") {
+    import graft.engine.Planner
+    import graft.operators.Snapshot
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val dir = tempDir("runner_rowless")
+    val p = s"$dir/t.parquet"
+    val d0 = java.time.LocalDate.of(2020, 1, 1)
+    val df = (0L until 1200L)
+      .map(i => (i, java.sql.Date.valueOf(d0.plusDays(i / 40))))
+      .toDF("id", "d")
+    graft.operators.WriteOps.atomicOverwrite(spark, df, p,
+      indexBy = Seq("id"), maxRecordsPerFile = 200,
+      commitMode = "snapshot", keepVersions = 4, statsCols = Seq("d"))
+    // commit the same membership again with every `rows` field dropped:
+    // the manifest a writer before r16 would have left
+    val root = new Path(p)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (v, vdir) = Snapshot.resolveVersion(fs, root, None)
+    val m = Snapshot.manifestAt(fs, vdir).get
+    val v2dir = new Path(root, f"_v_${v + 1}%020d")
+    graft.operators.ManifestCodec.writeManifest(fs, v2dir,
+      m.copy(entries = m.entries.map(_.copy(rows = None))))
+    fs.create(new Path(v2dir, graft.operators.Versioned.Marker), false).close()
+    Snapshot.clearResolvedCache()
+    val s = SourceSpec(DatasetRef("parquet", dir, "t"))
+    def q(qs: (String, String)*) =
+      Planner.sourceFrame(spark, s.copy(query = qs))
+    def isLocal(x: org.apache.spark.sql.DataFrame) =
+      x.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+    def scan(c: org.apache.spark.sql.Column) = df.filter(c)
+      .agg(min(col("id")), max(col("id")), min(col("d")), max(col("d")),
+        count(lit(1))).head().toSeq
+    val range = Seq("id__gte" -> "150", "id__lte" -> "1049")
+    val inRange = col("id") >= 150 && col("id") <= 1049
+    // counts need the rows: every kept member scans
+    assert(Runner.count(spark, s.copy(query = range)) == 900L)
+    assert(Runner.countPlan(spark, s.copy(query = range))
+      .contains((0, 6, 6, 0L)))
+    // min/max need only envelopes: interior members fold, two scan
+    Snapshot.lastMetadataPlan = (-1, -1, -1)
+    val mm = q(range :+ ("_agg" -> "min:id,max:id,min:d,max:d"): _*)
+    assert(mm.head().toSeq == scan(inRange).take(4))
+    assert(Snapshot.lastMetadataPlan == (4, 2, 6),
+      s"got ${Snapshot.lastMetadataPlan}")
+    val withCount =
+      q(range :+ ("_agg" -> "min:id,max:id,min:d,max:d,count"): _*)
+    assert(withCount.head().toSeq == scan(inRange))
+    // unfiltered: min/max answer locally; a count declines to the scan
+    val whole = q("_agg" -> "min:id,max:d")
+    assert(isLocal(whole))
+    assert(whole.head().toSeq == Seq(0L, java.sql.Date.valueOf(d0.plusDays(29))))
+    val cnt = q("_agg" -> "count")
+    assert(!isLocal(cnt) && cnt.head().getLong(0) == 1200L)
   }
 
   test("O2 auto worker sizing: ceil(total/1000) capped at 100") {
@@ -469,7 +543,7 @@ class RunnerSpec extends SparkSpec {
 
   test("O10 confirm gate: 'n' skips the write, 'y' and --silent run it") {
     import graft.cli.Main
-    val dir = Files.createTempDirectory("graft_gate").toString
+    val dir = tempDir("graft_gate")
     def job(name: String) = JobSpec(
       SourceSpec(DatasetRef("parquet", "/root/testdata/sf0.001", "region")),
       target = Some(TargetSpec(DatasetRef("parquet", dir, name),
@@ -514,7 +588,7 @@ class RunnerSpec extends SparkSpec {
   }
 
   test("execute makes one pass over the read side (checkpoint + cached count + write)") {
-    val dir = Files.createTempDirectory("graft_onepass").toString
+    val dir = tempDir("graft_onepass")
     val job = JobSpec(
       SourceSpec(DatasetRef("parquet", "/root/testdata/sf0.001", "region")),
       target = Some(TargetSpec(DatasetRef("parquet", dir, "one_pass"),
@@ -539,7 +613,7 @@ class RunnerSpec extends SparkSpec {
   }
 
   test("O12 etlSetting: flat + nested lookup from the _settings dataset") {
-    val ns = Files.createTempDirectory("graft_settings").toString
+    val ns = tempDir("graft_settings")
     Seq(("prod", 1000L, ("on", 7)))
       .toDF("env", "batch_size", "limits")
       .select($"env", $"batch_size", $"limits".cast("struct<mode:string,max:int>"))
@@ -552,7 +626,7 @@ class RunnerSpec extends SparkSpec {
   }
 
   test("O3 progress: stage/record events reported during execute") {
-    val dir = Files.createTempDirectory("graft_prog").toString
+    val dir = tempDir("graft_prog")
     val job = JobSpec(
       SourceSpec(DatasetRef("parquet", "/root/testdata/sf0.001", "region")),
       target = Some(TargetSpec(DatasetRef("parquet", dir, "prog"),
@@ -593,7 +667,7 @@ class RunnerSpec extends SparkSpec {
     // versioned commit mode / versioned-layout target: streamed
     // appends would be invisible to the version resolver
     intercept[Main.CliError] { run(base ++ Seq("--commit", "versioned"): _*) }
-    val vdir = Files.createTempDirectory("graft_stream_v").toString
+    val vdir = tempDir("graft_stream_v")
     graft.operators.WriteOps.atomicOverwrite(spark,
       sf("region"), s"$vdir/out.parquet", commitMode = "versioned")
     intercept[Main.CliError] {
@@ -604,7 +678,7 @@ class RunnerSpec extends SparkSpec {
 
   test("--stream runs STATELESS --str stages with batch parity") {
     import graft.cli.Main
-    val dir = Files.createTempDirectory("graft_stream_str").toString
+    val dir = tempDir("graft_stream_str")
     sf("documents").limit(200).write.parquet(s"$dir/docs.parquet")
     val (job, opts) = Main.parse(Array(
       "-s", s"parquet/$dir/docs",
@@ -623,7 +697,7 @@ class RunnerSpec extends SparkSpec {
   }
 
   test("versioned commit end-to-end through Runner.execute") {
-    val dir = Files.createTempDirectory("graft_vexe").toString
+    val dir = tempDir("graft_vexe")
     val t = TargetSpec(DatasetRef("parquet", dir, "r"), op = WriteOp.Create,
       commitMode = "versioned", skipTimestamp = true)
     val job = JobSpec(
@@ -640,7 +714,7 @@ class RunnerSpec extends SparkSpec {
   }
 
   test("execute writes a target atomically and logs the job") {
-    val dir = Files.createTempDirectory("graft_exec").toString
+    val dir = tempDir("graft_exec")
     val job = JobSpec(
       SourceSpec(DatasetRef("parquet", "/root/testdata/sf0.001", "region")),
       target = Some(TargetSpec(DatasetRef("parquet", dir, "region_copy"),
@@ -655,8 +729,8 @@ class RunnerSpec extends SparkSpec {
   }
 
   test("--log projects the _logs record; --log_ds relocates it (W13)") {
-    val dir = Files.createTempDirectory("graft_logp").toString
-    val logDir = Files.createTempDirectory("graft_logp_ds").toString
+    val dir = tempDir("graft_logp")
+    val logDir = tempDir("graft_logp_ds")
     val job = JobSpec(
       SourceSpec(DatasetRef("parquet", "/root/testdata/sf0.001", "region")),
       target = Some(TargetSpec(DatasetRef("parquet", dir, "rl"),
@@ -672,7 +746,7 @@ class RunnerSpec extends SparkSpec {
   }
 
   test("job-log compaction folds small files without losing concurrent appends") {
-    val dir = Files.createTempDirectory("graft_logc").toString
+    val dir = tempDir("graft_logc")
     val logPath = s"$dir/_logs.parquet"
     // simulate 70 prior jobs' one-file appends
     import spark.implicits._
@@ -697,7 +771,7 @@ class RunnerSpec extends SparkSpec {
   }
 
   test("O4 fixpoint loop terminates and processes all pending rows") {
-    val dir = Files.createTempDirectory("graft_loop").toString
+    val dir = tempDir("graft_loop")
     sf("events").limit(50).write.parquet(s"$dir/ev.parquet")
     val ref = DatasetRef("parquet", dir, "ev")
     // self-update: mark all rows processed via upsert on event_id
@@ -715,7 +789,7 @@ class RunnerSpec extends SparkSpec {
   }
 
   test("[EXT] partitioned target write: hive layout + partition pruning") {
-    val dir = Files.createTempDirectory("graft_part").toString
+    val dir = tempDir("graft_part")
     val job = JobSpec(
       SourceSpec(DatasetRef("parquet", "/root/testdata/sf0.001", "orders")),
       target = Some(TargetSpec(DatasetRef("parquet", dir, "orders_p"),
@@ -732,7 +806,7 @@ class RunnerSpec extends SparkSpec {
   }
 
   test("O3 jobStatus queries the job log with the DSL; uid=last") {
-    val dir = Files.createTempDirectory("graft_jobs").toString
+    val dir = tempDir("graft_jobs")
     val job = JobSpec(
       SourceSpec(DatasetRef("parquet", "/root/testdata/sf0.001", "region")),
       target = Some(TargetSpec(DatasetRef("parquet", dir, "r1"), op = WriteOp.Create)))
@@ -748,7 +822,7 @@ class RunnerSpec extends SparkSpec {
   }
 
   test("O4 chunked fixpoint: a 40%-of-pending cap converges in 3 real iterations") {
-    val dir = Files.createTempDirectory("graft_chunked").toString
+    val dir = tempDir("graft_chunked")
     sf("orders").limit(1000).write.parquet(s"$dir/o.parquet")
     val ref = DatasetRef("parquet", dir, "o")
     // counts 400, 400, 200, 0 — the cap repeats only twice, so the
@@ -769,7 +843,7 @@ class RunnerSpec extends SparkSpec {
   }
 
   test("O4 non-self-update contid job runs exactly once (no duplicate appends)") {
-    val dir = Files.createTempDirectory("graft_once").toString
+    val dir = tempDir("graft_once")
     val job = JobSpec(
       SourceSpec(DatasetRef("parquet", "/root/testdata/sf0.001", "region")),
       target = Some(TargetSpec(DatasetRef("parquet", dir, "r"), op = WriteOp.Create)),
@@ -780,7 +854,7 @@ class RunnerSpec extends SparkSpec {
   }
 
   test("execute reports batch rows written, not the post-op target total") {
-    val dir = Files.createTempDirectory("graft_written").toString
+    val dir = tempDir("graft_written")
     val all = JobSpec(
       SourceSpec(DatasetRef("parquet", "/root/testdata/sf0.001", "orders")),
       target = Some(TargetSpec(DatasetRef("parquet", dir, "t"),
@@ -815,7 +889,7 @@ class RunnerSpec extends SparkSpec {
   }
 
   test("S10 drop dataset") {
-    val dir = Files.createTempDirectory("graft_drop").toString
+    val dir = tempDir("graft_drop")
     sf("region").write.parquet(s"$dir/r.parquet")
     val ref = DatasetRef("parquet", dir, "r")
     assert(Resolver.drop(spark, ref))
