@@ -39,8 +39,7 @@ object Compaction {
 
   /** Bounded concurrent foreach for per-directory rewrite jobs. First
     * failure wins (remaining submissions shortcut), matching the
-    * sequential loop's fail-fast contract; the caller's finally block
-    * still sweeps every staged dir.
+    * sequential loop's fail-fast contract.
     */
   private def inParallel[T](items: Seq[T], par: Int)(f: T => Unit): Unit = {
     if (par <= 1 || items.size <= 1) { items.foreach(f); return }
@@ -349,91 +348,78 @@ object Compaction {
     val kept = scala.collection.mutable.ArrayBuffer.empty[Snapshot.Entry]
     val removedRels = scala.collection.mutable.Set.empty[String]
     val newEntries0 = scala.collection.mutable.ArrayBuffer.empty[Snapshot.Entry]
-    val stages = scala.collection.mutable.ArrayBuffer.empty[Path]
     val lock = new Object
-    try {
-      // group rewrites run CONCURRENTLY (bounded pool) — each is its
-      // own read→write job over disjoint files; results fold into the
-      // shared plan under the lock and the SINGLE commit below swaps
-      // them all atomically, exactly as the sequential loop did
-      inParallel(groups.sortBy(g =>
-          (g._1, g._3.map(_.rel).sorted.mkString(","))),
-          GroupParallelism) { case (dir, entries, dels) =>
-        val small =
-          if (forceAll) entries else entries.filter(_.bytes < targetFileBytes)
-        if (small.length < (if (forceAll) 1 else 2))
-          lock.synchronized { kept ++= entries; () }
-        else {
-          val smallBytes = small.map(_.bytes).sum
-          lock.synchronized {
-            dirs += 1
-            compacted += small.length
-            bytes += smallBytes
-            removedRels ++= small.map(_.rel)
-            if (!forceAll)
-              kept ++= entries.filterNot(e => e.bytes < targetFileBytes)
-          }
-          // alias-aware group read: pre-rename files recover their
-          // renamed columns; the rewritten output carries CURRENT names
-          val df = applyDv(Snapshot.aliasedRead(spark, m.aliases, dataSchema,
-            small.map(e => new Path(dd, e.rel).toString), None), dels)
-          val nOut = math.max(1L,
-            (smallBytes + targetFileBytes - 1) / targetFileBytes).toInt
-          val keys = indexBy.filter(df.columns.contains)
-          val laid =
-            if (keys.nonEmpty)
-              df.repartitionByRange(nOut, keys.map(col): _*)
-                .sortWithinPartitions(keys.map(col): _*)
-            else df.repartition(nOut)
-          // one stage root per group: two classes of the same dir
-          // would otherwise overwrite each other's staged output
-          // (UUID, not nanoTime — concurrent groups can tie on the
-          // clock)
-          val stage = new Path(root,
-            s"._snap_stage_${java.util.UUID.randomUUID().toString.replace("-", "")}")
-          lock.synchronized { stages += stage; () }
-          val out = if (dir.isEmpty) stage else new Path(stage, dir)
-          laid.write.mode("overwrite").parquet(out.toString)
-          // content-preserving rewrite: inherit the min source seq
-          // (members share the applicable set, so min preserves it)
-          val inheritSeq = small.map(_.seq).min
-          val moved = Snapshot.moveIntoPool(fs, stage, dd)
-            .map(_.copy(seq = inheritSeq))
-          lock.synchronized { newEntries0 ++= moved; () }
+    // group rewrites run CONCURRENTLY (bounded pool) — each is its
+    // own read→write job over disjoint files; results fold into the
+    // shared plan under the lock and the SINGLE commit below swaps
+    // them all atomically, exactly as the sequential loop did
+    inParallel(groups.sortBy(g =>
+        (g._1, g._3.map(_.rel).sorted.mkString(","))),
+        GroupParallelism) { case (dir, entries, dels) =>
+      val small =
+        if (forceAll) entries else entries.filter(_.bytes < targetFileBytes)
+      if (small.length < (if (forceAll) 1 else 2))
+        lock.synchronized { kept ++= entries; () }
+      else {
+        val smallBytes = small.map(_.bytes).sum
+        lock.synchronized {
+          dirs += 1
+          compacted += small.length
+          bytes += smallBytes
+          removedRels ++= small.map(_.rel)
+          if (!forceAll)
+            kept ++= entries.filterNot(e => e.bytes < targetFileBytes)
         }
+        // alias-aware group read: pre-rename files recover their
+        // renamed columns; the rewritten output carries CURRENT names
+        val df = applyDv(Snapshot.aliasedRead(spark, m.aliases, dataSchema,
+          small.map(e => new Path(dd, e.rel).toString), None), dels)
+        val nOut = math.max(1L,
+          (smallBytes + targetFileBytes - 1) / targetFileBytes).toInt
+        val keys = indexBy.filter(df.columns.contains)
+        val laid =
+          if (keys.nonEmpty)
+            df.repartitionByRange(nOut, keys.map(col): _*)
+              .sortWithinPartitions(keys.map(col): _*)
+          else df.repartition(nOut)
+        // content-preserving rewrite: inherit the min source seq
+        // (members share the applicable set, so min preserves it)
+        val inheritSeq = small.map(_.seq).min
+        // each group stages in its own dir, so two classes of the same
+        // hive dir never overwrite each other's output
+        val moved = Snapshot.stageIntoPool(fs, root, laid, subdir = dir)
+          .map(_.copy(seq = inheritSeq))
+        lock.synchronized { newEntries0 ++= moved; () }
       }
-      if (dirs == 0) return Stats(0, m.entries.size, 0, 0L, 0)
-      // record key envelopes for the compacted files so merges keep
-      // planning from the manifest (r12)
-      val newEntries = Snapshot.withKeyEnvs(spark, dd,
-        newEntries0.toSeq, dataSchema,
-        indexBy.filter(dataSchema.fieldNames.contains))
-      // a DV file drops only when every data file it APPLIES to
-      // (dataSeq < dvSeq) was rewritten with its fold applied —
-      // kept files at-or-above the DV's seq were never subject to
-      // it, so they don't pin the debt (an append-shaped upsert's
-      // batch file would otherwise keep every older tombstone alive
-      // until a forced full rewrite). Rewritten groups fold exactly
-      // their class's applicable set, so "rewritten ⇒ folded" holds
-      // per DV; legacy tombstones (seq=MaxValue, apply globally)
-      // still need kept to be empty.
-      val keptMinSeq = kept.map(_.seq).minOption.getOrElse(Long.MaxValue)
-      def droppable(e: Snapshot.Entry): Boolean = keptMinSeq >= e.seq
-      if (dvGroups.isDefined)
-        removedRels ++= keyDel.filter(droppable).map(_.rel)
-      val predEntryByRel = predDel.map(e => e.rel -> e).toMap
-      removedRels ++= predByFile.filter(_._3).map(_._1)
-        .filter(r => droppable(predEntryByRel(r)))
-      // OPTIMISTIC commit: a compaction racing an append/disjoint
-      // merge rebases (its rewritten files are still head members); a
-      // concurrent rewrite of the SAME files is a loud conflict
-      Snapshot.commitRebase(fs, root, baseV, removedRels.toSet,
-        newEntries, m.schemaDdl, m.partitionBy, keepVersions, note = note)
-      Stats(dirs, m.entries.size, compacted, bytes, newEntries.size)
-    } finally {
-      stages.foreach(s =>
-        try fs.delete(s, true) catch { case _: Throwable => () })
     }
+    if (dirs == 0) return Stats(0, m.entries.size, 0, 0L, 0)
+    // record key envelopes for the compacted files so merges keep
+    // planning from the manifest (r12)
+    val newEntries = Snapshot.withKeyEnvs(spark, dd,
+      newEntries0.toSeq, dataSchema,
+      indexBy.filter(dataSchema.fieldNames.contains))
+    // a DV file drops only when every data file it APPLIES to
+    // (dataSeq < dvSeq) was rewritten with its fold applied —
+    // kept files at-or-above the DV's seq were never subject to
+    // it, so they don't pin the debt (an append-shaped upsert's
+    // batch file would otherwise keep every older tombstone alive
+    // until a forced full rewrite). Rewritten groups fold exactly
+    // their class's applicable set, so "rewritten ⇒ folded" holds
+    // per DV; legacy tombstones (seq=MaxValue, apply globally)
+    // still need kept to be empty.
+    val keptMinSeq = kept.map(_.seq).minOption.getOrElse(Long.MaxValue)
+    def droppable(e: Snapshot.Entry): Boolean = keptMinSeq >= e.seq
+    if (dvGroups.isDefined)
+      removedRels ++= keyDel.filter(droppable).map(_.rel)
+    val predEntryByRel = predDel.map(e => e.rel -> e).toMap
+    removedRels ++= predByFile.filter(_._3).map(_._1)
+      .filter(r => droppable(predEntryByRel(r)))
+    // OPTIMISTIC commit: a compaction racing an append/disjoint
+    // merge rebases (its rewritten files are still head members); a
+    // concurrent rewrite of the SAME files is a loud conflict
+    Snapshot.commitRebase(fs, root, baseV, removedRels.toSet,
+      newEntries, m.schemaDdl, m.partitionBy, keepVersions, note = note)
+    Stats(dirs, m.entries.size, compacted, bytes, newEntries.size)
   }
 
   /** Read-plan width bound: a snapshot read unions one branch per

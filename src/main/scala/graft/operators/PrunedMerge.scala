@@ -505,24 +505,14 @@ object PrunedMerge {
     val laid0 = merged.repartitionByRange(nOut, rangeKeys: _*)
     val laid = if (sortKeys.nonEmpty)
       laid0.sortWithinPartitions(sortKeys.map(col): _*) else laid0
-    val tmp = new Path(path + "._merge_tmp_" + System.nanoTime())
-    var w = laid.write.mode("overwrite")
-    if (t.maxRecordsPerFile > 0)
-      w = w.option("maxRecordsPerFile", t.maxRecordsPerFile.toString)
-    if (pcols.nonEmpty) w = w.partitionBy(pcols: _*)
-    try w.parquet(tmp.toString) catch {
-      case e: Throwable =>
-        try fs.delete(tmp, true) catch { case _: Throwable => () }
-        throw e
-    }
 
-    // snapshot layout: no in-place swap — move the rewritten files
-    // into the shared pool and COMMIT a manifest whose membership is
-    // (untouched by reference) ++ (new files). All-or-nothing at the
-    // marker create; prior generations keep reading their own
-    // manifests (time travel through an incremental merge), and the
-    // replaced files are reclaimed by the refcount vacuum once no
-    // retained manifest lists them.
+    // snapshot layout: no in-place swap — stage the rewritten files
+    // under the table root, move them into the shared pool and COMMIT
+    // a manifest whose membership is (untouched by reference) ++ (new
+    // files). All-or-nothing at the marker create; prior generations
+    // keep reading their own manifests (time travel through an
+    // incremental merge), and the replaced files are reclaimed by the
+    // refcount vacuum once no retained manifest lists them.
     snapCtx match {
       case Some((baseV, m, dd)) =>
         // DV compose under SEQUENCE semantics (r12): the base
@@ -536,23 +526,15 @@ object PrunedMerge {
         // same tombstones keep applying to them at read. The
         // merge-on-read debt is unchanged and remains compaction's
         // (`foldDeletesAbove`) to retire.
-        val newEntries0 =
-          try Snapshot.moveIntoPool(fs, tmp, dd)
-          finally { try fs.delete(tmp, true) catch { case _: Throwable => () } }
         // record key envelopes + row counts for the NEW files (one
         // footer pass over the touched fraction, paid here so future
         // merges plan from the manifest alone and metadata counts
         // keep working); untouched members keep theirs
         val envCols = (comps.collect { case (c, _, _: DataCol) => c } ++
           sortKeys).distinct
-        val statMap = footerKeyStats(spark,
-          newEntries0.map(e => (new Path(dd, e.rel).toString, e.bytes)),
+        val newEntries = Snapshot.withKeyEnvs(spark, dd,
+          Snapshot.stageIntoPool(fs, hPath, laid, pcols, t.maxRecordsPerFile),
           merged.schema, envCols)
-        val newEntries = newEntries0.map { e =>
-          val st = statMap.get(new Path(dd, e.rel).toString)
-          e.copy(envs = st.map(_._1).filter(_.nonEmpty),
-            rows = st.flatMap(_._2))
-        }
         // scheme-insensitive membership: listStatus returns qualified
         // paths (file:/…) while manifest entries are pool-relative
         val touchedRel = touched.map(e => relPath(dd, new Path(e.path))).toSet
@@ -630,6 +612,17 @@ object PrunedMerge {
       case None => ()
     }
 
+    // plain layout: write the rewrite to a sibling temp dir, then swap
+    val tmp = new Path(path + "._merge_tmp_" + System.nanoTime())
+    var w = laid.write.mode("overwrite")
+    if (t.maxRecordsPerFile > 0)
+      w = w.option("maxRecordsPerFile", t.maxRecordsPerFile.toString)
+    if (pcols.nonEmpty) w = w.partitionBy(pcols: _*)
+    try w.parquet(tmp.toString) catch {
+      case e: Throwable =>
+        try fs.delete(tmp, true) catch { case _: Throwable => () }
+        throw e
+    }
     // swap: move new files in (unique spark part names; uniquified
     // defensively), preserving their partition-relative paths, then
     // drop the replaced ones. Rename failures before any delete roll

@@ -810,7 +810,7 @@ object Snapshot {
     val (v, vdir) = resolveVersion(fs, root, at)
     val m = manifestAt(fs, vdir).getOrElse {
       // a retained dir-protocol version: its dir IS the data
-      return Resolver.readPlainParquet(spark, vdir.toString)
+      return spark.read.parquet(vdir.toString)
     }
     // stale-read fence (r12), HEAD reads only: frame CONSTRUCTION
     // eagerly checks member existence (and driver-reads predicate
@@ -1703,21 +1703,8 @@ object Snapshot {
     }: _*)
   }
 
-  /** Minimal Resolver hook — avoids a Resolver→operators compile cycle
-    * for the rare retained dir-protocol version.
-    */
-  private object Resolver {
-    def readPlainParquet(spark: SparkSession, p: String): DataFrame =
-      spark.read.parquet(p)
-  }
-
   // ── write path ───────────────────────────────────────────────────
 
-  /** Move every data file of a finished staging dir into the `_data`
-    * pool, preserving partition-relative paths; returns the new pool
-    * entries. Names collide only pathologically (Spark part names
-    * embed a UUID) — uniquified defensively like [[PrunedMerge]].
-    */
   /** The table root a pool dir belongs to (`_data` → parent;
     * `_data/_deletes` → grandparent).
     */
@@ -1727,8 +1714,71 @@ object Snapshot {
       dd.getParent.getParent
     else dd.getParent
 
-  private[operators] def moveIntoPool(fs: FileSystem, stage: Path,
-                                      dd: Path): Seq[Entry] = {
+  /** The one staging step of every snapshot writer: write the already
+    * laid-out `laid` to a fresh `._snap_stage_<uuid>` dir under `root`
+    * (a UUID, so concurrent writers never share — and `overwrite`-mode
+    * never deletes — a live stage), move its files into the pool
+    * through the journaled [[moveIntoPool]], and delete the stage dir
+    * on every exit. `subdir` places the output under a pool-relative
+    * dir (a compaction group's hive dir). `tombstoneCols` routes the
+    * files into `_data/_deletes` as tombstones over those columns.
+    * `admit` sees the finished stage before anything moves; false
+    * stages nothing and returns Nil. Callers add key envelopes
+    * ([[withKeyEnvs]]) and commit.
+    */
+  private[operators] def stageIntoPool(fs: FileSystem, root: Path,
+                                       laid: DataFrame,
+                                       partitionBy: Seq[String] = Nil,
+                                       maxRecordsPerFile: Long = 0,
+                                       subdir: String = "",
+                                       tombstoneCols: Option[Seq[String]] = None,
+                                       admit: Path => Boolean = _ => true): Seq[Entry] = {
+    val stage = new Path(root,
+      s"._snap_stage_${java.util.UUID.randomUUID().toString.replace("-", "")}")
+    try {
+      var w = laid.write.mode("overwrite")
+      if (partitionBy.nonEmpty) w = w.partitionBy(partitionBy: _*)
+      if (maxRecordsPerFile > 0)
+        w = w.option("maxRecordsPerFile", maxRecordsPerFile.toString)
+      w.parquet((if (subdir.isEmpty) stage else new Path(stage, subdir)).toString)
+      if (!admit(stage)) Nil
+      else {
+        val dd = dataDir(root)
+        val pool = if (tombstoneCols.isEmpty) dd else new Path(dd, DeletesDirName)
+        fs.mkdirs(pool)
+        val moved = moveIntoPool(fs, stage, pool)
+        tombstoneCols.fold(moved)(cs => moved.map(e =>
+          e.copy(rel = s"$DeletesDirName/${e.rel}", cols = Some(cs))))
+      }
+    } finally {
+      try fs.delete(stage, true) catch { case scala.util.control.NonFatal(_) => () }
+    }
+  }
+
+  /** The staging writers' prelude: sweep aged stages, then resolve the
+    * head manifest — a root without one fails as `<needs> a snapshot
+    * layout at <root>` (`needs` = "append needs", …). Returns (root,
+    * fs, head version, head manifest).
+    */
+  private def stagingHead(spark: SparkSession, rootStr: String, needs: String)
+      : (Path, FileSystem, Long, Manifest) = {
+    val root = new Path(rootStr)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    sweepStaleStages(fs, root)
+    val (baseV, vdir) = resolveVersion(fs, root, None)
+    val m = manifestAt(fs, vdir).getOrElse(throw new IllegalArgumentException(
+      s"$needs a snapshot layout at $rootStr"))
+    (root, fs, baseV, m)
+  }
+
+  /** Move every data file of a finished staging dir into the pool dir
+    * `dd` (`_data` or `_data/_deletes`), preserving partition-relative
+    * paths; returns the new pool entries. Names collide only
+    * pathologically (Spark part names embed a UUID) — uniquified
+    * defensively like [[PrunedMerge]].
+    */
+  private def moveIntoPool(fs: FileSystem, stage: Path,
+                           dd: Path): Seq[Entry] = {
     // plan every destination FIRST, then JOURNAL the planned pool
     // names, then move (r15 — incremental orphan tracking): a crash
     // mid-move leaves files the journal names, so the per-commit
@@ -1775,8 +1825,8 @@ object Snapshot {
     * new head. The loser must re-plan from the current head (re-read,
     * re-merge) — retrying the same commit verbatim would lose the
     * winner's update.
-    */
-  /** `retryableByAppend` (r12) marks the two conflict shapes a blind
+    *
+    * `retryableByAppend` (r12) marks the two conflict shapes a blind
     * replace-by-pk batch can absorb WITHOUT a re-plan by committing
     * through [[upsertAppend]] instead (the result equals the serial
     * winner-then-batch order a re-plan would compute): a concurrent
@@ -2330,22 +2380,6 @@ object Snapshot {
                                 keepVersions: Int,
                                 expectV: Long = -1L)
 
-  /** Stage a FULL-REPLACE of `rootStr` for a COMMIT GROUP (r15): write
-    * + pool the frame with the same layout knobs and manifest key
-    * envelopes as [[overwrite]], but return the staged participant
-    * instead of committing — a multi-table bootstrap (e.g. the CDC
-    * signature index's shingles + buckets) lands atomically through
-    * ONE [[commitGroup]] instead of two independent overwrite+commit
-    * cycles, and a crash can no longer leave one table rebuilt and
-    * its sibling stale. `baseV == -1` marks a FRESH table (first
-    * commit); otherwise `removedRels` carries the staging-time head's
-    * full membership (replace semantics — a head that moves before
-    * the group commits is arbitrated as a conflict under the lock).
-    * NOTE: unlike [[overwrite]], a replace through the group's delta
-    * path merges schemas BY NAME with the head (it cannot clear
-    * aliases/dropped markers) — callers changing a table's shape keep
-    * using [[overwrite]].
-    */
   /** Range-lay `df` on `sortKeys` for tight per-file key envelopes.
     * SMALL frames (plan-stats size estimate ≤ 8 MB — r16, the cdc-gate
     * job audit) collapse to ONE sorted task: the range partitioner's
@@ -2414,13 +2448,51 @@ object Snapshot {
     */
   private[operators] val ManyFileThreshold = 8
 
+  /** Stage a FULL-REPLACE of `rootStr` for a COMMIT GROUP (r15): write
+    * + pool the frame with the same layout knobs and manifest key
+    * envelopes as [[overwrite]], but return the staged participant
+    * instead of committing — a multi-table bootstrap (e.g. the CDC
+    * signature index's shingles + buckets) lands atomically through
+    * ONE [[commitGroup]] instead of two independent overwrite+commit
+    * cycles, and a crash can no longer leave one table rebuilt and
+    * its sibling stale. `baseV == -1` marks a FRESH table (first
+    * commit); otherwise `removedRels` carries the staging-time head's
+    * full membership (replace semantics — a head that moves before
+    * the group commits is arbitrated as a conflict under the lock).
+    * NOTE: unlike [[overwrite]], a replace through the group's delta
+    * path merges schemas BY NAME with the head (it cannot clear
+    * aliases/dropped markers) — callers changing a table's shape keep
+    * using [[overwrite]].
+    */
   private[graft] def stageOverwrite(spark: SparkSession, df: DataFrame,
                                     rootStr: String,
                                     partitionBy: Seq[String] = Nil,
                                     maxRecordsPerFile: Long = 0,
                                     indexBy: Seq[String] = Nil,
                                     keepVersions: Int = 2,
-                                    statsCols: Seq[String] = Nil): StagedCommit =
+                                    statsCols: Seq[String] = Nil): StagedCommit = {
+    val staged = stageReplace(spark, df, rootStr, partitionBy,
+      maxRecordsPerFile, indexBy, keepVersions, statsCols, None)
+    val root = new Path(rootStr)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    committed(fs, root).lastOption match {
+      case Some((hv, hdir)) =>
+        staged.copy(baseV = hv, removedRels = manifestAt(fs, hdir)
+          .map(_.entries.map(_.rel).toSet).getOrElse(Set.empty[String]))
+      case None => staged
+    }
+  }
+
+  /** The staging half shared by [[overwrite]] and [[stageOverwrite]]:
+    * range-lay `df` on `indexBy`, stage it into the pool with key
+    * envelopes for the layout keys plus `statsCols`, and return it as
+    * a fresh-table participant (`baseV = -1`, nothing removed).
+    */
+  private def stageReplace(spark: SparkSession, df: DataFrame, rootStr: String,
+                           partitionBy: Seq[String], maxRecordsPerFile: Long,
+                           indexBy: Seq[String], keepVersions: Int,
+                           statsCols: Seq[String],
+                           rowsHint: Option[Long]): StagedCommit =
       // metadata-scale profile (r17): a KB-scale staged write runs with
       // AQE off + 1-partition shuffles — the job profile the r16 gate
       // scoped by hand now comes with the entry point. PARTITIONED
@@ -2431,33 +2503,19 @@ object Snapshot {
     val root = new Path(rootStr)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     sweepStaleStages(fs, root)
-    val schemaDdl = org.apache.spark.sql.types.StructType(
+    // parquet reads are all-nullable regardless of writer schema —
+    // record the normalized form so round-trips compare equal
+    val schemaDdl = StructType(
       df.schema.fields.map(_.copy(nullable = true))).toDDL
     val sortKeys = indexBy.filterNot(partitionBy.contains)
-    val laid0 = sortedLayout(df, sortKeys, partitionBy.nonEmpty)
-    val stage = new Path(root, s"._snap_stage_${System.nanoTime()}")
-    var w = laid0.write.mode("overwrite")
-    if (partitionBy.nonEmpty) w = w.partitionBy(partitionBy: _*)
-    if (maxRecordsPerFile > 0)
-      w = w.option("maxRecordsPerFile", maxRecordsPerFile.toString)
-    try w.parquet(stage.toString) catch {
-      case e: Throwable =>
-        try fs.delete(stage, true) catch { case _: Throwable => () }
-        throw e
-    }
-    val dd = dataDir(root)
-    fs.mkdirs(dd)
-    val entries = withKeyEnvs(spark, dd,
-      moveIntoPool(fs, stage, dd), df.schema,
+    val laid = sortedLayout(df, sortKeys, partitionBy.nonEmpty,
+      manyFileParts(spark, rowsHint, maxRecordsPerFile))
+    // key envelopes for the layout keys — `statsCols` covers callers
+    // that pre-laid the frame themselves and pass indexBy = Nil
+    val entries = withKeyEnvs(spark, dataDir(root),
+      stageIntoPool(fs, root, laid, partitionBy, maxRecordsPerFile), df.schema,
       (sortKeys ++ statsCols).distinct.filterNot(partitionBy.contains))
-    fs.delete(stage, true)
-    val (baseV, removed) = committed(fs, root).lastOption match {
-      case Some((hv, hdir)) =>
-        (hv, manifestAt(fs, hdir).map(_.entries.map(_.rel).toSet)
-          .getOrElse(Set.empty[String]))
-      case None => (-1L, Set.empty[String])
-    }
-    StagedCommit(rootStr, baseV, removed, entries, schemaDdl, partitionBy,
+    StagedCommit(rootStr, -1L, Set.empty, entries, schemaDdl, partitionBy,
       keepVersions)
   }
 
@@ -3008,41 +3066,12 @@ object Snapshot {
                 indexBy: Seq[String] = Nil,
                 keepVersions: Int = 2,
                 statsCols: Seq[String] = Nil,
-                rowsHint: Option[Long] = None): Unit =
-      // metadata-scale profile (r17) — see [[MaintProfile]];
-      // partitioned writes never engage (one-task pin)
-      MaintProfile.scoped(spark,
-        MaintProfile.small(df) && partitionBy.isEmpty) {
+                rowsHint: Option[Long] = None): Unit = {
+    val staged = stageReplace(spark, df, rootStr, partitionBy,
+      maxRecordsPerFile, indexBy, keepVersions, statsCols, rowsHint)
     val root = new Path(rootStr)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    sweepStaleStages(fs, root)
-    // parquet reads are all-nullable regardless of writer schema —
-    // record the normalized form so round-trips compare equal
-    val schemaDdl = org.apache.spark.sql.types.StructType(
-      df.schema.fields.map(_.copy(nullable = true))).toDDL
-    val sortKeys = indexBy.filterNot(partitionBy.contains)
-    val laid0 = sortedLayout(df, sortKeys, partitionBy.nonEmpty,
-      manyFileParts(spark, rowsHint, maxRecordsPerFile))
-    val stage = new Path(root, s"._snap_stage_${System.nanoTime()}")
-    var w = laid0.write.mode("overwrite")
-    if (partitionBy.nonEmpty) w = w.partitionBy(partitionBy: _*)
-    if (maxRecordsPerFile > 0)
-      w = w.option("maxRecordsPerFile", maxRecordsPerFile.toString)
-    try w.parquet(stage.toString) catch {
-      case e: Throwable =>
-        try fs.delete(stage, true) catch { case _: Throwable => () }
-        throw e
-    }
-    val dd = dataDir(root)
-    fs.mkdirs(dd)
-    // key envelopes for the layout keys — `statsCols` covers callers
-    // that pre-laid the frame themselves and pass indexBy = Nil
-    val entries = withKeyEnvs(spark, dd,
-      moveIntoPool(fs, stage, dd), df.schema,
-      (sortKeys ++ statsCols).distinct.filterNot(partitionBy.contains))
-    fs.delete(stage, true)
-    commitVersion(fs, root, Manifest(schemaDdl, partitionBy, entries),
-      keepVersions)
+    commitVersion(root.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      root, Manifest(staged.schemaDdl, partitionBy, staged.added), keepVersions)
   }
 
   /** Attach manifest key envelopes ([[ColEnv]]) for `cols` AND per-file
@@ -3101,29 +3130,22 @@ object Snapshot {
     * participant can batch it with other changes into one commit.
     * Returns (resolve-time base version, base manifest, pool entries,
     * distinct key count).
-    */
-  /** The key count comes from the STAGED files' parquet footers
+    *
+    * The key count comes from the STAGED files' parquet footers
     * (r16 — driver-side, zero Spark jobs; the write just produced
     * them, so the footers are page-warm): the staged rows are the
     * batch's distinct key tuples, so footer row counts ARE the count.
     * An EMPTY key set stages nothing (no empty tombstone member ever
-    * enters the pool) and returns Nil entries. `needCount` is kept
-    * for source compatibility; the count is free now, so it is
-    * always returned.
+    * enters the pool) and returns Nil entries.
     */
   private[graft] def stageDeleteKeys(spark: SparkSession, rootStr: String,
-                                     keys: DataFrame,
-                                     needCount: Boolean = true)
+                                     keys: DataFrame)
       : (Long, Manifest, Seq[Entry], Long) =
       // metadata-scale profile (r17): a small key batch's distinct +
       // write runs AQE-off/1-partition — see [[MaintProfile]]
       MaintProfile.scoped(spark, MaintProfile.small(keys)) {
-    val root = new Path(rootStr)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    sweepStaleStages(fs, root)
-    val (baseV, vdir) = resolveVersion(fs, root, None)
-    val m = manifestAt(fs, vdir).getOrElse(throw new IllegalArgumentException(
-      s"deletion vectors need a snapshot layout at $rootStr"))
+    val (root, fs, baseV, m) =
+      stagingHead(spark, rootStr, "deletion vectors need")
     val schemaCols = m.schema.fieldNames.toSet
     require(keys.columns.nonEmpty && keys.columns.forall(schemaCols.contains),
       s"tombstone columns ${keys.columns.toSeq} must be a subset of the " +
@@ -3132,34 +3154,23 @@ object Snapshot {
     // batch against an int column must compare as the column's type)
     val typed = keys.select(keys.columns.toIndexedSeq.map(c =>
       col(c).cast(m.schema(c).dataType).as(c)): _*).distinct()
-    val stage = new Path(root, s"._snap_stage_${System.nanoTime()}")
-    try typed.write.parquet(stage.toString) catch {
-      case e: Throwable =>
-        try fs.delete(stage, true) catch { case _: Throwable => () }
-        throw e
-    }
-    // count from the staged footers (driver-side, no job); a footer
-    // that won't read falls back to the one count job it used to pay
-    val staged = listDataFilesRec(fs, stage)
-    val stats = PrunedMerge.footerKeyStats(spark,
-      staged.map(f => (f._1.toString, f._2)), typed.schema, Nil)
-    val rowsOpt = staged.map(f => stats.get(f._1.toString).flatMap(_._2))
-    val n =
-      if (rowsOpt.forall(_.isDefined)) rowsOpt.flatten.sum
-      else spark.read.parquet(stage.toString).count()
-    if (n == 0L) {
-      // an empty key set tombstones nothing — stage no member at all
-      try fs.delete(stage, true) catch { case scala.util.control.NonFatal(_) => () }
-      return (baseV, m, Nil, 0L)
-    }
-    val delDir = new Path(dataDir(root), DeletesDirName)
-    fs.mkdirs(delDir)
+    var n = 0L
     // record the tombstone's key-column set in the manifest entry so
     // reads group DV files without a per-file schema probe
-    val moved = moveIntoPool(fs, stage, delDir)
-      .map(e => e.copy(rel = s"$DeletesDirName/${e.rel}",
-        cols = Some(typed.columns.toSeq)))
-    fs.delete(stage, true)
+    val moved = stageIntoPool(fs, root, typed,
+      tombstoneCols = Some(typed.columns.toSeq), admit = { stage =>
+        // count from the staged footers (driver-side, no job); a footer
+        // that won't read falls back to the one count job it used to pay
+        val staged = listDataFilesRec(fs, stage)
+        val stats = PrunedMerge.footerKeyStats(spark,
+          staged.map(f => (f._1.toString, f._2)), typed.schema, Nil)
+        val rowsOpt = staged.map(f => stats.get(f._1.toString).flatMap(_._2))
+        n =
+          if (rowsOpt.forall(_.isDefined)) rowsOpt.flatten.sum
+          else spark.read.parquet(stage.toString).count()
+        // an empty key set tombstones nothing — stage no member at all
+        n > 0
+      })
     (baseV, m, moved, n)
   }
 
@@ -3181,12 +3192,7 @@ object Snapshot {
                   maxRecordsPerFile: Long = 0): Long =
       // metadata-scale profile (r17) — see [[MaintProfile]]
       MaintProfile.scoped(spark, MaintProfile.small(batch)) {
-    val root = new Path(rootStr)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    sweepStaleStages(fs, root)
-    val (baseV, vdir) = resolveVersion(fs, root, None)
-    val m = manifestAt(fs, vdir).getOrElse(throw new IllegalArgumentException(
-      s"append needs a snapshot layout at $rootStr"))
+    val (root, fs, baseV, m) = stagingHead(spark, rootStr, "append needs")
     val names = m.schema.fieldNames.toSeq
     require(batch.columns.toSet == names.toSet,
       s"batch columns ${batch.columns.sorted.toSeq} must equal the table " +
@@ -3217,23 +3223,11 @@ object Snapshot {
       if (statKeys.nonEmpty)
         typed.sortWithinPartitions(statKeys.map(col).toIndexedSeq: _*)
       else typed
-    val stage = new Path(root, s"._snap_stage_${System.nanoTime()}")
-    var w = laid.write.mode("overwrite")
-    if (m.partitionBy.nonEmpty) w = w.partitionBy(m.partitionBy: _*)
-    if (maxRecordsPerFile > 0)
-      w = w.option("maxRecordsPerFile", maxRecordsPerFile.toString)
-    try w.parquet(stage.toString) catch {
-      case e: Throwable =>
-        try fs.delete(stage, true) catch { case _: Throwable => () }
-        throw e
-    }
-    val dd = dataDir(root)
-    fs.mkdirs(dd)
     val dataSchema = StructType(
       m.schema.fields.filterNot(f => m.partitionBy.contains(f.name)))
-    val entries = withKeyEnvs(spark, dd, moveIntoPool(fs, stage, dd),
+    val entries = withKeyEnvs(spark, dataDir(root),
+      stageIntoPool(fs, root, laid, m.partitionBy, maxRecordsPerFile),
       dataSchema, statKeys)
-    fs.delete(stage, true)
     if (entries.isEmpty) return baseV // empty batch: nothing to commit
     appendRaceHook() // test hook: a concurrent engine commit lands HERE
     commitRebase(fs, root, baseV, Set.empty, entries, m.schemaDdl,
@@ -3326,12 +3320,8 @@ object Snapshot {
     */
   def deleteByPredicate(spark: SparkSession, rootStr: String, predSql: String,
                         keepVersions: Int = 2): Long = {
-    val root = new Path(rootStr)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    sweepStaleStages(fs, root)
-    val (baseV, vdir) = resolveVersion(fs, root, None)
-    val m = manifestAt(fs, vdir).getOrElse(throw new IllegalArgumentException(
-      s"deletion vectors need a snapshot layout at $rootStr"))
+    val (root, fs, baseV, m) =
+      stagingHead(spark, rootStr, "deletion vectors need")
     require(predSql.trim.nonEmpty, "empty delete predicate")
     // analyze against the recorded schema (throws AnalysisException on
     // unknown columns / type errors), then audit the RESOLVED tree
@@ -3356,22 +3346,12 @@ object Snapshot {
         case _ => ()
       }
     }
-    val stage = new Path(root, s"._snap_stage_${System.nanoTime()}")
     val frame = spark.createDataFrame(
       java.util.Collections.singletonList(Row(predSql)),
       StructType(Seq(org.apache.spark.sql.types.StructField(
         PredColName, org.apache.spark.sql.types.StringType, nullable = false))))
-    try frame.coalesce(1).write.parquet(stage.toString) catch {
-      case e: Throwable =>
-        try fs.delete(stage, true) catch { case _: Throwable => () }
-        throw e
-    }
-    val delDir = new Path(dataDir(root), DeletesDirName)
-    fs.mkdirs(delDir)
-    val moved = moveIntoPool(fs, stage, delDir)
-      .map(e => e.copy(rel = s"$DeletesDirName/${e.rel}",
-        cols = Some(Seq(PredColName))))
-    fs.delete(stage, true)
+    val moved = stageIntoPool(fs, root, frame.coalesce(1),
+      tombstoneCols = Some(Seq(PredColName)))
     // rebase with nothing removed: like a key tombstone, a predicate
     // delete composes with any concurrent commit (it applies to
     // whatever rows the new head holds — delete-after-X order)
@@ -3440,12 +3420,8 @@ object Snapshot {
       // runs AQE-off/1-partition — see [[MaintProfile]]. The hint is
       // the same one the small-batch staging fold below consumes.
       MaintProfile.scoped(spark, MaintProfile.small(batch, sizeHint)) {
-    val root = new Path(rootStr)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    sweepStaleStages(fs, root)
-    val (baseV, vdir) = resolveVersion(fs, root, None)
-    val m = manifestAt(fs, vdir).getOrElse(throw new IllegalArgumentException(
-      s"append-shaped upsert needs a snapshot layout at $rootStr"))
+    val (root, fs, baseV, m) =
+      stagingHead(spark, rootStr, "append-shaped upsert needs")
     val names = m.schema.fieldNames.toSeq
     require(pk.nonEmpty && pk.forall(names.contains),
       s"append-shaped upsert needs a pk within the schema, got $pk")
@@ -3498,24 +3474,15 @@ object Snapshot {
             sortKeys.map(col).toIndexedSeq: _*)
           .sortWithinPartitions(sortKeys.map(col).toIndexedSeq: _*)
       else typed
-    val stage = new Path(root, s"._snap_stage_${System.nanoTime()}")
-    var w = laid.write.mode("overwrite")
-    if (m.partitionBy.nonEmpty) w = w.partitionBy(m.partitionBy: _*)
-    if (maxRecordsPerFile > 0)
-      w = w.option("maxRecordsPerFile", maxRecordsPerFile.toString)
-    try w.parquet(stage.toString) catch {
-      case e: Throwable =>
-        try fs.delete(stage, true) catch { case _: Throwable => () }
-        throw e
-    }
     val dd = dataDir(root)
-    fs.mkdirs(dd)
     val dataSchema = StructType(
       m.schema.fields.filterNot(f => m.partitionBy.contains(f.name)))
-    val dataEntries = withKeyEnvs(spark, dd, moveIntoPool(fs, stage, dd),
+    val dataEntries = withKeyEnvs(spark, dd,
+      stageIntoPool(fs, root, laid, m.partitionBy, maxRecordsPerFile),
       dataSchema,
       (sortKeys ++ pk).distinct.filterNot(m.partitionBy.contains))
-    fs.delete(stage, true)
+    def dropDataEntries(): Unit = dataEntries.foreach(en =>
+      try fs.delete(new Path(dd, en.rel), false) catch { case _: Throwable => () })
     val nKeys =
       if (!small) nKeysUp
       else {
@@ -3526,8 +3493,7 @@ object Snapshot {
           dataEntries.map(e => new Path(dd, e.rel).toString): _*).count()
       }
     if (nKeys == 0) {
-      dataEntries.foreach(en =>
-        try fs.delete(new Path(dd, en.rel), false) catch { case _: Throwable => () })
+      dropDataEntries()
       return None
     }
     // the batch-key tombstone — full pk, so future pruned merges keep
@@ -3542,24 +3508,13 @@ object Snapshot {
         r.parquet(dataEntries.map(e => new Path(dd, e.rel).toString): _*)
           .select(pk.map(c => col(c).cast(m.schema(c).dataType).as(c)): _*)
       } else keys
-    val dvStage = new Path(root, s"._snap_stage_${System.nanoTime()}")
     // one tombstone file per ~20M keys: single-writer up to huge
     // batches, parallel beyond
-    try keySrc.coalesce(math.max(1L, nKeys / 20000000L).toInt)
-      .write.parquet(dvStage.toString) catch {
-      case e: Throwable =>
-        try fs.delete(dvStage, true) catch { case _: Throwable => () }
-        dataEntries.foreach(en =>
-          try fs.delete(new Path(dd, en.rel), false)
-          catch { case _: Throwable => () })
-        throw e
-    }
-    val delDir = new Path(dd, DeletesDirName)
-    fs.mkdirs(delDir)
-    val delEntries = moveIntoPool(fs, dvStage, delDir)
-      .map(e => e.copy(rel = s"$DeletesDirName/${e.rel}",
-        cols = Some(pk)))
-    fs.delete(dvStage, true)
+    val delEntries =
+      try stageIntoPool(fs, root,
+        keySrc.coalesce(math.max(1L, nKeys / 20000000L).toInt),
+        tombstoneCols = Some(pk))
+      catch { case e: Throwable => dropDataEntries(); throw e }
     Some((baseV, m, dataEntries ++ delEntries, nKeys))
   }
 
@@ -3840,21 +3795,9 @@ object Snapshot {
         df.repartitionByRange(sortKeys.map(col).toIndexedSeq: _*)
           .sortWithinPartitions(sortKeys.map(col).toIndexedSeq: _*)
       else df
-    val stage = new Path(root, s"._snap_stage_${System.nanoTime()}")
-    var w = laid.write.mode("overwrite")
-    if (m.partitionBy.nonEmpty) w = w.partitionBy(m.partitionBy: _*)
-    if (maxRecordsPerFile > 0)
-      w = w.option("maxRecordsPerFile", maxRecordsPerFile.toString)
-    try w.parquet(stage.toString) catch {
-      case e: Throwable =>
-        try fs.delete(stage, true) catch { case _: Throwable => () }
-        throw e
-    }
-    val dd = dataDir(root)
-    fs.mkdirs(dd)
-    val entries = withKeyEnvs(spark, dd, moveIntoPool(fs, stage, dd),
+    val entries = withKeyEnvs(spark, dataDir(root),
+      stageIntoPool(fs, root, laid, m.partitionBy, maxRecordsPerFile),
       df.schema, sortKeys)
-    fs.delete(stage, true)
     commitRebase(fs, root, baseV, m.entries.map(_.rel).toSet, entries,
       m.schemaDdl, m.partitionBy, keepVersions)
     true

@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.{MaintProfile, Snapshot, WriteOps}
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** The metadata-scale execution profile (r17, verdict #1): the
   * AQE-off + single-partition-shuffle scoping the r16 bench gate
@@ -115,7 +114,7 @@ class MaintProfileSpec extends SparkSpec {
     * jobs it fired (each job named by its stages).
     */
   private def pipelineJobs(tag: String, wrapped: Boolean): Seq[String] = {
-    val dir = Files.createTempDirectory(s"maintprof_$tag").toString
+    val dir = tempDir(s"maintprof_$tag")
     val p = s"$dir/docs.parquet"
     val docs = (0L until 120L)
       .map(i => (i, s"shared prefix token stream number $i tail words"))

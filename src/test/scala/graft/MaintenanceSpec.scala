@@ -12,11 +12,8 @@ import org.apache.spark.sql.functions._
 class MaintenanceSpec extends SparkSpec {
   import spark.implicits._
 
-  private def freshDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   test("soak: append-upsert load under the hook keeps debt bounded, content exact, decisions audited") {
-    val dir = freshDir("maint_soak")
+    val dir = tempDir("maint_soak")
     val p = s"$dir/t.parquet"
     val expect = scala.collection.mutable.Map.empty[Long, String]
     (0L until 200L).foreach(i => expect(i) = s"v0_$i")
@@ -62,7 +59,7 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("under-ceiling commits trigger nothing; non-snapshot layouts measure None") {
-    val dir = freshDir("maint_idle")
+    val dir = tempDir("maint_idle")
     val p = s"$dir/t.parquet"
     WriteOps.atomicOverwrite(spark,
       (0L until 100L).map(i => (i, s"v$i")).toDF("id", "txt"), p,

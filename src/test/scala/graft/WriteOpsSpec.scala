@@ -109,7 +109,7 @@ class WriteOpsSpec extends SparkSpec {
   }
 
   test("O6 indexBy lays files out range-partitioned + sorted (pruning stats)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx").toString
+    val dir = tempDir("graft_idx")
     val df = sf("lineitem")
     // sf0.001 is small enough that AQE folds the range shuffle into one
     // partition (the right call at scale); pin it off to see the layout
@@ -141,7 +141,7 @@ class WriteOpsSpec extends SparkSpec {
 
   test("versioned commit: atomic marker, generation retention, reader resolution") {
     import graft.operators.Versioned
-    val dir = java.nio.file.Files.createTempDirectory("graft_vc").toString
+    val dir = tempDir("graft_vc")
     val path = s"$dir/t.parquet"
     def write(tag: String) = WriteOps.atomicOverwrite(spark,
       Seq((1L, tag)).toDF("id", "tag"), path, commitMode = "versioned")
@@ -166,7 +166,7 @@ class WriteOpsSpec extends SparkSpec {
   }
 
   test("versioned commit honors --keep-versions retention depth for time travel") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_vkeep").toString
+    val dir = tempDir("graft_vkeep")
     val path = s"$dir/t.parquet"
     def write(tag: String) = WriteOps.atomicOverwrite(spark,
       Seq((1L, tag)).toDF("id", "tag"), path,
@@ -184,7 +184,7 @@ class WriteOpsSpec extends SparkSpec {
   }
 
   test("--at-timestamp resolves on the dir-protocol versioned layout too") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_vts").toString
+    val dir = tempDir("graft_vts")
     val path = s"$dir/t.parquet"
     def write(tag: String) = WriteOps.atomicOverwrite(spark,
       Seq((1L, tag)).toDF("id", "tag"), path,
@@ -202,7 +202,7 @@ class WriteOpsSpec extends SparkSpec {
   }
 
   test("versioned commit: a reader holding the previous snapshot survives a concurrent commit") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_vc2").toString
+    val dir = tempDir("graft_vc2")
     val path = s"$dir/t.parquet"
     val v1 = Seq((1L, "a"), (2L, "b")).toDF("id", "tag")
     WriteOps.atomicOverwrite(spark, v1, path, commitMode = "versioned")
@@ -221,7 +221,7 @@ class WriteOpsSpec extends SparkSpec {
 
   test("partition-scoped rewrite: untouched partition dirs stay byte-identical; emptied ones vanish") {
     import graft.spec._
-    val dir = java.nio.file.Files.createTempDirectory("graft_psr").toString
+    val dir = tempDir("graft_psr")
     val tgtPath = s"$dir/t.parquet"
     val seed = Seq((1L, "a", 10.0), (2L, "a", 20.0), (3L, "b", 30.0), (4L, "c", 40.0))
       .toDF("id", "part", "price")
@@ -264,7 +264,7 @@ class WriteOpsSpec extends SparkSpec {
   }
 
   test("versioned layout is sticky: a later rename-mode write still commits a version") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_vst").toString
+    val dir = tempDir("graft_vst")
     val path = s"$dir/t.parquet"
     WriteOps.atomicOverwrite(spark, Seq((1L, "v1")).toDF("id", "tag"),
       path, commitMode = "versioned")
@@ -279,7 +279,7 @@ class WriteOpsSpec extends SparkSpec {
 
   test("partition-scoped rewrite declines timestamp partition columns (path rendering)") {
     import graft.spec._
-    val dir = java.nio.file.Files.createTempDirectory("graft_pts").toString
+    val dir = tempDir("graft_pts")
     val path = s"$dir/t.parquet"
     val seed = Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 1.0))
       .toDF("id", "ts", "v")
@@ -311,7 +311,7 @@ class WriteOpsSpec extends SparkSpec {
     val rnd = new scala.util.Random(7) // deterministic
     for (op <- Seq(WriteOp.Upsert, WriteOp.Delete, WriteOp.Insert, WriteOp.Update);
          trial <- 1 to 2) {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_psp").toString
+      val dir = tempDir("graft_psp")
       val parts = Seq("a", "b", "c", "d")
       def randRows(n: Int, idBase: Int) = (1 to n).map { i =>
         (idBase + rnd.nextInt(30).toLong, parts(rnd.nextInt(parts.size)),

@@ -36,7 +36,7 @@ class ZOrderSpec extends SparkSpec {
       .select((col("id") / 64).cast("long").as("a"),
         pmod(col("id"), lit(64L)).cast("long").as("b"),
         col("id").as("payload"))
-    val tmp = java.nio.file.Files.createTempDirectory("zorder").toString
+    val tmp = tempDir("zorder")
     val zPath = s"$tmp/z"; val aPath = s"$tmp/a"
     ZOrder.zorderWrite(grid, Seq("a", "b"), zPath, numFiles = 8, bits = 6)
     grid.repartitionByRange(8, col("a")).sortWithinPartitions("a")
@@ -125,7 +125,7 @@ class ZOrderSpec extends SparkSpec {
         Seq(col("__kp__"), col("id")),
         Seq(b.getLong(0), 0L), Seq(b.getLong(1), 399L), bits = 8))
       .select("id", "k", "zval")
-    val tmp = java.nio.file.Files.createTempDirectory("zstr").toString
+    val tmp = tempDir("zstr")
     val p = s"$tmp/t.parquet"
     Snapshot.overwrite(spark, zed, p, indexBy = Seq("zval"),
       maxRecordsPerFile = 25, statsCols = Seq("k", "id"))
