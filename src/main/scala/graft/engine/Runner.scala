@@ -28,9 +28,15 @@ object Runner {
     * Filtered → files wholly inside the predicate contribute their
     * recorded counts, provably-outside files contribute nothing, and
     * ONLY the boundary files scan, with the full compiled predicate
-    * applied exactly ([[Planner.mergeBoundary]]). Whenever metadata
-    * can't decide ([[Planner.metadataInputs]] or the plan declines),
-    * the exact scan counts instead.
+    * applied exactly ([[Planner.mergeBoundary]]).
+    *
+    * FOOTER count: an unfiltered, unpinned count whose read is a bare
+    * parquet scan (a plain or hive-partitioned dir, through
+    * [[Resolver.readPlain]]) sums the footer row counts of the files
+    * that scan would read ([[footerCount]]) — zero Spark jobs below
+    * the distributed-footer threshold. Everything else — a filter, a
+    * `_version` pin, csv/json/orc, a read that is not a bare scan, an
+    * unreadable footer — counts with the exact scan.
     */
   def count(spark: SparkSession, s: SourceSpec,
             failOnError: Boolean = true): Long = {
@@ -44,11 +50,39 @@ object Runner {
       // prunable conjuncts steer envelope file skipping for free
       val raw = Resolver.read(spark, s.ref, failOnError = failOnError,
         query = s.query)
-      QueryCompiler.compile(raw, s.query).predicates
-        .foldLeft(raw)(_ filter _).count()
+      val preds = QueryCompiler.compile(raw, s.query).predicates
+      val pinned = s.query.exists(kv => kv._1 == "_version" || kv._1 == "_version_ts")
+      (if (preds.isEmpty && !pinned) footerCount(spark, raw) else None)
+        .getOrElse(preds.foldLeft(raw)(_ filter _).count())
     }
     s.query.collectFirst { case ("_limit", v) => v.trim.toInt }
       .fold(total)(l => math.min(l.toLong, total))
+  }
+
+  /** Exact row count of a BARE parquet scan — a parquet file relation
+    * under at most projections, so no row is filtered or made — from
+    * the footers of the files its own file index lists (hive
+    * partitions, hidden files and `_SUCCESS` exactly as the scan sees
+    * them), through [[graft.operators.Snapshot.footerRowCount]]. None
+    * for any other plan or an unreadable footer.
+    */
+  private def footerCount(spark: SparkSession, df: DataFrame): Option[Long] = {
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    def scan(p: LogicalPlan): Option[HadoopFsRelation] = p match {
+      case Project(_, child) => scan(child)
+      case l: LogicalRelation => l.relation match {
+        case r: HadoopFsRelation if r.fileFormat.isInstanceOf[ParquetFileFormat] => Some(r)
+        case _ => None
+      }
+      case _ => None
+    }
+    scan(df.queryExecution.analyzed).flatMap { r =>
+      graft.operators.Snapshot.footerRowCount(spark,
+        r.location.listFiles(Nil, Nil).flatMap(_.files)
+          .map(f => (f.getPath.toString, f.getLen)))
+    }
   }
 
   private val CountAll = Seq("count" -> "*")
@@ -132,7 +166,7 @@ object Runner {
         // in one plan, which double-fires the CollectMetrics node.)
         val tgtPath = Resolver.path(t.ref)
         val stagePath = new org.apache.hadoop.fs.Path(
-          tgtPath + "._stage_" + System.nanoTime())
+          tgtPath + "._stage_" + java.util.UUID.randomUUID())
         val fs = stagePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
         // sweep stale staging/temp dirs a crashed prior run left next
         // to the target (single-writer model: anything matching is
@@ -142,7 +176,8 @@ object Runner {
           (if (t.skipTimestamp) planned
            else planned.withColumn("_etl_ts", current_timestamp()))
             .write.parquet(stagePath.toString)
-          val batch = spark.read.parquet(stagePath.toString)
+          // schema from the stage's own footer, not an inference job
+          val batch = Resolver.readPlain(spark, stagePath.toString)
           // `written` = rows processed from the source batch this run —
           // NOT the post-op target total (an upsert of 10 rows into a
           // 1M table writes 10, and loop/fan-out sums must not
@@ -151,8 +186,7 @@ object Runner {
           // driver-side, zero jobs, page-warm (the write just produced
           // them); bit-identical to the count job it replaces, which
           // remains the fallback for an unreadable footer.
-          val written = graft.operators.Snapshot
-            .footerRowCount(spark, stagePath).getOrElse(batch.count())
+          val written = footerCount(spark, batch).getOrElse(batch.count())
           // Keyed writes into an existing parquet target take the
           // FILE-PRUNED merge when footer envelopes allow it — only
           // pk-intersecting files are rewritten (at 100 TB a small

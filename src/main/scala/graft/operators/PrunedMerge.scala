@@ -613,7 +613,7 @@ object PrunedMerge {
     }
 
     // plain layout: write the rewrite to a sibling temp dir, then swap
-    val tmp = new Path(path + "._merge_tmp_" + System.nanoTime())
+    val tmp = new Path(path + "._merge_tmp_" + java.util.UUID.randomUUID())
     var w = laid.write.mode("overwrite")
     if (t.maxRecordsPerFile > 0)
       w = w.option("maxRecordsPerFile", t.maxRecordsPerFile.toString)

@@ -87,8 +87,8 @@ object Snapshot {
     * path (at 100k files the footer sweep was a distributed metadata
     * job per merge; the manifest line is free). Pool files are
     * immutable, so an envelope is valid for the file's lifetime.
-    */
-  /** `bmin`/`bmax` (r16 — STRING/bytes-domain envelopes, the Iceberg
+    *
+    * `bmin`/`bmax` (r16 — STRING/bytes-domain envelopes, the Iceberg
     * truncate-16 analog): lowercase-hex encodings of TRUNCATED byte
     * bounds for string columns. `bmin` is the first ≤16 UTF-8 bytes of
     * the file's minimum (a prefix is never greater, so it stays a
@@ -193,8 +193,8 @@ object Snapshot {
     * manifests that predate the field normalize to the pre-seq global
     * semantics: data → 0 (oldest), tombstones → Long.MaxValue (apply
     * to everything).
-    */
-  /** `rows` (r16 — metadata-only counts, the Iceberg/Delta `count(*)`
+    *
+    * `rows` (r16 — metadata-only counts, the Iceberg/Delta `count(*)`
     * fast path): the file's row count, recorded by the writer's
     * existing footer pass ([[withKeyEnvs]] — the footer is already
     * open for envelopes, the count is free). An unfiltered `_count`
@@ -217,8 +217,8 @@ object Snapshot {
     * against; None on manifests written before it was recorded, which
     * fall back to the `_COMMITTED` marker's filesystem mtime (fragile
     * across copies/restores — the reason the instant is now persisted).
-    */
-  /** `aliases` (r12 — COLUMN RENAME support, the Delta column-mapping
+    *
+    * `aliases` (r12 — COLUMN RENAME support, the Delta column-mapping
     * analog): ordered pairs `physicalOld → logicalCurrent` recorded by
     * [[renameColumn]]. A rename is a METADATA-ONLY commit — pool files
     * keep their write-time physical column names forever, and reads
@@ -228,8 +228,8 @@ object Snapshot {
     * Time travel is untouched: an old version's manifest still carries
     * its own names. Every alias target is kept CURRENT (a second
     * rename rewrites earlier targets), so the map never chains.
-    */
-  /** `dropped` (r12 — COLUMN DROP support): physical column names
+    *
+    * `dropped` (r12 — COLUMN DROP support): physical column names
     * retired by [[dropColumn]]. Old pool files still CARRY these
     * columns physically (a drop is metadata-only); re-introducing one
     * of the names through a widening commit or a rename target would
@@ -237,8 +237,8 @@ object Snapshot {
     * schema-extending path refuses names in this set. Cleared only by
     * a full rewrite ([[overwrite]]), whose commit references fresh
     * files exclusively.
-    */
-  /** `note` (r14 — auto-maintenance audit trail): a free-text line
+    *
+    * `note` (r14 — auto-maintenance audit trail): a free-text line
     * recorded by the commit that wrote THIS version (never inherited),
     * surfaced in [[history]]. [[Maintenance]] stamps its trigger
     * (which debt ceiling fired, the measured debt, the action) so a
@@ -318,8 +318,8 @@ object Snapshot {
     * materializes when a READER asks; the steady-state commit loop
     * never touches it, which is what makes a 100k-entry incremental
     * commit cost the same as a 3k one (ScaleBench10).
-    */
-  /** `parts` (r14): the backing LIST checkpoint's part refs plus the
+    *
+    * `parts` (r14): the backing LIST checkpoint's part refs plus the
     * rels DIRTIED since it (this delta chain's removed+added) — what
     * the NEXT checkpoint needs to reuse clean parts. None = text
     * checkpoint in the chain (no reuse possible).
@@ -796,8 +796,8 @@ object Snapshot {
     * (TIMESTAMP_MICROS, pinned in the writer conf) — converting an
     * externally-written dataset to snapshot rewrites its data through
     * the same writer.
-    */
-  /** `skipping` (r15): advisory pushdown conjuncts — members whose
+    *
+    * `skipping` (r15): advisory pushdown conjuncts — members whose
     * manifest key envelope provably cannot match are DROPPED from the
     * plan ([[pruneEntries]]); the caller MUST apply the exact filter
     * above the returned frame.
@@ -1003,6 +1003,13 @@ object Snapshot {
     sb.toString
   }
 
+  /** Last CONSTRAINED plan's (kept, total) member counts — a
+    * white-box observable for specs and scale benches (surfaces like
+    * `format("graft")` return row RDDs where `inputFiles` can't see
+    * the inner plan). Diagnostic only; never read by the engine.
+    */
+  @volatile private[graft] var lastSkipPlan: (Int, Int) = (0, 0)
+
   /** MANIFEST-ENVELOPE SCAN PLANNING (r15): the data members of `m`
     * that may hold a row satisfying EVERY conjunct in `preds` — by
     * intersecting each conjunct with the member's manifest-recorded
@@ -1016,13 +1023,6 @@ object Snapshot {
     * the kept members exactly as to the full set — removing a member
     * that cannot match removes only rows the filter would drop).
     */
-  /** Last CONSTRAINED plan's (kept, total) member counts — a
-    * white-box observable for specs and scale benches (surfaces like
-    * `format("graft")` return row RDDs where `inputFiles` can't see
-    * the inner plan). Diagnostic only; never read by the engine.
-    */
-  @volatile private[graft] var lastSkipPlan: (Int, Int) = (0, 0)
-
   private[graft] def pruneEntries(spark: SparkSession, m: Manifest,
                                   entries: Seq[Entry],
                                   preds: Seq[ReadPred]): Seq[Entry] = {
@@ -2359,8 +2359,8 @@ object Snapshot {
     * (`removedRels` → `added`) planned against `baseV` of `root`, the
     * same shape [[commitRebase]] takes. Staged pool files must already
     * be in the table's `_data` pool (the stage* helpers do this).
-    */
-  /** `expectV` (r16 — closes the r15 witness residual window): the
+    *
+    * `expectV` (r16 — closes the r15 witness residual window): the
     * participant's EXPECTED committed version, computed at intent
     * time (deterministic: the locks are held, so the target version
     * is the table's next number). Recovery treats "version `expectV`
@@ -2864,8 +2864,8 @@ object Snapshot {
     * crash before this write leaves the PREVIOUS pins: stale but
     * consistent, and the next group (or recovery with full version
     * knowledge) advances it.
-    */
-  /** r16 (ADVICE): the read-merge-write runs under the COORDINATOR's
+    *
+    * r16 (ADVICE): the read-merge-write runs under the COORDINATOR's
     * own commit lock — two concurrent groups over disjoint table sets
     * in one coordDir can no longer interleave and drop each other's
     * pin advance. Lock ordering is safe: both call sites (commitGroup,
@@ -3821,11 +3821,11 @@ object Snapshot {
     * only reclaim past [[StageGraceMs]] of age, by which time a live
     * commit would long have landed. Crash orphans age out and are
     * swept by any later vacuum; `fsck` reports them meanwhile.
-    */
-  /** Retention trim + pool garbage collection. `fullSweep = true` is
-    * the thorough O(pool-listing) refcount walk (standalone `--vacuum`
-    * and every [[CheckpointEvery]]-th commit — the only collector of
-    * crashed-writer ORPHANS, files no manifest ever referenced).
+    *
+    * `fullSweep = true` is the thorough O(pool-listing) refcount walk
+    * (standalone `--vacuum` and every [[CheckpointEvery]]-th commit —
+    * the only collector of crashed-writer ORPHANS, files no manifest
+    * ever referenced).
     * `fullSweep = false` (the steady-state per-commit path, r13) is
     * INCREMENTAL: deletion candidates are the rels a dropped version
     * references MINUS its successor's — read straight off the
@@ -4261,23 +4261,6 @@ object Snapshot {
       "committed_at", "note")
   }
 
-  /** CDC changelog between two retained snapshots, the Delta
-    * CHANGE DATA FEED row shape: full row images tagged
-    * `_change_type` ∈ insert | delete | update_preimage |
-    * update_postimage, `_commit_version` = `toV`. One full-outer
-    * pk join, one pass: each joined row explodes to 0–2 change rows
-    * (0 for unchanged), so the plan is join + generate — no
-    * per-change-type re-scan. Updates compare the non-pk columns
-    * null-safely (a NULL→value transition IS a change).
-    *
-    * At 100 TB both sides are footer-pruned parquet scans of two
-    * manifests that mostly SHARE files; a caller diffing adjacent
-    * incremental commits can first restrict both sides to the
-    * symmetric difference of the manifests' file lists — rows in
-    * shared files are bit-identical by construction. That file-level
-    * optimization composes here via `readAt` + `.where` on
-    * `_metadata.file_path` without changing this row-level contract.
-    */
   /** Open-ended incremental CDC: every change from `sinceV` up to the
     * latest retained commit, as the union of CONSECUTIVE per-commit
     * changelogs — each row's `_commit_version` is the commit that
@@ -4479,6 +4462,23 @@ object Snapshot {
     Some((side(a, predA.map(_.rel).toSet), side(b, predB.map(_.rel).toSet)))
   }
 
+  /** CDC changelog between two retained snapshots, the Delta
+    * CHANGE DATA FEED row shape: full row images tagged
+    * `_change_type` ∈ insert | delete | update_preimage |
+    * update_postimage, `_commit_version` = `toV`. One full-outer
+    * pk join, one pass: each joined row explodes to 0–2 change rows
+    * (0 for unchanged), so the plan is join + generate — no
+    * per-change-type re-scan. Updates compare the non-pk columns
+    * null-safely (a NULL→value transition IS a change).
+    *
+    * At 100 TB both sides are footer-pruned parquet scans of two
+    * manifests that mostly SHARE files; a caller diffing adjacent
+    * incremental commits can first restrict both sides to the
+    * symmetric difference of the manifests' file lists — rows in
+    * shared files are bit-identical by construction. That file-level
+    * optimization composes here via `readAt` + `.where` on
+    * `_metadata.file_path` without changing this row-level contract.
+    */
   def changelog(spark: SparkSession, rootStr: String, fromV: Long, toV: Long,
                 pk: Seq[String], filePruned: Boolean = true): DataFrame = {
     require(pk.nonEmpty, "changelog needs the pk that identifies a row")
@@ -4786,22 +4786,20 @@ object Snapshot {
 
   // ── shared fs helpers (also used by PrunedMerge/Compaction) ──────
 
-  /** Exact row count of a just-written parquet dir from its footers
-    * alone — driver-side, ZERO Spark jobs (r19: the Runner's
-    * staged-batch bookkeeping count was a scan job per keyed write /
-    * per fixpoint iteration; the footers were written milliseconds ago
-    * and are page-warm). None when any footer refuses to read — the
-    * caller falls back to the count job it used to pay.
+  /** Exact row count of parquet `files` (path, bytes) from their
+    * footers alone — driver-side, ZERO Spark jobs up to the footer
+    * sweep's distributed threshold, one metadata job past it (r19:
+    * the Runner's staged-batch bookkeeping count was a scan job per
+    * keyed write; the same sum now answers an unfiltered plain-parquet
+    * `Runner.count`). None for no files, or when any footer refuses
+    * to read — the caller falls back to the count job it used to pay.
     */
   private[graft] def footerRowCount(spark: SparkSession,
-                                    dir: Path): Option[Long] = {
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = listDataFilesRec(fs, dir)
+                                    files: Seq[(String, Long)]): Option[Long] = {
     if (files.isEmpty) return None
-    val stats = PrunedMerge.footerKeyStats(spark,
-      files.map(f => (f._1.toString, f._2)),
+    val stats = PrunedMerge.footerKeyStats(spark, files,
       new org.apache.spark.sql.types.StructType(), Nil)
-    val rows = files.map(f => stats.get(f._1.toString).flatMap(_._2))
+    val rows = files.map(f => stats.get(f._1).flatMap(_._2))
     if (rows.forall(_.isDefined)) Some(rows.flatten.sum) else None
   }
 

@@ -500,7 +500,8 @@ object WriteOps {
           if (!keep.contains(n)) fs.delete(p, true)
         }
       case _ => // rename swap (HDFS/local)
-        val tmp = new org.apache.hadoop.fs.Path(path + "._tmp_" + System.nanoTime())
+        val tmp = new org.apache.hadoop.fs.Path(
+          path + "._tmp_" + java.util.UUID.randomUUID())
         val bak = new org.apache.hadoop.fs.Path(path + "._bak")
         writeTo(tmp)
         // HDFS/object-store renames report failure by returning false,

@@ -123,24 +123,19 @@ object Resolver {
     }
   }
 
-  /** Parquet files written with nanosecond TIMESTAMP(NANOS) columns
-    * (the pyarrow/pandas default) are illegal for Spark's parquet reader
-    * ([PARQUET_TYPE_ILLEGAL]). We detect them from one file footer
-    * (driver-side, O(1) — no data scan), read them as raw long nanos via
-    * `spark.sql.legacy.parquet.nanosAsLong`, and convert to
-    * TimestampType at microsecond precision. Integer `div` (not `/`)
-    * avoids double-precision loss on epoch-nanos > 2^53.
+  /** A parquet path's DataFrame. Snapshot layouts read their committed
+    * manifest ([[graft.operators.Snapshot.readAt]]: membership and
+    * schema both come from it — a listing would over-read the shared
+    * pool; the only layouts where `_version` time travel is
+    * meaningful). Every other layout — a plain dir, a hive-
+    * partitioned dir, the committed `_v_<n>` dir of a `versioned`
+    * dataset — reads through [[readPlain]], whose schema comes from
+    * one driver-side footer instead of Spark's inference job.
     *
-    * The conf is set only for the duration of the `load` (the scan
-    * snapshots its hadoop conf there) and restored immediately after,
-    * so a bare `spark.read.parquet` of a nano file elsewhere in the
-    * session still fails with the loud PARQUET_TYPE_ILLEGAL error
-    * instead of silently yielding long columns.
-    */
-  /** `skipping` (r15): advisory envelope-pruning conjuncts, honored
-    * only on snapshot layouts (plain dirs already get parquet
-    * row-group pruning from the pushed exact filters); callers apply
-    * the exact filter above regardless.
+    * `skipping`: advisory envelope-pruning conjuncts, honored only on
+    * snapshot layouts (plain dirs already get parquet row-group
+    * pruning from the pushed exact filters); callers apply the exact
+    * filter above regardless.
     */
   def readParquet(spark: SparkSession, pathStr: String,
                   atVersion: Option[Long] = None,
@@ -148,26 +143,124 @@ object Resolver {
       : DataFrame = {
     val hp = new org.apache.hadoop.fs.Path(pathStr)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // snapshot layout: membership comes from the committed manifest
-    // (shared-pool files — a dir listing would over-read); also the
-    // only layouts where `_version` time travel is meaningful
     if (graft.operators.Snapshot.isSnapshotLayout(fs, hp))
       return graft.operators.Snapshot.readAt(spark, pathStr, atVersion,
         skipping)
-    def readNormalized(p: String): DataFrame = {
-      val nanos = nanoTimestampCols(spark, p)
-      if (nanos.isEmpty) spark.read.parquet(p)
-      else convertNanoCols(withNanosAsLong(spark)(spark.read.parquet(p)), nanos)
-    }
     atVersion match {
       case Some(v) =>
+        // a retained dir-protocol version: same footer step and nano
+        // normalization as the latest read, so time travel never fails
+        // on files the plain read accepts
         val (_, vdir) = graft.operators.Snapshot.resolveVersion(fs, hp, Some(v))
-        // a retained dir-protocol version — same nano-timestamp
-        // normalization as the latest-read path, so time travel never
-        // fails on files the plain read accepts
-        readNormalized(vdir.toString)
+        readPlain(spark, vdir.toString)
       case None =>
-        readNormalized(resolveVersioned(spark, pathStr))
+        readPlain(spark, resolveVersioned(spark, pathStr))
+    }
+  }
+
+  /** The footer step: read a plain (non-snapshot) parquet path with
+    * the schema of its first data file's footer, opened driver-side
+    * ([[plainFooter]]). That is the single-file inference Spark does
+    * without `mergeSchema`, minus the Spark job it runs to do it.
+    *
+    *   - TIMESTAMP(NANOS) columns (the pyarrow/pandas default) are
+    *     illegal for Spark's reader ([PARQUET_TYPE_ILLEGAL]): such a
+    *     path reads as raw long nanos under
+    *     `spark.sql.legacy.parquet.nanosAsLong` ([[withNanosAsLong]])
+    *     and converts to TimestampType at microsecond precision
+    *     ([[convertNanoCols]]). This path keeps Spark's inference.
+    *   - no footer schema (an empty dir, a summary file, `mergeSchema`
+    *     on, …): Spark's inferring read, with its own errors.
+    */
+  private[graft] def readPlain(spark: SparkSession, pathStr: String): DataFrame =
+    plainFooter(spark, pathStr) match {
+      case Some(PlainFooter(nanos, _)) if nanos.nonEmpty =>
+        convertNanoCols(withNanosAsLong(spark)(spark.read.parquet(pathStr)), nanos)
+      case Some(PlainFooter(_, Some(s))) =>
+        spark.read.schema(s).parquet(pathStr)
+      case _ => spark.read.parquet(pathStr)
+    }
+
+  /** What the first data file's footer says about a plain parquet
+    * path: its top-level TIMESTAMP(NANOS) columns, and the schema
+    * Spark's non-merging inference would derive from it — or None
+    * where that inference would not read exactly this footer's schema.
+    */
+  private final case class PlainFooter(nanos: Seq[String],
+                                       schema: Option[StructType])
+
+  /** The footer of the first data file under `pathStr` — the file
+    * Spark's non-merging inference picks: the listing's own order and
+    * hidden-file rule (`_`/`.` prefixes skipped except `k=v` dirs,
+    * `._COPYING_` files skipped), a level's files before its
+    * subdirectories. None for a missing path, no data file or an
+    * unreadable footer: the read then takes Spark's inferring path,
+    * errors included. One footer open, no Spark job.
+    *
+    * The schema is Spark's own conversion
+    * (`ParquetFileFormat.readSchemaFromFooter`: the writer's Spark
+    * schema when recorded, else the parquet schema through
+    * `ParquetToSparkSchemaConverter` under the inference's confs). It
+    * is withheld where Spark would read another file or merge:
+    * `_metadata`/`_common_metadata` summary files (Spark prefers
+    * them), `mergeSchema` on, a data column that is also a partition
+    * dir key (Spark types it in place), or a footer the converter
+    * rejects (a nested NANOS column keeps Spark's loud error).
+    */
+  private def plainFooter(spark: SparkSession, pathStr: String): Option[PlainFooter] = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(pathStr)
+    val fs = root.getFileSystem(conf)
+    val status = try fs.getFileStatus(root)
+      catch { case _: java.io.FileNotFoundException => return None }
+    def hidden(n: String) = (n.startsWith("_") && !n.contains("=")) ||
+      n.startsWith(".") || n.endsWith("._COPYING_")
+    var summaries = false
+    // (first data file, the `k` of each `k=v` dir on the way to it)
+    def first(d: Path, keys: List[String]): Option[(Path, List[String])] = {
+      val (dirs, files) = fs.listStatus(d).toSeq.partition(_.isDirectory)
+      files.map(_.getPath.getName).foreach { n =>
+        if (n.startsWith("_metadata") || n.startsWith("_common_metadata"))
+          summaries = true
+      }
+      files.find(f => !hidden(f.getPath.getName)).map(f => (f.getPath, keys))
+        .orElse(dirs.iterator.filterNot(s => hidden(s.getPath.getName))
+          .flatMap { s =>
+            val n = s.getPath.getName
+            first(s.getPath, if (n.contains("=")) keys :+ n.takeWhile(_ != '=') else keys)
+          }.nextOption())
+    }
+    for {
+      (file, partKeys) <- if (status.isDirectory) first(root, Nil) else Some((root, Nil))
+      meta <- scala.util.Try {
+        val reader = graft.operators.Footers.open(conf, file)
+        try reader.getFooter finally reader.close()
+      }.toOption
+    } yield {
+      val nanos = meta.getFileMetaData.getSchema.getFields.asScala.toSeq
+        .filter(_.getLogicalTypeAnnotation match {
+          case ts: TimestampLogicalTypeAnnotation => ts.getUnit == TimeUnit.NANOS
+          case _ => false
+        }).map(_.getName)
+      val sqlConf = spark.sessionState.conf
+      val schema =
+        if (summaries || sqlConf.isParquetSchemaMergingEnabled) None
+        else scala.util.Try(ParquetFileFormat.readSchemaFromFooter(
+          new org.apache.parquet.hadoop.Footer(file, meta),
+          new ParquetToSparkSchemaConverter(
+            assumeBinaryIsString = sqlConf.isParquetBinaryAsString,
+            assumeInt96IsTimestamp = sqlConf.isParquetINT96AsTimestamp,
+            inferTimestampNTZ = sqlConf.parquetInferTimestampNTZEnabled,
+            nanosAsLong = sqlConf.legacyParquetNanosAsLong,
+            respectUnknownTypeAnnotation =
+              sqlConf.parquetReaderRespectUnknownTypeAnnotation)))
+          .toOption.filterNot(_.fieldNames.exists(n =>
+            partKeys.exists(_.equalsIgnoreCase(n))))
+      PlainFooter(nanos, schema)
     }
   }
 
@@ -182,7 +275,11 @@ object Resolver {
   }
 
   /** Run `load` with spark.sql.legacy.parquet.nanosAsLong set, restoring
-    * the previous value after the DataFrame's schema is resolved.
+    * the previous value after the DataFrame's schema is resolved (the
+    * scan snapshots its hadoop conf there), so a bare
+    * `spark.read.parquet` of a nano file elsewhere in the session still
+    * fails with the loud PARQUET_TYPE_ILLEGAL error instead of silently
+    * yielding long columns.
     */
   def withNanosAsLong[A](spark: SparkSession)(load: => A): A = {
     val key = "spark.sql.legacy.parquet.nanosAsLong"
@@ -195,44 +292,22 @@ object Resolver {
     }
   }
 
-  /** long-nanos columns → TimestampType at microsecond precision. */
+  /** long-nanos columns → TimestampType at microsecond precision.
+    * Integer `div` (not `/`) avoids double-precision loss on
+    * epoch-nanos > 2^53.
+    */
   def convertNanoCols(df: DataFrame, nanos: Seq[String]): DataFrame =
     nanos.foldLeft(df) { (d, c) =>
       d.withColumn(c, org.apache.spark.sql.functions.expr(
         s"timestamp_micros(`$c` div 1000)"))
     }
 
-  /** Top-level TIMESTAMP(NANOS) columns per the parquet footer of the
-    * first data file under `pathStr` (files of one dataset share a
-    * writer schema).
+  /** Top-level TIMESTAMP(NANOS) columns of a plain parquet path, from
+    * the same one footer [[readPlain]] opens (files of one dataset
+    * share a writer schema).
     */
-  def nanoTimestampCols(spark: SparkSession, pathStr: String): Seq[String] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import scala.jdk.CollectionConverters._
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(pathStr)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return Nil
-    val file =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).toSeq.map(_.getPath)
-          .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
-      else Some(p)
-    file.toSeq.flatMap { f =>
-      val reader = graft.operators.Footers.open(conf, f)
-      try {
-        reader.getFooter.getFileMetaData.getSchema.getFields.asScala.toSeq.collect {
-          case t if t.getLogicalTypeAnnotation != null &&
-            t.getLogicalTypeAnnotation.isInstanceOf[LogicalTypeAnnotation.TimestampLogicalTypeAnnotation] &&
-            t.getLogicalTypeAnnotation.asInstanceOf[LogicalTypeAnnotation.TimestampLogicalTypeAnnotation]
-              .getUnit == LogicalTypeAnnotation.TimeUnit.NANOS =>
-            t.getName
-        }
-      } finally reader.close()
-    }
-  }
+  def nanoTimestampCols(spark: SparkSession, pathStr: String): Seq[String] =
+    plainFooter(spark, pathStr).fold(Seq.empty[String])(_.nanos)
 
   /** True ONLY for Spark's format-lookup failure (the connector jar is
     * absent). Deliberately narrow: a connector that IS present but

@@ -57,6 +57,58 @@ class RunnerSpec extends SparkSpec {
       s.copy(query = Seq("_version" -> (v - 1).toString))) == 1234L)
   }
 
+  test("plain parquet: Planner.plan with a merger and an unfiltered " +
+    "count start ZERO Spark jobs; filtered and csv counts still scan") {
+    val dir = tempDir("runner_plain")
+    (0L until 500L).map(i => (i, i % 7, s"v$i")).toDF("id", "cust", "txt")
+      .repartition(3).write.parquet(s"$dir/src.parquet")
+    (0L until 7L).map(c => (c, s"seg$c")).toDF("cust", "seg")
+      .write.parquet(s"$dir/cst.parquet")
+    (0L until 300L).map(i => (i, (i % 3).toInt, s"p${i % 2}"))
+      .toDF("id", "pi", "ps").write.partitionBy("pi", "ps")
+      .parquet(s"$dir/hive.parquet")
+    spark.read.parquet(s"$dir/src.parquet").write.option("header", "true")
+      .csv(s"$dir/src.csv")
+    val (job, _) = graft.cli.Main.parse(Array("-s", s"parquet/$dir/src",
+      "-m", s"parquet/$dir/cst", "--mkeys", "cust"))
+    val src = job.source
+    val hive = SourceSpec(DatasetRef("parquet", dir, "hive"))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    val planned = try {
+      val planned = graft.engine.Planner.plan(spark, job)
+      assert(Runner.count(spark, src) == 500L)
+      assert(Runner.count(spark, src.copy(query = Seq("_limit" -> "100"))) == 100L)
+      assert(Runner.count(spark, src.copy(query = Seq("_limit" -> "900"))) == 500L)
+      assert(Runner.count(spark, hive) == 300L)
+      assert(Runner.count(spark, hive.copy(query = Seq("_limit" -> "7"))) == 7L)
+      awaitQuiet(() => jobs.get())
+      assert(jobs.get() == 0,
+        s"plain-parquet plan and counts must run zero Spark jobs, saw ${jobs.get()}")
+      planned
+    } finally spark.sparkContext.removeSparkListener(l)
+    // the footer totals are the scans' totals, and the plan runs
+    assert(spark.read.parquet(s"$dir/hive.parquet").count() == 300L)
+    assert(planned.count() == 500L && planned.columns.contains("seg"))
+    // a filtered count and a csv count still scan
+    spark.sparkContext.addSparkListener(l)
+    try {
+      assert(Runner.count(spark, src.copy(query = Seq("id__lt" -> "100"))) == 100L)
+      assert(Runner.count(spark, hive.copy(query = Seq("pi" -> "1"))) == 100L)
+      awaitQuiet(() => jobs.get())
+      val filtered = jobs.get()
+      assert(filtered >= 2, s"filtered counts must scan, saw $filtered jobs")
+      assert(Runner.count(spark, SourceSpec(DatasetRef("csv", dir, "src"))) == 500L)
+      awaitQuiet(() => jobs.get())
+      assert(jobs.get() > filtered, "a csv count must scan")
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
   test("r17 predicate-covered metadata count: interior files decided " +
     "driver-side, boundary files scanned, exact everywhere") {
     import graft.operators.Snapshot
