@@ -79,6 +79,13 @@ object ScaleBench10 {
     } catch { case _: Throwable => () }
   }
 
+  /** Spark jobs `f` starts, counted by the engine's job ledger. */
+  private def countJobs[T](spark: org.apache.spark.sql.SparkSession)(f: => T): (Int, T) = {
+    val m = new graft.engine.Metrics()
+    val r = m.record(spark)(f)
+    (m.jobs.size, r)
+  }
+
   private def entry(i: Long, seq: Long): Entry =
     Entry(f"part=${i % 256}%03d/f$i%07d.parquet", 1L << 20,
       envs = Some(Map("id" -> ColEnv(Some(i * 1000), Some(i * 1000 + 999), false))),
@@ -288,24 +295,11 @@ object ScaleBench10 {
             commitMode = "snapshot", keepVersions = 150)
         }
       }
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-      }
-      def countJobs[T](f: => T): (Int, T) = {
-        spark.sparkContext.addSparkListener(listener)
-        jobs.set(0)
-        try { val r = f; Thread.sleep(1500); (jobs.get(), r) }
-        finally spark.sparkContext.removeSparkListener(listener)
-      }
       // the per-commit consumer shape: ONE commit per batch (a
       // latest-state sink that never needed the granularity still
       // paid it before the spanning drain existed)
       var consecRows = 0L
-      val (consecJobs, consecBatches) = countJobs {
+      val (consecJobs, consecBatches) = countJobs(spark) {
         timed("cdc100_drain_consecutive") {
           graft.streaming.CdfStream.runAvailableNow(spark, cdcPath, Seq("id"),
             s"$out/cdc_ckpt_consec", startingVersion = Some(1L),
@@ -320,7 +314,7 @@ object ScaleBench10 {
       graft.operators.Snapshot.readAt(spark, cdcPath, Some(1L))
         .select("id", "txt").collect()
         .foreach(r => seedState(r.getLong(0)) = r.getString(1))
-      val (spanJobs, spanBatches) = countJobs {
+      val (spanJobs, spanBatches) = countJobs(spark) {
         timed("cdc100_drain_spanning") {
           graft.streaming.CdfStream.runAvailableNow(spark, cdcPath, Seq("id"),
             s"$out/cdc_ckpt_span", startingVersion = Some(1L),
@@ -381,25 +375,12 @@ object ScaleBench10 {
             commitMode = "snapshot", keepVersions = n1k + 50)
         }
       }
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-      }
-      def countJobs[T](f: => T): (Int, T) = {
-        spark.sparkContext.addSparkListener(listener)
-        jobs.set(0)
-        try { val r = f; Thread.sleep(1500); (jobs.get(), r) }
-        finally spark.sparkContext.removeSparkListener(listener)
-      }
       def foldDrain(ckpt: String, bound: Int): (Int, Int, Map[Long, String]) = {
         val st = scala.collection.mutable.Map.empty[Long, String]
         graft.operators.Snapshot.readAt(spark, cdcPath, Some(1L))
           .select("id", "txt").collect()
           .foreach(r => st(r.getLong(0)) = r.getString(1))
-        val (j, b) = countJobs {
+        val (j, b) = countJobs(spark) {
           graft.streaming.CdfStream.runAvailableNow(spark, cdcPath, Seq("id"),
             ckpt, startingVersion = Some(1L), maxVersionsPerBatch = bound,
             spanningBatches = true) { (inc, _, _) =>

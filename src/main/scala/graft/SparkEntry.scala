@@ -436,7 +436,7 @@ object SparkEntry {
       val fsys = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
       def dataFiles = graft.operators.Snapshot
         .listDataFilesRec(fsys, graft.operators.Snapshot.dataDir(hp))
-        .map(_._1.toString).toSet
+        .map(_.getPath.toString).toSet
       val before = dataFiles
       val keys = orders
         .filter(col("o_orderstatus") === "F" && col("o_orderkey") < 5000)
@@ -471,7 +471,7 @@ object SparkEntry {
       val fsys = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
       def dataFiles = graft.operators.Snapshot
         .listDataFilesRec(fsys, graft.operators.Snapshot.dataDir(hp))
-        .map(_._1.toString).toSet
+        .map(_.getPath.toString).toSet
       val before = dataFiles
       // LAW twin seeded by byte-identical clone of the PRISTINE v1
       // layout (r19, verdict #4): the law compares the two tables'
@@ -772,7 +772,7 @@ object SparkEntry {
       val fsys = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
       def dataFiles = graft.operators.Snapshot
         .listDataFilesRec(fsys, graft.operators.Snapshot.dataDir(hp))
-        .map(_._1.toString).toSet
+        .map(_.getPath.toString).toSet
       val before = dataFiles
       graft.operators.Snapshot.renameColumn(s, p, "o_totalprice", "o_price",
         keepVersions = 5)
@@ -810,7 +810,7 @@ object SparkEntry {
       val fsys = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
       def dataFiles = graft.operators.Snapshot
         .listDataFilesRec(fsys, graft.operators.Snapshot.dataDir(hp))
-        .map(_._1.toString).toSet
+        .map(_.getPath.toString).toSet
       val before = dataFiles
       graft.operators.Snapshot.dropColumn(s, p, "o_orderpriority",
         keepVersions = 4)
@@ -937,7 +937,7 @@ object SparkEntry {
       val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
       def pool() = graft.operators.Snapshot
         .listDataFilesRec(fs, graft.operators.Snapshot.dataDir(root))
-        .map(_._1.toString).toSet
+        .map(_.getPath.toString).toSet
       val pool1 = pool()
       val v2 = graft.operators.Snapshot.widenColumn(s, p, "o_qty",
         org.apache.spark.sql.types.LongType, keepVersions = 5)   // v2

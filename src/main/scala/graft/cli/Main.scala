@@ -38,14 +38,7 @@ object Main {
     }
     val (job, opts) = parse(rawArgs)
     val spark = session(opts)
-    val t0 = System.nanoTime()
-    try execute(spark, job, opts) finally {
-      // O11 --profile (reference base.py:141 runs cProfile around the
-      // request): the in-process analog is the end-to-end wall clock
-      if (opts.profile)
-        println(f"profile: ${(System.nanoTime() - t0) / 1e9}%.3f s wall-clock")
-      spark.stop()
-    }
+    try execute(spark, job, opts) finally spark.stop()
   }
 
   final case class Opts(
@@ -61,7 +54,7 @@ object Main {
       lsflat: Option[String] = None, dropNs: Option[String] = None,
       showArgs: Boolean = false, jobRun: Boolean = false,
       logLevel: Option[String] = None,
-      profile: Boolean = false, // O11: wall-clock report after the run
+      profile: Boolean = false, // O11: wall clock + job ledger after the run
       compact: Option[Long] = None, // [EXT] small-file compaction size
       foldDeletesAbove: Double = 0.2, // [EXT] compaction DV debt ceiling
       history: Boolean = false, // [EXT] snapshot/versioned history listing
@@ -530,7 +523,22 @@ object Main {
     (raw.substring(0, slash), raw.substring(slash + 1))
   }
 
-  def execute(spark: SparkSession, job: JobSpec, opts: Opts): Unit = {
+  def execute(spark: SparkSession, job: JobSpec, opts: Opts): Unit =
+    if (!opts.profile) dispatch(spark, job, opts)
+    else {
+      // O11 --profile (reference base.py:141 runs cProfile around the
+      // request): the in-process analog is the end-to-end wall clock
+      // and the engine's job ledger — every Spark job with its SQL
+      // execution id and call site, then the stage totals
+      val m = new graft.engine.Metrics()
+      val t0 = System.nanoTime()
+      try m.record(spark)(dispatch(spark, job, opts)) finally {
+        println(f"profile: ${(System.nanoTime() - t0) / 1e9}%.3f s wall-clock")
+        (m.jobLines :+ m.totalsLine).foreach(l => println(s"profile: $l"))
+      }
+    }
+
+  private def dispatch(spark: SparkSession, job: JobSpec, opts: Opts): Unit = {
     // --show-args: non-blocking spec echo (reference base.py:133)
     if (opts.showArgs) println(job)
     if (opts.jobRun) { // O3 --job-run (etl.py:68,269): the reference
@@ -1047,7 +1055,7 @@ object Main {
       |               --log_ds NS (namespace the _logs dataset lives in)
       |               --pretty (echo the log record as JSON)
       |               --paginate V (accepted; Spark scans need no cursor)
-      |               --profile (wall-clock report after the run)
+      |               --profile (wall clock + Spark job ledger after the run)
       |               --dev (sync-mode parity flag; implies --pretty)
       |               --etl_api HOST (accepted; jobs run in-process)
       |               --pylog2es (accepted; metrics land in _logs)

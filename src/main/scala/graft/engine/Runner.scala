@@ -143,7 +143,7 @@ object Runner {
               progress: Option[String => Unit] = None,
               comment: Option[String] = None): RunResult =
     progress.fold(executeInner(spark, job, log, comment)) { report =>
-      Progress.withProgress(spark, report)(executeInner(spark, job, log, comment))
+      new Metrics(Some(report)).record(spark)(executeInner(spark, job, log, comment))
     }
 
   private def executeInner(spark: SparkSession, job: JobSpec, log: Boolean,

@@ -369,11 +369,11 @@ object PrunedMerge {
         else {
           val byRel = m.dataEntries.map(e => e.rel -> e).toMap
           val tEntries = touchedByKeys
-            .map(e => byRel(relPath(dd, new Path(e.path))))
+            .map(e => byRel(Snapshot.relPath(dd, new Path(e.path))))
           val keep = Snapshot.pruneEntries(spark, m, tEntries, preds)
             .map(_.rel).toSet
           val (a, b) = touchedByKeys
-            .partition(e => keep(relPath(dd, new Path(e.path))))
+            .partition(e => keep(Snapshot.relPath(dd, new Path(e.path))))
           (a, untouchedByKeys ++ b)
         }
       case _ => (touchedByKeys, untouchedByKeys)
@@ -404,11 +404,11 @@ object PrunedMerge {
         else {
           val byRel = m.dataEntries.map(e => e.rel -> e).toMap
           val tEntries = touched0
-            .map(e => byRel(relPath(dd, new Path(e.path))))
+            .map(e => byRel(Snapshot.relPath(dd, new Path(e.path))))
           val keep = Snapshot.pruneEntries(spark, m, tEntries, preds)
             .map(_.rel).toSet
           val (a, b) = touched0
-            .partition(e => keep(relPath(dd, new Path(e.path))))
+            .partition(e => keep(Snapshot.relPath(dd, new Path(e.path))))
           (a, untouched0 ++ b, b)
         }
       case _ => (touched0, untouched0, Nil)
@@ -445,7 +445,7 @@ object PrunedMerge {
       case Some((_, m, dd))
           if (dvKeyCols.isDefined || predsByRel.nonEmpty) && sel.nonEmpty =>
         val byRel = m.dataEntries.map(e => e.rel -> e).toMap
-        val tEntries = sel.map(e => byRel(relPath(dd, new Path(e.path))))
+        val tEntries = sel.map(e => byRel(Snapshot.relPath(dd, new Path(e.path))))
         Snapshot.seqClasses(m, tEntries).map { case (es, dels) =>
           val df0 = rawTouched(es.map(e => new Path(dd, e.rel).toString))
           val (pDels, kDels) = dels.partition(e => predsByRel.contains(e.rel))
@@ -537,7 +537,7 @@ object PrunedMerge {
           merged.schema, envCols)
         // scheme-insensitive membership: listStatus returns qualified
         // paths (file:/…) while manifest entries are pool-relative
-        val touchedRel = touched.map(e => relPath(dd, new Path(e.path))).toSet
+        val touchedRel = touched.map(e => Snapshot.relPath(dd, new Path(e.path))).toSet
         // a widening op commits the EVOLVED schema — ADD COLUMN priced
         // per change: only the touched files carry the column
         // physically, every other member serves it as nulls
@@ -627,11 +627,12 @@ object PrunedMerge {
     // defensively), preserving their partition-relative paths, then
     // drop the replaced ones. Rename failures before any delete roll
     // back to a byte-identical target.
-    val newFiles = listDataFilesRec(fs, tmp)
+    val newFiles = Snapshot.listDataFilesRec(fs, tmp)
     val movedIn = scala.collection.mutable.ArrayBuffer.empty[Path]
     try {
-      newFiles.foreach { case (src, _) =>
-        val rel = relPath(tmp, src)
+      newFiles.foreach { st =>
+        val src = st.getPath
+        val rel = Snapshot.relPath(tmp, src)
         var dest = new Path(hPath, rel)
         if (fs.exists(dest)) {
           val parent = dest.getParent
@@ -721,22 +722,6 @@ object PrunedMerge {
       }
     }
     if (walk(root, 0, Nil)) Some(out.toSeq) else None
-  }
-
-  private def listDataFilesRec(fs: FileSystem, root: Path): Seq[(Path, Long)] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Path, Long)]
-    def walk(dir: Path): Unit = fs.listStatus(dir).foreach { s =>
-      if (s.isDirectory) walk(s.getPath)
-      else if (isDataFile(s.getPath.getName)) out += ((s.getPath, s.getLen))
-    }
-    walk(root)
-    out.toSeq
-  }
-
-  private def relPath(root: Path, p: Path): String = {
-    val rootUri = root.toUri.getPath.stripSuffix("/")
-    val pUri = p.toUri.getPath
-    pUri.stripPrefix(rootUri).stripPrefix("/")
   }
 
   /** Does the file's envelope intersect the batch key ranges? A file
@@ -1048,7 +1033,7 @@ object PrunedMerge {
                                 byRel: Map[String, Snapshot.Entry],
                                 comps: Seq[(String, Domain, CompSource)]): Option[Seq[Envelope]] = {
     val built = listed.map { case (p, len, parts) =>
-      val rel = relPath(dd, new Path(p))
+      val rel = Snapshot.relPath(dd, new Path(p))
       byRel.get(rel).flatMap(_.envs).flatMap { em =>
         val ces = comps.map {
           case (c, BytesDomain, _: DataCol) =>

@@ -953,17 +953,29 @@ object Snapshot {
         env.min.isDefined || env.max.isDefined // foreign domain → keep
     }
 
+  /** The hive partition-dir segment `c=value` of a member's rel path,
+    * unescaped by Spark's own path rules: Some(null) is the default
+    * (null) partition, None means no segment names `c`.
+    */
+  private def hiveSegment(rel: String, c: String): Option[String] = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    val prefix = ExternalCatalogUtils.escapePathName(c) + "="
+    rel.split('/').collectFirst {
+      case seg if seg.startsWith(prefix) =>
+        val raw = seg.substring(prefix.length)
+        if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
+        else ExternalCatalogUtils.unescapePathName(raw)
+    }
+  }
+
   /** Hive partition-dir value of `c` from a member's rel path, as a
-    * point envelope. `__HIVE_DEFAULT_PARTITION__` is the null
-    * partition; an absent/unparseable segment → None → keep.
+    * point envelope. The null partition has nulls only; an
+    * absent/unparseable segment → None → keep.
     */
   private def partPointEnv(spark: SparkSession, dt: org.apache.spark.sql.types.DataType, rel: String,
                            c: String): Option[ColEnv] =
-    rel.split('/').collectFirst {
-      case seg if seg.startsWith(c + "=") => seg.substring(c.length + 1)
-    }.flatMap { raw =>
-      val s = unescapeHive(raw)
-      if (s == "__HIVE_DEFAULT_PARTITION__")
+    hiveSegment(rel, c).flatMap { s =>
+      if (s == null)
         Some(ColEnv(None, None, hasNulls = true))
       else if (dt == org.apache.spark.sql.types.StringType) {
         // byte-domain point envelope — exact (no truncation needed:
@@ -983,25 +995,6 @@ object Snapshot {
     if (m.partitionBy.contains(f.name))
       partPointEnv(spark, f.dataType, e.rel, f.name)
     else e.envs.flatMap(_.get(f.name))
-
-  /** Undo hive's %XX partition-value escaping (digits/'-'/'.' pass
-    * through; timestamps carry escaped ':' and ' ').
-    */
-  private def unescapeHive(s: String): String = {
-    if (!s.contains('%')) return s
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val ch = s.charAt(i)
-      if (ch == '%' && i + 2 < s.length) {
-        try {
-          sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar)
-          i += 3
-        } catch { case _: NumberFormatException => sb.append(ch); i += 1 }
-      } else { sb.append(ch); i += 1 }
-    }
-    sb.toString
-  }
 
   /** Last CONSTRAINED plan's (kept, total) member counts — a
     * white-box observable for specs and scale benches (surfaces like
@@ -1431,17 +1424,14 @@ object Snapshot {
 
   /** Hive partition-dir value of `c` from a member's rel path as the
     * column's EXTERNAL value — the group key [[metadataGroupAgg]]
-    * emits. Some(null) is the `__HIVE_DEFAULT_PARTITION__` null
-    * partition; None = no parseable segment, the caller declines.
+    * emits. Some(null) is the null partition; None = no parseable
+    * segment, the caller declines.
     */
   private def partValue(spark: SparkSession,
                         dt: org.apache.spark.sql.types.DataType,
                         rel: String, c: String): Option[Any] =
-    rel.split('/').collectFirst {
-      case seg if seg.startsWith(c + "=") => seg.substring(c.length + 1)
-    }.flatMap { raw =>
-      val s = unescapeHive(raw)
-      if (s == "__HIVE_DEFAULT_PARTITION__") Some(null)
+    hiveSegment(rel, c).flatMap { s =>
+      if (s == null) Some(null)
       else if (dt == org.apache.spark.sql.types.StringType) Some(s)
       else envDomainValue(spark, dt, s).map(fromDomain(dt, _))
     }
@@ -1787,11 +1777,12 @@ object Snapshot {
     // path). A torn journal write means no file moved yet — the stage
     // sweep handles the stage dir, nothing leaks.
     val root = rootOfPool(dd)
-    val planned = listDataFilesRec(fs, stage).map { case (src, bytes) =>
+    val planned = listDataFilesRec(fs, stage).map { st =>
+      val src = st.getPath
       var dest = new Path(dd, relPath(stage, src))
       if (fs.exists(dest))
         dest = new Path(dest.getParent, s"s${System.nanoTime()}-${src.getName}")
-      (src, dest, bytes)
+      (src, dest, st.getLen)
     }
     if (planned.nonEmpty)
       writeStageJournal(fs, root, planned.map(p => relPath(root, p._2)))
@@ -3161,10 +3152,9 @@ object Snapshot {
       tombstoneCols = Some(typed.columns.toSeq), admit = { stage =>
         // count from the staged footers (driver-side, no job); a footer
         // that won't read falls back to the one count job it used to pay
-        val staged = listDataFilesRec(fs, stage)
-        val stats = PrunedMerge.footerKeyStats(spark,
-          staged.map(f => (f._1.toString, f._2)), typed.schema, Nil)
-        val rowsOpt = staged.map(f => stats.get(f._1.toString).flatMap(_._2))
+        val staged = listDataFilesRec(fs, stage).map(f => (f.getPath.toString, f.getLen))
+        val stats = PrunedMerge.footerKeyStats(spark, staged, typed.schema, Nil)
+        val rowsOpt = staged.map(f => stats.get(f._1).flatMap(_._2))
         n =
           if (rowsOpt.forall(_.isDefined)) rowsOpt.flatten.sum
           else spark.read.parquet(stage.toString).count()
@@ -4008,7 +3998,10 @@ object Snapshot {
           if (!referenced.contains(rel) &&
               (droppedRels.contains(rel) || now - mtime > StageGraceMs))
             fs.delete(p, false)
-        listDataFilesRecStatus(fs, dd).foreach { s =>
+        // best effort: an unreadable pool dir skips this sweep, the
+        // next full sweep reconciles
+        (try listDataFilesRec(fs, dd)
+         catch { case scala.util.control.NonFatal(_) => Nil }).foreach { s =>
           sweep(s.getPath, relPath(dd, s.getPath), s.getModificationTime)
         }
         // the generic walk skips underscore names — sweep the deletion-
@@ -4184,20 +4177,6 @@ object Snapshot {
     }
   }
 
-  private def listDataFilesRecStatus(fs: FileSystem,
-                                     root: Path): Seq[org.apache.hadoop.fs.FileStatus] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.FileStatus]
-    def walk(d: Path): Unit =
-      (try fs.listStatus(d) catch { case _: Throwable => Array.empty }).foreach { s =>
-        val n = s.getPath.getName
-        if (n.startsWith("_") || n.startsWith(".")) ()
-        else if (s.isFile) out += s
-        else walk(s.getPath)
-      }
-    walk(root)
-    out.toSeq
-  }
-
   /** A stage dir younger than this may belong to a LIVE concurrent
     * writer (stages are written OUTSIDE the commit lock — holding the
     * lock across a data write would serialize all writers); only
@@ -4248,7 +4227,7 @@ object Snapshot {
         case Some(m) => (m.entries.size.toLong, m.bytes, "snapshot")
         case None =>
           val fl = listDataFilesRec(fs, p)
-          (fl.size.toLong, fl.map(_._2).sum, "versioned")
+          (fl.size.toLong, fl.map(_.getLen).sum, "versioned")
       }
       val committedAt =
         if (isCommitted)
@@ -4605,7 +4584,7 @@ object Snapshot {
     val dd = dataDir(root)
     val onDisk: Map[String, Long] =
       if (fs.exists(dd)) {
-        val data = listDataFilesRec(fs, dd).map(f => relPath(dd, f._1) -> f._2)
+        val data = listDataFilesRec(fs, dd).map(f => relPath(dd, f.getPath) -> f.getLen)
         // deletion-vector files live under an underscore dir the
         // generic walk skips — list them explicitly so manifests
         // referencing them audit clean and strays show as orphans
@@ -4803,16 +4782,21 @@ object Snapshot {
     if (rows.forall(_.isDefined)) Some(rows.flatten.sum) else None
   }
 
+  /** Every data file under `root`, recursively; names starting with
+    * `_` or `.` (markers, manifests, journals, temp dirs) are skipped
+    * at any depth. A listing failure propagates: a missing or
+    * unreadable dir must never read as an empty one (a stage that
+    * lists empty would commit with its files missing).
+    */
   private[graft] def listDataFilesRec(fs: FileSystem,
-                                      root: Path): Seq[(Path, Long)] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Path, Long)]
-    def walk(d: Path): Unit =
-      (try fs.listStatus(d) catch { case _: Throwable => Array.empty }).foreach { s =>
-        val n = s.getPath.getName
-        if (n.startsWith("_") || n.startsWith(".")) ()
-        else if (s.isFile) out += ((s.getPath, s.getLen))
-        else walk(s.getPath)
-      }
+                                      root: Path): Seq[org.apache.hadoop.fs.FileStatus] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.FileStatus]
+    def walk(d: Path): Unit = fs.listStatus(d).foreach { s =>
+      val n = s.getPath.getName
+      if (n.startsWith("_") || n.startsWith(".")) ()
+      else if (s.isFile) out += s
+      else walk(s.getPath)
+    }
     walk(root)
     out.toSeq
   }

@@ -26,11 +26,12 @@ object ExprShim {
         "graft.functions", name),
       builder)
 
-  /** Bounded wait until every queued listener event is delivered —
-    * the deterministic replacement for `Thread.sleep` guesses, used by
-    * the job progress reporter and the dev probes. `listenerBus` is
-    * private[spark], hence the shim. Throws TimeoutException if events
-    * keep queueing past `timeoutMs`.
+  /** Bounded wait until every listener queue is empty, i.e. every
+    * event posted so far has been delivered — how
+    * [[graft.engine.Metrics]] completes its job ledger before it
+    * detaches (Spark posts a job's end event before the action
+    * returns). `listenerBus` is private[spark], hence the shim. Throws
+    * TimeoutException if a queue is still not empty after `timeoutMs`.
     */
   def drainListenerBus(spark: org.apache.spark.sql.SparkSession,
                        timeoutMs: Long): Unit =

@@ -10,9 +10,6 @@ import graft.ext.{BloomDedup, TextDedup}
 class BloomDedupSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(prefix: String) =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   private lazy val docs = sf("documents")
   private lazy val seen = docs.filter($"doc_id" < 100)
   private lazy val batch = docs.filter($"doc_id" >= 100 && $"doc_id" < 300)
@@ -35,7 +32,7 @@ class BloomDedupSpec extends SparkSpec {
 
   test("filter round-trips through the filesystem") {
     val bf = BloomDedup.train(seen, "text", 1000L)
-    val path = tmp("graft_bloom_rt") + "/f.bloom"
+    val path = tempDir("graft_bloom_rt") + "/f.bloom"
     BloomDedup.writeFilter(spark, bf, path)
     val back = BloomDedup.readFilter(spark, path)
     val got = BloomDedup.dedupAgainst(batch, seen, back, "doc_id", "text")
@@ -58,7 +55,7 @@ class BloomDedupSpec extends SparkSpec {
   }
 
   test("sharded train/dedup equals the broadcast path") {
-    val path = tmp("graft_bloom_sh")
+    val path = tempDir("graft_bloom_sh")
     BloomDedup.trainSharded(seen, "text", path, shards = 4,
       expectedItemsPerShard = 500L)
     val got = BloomDedup.dedupAgainstSharded(batch, seen, path, 4,

@@ -200,7 +200,7 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("writeTrainingShards lays out hive shards replaying the epoch order") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_shards").toString
+    val dir = tempDir("graft_shards")
     try {
       CorpusOps.writeTrainingShards(docs, "doc_id", "text", 64, 4, dir)
       val dirs = new java.io.File(dir).listFiles().filter(_.isDirectory)
@@ -370,7 +370,7 @@ class CorpusOpsSpec extends SparkSpec {
     import graft.ext.{CorpusOps, TextDedup}
     import graft.spec.TransformStage
     val docs = sf("documents").limit(300)
-    val idxDir = java.nio.file.Files.createTempDirectory("lss_idx").toString + "/idx"
+    val idxDir = tempDir("lss_idx") + "/idx"
     TextDedup.writeSignatureIndex(docs, "doc_id", "text", idxDir)
     val w = Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05)
     val fromText = CorpusOps.leakSafeSplits(docs, "doc_id", "text", w)

@@ -299,7 +299,7 @@ class ExtSpec extends SparkSpec {
     assert(lsh8.subsetOf(lsh16) && planted.subsetOf(lsh8))
     // signature reuse: mining from the persisted index finds the same
     // pairs without re-deriving signatures from text
-    val idxDir = java.nio.file.Files.createTempDirectory("graft_sigidx").toString
+    val idxDir = tempDir("graft_sigidx")
     TextDedup.writeSignatureIndex(d, "doc_id", "text", idxDir, n = 3)
     val fromIdx = TextDedup.minhashPairsFromIndex(spark, idxDir, 0.8)
       .select("id_a", "id_b", "jaccard").collect().toSet
@@ -602,8 +602,7 @@ class ExtSpec extends SparkSpec {
   test("winnow fingerprint index: pairs-from-index == from-text (incl. CLI stages)") {
     import graft.spec.TransformStage
     val docs = sf("documents").limit(300)
-    val idxDir = java.nio.file.Files.createTempDirectory("win_idx")
-      .toString + "/fps"
+    val idxDir = tempDir("win_idx") + "/fps"
     val t = graft.functions.Transformers
     // index written through the CLI stage (rows pass through)
     val through = t.resolve(TransformStage("winnow_index",
@@ -1019,7 +1018,7 @@ class ExtSpec extends SparkSpec {
     val e = sf("embeddings").limit(300)
     val q = e.filter($"vec_id" < 4)
       .select($"vec_id".as("q_id"), $"embedding".as("q_vec"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ann_rt")
+    val tmp = java.nio.file.Paths.get(tempDir("graft_ann_rt"))
 
     // IVF: train once, persist, reload — results identical at PARTIAL
     // nprobe too (persisted lists are the same assignment), and the
@@ -1214,7 +1213,7 @@ class ExtSpec extends SparkSpec {
   test("signature index round-trips through parquet; CLI stages chain it") {
     import graft.functions.Transformers
     import graft.spec.TransformStage
-    val dir = java.nio.file.Files.createTempDirectory("graft_sigidx").toString
+    val dir = tempDir("graft_sigidx")
     val old = Seq(
       (1L, "the quick brown fox jumps over the lazy dog today"),
       (2L, "an entirely different document about spark engines")
@@ -1721,7 +1720,7 @@ class ExtSpec extends SparkSpec {
   test("retrieval/redact CLI stages: bm25 index+search, pii_redact, url_canon, blocklist") {
     import graft.spec.TransformStage
     val t = graft.functions.Transformers
-    val path = java.nio.file.Files.createTempDirectory("bm25cli").toString
+    val path = tempDir("bm25cli")
     val through = t.resolve(TransformStage("bm25_index", Seq(path)))(docs)
     assert(through.columns.sameElements(docs.columns)) // pass-through
     val hits = t.resolve(TransformStage("bm25_search",

@@ -20,7 +20,7 @@ class FastLocalFsSpec extends SparkSpec {
   }
 
   test("writes produce no .crc sidecar and read back byte-identical") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_fastfs").toFile
+    val dir = new java.io.File(tempDir("graft_fastfs"))
     val p = new Path(dir.toString, "payload.bin")
     val bytes = Array.tabulate[Byte](4096)(i => (i * 31).toByte)
     val out = fs.create(p, true)
@@ -35,7 +35,7 @@ class FastLocalFsSpec extends SparkSpec {
 
   test("parquet round-trip through the engine write path") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_fastfs_pq")
+    val dir = tempDir("graft_fastfs_pq")
     val df = (1 to 100).map(i => (i.toLong, s"v$i")).toDF("k", "v")
     graft.operators.WriteOps.atomicOverwrite(spark, df, s"$dir/t.parquet",
       indexBy = Seq("k"), commitMode = "snapshot")

@@ -149,6 +149,37 @@ class MetadataPlanProps extends SparkSpec {
   test("metadata counts and aggregates equal the scan: partitioned snapshot table") {
     for (seed <- Seq(13, 47)) check(partitioned = true, seed)
   }
+
+  test("escaped string partition values: filtered counts and the _group " +
+    "metadata aggregate equal the scan") {
+    val dir = tempDir("mplan_esc")
+    val p = s"$dir/t.parquet"
+    val vals = Seq("a:b", "x/y", "100%", "plain", null)
+    val df = (0L until 400L).map(i => (i, vals((i % vals.size).toInt)))
+      .toDF("id", "s")
+    graft.operators.WriteOps.atomicOverwrite(spark, df, p,
+      partitionBy = Seq("s"), indexBy = Seq("id"), maxRecordsPerFile = 40,
+      commitMode = "snapshot", keepVersions = 4)
+    val scan = Snapshot.readAt(spark, p, None)
+    def src(q: (String, String)*) = SourceSpec(DatasetRef("parquet", dir, "t"), query = q)
+    for ((q, c) <- Seq(
+        Seq("s" -> "a:b") -> (col("s") === "a:b"),
+        Seq("s" -> "x/y") -> (col("s") === "x/y"),
+        Seq("s__in" -> "100%,a:b") -> col("s").isin("100%", "a:b"),
+        Seq("s__gte" -> "a:b", "id__lt" -> "200") -> (col("s") >= "a:b" && col("id") < 200),
+        Seq("s__exists" -> "0") -> col("s").isNull)) {
+      val want = scan.filter(c).count()
+      assert(want > 0, s"empty case $q")
+      assert(Runner.count(spark, src(q: _*)) == want, s"count of $q")
+    }
+    val g = Planner.sourceFrame(spark, src("_group" -> "s", "_agg" -> "count,min:id,max:id"))
+    assert(g.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+      "the partition-group aggregate must answer from the manifest")
+    val wantG = scan.groupBy("s").agg(count(lit(1)), min("id"), max("id"))
+      .collect().map(_.toSeq).toSet
+    assert(g.collect().map(_.toSeq).toSet == wantG)
+  }
 }
 
 object MetadataPlanProps {

@@ -410,7 +410,7 @@ class PrunedMergeSpec extends SparkSpec {
     val fsys = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dd = graft.operators.Snapshot.dataDir(root)
     graft.operators.Snapshot.listDataFilesRec(fsys, dd)
-      .map(f => graft.operators.Snapshot.relPath(dd, f._1)).toSet
+      .map(f => graft.operators.Snapshot.relPath(dd, f.getPath)).toSet
   }
 
   test("engine-integrated: Runner upsert takes the pruned path and keeps untouched files") {

@@ -267,7 +267,7 @@ class QueryCompilerSpec extends SparkSpec {
     assert(wp.count() == 1)
     val hits = Transformers.apply(long, TransformStage.parseChain("bm25:quick fox;1"))
     assert(hits.columns.contains("score") && hits.count() == 1)
-    val tmp = java.nio.file.Files.createTempDirectory("bloomstage").toString
+    val tmp = tempDir("bloomstage")
     val bf = graft.ext.BloomDedup.train(docs, "text", expectedItems = 100L)
     graft.ext.BloomDedup.writeFilter(spark, bf, s"$tmp/f.bloom")
     val probeDup = Transformers.apply(docs,

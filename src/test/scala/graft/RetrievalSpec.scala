@@ -9,7 +9,7 @@ class RetrievalSpec extends SparkSpec {
   private lazy val docs = sf("documents")
 
   test("persisted bm25 index: search == from-scratch bm25TopK") {
-    val path = java.nio.file.Files.createTempDirectory("bm25spec").toString
+    val path = tempDir("bm25spec")
     Retrieval.writeBm25Index(docs, path)
     val fromIndex =
       Retrieval.searchBm25Index(spark, path, "fast hash join dup", topK = 25)
@@ -22,7 +22,7 @@ class RetrievalSpec extends SparkSpec {
   }
 
   test("persisted bm25 index: term filter pushes into the postings scan") {
-    val path = java.nio.file.Files.createTempDirectory("bm25spec2").toString
+    val path = tempDir("bm25spec2")
     Retrieval.writeBm25Index(docs, path)
     val q = Retrieval.searchBm25Index(spark, path, "fast dup", topK = 5)
     val scan = q.queryExecution.executedPlan.toString()

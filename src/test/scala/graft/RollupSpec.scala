@@ -93,7 +93,7 @@ class RollupSpec extends SparkSpec {
   }
 
   test("maintainPruned rewrites only intersecting state files; result == direct") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_rollpm").toString
+    val dir = tempDir("graft_rollpm")
     val statePath = s"$dir/state.parquet"
     val k = Seq("l_orderkey") // many groups → many indexed files
     val a = RollupOps.parse(Seq("count", "sum:l_quantity"))
@@ -137,7 +137,7 @@ class RollupSpec extends SparkSpec {
   }
 
   test("maintainPruned preserves NULL-keyed group state (null-safe prefilter + semi join)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_rollnull").toString
+    val dir = tempDir("graft_rollnull")
     val statePath = s"$dir/state.parquet"
     val k = Seq("g")
     val a = RollupOps.parse(Seq("count", "sum:v"))

@@ -27,7 +27,7 @@ class SnapshotSpec extends SparkSpec {
 
   private def poolFiles(root: String): Set[String] =
     Snapshot.listDataFilesRec(fs, Snapshot.dataDir(new Path(root)))
-      .map(f => Snapshot.relPath(Snapshot.dataDir(new Path(root)), f._1)).toSet
+      .map(f => Snapshot.relPath(Snapshot.dataDir(new Path(root)), f.getPath)).toSet
 
   private def base(n: Int) = {
     import spark.implicits._
@@ -37,6 +37,13 @@ class SnapshotSpec extends SparkSpec {
   /** Parquet round-trips are all-nullable — the comparable form. */
   private def nullable(s: org.apache.spark.sql.types.StructType) =
     org.apache.spark.sql.types.StructType(s.fields.map(_.copy(nullable = true)))
+
+  test("the data-file listing fails loudly on a missing dir instead of listing it empty") {
+    val missing = new Path(tempDir("graft_list"), "no_such_stage")
+    intercept[java.io.FileNotFoundException] {
+      Snapshot.listDataFilesRec(fs, missing)
+    }
+  }
 
   test("snapshot overwrite round-trips rows, schema order and types") {
     val dir = tempDir("snap_rt")
@@ -206,7 +213,7 @@ class SnapshotSpec extends SparkSpec {
     val expected = sortedRows(graft.sources.Resolver.readParquet(spark, p))
     val nBefore = manifestRels(p, 4).size
     val big = Snapshot.listDataFilesRec(fs, Snapshot.dataDir(new Path(p)))
-      .map(_._2).max
+      .map(_.getLen).max
     val st = Compaction.compact(spark, p, Seq("id"), big / 2, keepVersions = 10)
     assert(st.dirsCompacted == 1 && st.filesCompacted >= 3)
     assert(manifestRels(p, 5).size < nBefore)
@@ -885,7 +892,7 @@ class SnapshotSpec extends SparkSpec {
       graft.sources.Resolver.readParquet(spark, p),
       Seq((5L, "v5", 999L)).toDF("id", "txt", "score"), t, p).isDefined)
     def dataFiles = Snapshot.listDataFilesRec(fs,
-      Snapshot.dataDir(new Path(p))).map(_._1.toString).toSet
+      Snapshot.dataDir(new Path(p))).map(_.getPath.toString).toSet
     val before = dataFiles
     val v = Snapshot.dropColumn(spark, p, "score", keepVersions = 6)
     assert(v == 3L && dataFiles == before,

@@ -3,13 +3,12 @@ package graft
 import graft.spec.DatasetRef
 import graft.streaming.StreamRunner
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 class StreamSpec extends SparkSpec {
   import spark.implicits._
 
   test("AvailableNow continuation: incremental processing across runs") {
-    val dir = Files.createTempDirectory("graft_stream").toString
+    val dir = tempDir("graft_stream")
     val src = s"$dir/src.parquet"; val tgt = s"$dir/tgt"; val ckp = s"$dir/ckp"
     sf("events").limit(100).write.parquet(src)
     val ref = DatasetRef("parquet", dir, "src")
@@ -35,7 +34,7 @@ class StreamSpec extends SparkSpec {
   }
 
   test("watermarked windowed counts over a stream") {
-    val dir = Files.createTempDirectory("graft_wstream").toString
+    val dir = tempDir("graft_wstream")
     val src = s"$dir/ev.parquet"; val tgt = s"$dir/win"; val ckp = s"$dir/ckp2"
     sf("events").limit(200).write.parquet(src)
     val ref = DatasetRef("parquet", dir, "ev")
@@ -56,7 +55,7 @@ class StreamSpec extends SparkSpec {
   }
 
   test("stateless corpus ops (pii scan, chunking) run unchanged on streams") {
-    val dir = Files.createTempDirectory("graft_cstream").toString
+    val dir = tempDir("graft_cstream")
     val src = s"$dir/docs.parquet"
     sf("documents").limit(30).write.parquet(src)
     val ref = DatasetRef("parquet", dir, "docs")
@@ -97,7 +96,7 @@ class StreamSpec extends SparkSpec {
 
   test("streaming near-dup flags arrivals against a static signature index") {
     import graft.ext.TextDedup
-    val dir = Files.createTempDirectory("graft_ndstream").toString
+    val dir = tempDir("graft_ndstream")
     val old = Seq(
       (1L, "the quick brown fox jumps over the lazy dog today"),
       (2L, "some other totally unrelated reference document here")
@@ -120,7 +119,7 @@ class StreamSpec extends SparkSpec {
 
   test("law: streaming near-dup vs static index ≡ batch incrementMatches at sf0.01") {
     import graft.ext.TextDedup
-    val dir = Files.createTempDirectory("graft_ndlaw").toString
+    val dir = tempDir("graft_ndlaw")
     val docs = sf("documents")
     val old = docs.filter($"doc_id" < 400)
     // batch = the sf0.01 tail + one guaranteed index near-dup (doc 0's
@@ -152,7 +151,7 @@ class StreamSpec extends SparkSpec {
 
   test("law: streaming winnow overlap vs fingerprint index ≡ batch matcher at sf0.01") {
     import graft.ext.TextDedup
-    val dir = Files.createTempDirectory("graft_wnlaw").toString
+    val dir = tempDir("graft_wnlaw")
     val docs = sf("documents")
     val old = docs.filter($"doc_id" < 400)
     // stream = the tail + one guaranteed overlap (doc 0's text under a
@@ -181,7 +180,7 @@ class StreamSpec extends SparkSpec {
   }
 
   test("streaming exact dedup drops duplicate keys within the watermark") {
-    val dir = Files.createTempDirectory("graft_dstream").toString
+    val dir = tempDir("graft_dstream")
     val src = s"$dir/ev.parquet"; val tgt = s"$dir/dedup"; val ckp = s"$dir/ckp3"
     // duplicate every event id: the stream must emit each id once
     val base = sf("events").limit(100).select($"event_id", $"ts", $"value")
@@ -268,7 +267,7 @@ class StreamSpec extends SparkSpec {
     // withWatermark (which rejects raw NTZ), dropDuplicatesWithinWatermark,
     // and the epoch-keyed mapGroupsWithState paths.
     import org.apache.spark.sql.types.TimestampNTZType
-    val dir = Files.createTempDirectory("graft_ntz").toString
+    val dir = tempDir("graft_ntz")
     val base = sf("events").limit(100).select($"event_id", $"user_id",
       $"event_type", $"ts", $"value")
     val ntz = base.withColumn("ts", $"ts".cast(TimestampNTZType))
@@ -315,7 +314,7 @@ class StreamSpec extends SparkSpec {
     val ev = graft.sources.Resolver.readParquet(
         spark, "/root/testdata/sf0.1/events.parquet")
       .select($"event_id", $"user_id", $"event_type", $"ts", $"value")
-    val dir = Files.createTempDirectory("graft_par_sf01").toString
+    val dir = tempDir("graft_par_sf01")
     def canon(df: org.apache.spark.sql.DataFrame): Set[(Long, String, Long, BigDecimal)] =
       df.select($"window_start".cast("long"), $"event_type", $"n", $"sum_value")
         .as[(Long, String, Long, Double)].collect()
@@ -357,7 +356,7 @@ class StreamSpec extends SparkSpec {
   }
 
   test("streaming lm scoring against a static trained model ≡ batch") {
-    val dir = Files.createTempDirectory("graft_lmstream").toString
+    val dir = tempDir("graft_lmstream")
     val src = s"$dir/docs.parquet"
     sf("documents").limit(30).write.parquet(src)
     val batchDocs = spark.read.parquet(src)
@@ -378,7 +377,7 @@ class StreamSpec extends SparkSpec {
   }
 
   test("streaming cluster assignment against static trained centroids ≡ batch") {
-    val dir = Files.createTempDirectory("graft_clstream").toString
+    val dir = tempDir("graft_clstream")
     val src = s"$dir/emb.parquet"
     sf("embeddings").limit(200).write.parquet(src)
     val batch = spark.read.parquet(src)
@@ -403,7 +402,7 @@ class StreamSpec extends SparkSpec {
 
   test("streaming rollup maintenance: AvailableNow ≡ batch; replayed batch is a no-op") {
     import graft.ext.RollupOps
-    val dir = Files.createTempDirectory("graft_rollstream").toString
+    val dir = tempDir("graft_rollstream")
     val src = s"$dir/ev.parquet"; val state = s"$dir/state.parquet"
     val ckp = s"$dir/ckp"
     val ev = sf("events").select("event_type", "value", "user_id").limit(2000)
@@ -445,7 +444,7 @@ class StreamSpec extends SparkSpec {
 
   test("--stream --rollup maintains the state table end-to-end via the CLI") {
     import graft.ext.RollupOps
-    val dir = Files.createTempDirectory("graft_rollcli").toString
+    val dir = tempDir("graft_rollcli")
     sf("events").select("event_type", "value", "user_id").limit(1500)
       .coalesce(2).write.parquet(s"$dir/ev.parquet")
     val (job, opts) = graft.cli.Main.parse(Array(
@@ -479,7 +478,7 @@ class StreamSpec extends SparkSpec {
 
   test("streaming rollup: zero-row pre-existing state does not wedge the run") {
     import graft.ext.RollupOps
-    val dir = Files.createTempDirectory("graft_rollempty").toString
+    val dir = tempDir("graft_rollempty")
     val src = s"$dir/ev.parquet"; val state = s"$dir/state.parquet"
     val ev = sf("events").select("event_type", "value", "user_id").limit(500)
     ev.coalesce(1).write.parquet(src)
@@ -507,7 +506,7 @@ class StreamSpec extends SparkSpec {
 
   test("streaming rollup: recreated checkpoint (new query id) re-applies, not silently drops") {
     import graft.ext.RollupOps
-    val dir = Files.createTempDirectory("graft_rollckp").toString
+    val dir = tempDir("graft_rollckp")
     val src = s"$dir/ev.parquet"; val state = s"$dir/state.parquet"
     val ev = sf("events").select("event_type", "value", "user_id").limit(500)
     ev.coalesce(1).write.parquet(src)

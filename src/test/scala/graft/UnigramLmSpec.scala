@@ -183,7 +183,7 @@ class UnigramLmSpec extends SparkSpec {
   test("model persistence: write/read round-trips bit-identically; encode agrees") {
     val docs = corpus(Seq.fill(15)("the quick brown fox jumps"))
     val m = UnigramLm.train(docs, vocabSize = 30, emIters = 2)
-    val path = java.nio.file.Files.createTempDirectory("graft_uni").toString + "/m"
+    val path = tempDir("graft_uni") + "/m"
     UnigramLm.writeModel(spark, m, path)
     val back = UnigramLm.readModel(spark, path)
     assert(back.pieces == m.pieces, "probabilities must round-trip exactly")
