@@ -102,7 +102,9 @@ object ScaleBench10 {
 
     def versionBytes(root: Path): Long =
       graft.operators.Versioned.list(fs, root).map { case (_, p, _) =>
-        (try fs.listStatus(p) catch { case _: Throwable => Array.empty })
+        (try fs.listStatus(p)
+         catch { case scala.util.control.NonFatal(_) =>
+           Array.empty[org.apache.hadoop.fs.FileStatus] })
           .filter(_.isFile).map(_.getLen).sum
       }.sum
 

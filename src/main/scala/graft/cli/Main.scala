@@ -895,9 +895,12 @@ object Main {
           println(s"done: ${r.written} rows written over ${r.iterations} iteration(s)")
         } else {
           // O3: stage/row progress during the run (reference poll_job,
-          // base.py:366-392); quiet under -y/--silent.
+          // base.py:366-392); quiet under -y/--silent. The lines are
+          // printed from Spark's listener-bus thread, so they go to the
+          // caller's Console.out as it is now, not that thread's.
+          val out = Console.out
           val r = Runner.execute(spark, job,
-            progress = if (opts.silent) None else Some(println(_: String)),
+            progress = if (opts.silent) None else Some(out.println(_: String)),
             comment = opts.msg)
           println(s"done: ${r.written} rows written")
         }

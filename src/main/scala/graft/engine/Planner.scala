@@ -13,6 +13,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the whole job at once — predicate pushdown into the scan, column
   * pruning, join strategy selection, AQE — with no engine-side
   * scheduling (SURVEY §4).
+  *
+  * The exception is a BARRIER transformer
+  * ([[graft.functions.Transformers.isBarrier]]: `dedup_keep_best`,
+  * `dedup_incr`, `expect`, the k-means stages, the index writers, …),
+  * which runs Spark jobs over its input while the plan is built and
+  * references that input again in the frame it returns. Every entry point takes a
+  * `barrier` hook that each barrier's input passes through. Library,
+  * preview, `--dry` and oracle callers keep `identity`: the plan stays
+  * one lazy plan and a barrier's upstream is evaluated once per
+  * reference. [[Runner.execute]] passes a hook that materializes the
+  * input as a durable stage beside the target, so the chain upstream
+  * of each barrier runs once.
   */
 object Planner {
 
@@ -21,7 +33,8 @@ object Planner {
     * etl_cli/etl.py:135-146).
     */
   def sourceFrame(spark: SparkSession, s: SourceSpec,
-                  failOnError: Boolean = true): DataFrame =
+                  failOnError: Boolean = true,
+                  barrier: DataFrame => DataFrame = identity): DataFrame =
       metadataAggFast(spark, s).getOrElse {
     val raw = Resolver.read(spark, s.ref, failOnError = failOnError,
       query = s.query) // connector backends push the filters server-side
@@ -31,7 +44,7 @@ object Planner {
     // the projection either way).
     val (fieldParams, rest) = s.query.partition(_._1 == "_fields")
     val queried = QueryCompiler.apply(raw, rest)
-    val transformed = Transformers.apply(queried, s.postRead)
+    val transformed = Transformers.apply(queried, s.postRead, barrier)
     val fields = fieldParams.flatMap(_._2.split(","))
       .map(_.trim).filter(_.nonEmpty)
     if (fields.nonEmpty) QueryCompiler.project(transformed, fields)
@@ -173,28 +186,32 @@ object Planner {
     * (reference: `setup_merger`, etl_cli/etl.py:148-187).
     */
   def withMerger(spark: SparkSession, src: DataFrame, m: MergerSpec,
-                 failOnError: Boolean = true): DataFrame = {
+                 failOnError: Boolean = true,
+                 barrier: DataFrame => DataFrame = identity): DataFrame = {
     // only LITERAL merger filters can push to a connector; correlated
     // `#field#` keys resolve per source row inside the join
     val literals = m.query.filterNot(_._2.matches("#.*#"))
     val mrgRaw = Transformers.apply(
       Resolver.read(spark, m.ref, failOnError = failOnError,
-        query = literals), m.postRead)
+        query = literals), m.postRead, barrier)
     val merged = MergePlanner.merge(src, mrgRaw, m)
-    Transformers.apply(merged, m.postMerge)
+    Transformers.apply(merged, m.postMerge, barrier)
   }
 
   /** Full read-side plan: source → merger. Target ops are applied by the
-    * Runner (they need the current target state).
+    * Runner (they need the current target state). `barrier` sees the
+    * input of every barrier transformer of the source, merger and
+    * post-merge chains (see the object doc).
     */
-  def plan(spark: SparkSession, job: JobSpec): DataFrame = {
+  def plan(spark: SparkSession, job: JobSpec,
+           barrier: DataFrame => DataFrame = identity): DataFrame = {
     // W14: target.fail_on_error governs the whole job's read policy
     // (reference stores the global flag under target.*, base.py:267)
     val foe = job.effectiveFailOnError
-    val src = sourceFrame(spark, job.source, foe)
+    val src = sourceFrame(spark, job.source, foe, barrier)
     val compiled = QueryCompiler.compile(src, job.source.query)
     val df = job.merger.fold(src) { m =>
-      val merged0 = withMerger(spark, src, m, foe)
+      val merged0 = withMerger(spark, src, m, foe, barrier)
       // A shuffle join does not preserve the source's `_sort` order —
       // re-apply it so downstream consumers see the requested ordering.
       val sortKeys = compiled.sort

@@ -66,7 +66,18 @@ object Runner {
     * them), through [[graft.operators.Snapshot.footerRowCount]]. None
     * for any other plan or an unreadable footer.
     */
-  private def footerCount(spark: SparkSession, df: DataFrame): Option[Long] = {
+  private def footerCount(spark: SparkSession, df: DataFrame): Option[Long] =
+    bareParquetScan(df).flatMap { r =>
+      graft.operators.Snapshot.footerRowCount(spark,
+        r.location.listFiles(Nil, Nil).flatMap(_.files)
+          .map(f => (f.getPath.toString, f.getLen)))
+    }
+
+  /** The parquet file relation `df` reads when its plan is a BARE scan
+    * — a parquet file relation under at most projections — else None.
+    */
+  private def bareParquetScan(df: DataFrame)
+      : Option[org.apache.spark.sql.execution.datasources.HadoopFsRelation] = {
     import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -78,11 +89,7 @@ object Runner {
       }
       case _ => None
     }
-    scan(df.queryExecution.analyzed).flatMap { r =>
-      graft.operators.Snapshot.footerRowCount(spark,
-        r.location.listFiles(Nil, Nil).flatMap(_.files)
-          .map(f => (f.getPath.toString, f.getLen)))
-    }
+    scan(df.queryExecution.analyzed)
   }
 
   private val CountAll = Seq("count" -> "*")
@@ -147,10 +154,9 @@ object Runner {
     }
 
   private def executeInner(spark: SparkSession, job: JobSpec, log: Boolean,
-                           comment: Option[String] = None): RunResult = {
-    val planned = Planner.plan(spark, job)
+                           comment: Option[String] = None): RunResult =
     job.target match {
-      case None => RunResult(job, planned.count(), 0, 1)
+      case None => RunResult(job, Planner.plan(spark, job).count(), 0, 1)
       case Some(t) =>
         // ONE pass over the source→merge plan: the stamped batch is
         // materialized into a STAGING parquet dir next to the target,
@@ -164,15 +170,29 @@ object Runner {
         // materialization point. (An observe() metric can't do this
         // bookkeeping: upsert/index reference the batch subtree twice
         // in one plan, which double-fires the CollectMetrics node.)
+        //
+        // The same holds INSIDE the plan: the input of every barrier
+        // transformer (Transformers.isBarrier — dedup_keep_best's pair
+        // mining, expect's count, a k-means fit) is staged the same
+        // way by [[stageBarrier]], so the barrier's own jobs and the
+        // frame it returns both read one durable copy and the chain
+        // upstream of it runs once. The sweep runs before planning,
+        // and each barrier stage dir is recorded before it is written,
+        // so the `finally` deletes every one of them.
         val tgtPath = Resolver.path(t.ref)
-        val stagePath = new org.apache.hadoop.fs.Path(
+        val tgt = new org.apache.hadoop.fs.Path(tgtPath)
+        val fs = tgt.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        def stageDir() = new org.apache.hadoop.fs.Path(
           tgtPath + "._stage_" + java.util.UUID.randomUUID())
-        val fs = stagePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val stagePath = stageDir()
+        val stages = scala.collection.mutable.ArrayBuffer(stagePath)
         // sweep stale staging/temp dirs a crashed prior run left next
         // to the target (single-writer model: anything matching is
         // dead weight — at scale each orphan is a full batch copy)
         sweepStale(fs, tgtPath)
         try {
+          val planned = Planner.plan(spark, job, barrier = df =>
+            stageBarrier(spark, df, { val d = stageDir(); stages += d; d }))
           (if (t.skipTimestamp) planned
            else planned.withColumn("_etl_ts", current_timestamp()))
             .write.parquet(stagePath.toString)
@@ -212,7 +232,7 @@ object Runner {
           val dvUpsert = t.op == graft.spec.WriteOp.Upsert && t.deleteVectors
           if (dvUpsert) {
             require(graft.operators.Snapshot.isSnapshotLayout(
-              fs, new org.apache.hadoop.fs.Path(tgtPath)),
+              fs, tgt),
               s"--dv needs a snapshot layout at $tgtPath (write it with " +
                 "--commit snapshot first)")
             require(t.pk.nonEmpty, "--dv upsert needs --pk")
@@ -223,9 +243,8 @@ object Runner {
             // widening — the engine's OWN `_etl_ts` stamp must not
             // force one on a table that never carried the column. A
             // user-provided `_etl_ts` is data and is never dropped.
-            val hp = new org.apache.hadoop.fs.Path(tgtPath)
             val tblCols = graft.operators.Snapshot.manifestAt(fs,
-              graft.operators.Snapshot.resolveVersion(fs, hp, None)._2)
+              graft.operators.Snapshot.resolveVersion(fs, tgt, None)._2)
               .map(_.schema.fieldNames.toSet).getOrElse(Set.empty[String])
             val stampedByUs =
               !t.skipTimestamp && !planned.columns.contains("_etl_ts")
@@ -239,7 +258,7 @@ object Runner {
           val dv = t.op == graft.spec.WriteOp.Delete && t.deleteVectors
           if (dv) {
             require(graft.operators.Snapshot.isSnapshotLayout(
-              fs, new org.apache.hadoop.fs.Path(tgtPath)),
+              fs, tgt),
               s"--dv needs a snapshot layout at $tgtPath (write it with " +
                 "--commit snapshot first)")
             if (t.query.nonEmpty) {
@@ -293,7 +312,7 @@ object Runner {
           // Bounded attempts; a persistent conflict propagates loudly
           // rather than spinning against a hot writer.
           def mergeOnce(): Boolean =
-            fs.exists(new org.apache.hadoop.fs.Path(tgtPath)) &&
+            fs.exists(tgt) &&
               PrunedMerge.merge(spark, targetState(spark, t, batch), batch,
                 t, tgtPath).isDefined
           def mergeWithRetry(): Boolean = {
@@ -312,7 +331,16 @@ object Runner {
             false // unreachable
           }
           val pruned = dv || dvUpsert || mergeWithRetry()
-          if (!pruned) {
+          // CREATE PROMOTE: a plain create into an absent target would
+          // rewrite the staged batch unchanged (the op is a union with
+          // the empty target state), so the stage itself is moved into
+          // place through the rename commit's swap — the output is
+          // written once. Any pk, layout option, projection or mapping,
+          // another backend or commit protocol, or an existing target
+          // takes the rewrite below.
+          if (!pruned && promotable(t, fs, tgt))
+            WriteOps.renameSwap(fs, stagePath, tgt)
+          else if (!pruned) {
             // fresh read — a conflicted merge attempt above proves the
             // head can move under us; the full rewrite must apply the
             // op to the CURRENT state
@@ -339,10 +367,63 @@ object Runner {
           }
           RunResult(job, written, written, 1)
         } finally {
-          try fs.delete(stagePath, true) catch { case _: Throwable => () }
+          stages.foreach(d => try fs.delete(d, true) catch { case _: Throwable => () })
         }
     }
+
+  /** The Runner's barrier hook ([[Planner.plan]]): write `df` to the
+    * fresh stage dir `dir()` and read it back from its footer
+    * ([[Resolver.readPlain]]). Returned as is, for the lazy plan to
+    * evaluate as before: a frame that only selects or renames columns
+    * of a parquet scan (a copy would only re-read the same values; a
+    * computed column is staged), one parquet cannot
+    * hold (a type or field name it does not support, or a duplicate
+    * column name), and one whose plan holds a global sort — a file
+    * scan does not keep row order, and a stage after the barrier
+    * (`limit`, the target's file order) may depend on it.
+    */
+  private def stageBarrier(spark: SparkSession, df: DataFrame,
+                           dir: => org.apache.hadoop.fs.Path): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
+    import org.apache.spark.sql.catalyst.plans.logical.{Project, Sort}
+    val pq = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val fields = df.schema.fields
+    val stageable = fields.forall(f => pq.supportDataType(f.dataType) &&
+        pq.supportFieldName(f.name)) &&
+      fields.map(_.name.toLowerCase).distinct.length == fields.length
+    val sorted = df.queryExecution.analyzed.exists {
+      case s: Sort => s.global
+      case _ => false
+    }
+    val columnsOfScan = bareParquetScan(df).isDefined &&
+      df.queryExecution.analyzed.collect { case p: Project => p.projectList }
+        .flatten.forall {
+          case _: Attribute | Alias(_: Attribute, _) => true
+          case _ => false
+        }
+    if (!stageable || sorted || columnsOfScan) df
+    else {
+      val d = dir.toString
+      df.write.parquet(d)
+      Resolver.readPlain(spark, d)
+    }
   }
+
+  /** Whether a write of the staged batch may promote the stage to the
+    * target (see executeInner): a plain `create` — no pk, no
+    * `skipBy` — of a parquet target that does not exist, committed by
+    * the `rename` protocol, with no partitioning, index layout, file
+    * size cap, `--tf` projection or `--tmap` mapping.
+    */
+  private def promotable(t: TargetSpec, fs: org.apache.hadoop.fs.FileSystem,
+                         tgt: org.apache.hadoop.fs.Path): Boolean =
+    t.op == graft.spec.WriteOp.Create && t.pk.isEmpty && t.skipBy.isEmpty &&
+      t.ref.backend == "parquet" && t.partitionBy.isEmpty &&
+      t.indexBy.isEmpty && t.maxRecordsPerFile == 0 && t.fields.isEmpty &&
+      t.tmap.isEmpty &&
+      WriteOps.effectiveCommitMode(Option(tgt.toUri.getScheme),
+        layoutVersioned = false, t.commitMode) == "rename" &&
+      !fs.exists(tgt)
 
   /** Delete `._stage_*` / `._tmp_*` siblings a crashed run stranded
     * next to the target (each holds a full batch/rewrite copy).

@@ -58,8 +58,20 @@ object BloomDedup {
     require(bits / 8 <= (2L << 30),
       s"filter would need ${bits / 8 / (1 << 20)} MiB > 2 GiB; " +
         "use trainSharded/dedupAgainstSharded beyond ~1e9 seen items")
-    seen.select(key(textCol).as("__k__")).stat
-      .bloomFilter("__k__", expectedItems, fpp)
+    filterOf(seen.select(key(textCol).as("__k__")), expectedItems, fpp)
+  }
+
+  /** The filter over the single key column `__k__` of `keys` — the
+    * aggregate `stat.bloomFilter` runs, whose NULL result for an empty
+    * input (a `NullPointerException` there) becomes the empty filter.
+    */
+  private def filterOf(keys: DataFrame, expectedItems: Long,
+                       fpp: Double): BloomFilter = {
+    val bits = BloomFilter.optimalNumOfBits(expectedItems, fpp)
+    val bytes = keys.select(org.apache.spark.sql.graftshim.ExprShim
+      .bloomFilterAgg(col("__k__"), expectedItems, bits)).head().getAs[Array[Byte]](0)
+    if (bytes == null) BloomFilter.create(expectedItems, bits)
+    else BloomFilter.readFrom(bytes)
   }
 
   /** Persist/load the filter through the Hadoop filesystem of `path`
@@ -138,23 +150,33 @@ object BloomDedup {
     // scan is pruned by the pushed __s__ filter when `seen` is
     // pre-partitioned by the same expression (the epoch writer does)
     (0 until shards).foreach { s =>
-      val bf = keys.filter(col("__s__") === s).stat
-        .bloomFilter("__k__", expectedItemsPerShard, fpp)
-      writeFilter(spark, bf, s"$path/shard=$s.bloom")
+      val bf = filterOf(keys.filter(col("__s__") === s),
+        expectedItemsPerShard, fpp)
+      writeFilter(spark, bf, shardPath(path, s).toString)
     }
   }
 
+  private def shardPath(path: String, shard: Int) = new Path(s"$path/shard=$shard.bloom")
+
   /** [[dedupAgainst]] with per-task shard loading: rows are clustered
-    * by shard so each task touches few filters, and a task-local cache
-    * loads each shard at most once per task. Result is identical to
-    * the broadcast path (same law).
+    * by shard so each task touches few filters, and a JVM-wide cache
+    * loads each shard file at most once. The driver stats the shard
+    * files when the frame is built and the cache is keyed on what it
+    * saw, so a filter retrained at the same path is read afresh.
+    * Result is identical to the broadcast path (same law).
     */
   def dedupAgainstSharded(batch: DataFrame, seen: DataFrame, path: String,
                           shards: Int, idCol: String,
                           textCol: String): DataFrame = {
+    val fs = new Path(path).getFileSystem(
+      batch.sparkSession.sparkContext.hadoopConfiguration)
+    val files = (0 until shards).map { s =>
+      val st = fs.getFileStatus(shardPath(path, s))
+      ShardFile(path, s, st.getLen, st.getModificationTime)
+    }.toArray
     val mightSharded = udf { (h: Long) =>
       val s = java.lang.Math.floorMod(h, shards.toLong).toInt
-      BloomDedup.shardCache.get((path, s)).mightContainLong(h)
+      BloomDedup.shardCache.get(files(s)).mightContainLong(h)
     }
     val cand = batch
       .withColumn("__shard__", pmod(key(textCol), lit(shards)))
@@ -171,24 +193,38 @@ object BloomDedup {
       batch.join(confirmed, Seq(idCol), "left_anti"), textCol, idCol)
   }
 
+  /** One shard filter file as the driver saw it. A filter's length is
+    * fixed by (expectedItemsPerShard, fpp), so a retrain at the same
+    * path with the same parameters is told apart by its modification
+    * time alone: on a filesystem whose mtime is second-granular (an
+    * object store's Last-Modified), a retrain within the same second
+    * as the cached load is not seen, and the old filter is served. */
+  private final case class ShardFile(path: String, shard: Int, len: Long, mtime: Long)
+
   /** Executor-local shard cache: each JVM loads a given shard file at
-    * most once (concurrent tasks share it). Bounded by construction —
-    * entries are (path, shard) for the one dedup in flight; an epoch
-    * change uses a new path.
+    * most once (concurrent tasks share it). Loading a shard evicts the
+    * other versions of the same (path, shard), so the cache holds one
+    * filter per shard file in use.
     */
   private object shardCache {
     private val loaded =
-      new java.util.concurrent.ConcurrentHashMap[(String, Int), BloomFilter]()
-    def get(k: (String, Int)): BloomFilter =
-      loaded.computeIfAbsent(k, { k2 =>
-        val p = new Path(s"${k2._1}/shard=${k2._2}.bloom")
-        // executor-side Configuration: picks up core-site/hdfs-site (and
-        // object-store credentials) from the executor classpath — the
-        // driver's SparkConf-derived Hadoop conf is not serializable
-        // through a public API
-        val in = p.getFileSystem(
-          new org.apache.hadoop.conf.Configuration()).open(p)
-        try BloomFilter.readFrom(in) finally in.close()
-      })
+      new java.util.concurrent.ConcurrentHashMap[ShardFile, BloomFilter]()
+    def get(k: ShardFile): BloomFilter = {
+      val hit = loaded.get(k)
+      if (hit != null) hit
+      else {
+        loaded.keySet.removeIf(o => o.path == k.path && o.shard == k.shard)
+        loaded.computeIfAbsent(k, { k2 =>
+          val p = shardPath(k2.path, k2.shard)
+          // executor-side Configuration: picks up core-site/hdfs-site (and
+          // object-store credentials) from the executor classpath — the
+          // driver's SparkConf-derived Hadoop conf is not serializable
+          // through a public API
+          val in = p.getFileSystem(
+            new org.apache.hadoop.conf.Configuration()).open(p)
+          try BloomFilter.readFrom(in) finally in.close()
+        })
+      }
+    }
   }
 }

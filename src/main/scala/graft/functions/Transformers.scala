@@ -744,16 +744,44 @@ object Transformers {
     }
   }
 
+  /** BARRIER stages: applying one runs Spark jobs over its input frame
+    * (an eager count, a model fit, a pair mining, an index write) and
+    * the frame it returns references that input again, so a lazily
+    * planned chain would evaluate everything upstream of the barrier
+    * twice. [[apply]] passes the input of each barrier through its
+    * `barrier` hook; the Runner's hook materializes it as a durable
+    * stage, so the chain upstream runs once. Eager stages whose result
+    * no longer reads the input (`bpe_train`, `unigram_train` and
+    * `byte_bpe_train` return a new table; `containment_pairs`,
+    * `winnow_pairs` and `langid_nb` read back their own persisted
+    * intermediate) gain nothing from a stage and are not listed.
+    * `TransformersSpec` checks the list against what each stage does.
+    */
+  private val barriers: Set[String] = Set(
+    "split_leakfree", "expect", "pca_project", "cluster_assign", "semdedup",
+    "cluster_sample", "lm_score", "dedup_incr", "write_index", "ann_index",
+    "dedup_keep_best", "winnow_index", "temperature_sample", "unigram_encode",
+    "bm25_index")
+
   def register(name: String, f: Factory): Unit = registry.update(name, f)
   def names: Seq[String] = registry.keys.toSeq.sorted
+  def isBarrier(name: String): Boolean = barriers.contains(name)
 
   def resolve(stage: TransformStage): Stage =
     registry.getOrElse(stage.name,
       throw new IllegalArgumentException(
         s"unknown transformer: ${stage.name} (known: ${names.mkString(",")})"))(stage.args)
 
-  def apply(df: DataFrame, stages: Seq[TransformStage]): DataFrame =
-    stages.foldLeft(df) { (d, s) =>
+  /** Apply `stages` in order. The input of every barrier stage
+    * ([[isBarrier]]) first passes through `barrier`: the library,
+    * preview, `--dry` and oracle paths keep `identity` (one lazy plan,
+    * barriers evaluate their input where they need it), and
+    * [[graft.engine.Runner]] materializes it next to the job's target.
+    */
+  def apply(df: DataFrame, stages: Seq[TransformStage],
+            barrier: DataFrame => DataFrame = identity): DataFrame =
+    stages.foldLeft(df) { (d0, s) =>
+      val d = if (isBarrier(s.name)) barrier(d0) else d0
       // arg destructuring happens inside the stage closure — surface a
       // usable error instead of a bare MatchError on wrong arity
       try resolve(s)(d) catch {

@@ -72,6 +72,10 @@ object Snapshot {
     */
   val PredColName = "__pred__"
 
+  /** The one-column schema of a predicate tombstone file. */
+  private val PredSchema = StructType(Seq(org.apache.spark.sql.types.StructField(
+    PredColName, org.apache.spark.sql.types.StringType, nullable = false)))
+
   /** Sentinel `seq` of a freshly created [[Entry]]: replaced with the
     * committed version number inside [[commitLocked]]. Never appears
     * in a written manifest.
@@ -1626,7 +1630,7 @@ object Snapshot {
       val hit = if (len >= 0) predCache.get(key) else null
       if (hit != null) hit
       else {
-        val vals = spark.read.parquet(f)
+        val vals = spark.read.schema(PredSchema).parquet(f)
           .select(PredColName).distinct().collect()
           .map(_.getString(0)).toSeq
         if (len >= 0) {
@@ -3337,9 +3341,7 @@ object Snapshot {
       }
     }
     val frame = spark.createDataFrame(
-      java.util.Collections.singletonList(Row(predSql)),
-      StructType(Seq(org.apache.spark.sql.types.StructField(
-        PredColName, org.apache.spark.sql.types.StringType, nullable = false))))
+      java.util.Collections.singletonList(Row(predSql)), PredSchema)
     val moved = stageIntoPool(fs, root, frame.coalesce(1),
       tombstoneCols = Some(Seq(PredColName)))
     // rebase with nothing removed: like a key tombstone, a predicate
@@ -3479,7 +3481,7 @@ object Snapshot {
         val rs = dataEntries.map(_.rows)
         if (rs.nonEmpty && rs.forall(_.isDefined)) rs.flatten.sum
         else if (dataEntries.isEmpty) 0L
-        else spark.read.parquet(
+        else spark.read.schema(dataSchema).parquet(
           dataEntries.map(e => new Path(dd, e.rel).toString): _*).count()
       }
     if (nKeys == 0) {
@@ -3491,11 +3493,13 @@ object Snapshot {
     // the pooled batch file (already distinct by construction)
     val keySrc =
       if (small) {
-        // basePath recovers partition-resident pk components; the cast
-        // pins path-inferred types back to the table's
+        // the table's schema, not an inference job over the files;
+        // basePath recovers partition-resident pk components, and the
+        // cast pins their types back to the table's
         val r = if (m.partitionBy.nonEmpty)
           spark.read.option("basePath", dd.toString) else spark.read
-        r.parquet(dataEntries.map(e => new Path(dd, e.rel).toString): _*)
+        r.schema(m.schema)
+          .parquet(dataEntries.map(e => new Path(dd, e.rel).toString): _*)
           .select(pk.map(c => col(c).cast(m.schema(c).dataType).as(c)): _*)
       } else keys
     // one tombstone file per ~20M keys: single-writer up to huge
@@ -4008,7 +4012,9 @@ object Snapshot {
         // vector subdir explicitly with the same refcount rule
         val delDir = new Path(dd, DeletesDirName)
         if (fs.exists(delDir))
-          (try fs.listStatus(delDir) catch { case _: Throwable => Array.empty }).foreach { s =>
+          (try fs.listStatus(delDir)
+           catch { case scala.util.control.NonFatal(_) =>
+             Array.empty[org.apache.hadoop.fs.FileStatus] }).foreach { s =>
             if (s.isFile)
               sweep(s.getPath, s"$DeletesDirName/${s.getPath.getName}",
                 s.getModificationTime)
@@ -4031,7 +4037,9 @@ object Snapshot {
               refsOk = false; Vector.empty }
           }.toSet
           if (refsOk)
-            (try fs.listStatus(pdir) catch { case _: Throwable => Array.empty })
+            (try fs.listStatus(pdir)
+             catch { case scala.util.control.NonFatal(_) =>
+               Array.empty[org.apache.hadoop.fs.FileStatus] })
               .foreach { s =>
                 if (s.isFile && !livePartNames.contains(s.getPath.getName) &&
                     now - s.getModificationTime > StageGraceMs)
@@ -4379,7 +4387,7 @@ object Snapshot {
     // runs at changelog BUILD time, before any consumer's own scope
     val inlined = MaintProfile.scoped(spark, MaintProfile.smallBytes(
         Some((keyA ++ keyB).map(_.bytes).sum))) {
-      union.map(_.limit(10001).collect()).getOrElse(Array.empty)
+      union.map(_.limit(10001).collect()).getOrElse(Array.empty[org.apache.spark.sql.Row])
     }
     val preConds: Option[Seq[org.apache.spark.sql.Column]] =
       if (inlined.nonEmpty && inlined.length <= 10000)
@@ -4591,7 +4599,9 @@ object Snapshot {
         val delDir = new Path(dd, DeletesDirName)
         val dels =
           if (!fs.exists(delDir)) Nil
-          else (try fs.listStatus(delDir) catch { case _: Throwable => Array.empty })
+          else (try fs.listStatus(delDir)
+                catch { case scala.util.control.NonFatal(_) =>
+                  Array.empty[org.apache.hadoop.fs.FileStatus] })
             .filter(_.isFile)
             .map(s => s"$DeletesDirName/${s.getPath.getName}" -> s.getLen).toSeq
         (data ++ dels).toMap

@@ -348,30 +348,6 @@ object WriteOps {
     }.mkString("/")
   }
 
-  /** Atomic full-rewrite (SURVEY §7.4.1 — rewrite atomicity without a
-    * table format). Two commit modes:
-    *
-    *   - `rename` (default): write to a temp dir next to the target,
-    *     swap via directory renames. Atomic on HDFS/local where dir
-    *     rename is a metadata op; on object stores rename is copy +
-    *     delete — NOT atomic there.
-    *   - `versioned`: object-store-atomic. Data lands in a fresh
-    *     `_v_<n>` dir UNDER the target path; the commit point is
-    *     creating the empty `_COMMITTED` marker inside it — a single
-    *     object PUT, atomic on strongly-consistent S3 and an atomic
-    *     create on HDFS. Readers ([[graft.sources.Resolver]]) resolve
-    *     to the highest committed version; the PREVIOUS committed
-    *     version is retained one generation so in-flight readers keep
-    *     a consistent snapshot while a commit lands (older versions
-    *     and uncommitted stray dirs are vacuumed). Single writer at a
-    *     time, like the reference's job model.
-    *
-    * `partitionBy` lays the files out hive-style (partition pruning on
-    * read); `maxRecordsPerFile` bounds file sizes (the engine analog of
-    * the reference's s3 write-buffer sizing, etl_cli/etl.py:129-133).
-    * On a real lake this writer is the piece you swap for
-    * Delta/Iceberg MERGE; the op transforms above stay the spec.
-    */
   /** Object-store URI schemes where a directory rename is NOT atomic
     * (s3a "rename" is copy+delete per object — a reader can observe a
     * half-renamed target). The reference's s3 sink (etl_cli/etl.py:
@@ -403,7 +379,31 @@ object WriteOps {
       "versioned"
     else commitMode
 
-  /** `statsCols` (r18): extra columns to record manifest envelopes for
+  /** Atomic full-rewrite (SURVEY §7.4.1 — rewrite atomicity without a
+    * table format). Two commit modes:
+    *
+    *   - `rename` (default): write to a temp dir next to the target,
+    *     swap via directory renames. Atomic on HDFS/local where dir
+    *     rename is a metadata op; on object stores rename is copy +
+    *     delete — NOT atomic there.
+    *   - `versioned`: object-store-atomic. Data lands in a fresh
+    *     `_v_<n>` dir UNDER the target path; the commit point is
+    *     creating the empty `_COMMITTED` marker inside it — a single
+    *     object PUT, atomic on strongly-consistent S3 and an atomic
+    *     create on HDFS. Readers ([[graft.sources.Resolver]]) resolve
+    *     to the highest committed version; the PREVIOUS committed
+    *     version is retained one generation so in-flight readers keep
+    *     a consistent snapshot while a commit lands (older versions
+    *     and uncommitted stray dirs are vacuumed). Single writer at a
+    *     time, like the reference's job model.
+    *
+    * `partitionBy` lays the files out hive-style (partition pruning on
+    * read); `maxRecordsPerFile` bounds file sizes (the engine analog of
+    * the reference's s3 write-buffer sizing, etl_cli/etl.py:129-133).
+    * On a real lake this writer is the piece you swap for
+    * Delta/Iceberg MERGE; the op transforms above stay the spec.
+    *
+    * `statsCols` (r18): extra columns to record manifest envelopes for
     * on snapshot commits, for callers that PRE-LAID the frame
     * themselves and pass `indexBy = Nil` to avoid a second sort — the
     * CLI z-order path, whose clustered columns would otherwise commit
@@ -502,23 +502,35 @@ object WriteOps {
       case _ => // rename swap (HDFS/local)
         val tmp = new org.apache.hadoop.fs.Path(
           path + "._tmp_" + java.util.UUID.randomUUID())
-        val bak = new org.apache.hadoop.fs.Path(path + "._bak")
         writeTo(tmp)
-        // HDFS/object-store renames report failure by returning false,
-        // not throwing — every step is checked so a failed swap can
-        // never delete the only remaining copy of the target.
-        if (fs.exists(bak) && !fs.delete(bak, true))
-          throw new java.io.IOException(s"atomic swap: cannot clear stale $bak")
-        val hadTarget = fs.exists(hPath)
-        if (hadTarget && !fs.rename(hPath, bak))
-          throw new java.io.IOException(s"atomic swap: cannot move $hPath aside")
-        if (!fs.rename(tmp, hPath)) {
-          // roll back: restore the previous target before failing
-          if (hadTarget) fs.rename(bak, hPath)
-          throw new java.io.IOException(s"atomic swap: cannot move $tmp into place")
-        }
-        if (hadTarget && fs.exists(hPath)) fs.delete(bak, true)
+        renameSwap(fs, tmp, hPath)
     }
+  }
+
+  /** The `rename` commit: move the fully written dir `written` into
+    * place at `target`, setting any previous target aside first and
+    * deleting it only after the move succeeded. Shared by
+    * [[atomicOverwrite]] and the Runner's create promote, which moves
+    * its staged batch into place instead of rewriting it.
+    */
+  private[graft] def renameSwap(fs: org.apache.hadoop.fs.FileSystem,
+                                written: org.apache.hadoop.fs.Path,
+                                target: org.apache.hadoop.fs.Path): Unit = {
+    val bak = new org.apache.hadoop.fs.Path(target.toString + "._bak")
+    // HDFS/object-store renames report failure by returning false,
+    // not throwing — every step is checked so a failed swap can
+    // never delete the only remaining copy of the target.
+    if (fs.exists(bak) && !fs.delete(bak, true))
+      throw new java.io.IOException(s"atomic swap: cannot clear stale $bak")
+    val hadTarget = fs.exists(target)
+    if (hadTarget && !fs.rename(target, bak))
+      throw new java.io.IOException(s"atomic swap: cannot move $target aside")
+    if (!fs.rename(written, target)) {
+      // roll back: restore the previous target before failing
+      if (hadTarget) fs.rename(bak, target)
+      throw new java.io.IOException(s"atomic swap: cannot move $written into place")
+    }
+    if (hadTarget && fs.exists(target)) fs.delete(bak, true)
   }
 }
 

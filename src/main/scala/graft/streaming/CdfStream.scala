@@ -337,13 +337,14 @@ object CdfStream {
       // re-bootstraps (nothing committed), a crash inside the group
       // rolls forward at the next startup. The bucket table derives
       // from the shingle table's STAGED pool files (a plain parquet
-      // re-read) — no localCheckpoint job, no shingle recompute.
+      // re-read under the staged schema) — no localCheckpoint job, no
+      // shingle recompute, no schema-inference job.
       val shStaged = Snapshot.stageOverwrite(spark,
         TextDedup.shingleTable(corpus, idCol, textCol, n), shPath,
         indexBy = Seq("id"), keepVersions = keepVersions)
       val shDd = Snapshot.dataDir(new Path(shPath))
-      val shBack = spark.read.parquet(
-        shStaged.added.map(e => new Path(shDd, e.rel).toString): _*)
+      val shBack = spark.read.schema(Snapshot.parseDdl(shStaged.schemaDdl))
+        .parquet(shStaged.added.map(e => new Path(shDd, e.rel).toString): _*)
       val bkStaged = Snapshot.stageOverwrite(spark,
         TextDedup.bucketTable(shBack, k, bands), bkPath,
         indexBy = Seq("id"), keepVersions = keepVersions)

@@ -13,6 +13,15 @@ object ExprShim {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** Spark's `bloom_filter_agg` aggregate — what `stat.bloomFilter`
+    * runs (`Column.internalFn` is private[sql]): the serialized filter
+    * over `c`, NULL for an empty input.
+    */
+  def bloomFilterAgg(c: Column, expectedItems: Long, numBits: Long): Column =
+    Column.internalFn("bloom_filter_agg", c,
+      org.apache.spark.sql.functions.lit(expectedItems),
+      org.apache.spark.sql.functions.lit(numBits))
+
   /** Register a SQL function on a LIVE session (sessionState is
     * private[sql], hence this shim). The SparkSessionExtensions path
     * (graft.GraftExtensions) covers `spark.sql.extensions` users; this

@@ -256,6 +256,22 @@ class CliSpec extends AnyFunSuite {
     intercept[Main.CliError](parse("-s", "parquet/a/b", "-m", "parquet/a/m"))
   }
 
+  test("progress lines of a write job go to the caller's Console.out") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_cli_progress")
+    try {
+      val (job, opts) = parse("-s", "parquet//root/testdata/sf0.001/nation",
+        "-t", s"parquet/$dir/out", "-o", "create")
+      val buf = new java.io.ByteArrayOutputStream()
+      // no -y: stdin at end of file proceeds, and progress is reported
+      Console.withIn(new java.io.ByteArrayInputStream(Array.emptyByteArray)) {
+        Console.withOut(buf)(Main.execute(SparkSpec.session, job, opts))
+      }
+      val out = buf.toString("UTF-8").linesIterator.toSeq
+      assert(out.contains("done: 25 rows written"), out.mkString("\n"))
+      assert(out.exists(_.startsWith("progress: stage ")), out.mkString("\n"))
+    } finally SparkSpec.deleteTree(dir)
+  }
+
   test("session contract: Main.session(Opts) exists; factory write defaults reach the suite session") {
     // perfbench/src/CliBench.scala builds its session by reflecting on
     // this private method — renaming or re-typing it must fail here

@@ -1,6 +1,6 @@
 package graft
 
-import graft.engine.Runner
+import graft.engine.{Planner, Runner}
 import graft.functions.StructUtils
 import graft.sources.Resolver
 import graft.spec._
@@ -947,4 +947,137 @@ class RunnerSpec extends SparkSpec {
     assert(Resolver.drop(spark, ref))
     assert(Resolver.expandWildcard(spark, ref.copy(name = "*")).isEmpty)
   }
+
+  // ── barrier stages and the create promote (Runner.executeInner) ──
+
+  /** 60 docs, 20 of them near-copies of others, with a distinct
+    * `score` per doc, as a parquet dataset `docs` under `dir`. */
+  private def docs(dir: String): DatasetRef = {
+    val words = "alpha beta gamma delta epsilon zeta eta theta iota kappa".split(" ")
+    (0L until 60L).map { i =>
+      val body = (0 until 12).map(j => words(((i * 7 + j * 3) % 10).toInt)).mkString(" ")
+      val text = if (i >= 40) s"${words(((i - 40) * 7 % 10).toInt)} " +
+        (0 until 12).map(j => words((((i - 40) * 7 + j * 3) % 10).toInt)).mkString(" ")
+        else s"doc $i $body"
+      (i, text, (i * 37) % 61)
+    }.toDF("doc_id", "text", "score").repartition(3)
+      .write.parquet(s"$dir/docs.parquet")
+    DatasetRef("parquet", dir, "docs")
+  }
+
+  private def createJob(src: DatasetRef, tgt: DatasetRef,
+                        query: Seq[(String, String)] = Nil,
+                        chain: Seq[TransformStage] = Nil,
+                        t: TargetSpec => TargetSpec = identity): JobSpec =
+    JobSpec(SourceSpec(src, query, chain),
+      target = Some(t(TargetSpec(tgt, op = WriteOp.Create))))
+
+  private def outputRecords(body: => Any): Long = {
+    val m = new graft.engine.Metrics()
+    m.record(spark)(body)
+    m.totals.outputRecords
+  }
+
+  private def stageSiblings(dir: String): Seq[String] =
+    Option(new java.io.File(dir).list()).toSeq.flatten.filter(_.contains("._stage_"))
+
+  test("Runner.execute evaluates the chain before a barrier once per source row") {
+    val dir = tempDir("graft_once")
+    val src = docs(dir)
+    spark.udf.register("graft_tick", udf { (i: Long) =>
+      RunnerSpec.ticks.incrementAndGet(); i }.asNondeterministic())
+    val job = createJob(src, DatasetRef("parquet", dir, "out"), chain = Seq(
+      TransformStage("set_expr", Seq("doc_id", "graft_tick(doc_id)")),
+      TransformStage("dedup_keep_best", Seq("score", "doc_id", "text"))))
+    RunnerSpec.ticks.set(0)
+    val res = Runner.execute(spark, job, log = false)
+    assert(RunnerSpec.ticks.get() == 60L,
+      s"the chain ran over ${RunnerSpec.ticks.get()} rows for 60 source rows")
+    val written = Resolver.readParquet(spark, s"$dir/out.parquet").drop("_etl_ts")
+    val lazyPlan = Planner.plan(spark, job)
+    assert(res.written == written.count() && written.count() < 60L)
+    assert(rows(written.orderBy("doc_id")) == rows(lazyPlan.orderBy("doc_id")))
+    assert(stageSiblings(dir).isEmpty)
+  }
+
+  test("a sorted source keeps its order through a barrier: expect + limit " +
+    "writes what the lazy plan returns") {
+    val dir = tempDir("graft_sorted_barrier")
+    val src = docs(dir)
+    val job = createJob(src, DatasetRef("parquet", dir, "top"),
+      query = Seq("_sort" -> "-score"),
+      chain = Seq(TransformStage("expect", Seq("score >= 0")),
+        TransformStage("limit", Seq("5"))))
+    val conf = spark.conf
+    val prev = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+      .map(k => k -> conf.getOption(k))
+    // several sorted part files, so a stage read back out of order shows
+    conf.set("spark.sql.adaptive.enabled", "false")
+    conf.set("spark.sql.shuffle.partitions", "8")
+    try {
+      Runner.execute(spark, job, log = false)
+      val top = Resolver.readParquet(spark, s"$dir/top.parquet")
+        .select("doc_id").as[Long].collect().toSet
+      assert(top == Runner.preview(spark, job, 5).map(_.getAs[Long]("doc_id")).toSet)
+      assert(top == (0L until 60L).sortBy(i => -((i * 37) % 61)).take(5).toSet)
+    } finally prev.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
+
+  test("-o create into an absent target promotes its stage: the rows are " +
+    "written once and equal the rewrite path's") {
+    val dir = tempDir("graft_promote")
+    val src = docs(dir)
+    val promoted = outputRecords(Runner.execute(spark,
+      createJob(src, DatasetRef("parquet", dir, "p")), log = false))
+    // a file-size cap keeps the same rows on the rewrite path
+    val rewritten = outputRecords(Runner.execute(spark,
+      createJob(src, DatasetRef("parquet", dir, "r"),
+        t = _.copy(maxRecordsPerFile = 1000000L)), log = false))
+    assert(promoted == 60L, s"promote wrote $promoted records")
+    assert(rewritten == 120L, s"rewrite wrote $rewritten records")
+    val p = Resolver.readParquet(spark, s"$dir/p.parquet")
+    val r = Resolver.readParquet(spark, s"$dir/r.parquet")
+    assert(p.schema == r.schema)
+    assert(rows(p.drop("_etl_ts").orderBy("doc_id")) ==
+      rows(r.drop("_etl_ts").orderBy("doc_id")))
+    assert(stageSiblings(dir).isEmpty)
+  }
+
+  test("an existing target and a partitioned create keep the rewrite path") {
+    val dir = tempDir("graft_no_promote")
+    val src = docs(dir)
+    val tgt = DatasetRef("parquet", dir, "t")
+    Runner.execute(spark, createJob(src, tgt), log = false)
+    // create into an existing target appends: stage 60 + rewrite 120
+    val again = outputRecords(Runner.execute(spark, createJob(src, tgt), log = false))
+    assert(again == 180L, s"create into an existing target wrote $again records")
+    assert(Resolver.readParquet(spark, s"$dir/t.parquet").count() == 120L)
+    val parted = outputRecords(Runner.execute(spark,
+      createJob(src, DatasetRef("parquet", dir, "pt"),
+        t = _.copy(partitionBy = Seq("score"))), log = false))
+    assert(parted == 120L, s"partitioned create wrote $parted records")
+    assert(new java.io.File(s"$dir/pt.parquet").list().exists(_.startsWith("score=")))
+    assert(stageSiblings(dir).isEmpty)
+  }
+
+  test("a failing barrier leaves no stage dir beside the target") {
+    val dir = tempDir("graft_barrier_fail")
+    val src = docs(dir)
+    val job = createJob(src, DatasetRef("parquet", dir, "t"), chain = Seq(
+      TransformStage("set_expr", Seq("s2", "score * 2")),
+      TransformStage("expect", Seq("s2 < 0"))))
+    val e = intercept[Exception](Runner.execute(spark, job, log = false))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(x => String.valueOf(x.getMessage).contains("expect failed")), e.toString)
+    assert(stageSiblings(dir).isEmpty, stageSiblings(dir).mkString(", "))
+    assert(!new java.io.File(s"$dir/t.parquet").exists())
+  }
+}
+
+object RunnerSpec {
+  /** Rows the `graft_tick` UDF evaluated (local mode: this JVM). */
+  val ticks = new java.util.concurrent.atomic.AtomicLong(0)
 }

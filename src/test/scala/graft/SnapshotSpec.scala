@@ -45,6 +45,31 @@ class SnapshotSpec extends SparkSpec {
     }
   }
 
+  test("vacuum and fsck list a deletion-vector dir that vanished before " +
+    "its listing as empty") {
+    val p = s"${tempDir("graft_nodel")}/t.parquet"
+    WriteOps.atomicOverwrite(spark, base(50), p, indexBy = Seq("id"),
+      maxRecordsPerFile = 10, commitMode = "snapshot", keepVersions = 1)
+    WriteOps.atomicOverwrite(spark, base(40), p, indexBy = Seq("id"),
+      maxRecordsPerFile = 10, commitMode = "snapshot", keepVersions = 1)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val vanishing = new VanishingDeletesFs
+    vanishing.initialize(java.net.URI.create("file:///"), conf)
+    Snapshot.vacuum(vanishing, new Path(p), keepVersions = 1)
+    val keys = Seq("fs.file.impl", "fs.file.impl.disable.cache")
+    val prev = keys.map(k => k -> Option(conf.get(k)))
+    conf.set("fs.file.impl", classOf[VanishingDeletesFs].getName)
+    conf.set("fs.file.impl.disable.cache", "true")
+    val audit = try Snapshot.fsck(spark, p).collect()
+    finally prev.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+    assert(audit.isEmpty, audit.mkString(", "))
+    assert(sortedRows(graft.sources.Resolver.readParquet(spark, p)) ==
+      sortedRows(base(40)))
+  }
+
   test("snapshot overwrite round-trips rows, schema order and types") {
     val dir = tempDir("snap_rt")
     val p = s"$dir/t.parquet"
@@ -1821,4 +1846,15 @@ class SnapshotSpec extends SparkSpec {
       "only the widened column's envelopes drop")
     assert(Snapshot.fsck(spark, p2).isEmpty)
   }
+}
+
+/** A local filesystem on which every deletion-vector dir
+  * (`Snapshot.DeletesDirName`) exists, but listing one fails as if it
+  * had been removed after the check: a concurrent vacuum's race. */
+class VanishingDeletesFs extends graft.sources.FastLocalFs {
+  private def vanished(p: Path) = p.getName == Snapshot.DeletesDirName
+  override def exists(p: Path): Boolean = vanished(p) || super.exists(p)
+  override def listStatus(p: Path): Array[org.apache.hadoop.fs.FileStatus] =
+    if (vanished(p)) throw new java.io.FileNotFoundException(s"$p: removed")
+    else super.listStatus(p)
 }
